@@ -22,8 +22,6 @@ analytics engine for the same data.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -217,6 +215,36 @@ def bucketed_topk(
     return _ranked_topk(scored, k)
 
 
+def _centroid_means(assigned: DataFrame, dim: int) -> DataFrame:
+    """``ivf_train``'s mean step over (centroid_id, _vvec) rows: per
+    centroid, the per-dimension mean of the first ``dim`` components
+    rounded to 6 decimals, plus ``n_members`` (assigned vectors).
+    Returns (centroid_id, centroid array<double>, n_members).
+
+    LONG form: posexplode each vector into (dimension, value) rows, one
+    ``round(avg, 6)`` per (centroid, dimension), then regroup each
+    centroid's means into an array ordered by dimension. That is one
+    aggregate expression where the wide form had ``dim`` separate
+    ``avg(element_at(...))`` ones for the driver to analyze, optimize
+    and compile every iteration; the values, rounding included, are the
+    same.
+    """
+    per_dim = (
+        assigned.select(
+            "centroid_id",
+            F.posexplode(F.slice(F.col("_vvec"), 1, dim)).alias("_d", "_x"),
+        )
+        .groupBy("centroid_id", "_d")
+        .agg(F.round(F.avg("_x"), 6).alias("_m"), F.count("*").alias("_n"))
+    )
+    return per_dim.groupBy("centroid_id").agg(
+        F.sort_array(F.collect_list(F.struct("_d", "_m")))
+        .getField("_m")
+        .alias("centroid"),
+        F.max("_n").alias("n_members"),
+    )
+
+
 def ivf_train(
     vectors: DataFrame,
     k: int = 8,
@@ -235,12 +263,13 @@ def ivf_train(
 
     Each iteration: broadcast the k centroids, assign every vector to
     its nearest by squared L2 (ties → lower centroid id), recompute each
-    centroid as the per-dimension mean. Plan shape: one broadcast join +
-    one k-row aggregation per iteration — the corpus shuffles ONCE per
-    iteration into k groups with map-side partial aggregation, and the
-    centroid set stays driver-sized. At 100 TB this is exactly
-    distributed Lloyd; raise ``iters`` as needed (the coarse quantizer
-    converges in a handful).
+    centroid as the per-dimension mean (``_centroid_means``). Plan
+    shape: one broadcast join + one (k x dim)-row mean aggregation per
+    iteration — the corpus shuffles ONCE per iteration into k x dim
+    groups with map-side partial aggregation, a k x dim-row regroup
+    follows, and the centroid set stays driver-sized. At 100 TB this is
+    exactly distributed Lloyd; raise ``iters`` as needed (the coarse
+    quantizer converges in a handful).
 
     Cross-engine exactness: per-dimension means are rounded to 6
     decimals BETWEEN iterations, quantizing away float-summation-order
@@ -267,11 +296,11 @@ def ivf_train(
     )
     assigned = None
     for it in range(iters):
-        # NOTE (measured, do not "optimize"): an in-row argmin over a
-        # collect_list'd centroid array (transform + array_min, zero
-        # shuffle) was tried and REGRESSED 20-200% across this family —
-        # nested higher-order functions evaluate interpreted, losing to
-        # this codegen'd broadcast join + min-of-struct aggregate.
+        # NOTE (measured): an in-row argmin over a collect_list'd
+        # centroid array (transform + array_min, zero shuffle) REGRESSED
+        # 20-200% across this family — nested higher-order functions
+        # evaluate interpreted, losing to this codegen'd broadcast join
+        # + min-of-struct aggregate.
         j = vectors.select(
             F.col(id_col).alias("_vid"), F.col(vec_col).alias("_vvec")
         ).crossJoin(F.broadcast(cent.select("centroid_id", "centroid")))
@@ -308,15 +337,13 @@ def ivf_train(
                 "_vid",
             )
         )
-        cent = assigned.groupBy("centroid_id").agg(
-            F.array(
-                *[
-                    F.round(F.avg(F.element_at(F.col("_vvec"), i + 1)), 6)
-                    for i in range(dim)
-                ]
-            ).alias("centroid"),
-            F.count("*").alias("n_members"),
-        )
+        # Long-form mean step vs the former 64 per-dimension aggregates,
+        # interleaved in-JVM A/B (scripts/ab_inproc.py swap, 6 pairs,
+        # sf0.01, local[4] on a 4-core host), long/wide medians:
+        # kmeans_silhouette CPU 0.70 (4.07 vs 5.85 s), wall 0.64 (1.71
+        # vs 2.68 s); ivf_kmeans_build CPU 0.66, wall 0.62;
+        # semdedup_prune CPU 0.75, wall 0.72. Identical output each call.
+        cent = _centroid_means(assigned, dim)
         # k rows; the eager checkpoint truncates the per-iteration
         # lineage doubling (consumers otherwise re-run EVERY iteration's
         # corpus pass — measured ~25% on kmeans_silhouette at sf0.1).
@@ -344,12 +371,13 @@ def ivf_assign(
     (ties → lower centroid id). The corpus uses n_probe=1 (the IVF list a
     vector lives in); queries probe several lists.
 
-    ``with_rank=True`` (n_probe>1 only) keeps the probe position as a
-    ``probe_rank`` column (1 = nearest list). Because the top-n lists are
-    a PREFIX of the same (csim desc, centroid_id asc) ranking for every
-    n, one max-setting assignment with ranks serves a whole n_probe
-    sweep: filter ``probe_rank <= n`` reproduces the n-probe assignment
-    exactly (the r15 single-pass rewrite of ivf_nprobe_recall_curve).
+    ``with_rank=True`` keeps the probe position as a ``probe_rank``
+    column (1 = nearest list; always 1 when ``n_probe=1``). Because the
+    top-n lists are a PREFIX of the same (csim desc, centroid_id asc)
+    ranking for every n, one max-setting assignment with ranks serves a
+    whole n_probe sweep: filter ``probe_rank <= n`` reproduces the
+    n-probe assignment exactly (the r15 single-pass rewrite of
+    ivf_nprobe_recall_curve).
 
     Plan: broadcast the (tiny) centroid set, one pass over the corpus.
     The corpus path (``n_probe=1``) is a min-of-struct aggregate (the
@@ -390,6 +418,7 @@ def ivf_assign(
     if n_probe == 1:
         # argmax csim (ties -> lower centroid id) == min of (-csim, cid);
         # -x on a rounded double is exact, so ordering matches the window
+        rank = [F.lit(1).alias("probe_rank")] if with_rank else []
         return (
             scored.groupBy("_vid")
             .agg(
@@ -400,6 +429,7 @@ def ivf_assign(
             .select(
                 F.col("_vid").alias(id_col),
                 F.col("_m.centroid_id").alias("centroid_id"),
+                *rank,
             )
         )
     w = Window.partitionBy("_vid").orderBy(F.col("_csim").desc(), F.col("centroid_id"))
@@ -973,15 +1003,19 @@ def pq_train(
         )
         .select("sub_id", "centroid_id", F.col("sv").alias("centroid"))
     )
-    # NOTE (measured r15, do not "optimize"): an ivf_train-style
-    # mid-iteration eager localCheckpoint of the m*k-row centroid frame
-    # was tried and REGRESSED ivf_pq_recall 1.57x (interleaved A/B at
-    # sf0.1, 4 pairs, 4.01 -> 6.30 s) — the eager job runs the
-    # iteration-0 corpus pass as a separate sequential action, losing
-    # the scan/exchange sharing the one-action composite gets, and that
-    # costs more than the saved re-planning. Unlike ivf_train (whose
-    # mid-train checkpoint WAS a measured win on its k-row centroids),
-    # pq_train's consumers all sit behind persisted outputs already.
+    # NOTE (measured): two ivf_train levers do not carry over here.
+    # - An eager mid-iteration localCheckpoint of the m*k-row codebook
+    #   REGRESSED ivf_pq_recall 1.57x (interleaved A/B at sf0.1, 4
+    #   pairs, 4.01 -> 6.30 s): the eager job runs the iteration-0
+    #   corpus pass as a separate action, losing the scan/exchange
+    #   sharing of the one-action composite.
+    # - ivf_train's long-form mean step (_centroid_means: posexplode,
+    #   one avg per (centroid, dimension), regroup) lost on
+    #   ivf_pq_recall: long/wide CPU 1.09 (4.87 vs 4.48 s) and 1.05
+    #   (4.03 vs 3.86 s), wall 1.03 and 1.08 (interleaved in-JVM A/B,
+    #   sf0.01, 6 then 10 pairs). pq_codebooks CPU 0.92 and 0.84, wall
+    #   0.89 and 1.00. A 16-dim subvector has only 16 aggregates to
+    #   save, and the regroup adds an exchange per iteration.
     for _ in range(iters):
         assigned = _pq_assign(subv, cent)
         cent = assigned.groupBy("sub_id", "centroid_id").agg(

@@ -106,30 +106,22 @@ def local_frame(spark: SparkSession, rows, schema: str) -> DataFrame:
     explicit DDL schema pins types exactly as before (including empty
     input).
 
-    Integral and boolean columns get pandas NULLABLE dtypes derived
-    from the DDL schema (ADVICE r13): a plain ``pd.DataFrame`` coerces
-    a bigint column containing a NULL to float64, silently corrupting
-    values above 2^53 (ns-epoch timestamps live well above it) through
-    the Arrow float→int64 cast. Every other type keeps object dtype so
-    Arrow converts the original Python values under the schema.
+    Every column is built with OBJECT dtype, so the original Python
+    values (exact ints, real ``None``) reach Spark under the DDL schema
+    on either conversion path. A plain ``pd.DataFrame`` would coerce a
+    bigint column holding a NULL to float64, corrupting values above
+    2^53 (ADVICE r13); pandas nullable ``Int64`` avoids that under Arrow,
+    but with ``spark.sql.execution.arrow.pyspark.enabled=false`` (a
+    vanilla session) its NULL arrives as ``nan`` and the LongType check
+    throws.
     """
     import pandas as pd
 
-    _nullable = {
-        T.ByteType: "Int8",
-        T.ShortType: "Int16",
-        T.IntegerType: "Int32",
-        T.LongType: "Int64",
-        T.BooleanType: "boolean",
-    }
-    fields = T.StructType.fromDDL(schema).fields
+    names = T.StructType.fromDDL(schema).fieldNames()
     data = [tuple(r) for r in rows]
     cols = {
-        f.name: pd.Series(
-            [r[i] for r in data],
-            dtype=_nullable.get(type(f.dataType), object),
-        )
-        for i, f in enumerate(fields)
+        name: pd.Series([r[i] for r in data], dtype=object)
+        for i, name in enumerate(names)
     }
-    pdf = pd.DataFrame(cols, columns=[f.name for f in fields])
+    pdf = pd.DataFrame(cols, columns=names)
     return spark.createDataFrame(pdf, schema)

@@ -102,12 +102,28 @@ def get_spark(app_name: str = "milvus_cdc_spark", shuffle_partitions: int | None
             "spark.sql.adaptive.coalescePartitions.minPartitionSize",
             os.environ.get("SPARK_GRAFT_MIN_PARTITION_SIZE", "64k"),
         )
+        # Generated-class cache sized to hold a query MIX. One pass of
+        # perfbench's analytics mix (q1_pricing_summary,
+        # cdc_replay_summary, bm25_topk, kmeans_silhouette) compiles
+        # ~140 classes, over the 100-entry default, so each query's
+        # classes are evicted before it runs again and every pass pays
+        # Janino compilation and JIT warm-up again. At 1000 entries a
+        # repeat pass compiles 0-2 classes. A static conf cannot change
+        # inside one JVM, so its A/B is interleaved fresh-process runs:
+        # analytics_mix seeds 11-14 (local[4], 4-core host), 100 vs 1000
+        # entries, median ops_per_cpu_s 0.248 -> 0.297, op_cpu_s 3.37 ->
+        # 2.84 s, median pass wall 5.18 -> 4.14 s; every seed better.
+        # The r14 refutation (OPTIMIZATION_r14.md) repeated ONE query,
+        # ivf_pq_recall, alone and timed its wall steady state, where
+        # nothing evicts its classes; it never measured a mix or CPU.
+        # SPARK_GRAFT_EXTRA_CONF can still override the size.
+        .config("spark.sql.codegen.cache.maxEntries", "1000")
     )
     # Generic conf passthrough for A/B measurement and cluster overrides:
     # semicolon-separated key=value pairs, applied last so they win over
-    # the defaults above. Static SQL confs (e.g. codegen cache sizing)
-    # only take effect when set here, before the JVM launches — which is
-    # exactly why this hook lives in the session factory rather than in
+    # the defaults above. Static SQL confs (the codegen cache size above,
+    # say) only take effect when set before the session's context starts,
+    # which is why this hook lives in the session factory rather than in
     # per-query code.
     extra = os.environ.get("SPARK_GRAFT_EXTRA_CONF", "")
     for pair in extra.split(";"):

@@ -1,70 +1,131 @@
-"""Within-JVM interleaved A/B for env-toggled code paths.
+"""Within-JVM interleaved A/B of two code paths, by wall, CPU and codegen.
 
-Usage: python scripts/ab_inproc.py <toggle_env> <val_a> <val_b> \
-       <name>[,name...] [pairs] [sf_dir]
+Usage:
+  python scripts/ab_inproc.py env VAR VAL_A VAL_B NAMES [PAIRS] [SF_DIR]
+  python scripts/ab_inproc.py swap MODULE:FUNC FILE.py:FUNC NAMES [PAIRS] [SF_DIR]
 
-Runs each query as alternating A/B pairs inside ONE session (order
+``NAMES`` is a comma-separated list of registry queries; ``SF_DIR``
+defaults to ``$SPARK_GRAFT_SF_DIR``, and the warm-up runs at the
+``sf0.001`` directory beside it. The two arm modes:
+
+- ``env``: arm A sets ``VAR=VAL_A``, arm B ``VAR=VAL_B``. Only valid
+  for toggles read at query-construction time (e.g.
+  SPARK_GRAFT_WIDEN_SCAN), not static Spark confs.
+- ``swap``: arm A runs the engine as it is; arm B replaces the
+  attribute ``FUNC`` of module ``MODULE`` with function ``FUNC`` loaded
+  from ``FILE.py``. Callers that look the function up through its
+  module (``similarity.ivf_train(...)``, or a bare call inside that
+  module) see the replacement, so an A/B needs no engine knob.
+
+Each query runs as alternating A/B pairs inside ONE session (order
 A B B A A B ...), timing fn+count with the bench's warm-up/cache-clear
 discipline. Because both arms share the JVM, codegen cache, and the
 VM's minute-scale weather, the pairwise deltas are far tighter than
-fresh-JVM draws. Only valid for toggles read at query-construction time
-(e.g. SPARK_GRAFT_WIDEN_SCAN), not static Spark confs.
+fresh-JVM draws. Per arm it reports the median wall seconds, CPU
+seconds of this Python driver plus its JVM (perfbench's ``cpu_s``, the
+measure behind ``op_cpu_s``), and generated classes compiled (Spark's
+``CodegenMetrics`` compilation count); ratios are B/A.
 """
 
 from __future__ import annotations
 
+import importlib
+import importlib.util
 import os
 import statistics
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from milvus_cdc_spark import suite  # noqa: E402
 from milvus_cdc_spark.session import get_spark  # noqa: E402
+from perfbench.workloads import cpu_s  # noqa: E402
+
+
+def compiles(spark) -> int:
+    """Generated classes compiled so far in this JVM."""
+    metrics = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    return metrics.METRIC_COMPILATION_TIME().getCount()
+
+
+def env_arms(var: str, val_a: str, val_b: str) -> dict:
+    def setter(value):
+        return lambda: os.environ.__setitem__(var, value)
+
+    return {"a": setter(val_a), "b": setter(val_b)}
+
+
+def swap_arms(target: str, replacement: str) -> dict:
+    mod_name, _, attr = target.partition(":")
+    path, _, fn_name = replacement.partition(":")
+    module = importlib.import_module(mod_name)
+    spec = importlib.util.spec_from_file_location("_ab_replacement", path)
+    repl_mod = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(repl_mod)
+    original, swapped = getattr(module, attr), getattr(repl_mod, fn_name)
+    return {
+        "a": lambda: setattr(module, attr, original),
+        "b": lambda: setattr(module, attr, swapped),
+    }
 
 
 def main() -> None:
-    toggle, val_a, val_b, names_arg = sys.argv[1:5]
-    pairs = int(sys.argv[5]) if len(sys.argv) > 5 else 5
-    sf_dir = sys.argv[6] if len(sys.argv) > 6 else "/root/testdata/sf0.1"
-    names = names_arg.split(",")
+    mode = sys.argv[1] if len(sys.argv) > 1 else ""
+    if mode == "env":
+        arms = env_arms(*sys.argv[2:5])
+        rest = sys.argv[5:]
+    elif mode == "swap":
+        arms = swap_arms(*sys.argv[2:4])
+        rest = sys.argv[4:]
+    else:
+        sys.exit(__doc__)
+    names = rest[0].split(",")
+    pairs = int(rest[1]) if len(rest) > 1 else 5
+    sf_dir = rest[2] if len(rest) > 2 else os.environ["SPARK_GRAFT_SF_DIR"]
+    warm_dir = os.path.join(os.path.dirname(sf_dir.rstrip("/")), "sf0.001")
 
     spark = get_spark("ab_inproc")
     spark.sparkContext.setLogLevel("ERROR")
     spark.range(1000).selectExpr("sum(id)").collect()
 
-    def run(name: str) -> float:
-        spec = suite.QUERIES[name]
-        t0 = time.time()
-        spec.fn(spark, sf_dir).count()
-        t = time.time() - t0
+    def run(name: str, sf: str) -> tuple[float, float, int]:
+        c, n, t0 = cpu_s(spark), compiles(spark), time.time()
+        suite.QUERIES[name].fn(spark, sf).count()
+        sample = (time.time() - t0, cpu_s(spark) - c, compiles(spark) - n)
         spark.catalog.clearCache()
-        return t
+        return sample
 
     for name in names:
         # warm both arms (codegen for both plan shapes)
-        for v in (val_a, val_b):
-            os.environ[toggle] = v
+        for arm in ("a", "b"):
+            arms[arm]()
             try:
-                suite.QUERIES[name].fn(spark, "/root/testdata/sf0.001").count()
+                run(name, warm_dir)
             except Exception as e:
                 print(f"{name} warm-up failed: {e!r}", file=sys.stderr)
-            spark.catalog.clearCache()
-        ta, tb = [], []
+        samples = {"a": [], "b": []}
         for p in range(pairs):
-            order = [("a", val_a), ("b", val_b)]
-            if p % 2 == 1:
-                order.reverse()
-            for arm, v in order:
-                os.environ[toggle] = v
-                t = run(name)
-                (ta if arm == "a" else tb).append(t)
-        ma, mb = statistics.median(ta), statistics.median(tb)
+            for arm in ("ab" if p % 2 == 0 else "ba"):
+                arms[arm]()
+                samples[arm].append(run(name, sf_dir))
+        arms["a"]()
+        med = {
+            arm: [statistics.median(col) for col in zip(*s)]
+            for arm, s in samples.items()
+        }
+        (wa, ca, na), (wb, cb, nb) = med["a"], med["b"]
         print(
-            f"{name}: A={ma:.3f} B={mb:.3f} ratio={mb / ma:.3f}  "
-            f"a={['%.2f' % t for t in ta]} b={['%.2f' % t for t in tb]}"
+            f"{name}: wall A={wa:.3f} B={wb:.3f} ratio={wb / wa:.3f}  "
+            f"cpu A={ca:.3f} B={cb:.3f} ratio={cb / ca:.3f}  "
+            f"compiles A={na:g} B={nb:g}"
         )
+        for arm, s in samples.items():
+            walls, cpus, comps = zip(*s)
+            print(
+                f"  {arm}: wall={['%.2f' % t for t in walls]} "
+                f"cpu={['%.2f' % t for t in cpus]} compiles={list(comps)}"
+            )
     spark.stop()
 
 

@@ -43,23 +43,21 @@ def test_streaming_apply_converges_to_batch_replay(spark, sf_dir, oplog_dir):
     assert got == want
 
 
-def test_files_per_trigger_sets_granularity_not_results(spark, oplog_dir):
+def test_files_per_trigger_sets_granularity_not_results(
+    spark, oplog_dir, monkeypatch
+):
     """r15 verdict #7: microbatch granularity (files_per_trigger, env
     override SPARK_GRAFT_CDC_FPT) changes how many batches a drain takes,
     never the converged state."""
-    import os
-
     work1 = tempfile.mkdtemp(prefix="fpt_a_")
     pipe = CdcApplyPipeline(spark, oplog_dir, work1, files_per_trigger=3)
     pipe.run_available_now()
     assert pipe.last_batch_id == 1  # 6 staged files / 3 per trigger
 
     work2 = tempfile.mkdtemp(prefix="fpt_b_")
-    os.environ["SPARK_GRAFT_CDC_FPT"] = "6"
-    try:
-        pipe2 = CdcApplyPipeline(spark, oplog_dir, work2, files_per_trigger=3)
-    finally:
-        del os.environ["SPARK_GRAFT_CDC_FPT"]
+    monkeypatch.setenv("SPARK_GRAFT_CDC_FPT", "6")
+    pipe2 = CdcApplyPipeline(spark, oplog_dir, work2, files_per_trigger=3)
+    monkeypatch.delenv("SPARK_GRAFT_CDC_FPT")
     assert pipe2.files_per_trigger == 6  # env override wins
     pipe2.run_available_now()
     assert pipe2.last_batch_id == 0

@@ -38,6 +38,8 @@ spark = (
 spark.sparkContext.setLogLevel("ERROR")
 # Prove this really is a vanilla session (conf absent → default false)
 assert spark.conf.get("spark.sql.legacy.parquet.nanosAsLong", "false") == "false"
+assert spark.conf.get("spark.sql.execution.arrow.pyspark.enabled") == "false"
+assert spark.conf.get("spark.sql.codegen.cache.maxEntries") == "100"
 
 from milvus_cdc_spark import suite
 from milvus_cdc_spark.catalog import TABLES, load_table
@@ -56,6 +58,8 @@ for name in (
     "cdc_replay_summary",       # bug 2: integer-sum dtype drift
     "metrics_counters",         # bug 2
     "ready_set_equality",       # bug 3: array columns
+    "partition_drop_replay",    # r15: local_frame NULL bigint, Arrow off
+    "kmeans_silhouette",        # long-form Lloyd step, no codegen conf
 ):
     spec = suite.QUERIES[name]
     spdf = spec.fn(spark, SF_DIR).toPandas()
