@@ -102,8 +102,12 @@ class TaskRegistry:
 
     # -- persistence (reference: etcd/MySQL meta store) -------------------
     def _persist(self) -> None:
-        with open(self.meta_path, "w") as f:
+        """Write-then-rename, like the state manifest's commit: a failure
+        mid-write leaves the previous ``tasks.json`` whole."""
+        tmp = self.meta_path + ".tmp"
+        with open(tmp, "w") as f:
             json.dump({tid: asdict(t) for tid, t in self.tasks.items()}, f, indent=2)
+        os.replace(tmp, self.meta_path)
 
     def _reload(self) -> None:
         """ReloadTask semantics (cdc_impl.go:183-216): tasks survive restart;

@@ -10,14 +10,19 @@ Spark shape:
 
     readStream (file/Kafka source of op-events)
       → stateless transforms (whitelist, collection filter, remap)
-      → foreachBatch:
-          1. merge-apply the batch into the state table (idempotent,
-             commutative: per-pk max of insert/delete ts — so replay,
-             reordering, and at-least-once delivery all converge to the
-             same state)
-          2. write back positions (per-vchannel max ts) in the same batch,
-             mirroring the reference's position-after-apply ordering
-             (server/cdc_impl.go:1116-1173)
+      → foreachBatch, two passes over the cached batch:
+          1. one control aggregate, collected to the driver: per (bucket,
+             vchannel, drop scope) max ts and count. The driver derives
+             the touched buckets, each vchannel's position and the
+             bulk-drop cutoffs from it.
+          2. one merge-apply of the batch into the touched state buckets
+             (idempotent, commutative: per-pk max of insert/delete ts —
+             so replay, reordering, and at-least-once delivery all
+             converge to the same state), with a single shuffle on bucket
+      → the driver writes the batch's positions file, AFTER the apply and
+        before the commit, mirroring the reference's position-after-apply
+        ordering (server/cdc_impl.go:1116-1173)
+      → manifest commit (atomic rename)
 
 State layout — designed so per-batch I/O scales with the BATCH, not the
 state (the reference applies per channel and touches only affected rows,
@@ -71,7 +76,8 @@ STATE_SCHEMA = (
 #: On-disk state format version, written into MANIFEST.json at every
 #: commit and asserted at resume. History:
 #:   1 — pre-``partition`` state rows, no ``format_version`` key (legacy;
-#:       readable — ``_upgrade_state_format`` null-backfills the column)
+#:       readable — ``read_state``'s explicit STATE_SCHEMA reads the
+#:       missing column as null, which a partition-drop cutoff never hits)
 #:   2 — current: ``partition`` in STATE_COLS, drop cutoffs + history in
 #:       the manifest.
 #: The migrate-on-load stamp in ``_load_manifest`` is a ONE-WAY upgrade
@@ -85,29 +91,17 @@ STATE_SCHEMA = (
 #: reader does not know — the silent-accept path was VERDICT r7 item 5.
 STATE_FORMAT_VERSION = 2
 
+#: One row per vchannel per batch in ``positions/batch_id=N/``.
+POSITIONS_SCHEMA = "vchannel string, position_ts bigint, n_msgs bigint"
+
 
 class StateFormatError(RuntimeError):
     """State dir was written by a newer format than this reader knows."""
 
 
-def _upgrade_state_format(df: DataFrame) -> DataFrame:
-    """Backfill STATE_COLS missing from an older on-disk state format as
-    typed nulls (e.g. a pre-``partition`` state dir resumed by this
-    version). merge_state selects STATE_COLS unconditionally, so a resume
-    over legacy state would otherwise die with a missing-column analysis
-    error — ADVICE r6. Null semantics are exact for the known case: a
-    legacy row's partition is unknown, and a null partition is never hit
-    by a partition-drop cutoff (null-safe join misses), matching what the
-    legacy format could express."""
-    from pyspark.sql.types import StructType
-
-    missing = [c for c in STATE_COLS if c not in df.columns]
-    if not missing:
-        return df
-    types = {f.name: f.dataType for f in StructType.fromDDL(STATE_SCHEMA).fields}
-    return df.withColumns(
-        {c: F.lit(None).cast(types[c]) for c in missing}
-    )
+def _max_ts(a, b):
+    """max of two nullable timestamps (None = no timestamp seen)."""
+    return b if a is None else a if b is None else max(a, b)
 
 
 def _vdir_name(v) -> str:
@@ -195,14 +189,23 @@ def merge_state(existing: DataFrame, update: DataFrame) -> DataFrame:
 
     Equivalent to ``MERGE INTO state USING update ON pk WHEN MATCHED
     UPDATE max(...)`` — expressed as union+re-aggregate so it needs no
-    Delta. Catalyst plans partial+final agg; the shuffle carries one row
-    per pk per side, and when called from the pipeline ``existing`` is
-    only the touched buckets, not the whole state table.
+    Delta. When called from the pipeline ``existing`` is only the touched
+    buckets, not the whole state table.
+
+    When ``update`` carries a ``bucket`` column (so must ``existing``),
+    the result keeps it and the union is hash-repartitioned on ``bucket``
+    before the aggregate: that one exchange also satisfies the per-pk
+    grouping, and every bucket lands whole in one partition, ready for a
+    ``partitionBy("bucket")`` write of one file per bucket.
     """
+    keys = ["bucket"] if "bucket" in update.columns else []
+    both = existing.select(*keys, *STATE_COLS).unionByName(
+        update.select(*keys, *STATE_COLS)
+    )
+    if keys:
+        both = both.repartition(*keys)
     return (
-        existing.select(*STATE_COLS)
-        .unionByName(update.select(*STATE_COLS))
-        .groupBy("collection", "pk")
+        both.groupBy(*keys, "collection", "pk")
         .agg(
             F.max(
                 F.when(
@@ -217,6 +220,7 @@ def merge_state(existing: DataFrame, update: DataFrame) -> DataFrame:
             F.sum("n_inserts").alias("n_inserts"),
         )
         .select(
+            *keys,
             "collection",
             "pk",
             F.col("_ins.ts").alias("last_insert_ts"),
@@ -259,6 +263,11 @@ class CdcApplyPipeline:
     a drain now takes half as many batches, so callers that count batches
     or pin batch ids see fewer of them. ``SPARK_GRAFT_CDC_FPT`` overrides
     it for measurement.
+
+    Positions are written by the driver, one small parquet file per batch,
+    from the control aggregate the batch already collects; no Spark job
+    and no background thread writes them. The ``SPARK_GRAFT_CDC_OVERLAP``
+    knob, which switched that thread off, is gone.
     """
 
     def __init__(self, spark: SparkSession, source_dir: str, work_dir: str,
@@ -330,11 +339,8 @@ class CdcApplyPipeline:
         self.compact_every = compact_every
         self.history_keep = history_keep
         # P1 whitelist for this task (reference task-level msg-type config,
-        # extra_param.go MessageTypeWhiteList). Driver-known at plan-build
-        # time: when the configured types include no drop op, the fused
-        # per-microbatch control job skips BUILDING the drop-cutoff branch
-        # entirely (VERDICT r8 #5) — the whitelist filter guarantees the
-        # aggregate would be empty, so the batch pays only the bucket probe.
+        # extra_param.go MessageTypeWhiteList). When it admits no drop op,
+        # the control aggregate's drop-scope columns are simply all null.
         from milvus_cdc_spark.operators.filters import DML_WHITELIST
 
         self.msg_types: tuple[str, ...] = (
@@ -439,7 +445,8 @@ class CdcApplyPipeline:
     # -- state table ------------------------------------------------------
     def _bucket(self, df: DataFrame) -> DataFrame:
         return df.withColumn(
-            "bucket", F.pmod(F.xxhash64("collection", "pk"), F.lit(self.n_buckets))
+            "bucket",
+            F.pmod(F.xxhash64("collection", "pk"), F.lit(self.n_buckets)).cast("int"),
         )
 
     def _empty_state(self) -> DataFrame:
@@ -473,8 +480,16 @@ class CdcApplyPipeline:
             entries = {str(b): entries[str(b)] for b in buckets if str(b) in entries}
         if not entries:
             return self._empty_state()
-        # group buckets by version → one multi-path read per version dir
-        by_version: dict[int, list[str]] = {}
+        return self._read_buckets(entries).drop("bucket")
+
+    def _read_buckets(self, entries: dict) -> DataFrame:
+        """STATE_COLS plus the ``bucket`` partition column, for a
+        ``{bucket: version}`` map. One multi-path read per version dir; the
+        explicit schema skips Spark's footer-inference job and reads a
+        column missing from an older state format as null."""
+        if not entries:
+            return self._bucket(self._empty_state())
+        by_version: dict = {}
         for b, v in entries.items():
             by_version.setdefault(v, []).append(b)
         parts = []
@@ -482,14 +497,14 @@ class CdcApplyPipeline:
             base = os.path.join(self.state_dir, _vdir_name(v))
             paths = [os.path.join(base, f"bucket={b}") for b in sorted(bs)]
             parts.append(
-                self.spark.read.option("basePath", base).parquet(*paths).drop("bucket")
+                self.spark.read.schema(f"{STATE_SCHEMA}, bucket int")
+                .option("basePath", base)
+                .parquet(*paths)
             )
         out = parts[0]
         for p in parts[1:]:
-            # allowMissingColumns: versions written by an older state format
-            # may lack late-added STATE_COLS; the backfill below nulls them
-            out = out.unionByName(p, allowMissingColumns=True)
-        return _upgrade_state_format(out)
+            out = out.unionByName(p)
+        return out
 
     # -- foreachBatch body ------------------------------------------------
     def apply_batch(self, batch: DataFrame, batch_id: int) -> None:
@@ -534,131 +549,82 @@ class CdcApplyPipeline:
                 .withColumnRenamed("target_db", "db")
                 .withColumnRenamed("target_collection", "collection")
             )
-        # One materialization for the whole body: the drop-cutoff aggregate,
-        # state fold, mirror, and positions writes are four separate actions
-        # — without the persist each re-runs the whitelist/scope/remap chain
-        # over the source batch (2× read amplification on the hot path).
-        # Cached at the post-remap point so every consumer shares ONE scan.
+        # A microbatch is two passes over the batch, five Spark jobs in all
+        # (eleven before; tests/test_streaming.py pins the budget): the
+        # ops cache, the control aggregate (map + collect) and the
+        # single-shuffle merge (map + write). The driver writes the
+        # positions file with no Spark job, and state/positions reads carry
+        # an explicit schema, so none of them fires a footer-inference job.
+        # In-JVM A/B of each lever against its former shape
+        # (scripts/ab_inproc.py swap, sf0.01, local[4], 4-core host);
+        # new/old median CPU and wall, streaming_cdc_apply | _positions:
+        #   whole body vs the eleven-job body, 6 pairs:
+        #     CPU 0.69 | 0.59, wall 0.81 | 0.79
+        #   one control aggregate vs distinct ∪ drop-agg plus a separate
+        #   positions aggregate, 6 pairs: CPU 0.86 | 0.95, wall 0.93 | 0.88
+        #   driver-written positions vs the overlapped Spark write in a
+        #   thread, 6 pairs: CPU 0.83 | 0.83, wall 0.92 | 0.97
+        #   bucket-carrying single-shuffle merge vs groupBy then
+        #   repartition(len(touched), "bucket"), 6 pairs:
+        #     CPU 0.75 | 0.68, wall 0.80 | 0.83
+        #   explicit state-read schema vs inference, 2 draws of 12 pairs:
+        #     CPU 0.94, 0.95 | 1.01, 1.03; wall 0.92, 0.96 | 0.97, 0.97.
+        #     Kept: streaming_positions only reads state inside the merge,
+        #     its pairs split 12/24, and a swap of a method that query
+        #     never calls read 1.07, so the 1.01-1.03 is noise; the alive()
+        #     read of streaming_cdc_apply is where the saved job shows.
+        #   explicit positions-read schema vs inference, 12 pairs:
+        #     streaming_positions CPU 0.94, wall 0.98
+        # The persist stays: both passes read ops, and without it the
+        # stream's observe("apply_metrics") counts every op twice.
         ops = ops.persist()
-        # Bulk-drop cutoffs (DropPartition / DropCollection ride the DML
-        # stream, channel_writer.go:245-267): scope-level max-ts cutoffs are
-        # CATALOG-SIZED control state — they live in the manifest (atomic
-        # with the batch commit, max-merged so replay is idempotent) and are
-        # applied at alive() read time, never folded per-pk into buckets.
-        # Collected here, but MERGED only at the commit point below: if a
-        # later state/positions write fails, the in-memory manifest must not
-        # already reflect this batch's drops (alive() would apply drops from
-        # a batch whose per-pk state was never applied — ADVICE r6).
-        # r14: single-level merge — the bucket probe reads the raw ops and
-        # merge_state folds the batch in ONE aggregation (see
-        # ops_as_partial_state). The former shape pre-aggregated the batch
-        # (batch_to_state) into a persisted `update` frame consumed by
-        # probe + merge: one extra exchange + hash aggregate + cache
-        # materialization per microbatch for a fold Catalyst already
-        # partial-aggregates map-side. Within-JVM interleaved A/B at
-        # sf0.1: streaming_cdc_apply 12.51 -> 9.48 s, streaming_positions
-        # 15.59 -> 12.11 s (ratios 0.758 / 0.777), identical oracle rows.
-        pos_thread = pos_err = None
         try:
-            # ONE driver job covers both control reads: the touched-bucket
-            # list (which state partitions the merge rewrites) and the
-            # bulk-drop cutoff aggregate — unioned so the drop scan never
-            # costs its own per-microbatch job (drop ops are rare; the
-            # overwhelmingly common drop-free batch previously paid a
-            # filter→groupBy→collect job that returned nothing — VERDICT r7).
-            # Both branches read the persisted ops, so the union's
-            # map side is cache-local. Output stays driver-sized: buckets
-            # are bounded by n_buckets, drops are catalog-sized.
-            ts_type = dict(ops.dtypes)["ts"]
-            bucket_probe = self._bucket(ops).select(
-                F.lit(None).cast("string").alias("op_type"),
-                F.lit(None).cast("string").alias("collection"),
-                F.lit(None).cast("string").alias("partition"),
-                F.lit(None).cast(ts_type).alias("ts"),
-                F.col("bucket").cast("long").alias("bucket"),
-            ).distinct()
-            # drop branch only when the task's whitelist can ADMIT drop ops
-            # (driver-known): an insert/delete-only task never pays the
-            # drop filter->groupBy stage — its control job is the probe
-            # alone (VERDICT r8 #5)
-            may_drop = any(
-                t in self.msg_types
-                for t in ("drop_collection", "drop_partition")
-            )
+            # ONE control aggregate answers every driver-side question of
+            # the batch: the touched buckets (the only state partitions the
+            # merge reads and rewrites), the per-vchannel positions, and the
+            # bulk-drop cutoffs. The d_* columns are null for DML, so the
+            # output stays driver-sized: buckets x vchannels plus the
+            # catalog-sized drop scopes (DropPartition / DropCollection ride
+            # the DML stream, channel_writer.go:245-267).
+            is_drop = F.col("op_type").isin("drop_collection", "drop_partition")
             t0 = time.time()
-            if may_drop:
-                drop_agg = (
-                    ops.filter(
-                        F.col("op_type").isin(
-                            "drop_collection", "drop_partition"
-                        )
-                    )
-                    .groupBy("op_type", "collection", "partition")
-                    .agg(F.max("ts").alias("ts"))
-                    .withColumn("bucket", F.lit(None).cast("long"))
+            control = (
+                self._bucket(ops)
+                .groupBy(
+                    "bucket",
+                    "vchannel",
+                    F.when(is_drop, F.col("op_type")).alias("d_op"),
+                    F.when(is_drop, F.col("collection")).alias("d_coll"),
+                    F.when(is_drop, F.col("partition")).alias("d_part"),
                 )
-                control = bucket_probe.unionByName(drop_agg).collect()
-            else:
-                control = bucket_probe.collect()
-            t_control = time.time()
-            drop_rows = [r for r in control if r.op_type is not None]
-            # Overlap the (independent) positions write with the state
-            # merge (guide §2.6): both consume the persisted ops, and the
-            # commit point below joins the thread before the manifest is
-            # written, so the position-after-apply ordering is preserved
-            # at the COMMIT granularity (positions for batch N are never
-            # visible without batch N's state: both land before commit).
-            # Within-JVM interleaved A/B at sf0.1 (merge already
-            # single-level): streaming_cdc_apply 12.82 -> 10.03 s,
-            # streaming_positions 10.92 -> 9.29 s (0.783 / 0.851).
-            # SPARK_GRAFT_CDC_OVERLAP=0 is the serial-path kill switch.
-            overlap = os.environ.get("SPARK_GRAFT_CDC_OVERLAP", "1") != "0"
-            if overlap:
-                from pyspark import InheritableThread
-
-                def _write_positions():
-                    nonlocal pos_err
-                    try:
-                        ops.groupBy("vchannel").agg(
-                            F.max("ts").alias("position_ts"),
-                            F.count("*").alias("n_msgs"),
-                        ).write.mode("overwrite").parquet(
-                            os.path.join(
-                                self.positions_dir, f"batch_id={batch_id}"
-                            )
-                        )
-                    except BaseException as e:  # re-raised pre-commit
-                        pos_err = e
-
-                pos_thread = InheritableThread(target=_write_positions)
-                pos_thread.start()
-            # buckets present in THIS batch — the only state partitions the
-            # merge reads and rewrites (driver list, bounded by n_buckets)
-            touched = sorted(
-                r.bucket for r in control if r.bucket is not None
+                .agg(F.max("ts").alias("ts"), F.count("*").alias("n"))
+                .collect()
             )
+            t_control = time.time()
+            touched = sorted({r.bucket for r in control})
+            positions: dict = {}
+            drops: dict = {}
+            for r in control:
+                ts, n = positions.get(r.vchannel, (None, 0))
+                positions[r.vchannel] = (_max_ts(ts, r.ts), n + r.n)
+                if r.d_op is not None:
+                    k = (r.d_op, r.d_coll, r.d_part)
+                    drops[k] = _max_ts(drops.get(k), r.ts)
             if touched:
-                existing = self.read_state(touched)
-                merged = self._bucket(
-                    merge_state(existing, ops_as_partial_state(ops))
-                )
-                # Align the shuffle with the storage layout: hash-
-                # repartition on bucket so each bucket lands in exactly
-                # one task → ONE file per touched bucket per version.
-                # Without it the merge's 32 groupBy tasks each scatter
-                # into every bucket dir (32 x n_buckets files/version —
-                # the r13 profile measured 2048 state files after four
-                # batches, and every subsequent read_state paid the
-                # open-per-file cost; at 100 TB on an object store that
-                # listing amplification is the difference between a
-                # bounded MERGE and a metadata storm). The extra
-                # exchange moves exactly the rows the groupBy already
-                # shuffled once; bucket files are hash-uniform so the
-                # repartition is skew-free by construction.
+                # both merge sides carry bucket, so merge_state hash-
+                # partitions the union on it ONCE and that exchange also
+                # satisfies the per-pk aggregate. A bucket never spans two
+                # partitions, so the partitionBy write leaves one file per
+                # touched bucket per version (the r13 layout guard), while
+                # AQE may coalesce whole partitions into fewer write tasks.
                 # keyed-by-batch_id overwrite → replay-idempotent
-                merged.repartition(len(touched), "bucket").write.mode(
-                    "overwrite"
-                ).partitionBy("bucket").parquet(
+                live = self._manifest["buckets"]
+                existing = self._read_buckets(
+                    {str(b): live[str(b)] for b in touched if str(b) in live}
+                )
+                merge_state(
+                    existing, self._bucket(ops_as_partial_state(ops))
+                ).write.mode("overwrite").partitionBy("bucket").parquet(
                     os.path.join(self.state_dir, f"v{batch_id}")
                 )
                 for b in touched:
@@ -669,43 +635,27 @@ class CdcApplyPipeline:
                 repaired.write.mode("overwrite").parquet(
                     os.path.join(self.mirror_dir, f"batch_id={batch_id}")
                 )
-            # position write-back AFTER successful apply (reference ordering);
-            # per-batch partition dir + overwrite = idempotent under replay.
-            # Measured (r13 A/B, SCALE.md §5t): this distributed
-            # groupBy-over-the-cached-batch is ~0.2 s/batch; folding the
-            # aggregate into the control collect and writing the rows from
-            # a driver createDataFrame costs ~4.6 s/batch — a Python-
-            # parallelize-backed write pays a Python-worker roundtrip the
-            # JVM-side aggregate never does. Keep the distributed form.
-            if pos_thread is not None:
-                pos_thread.join()
-                if pos_err is not None:
-                    raise pos_err
-            else:
-                positions = ops.groupBy("vchannel").agg(
-                    F.max("ts").alias("position_ts"), F.count("*").alias("n_msgs")
-                )
-                positions.write.mode("overwrite").parquet(
-                    os.path.join(self.positions_dir, f"batch_id={batch_id}")
-                )
-            t_positions = time.time()
         finally:
-            # a state-write failure must not leave the positions thread
-            # running against an unpersisted frame (its write is
-            # batch-id-keyed and idempotent either way — the replay
-            # overwrites it — but the join keeps teardown orderly)
-            if pos_thread is not None and pos_thread.is_alive():
-                pos_thread.join()
             ops.unpersist()
-        # commit point: everything above is keyed by batch_id and re-runnable
-        for r in drop_rows:
-            if r.op_type == "drop_collection":
+        # position write-back AFTER the apply (reference ordering,
+        # server/cdc_impl.go:1116-1173), still before the commit point
+        self._write_positions(batch_id, positions)
+        t_positions = time.time()
+        # commit point: everything above is keyed by batch_id and
+        # re-runnable. Drop cutoffs are CATALOG-SIZED control state: they
+        # live in the manifest (atomic with the batch commit, max-merged so
+        # replay is idempotent) and are applied at alive() read time. They
+        # merge only here: if a state or positions write failed above, the
+        # in-memory manifest must not already reflect this batch's drops
+        # (ADVICE r6).
+        for (op, coll, part), ts in drops.items():
+            if op == "drop_collection":
                 d = self._manifest.setdefault("coll_drops", {})
-                d[r.collection] = max(d.get(r.collection, -1), r.ts)
+                k = coll
             else:
                 d = self._manifest.setdefault("part_drops", {})
-                k = f"{r.collection}|{r.partition}"
-                d[k] = max(d.get(k, -1), r.ts)
+                k = f"{coll}|{part}"
+            d[k] = max(d.get(k, -1), ts)
         self._manifest["last_batch_id"] = batch_id
         # time-travel history: snapshot the bucket map per commit, bounded
         # retention (metadata only — versions stay alive via GC liveness)
@@ -724,6 +674,38 @@ class CdcApplyPipeline:
             "positions_write": round(t_positions - t_state, 3),
             "commit_gc": round(time.time() - t_positions, 3),
         })
+
+    def _write_positions(self, batch_id: int, positions: dict) -> None:
+        """Write one batch's ``{vchannel: (position_ts, n_msgs)}`` as the
+        single parquet file of ``positions/batch_id=N/``, from the driver.
+
+        The dir is cleared first, so a replayed batch replaces whatever an
+        earlier attempt left there (including a multi-part Spark write) and
+        ``n_msgs`` is never counted twice. The file lands under a dot-temp
+        name (skipped by Spark and by ``*.parquet`` globs) and is renamed
+        into place, so a reader never sees a torn file."""
+        import pyarrow as pa
+        import pyarrow.parquet as pq
+
+        out = os.path.join(self.positions_dir, f"batch_id={batch_id}")
+        shutil.rmtree(out, ignore_errors=True)
+        os.makedirs(out)
+        names = sorted(positions, key=lambda v: (v is None, v or ""))
+        table = pa.table(
+            {
+                "vchannel": names,
+                "position_ts": [positions[v][0] for v in names],
+                "n_msgs": [positions[v][1] for v in names],
+            },
+            schema=pa.schema([
+                ("vchannel", pa.string()),
+                ("position_ts", pa.int64()),
+                ("n_msgs", pa.int64()),
+            ]),
+        )
+        tmp = os.path.join(out, ".part-00000.parquet.tmp")
+        pq.write_table(table, tmp)
+        os.replace(tmp, os.path.join(out, "part-00000.parquet"))
 
     def _gc_stale_state_versions(self) -> None:
         """Drop version directories no bucket references anymore (bounded
@@ -883,7 +865,7 @@ class CdcApplyPipeline:
         # without the repartition every read task scatters into every
         # bucket dir and the compaction epoch reintroduces the small-file
         # blowup compaction exists to fix.
-        full = self._bucket(self.read_state())
+        full = self._read_buckets(self._manifest["buckets"])
         full.repartition(self.n_buckets, "bucket").write.mode(
             "overwrite"
         ).partitionBy("bucket").parquet(out)
@@ -916,19 +898,20 @@ class CdcApplyPipeline:
     def _committed_positions(self) -> DataFrame | None:
         """The positions table restricted to COMMITTED batches.
 
-        Visibility is directory-level: the overlapped positions thread
-        (or a crash between the positions write and the manifest commit)
-        can leave ``batch_id=N`` on disk while the manifest still says
-        N-1 — a position for a batch whose state was never applied
-        (ADVICE r14). ``batch_id`` is a partition column of
-        positions_dir, so filtering to ``batch_id <= last_batch_id``
-        restores the old serial path's state-before-positions ordering
-        at read time; replay later overwrites the orphan dir in place.
-        Returns None when the directory does not exist yet."""
-        try:
-            pos = self.spark.read.parquet(self.positions_dir)
-        except Exception:
+        Visibility is directory-level: a crash or failure between the
+        positions write and the manifest commit leaves ``batch_id=N`` on
+        disk while the manifest still says N-1 — a position for a batch
+        that never committed (ADVICE r14). ``batch_id`` is a partition
+        column of positions_dir, so filtering to ``batch_id <=
+        last_batch_id`` hides the orphan; replay later replaces the orphan
+        dir in place. The explicit schema spares every read a
+        footer-inference job. Returns None when the directory does not
+        exist yet."""
+        if not os.path.isdir(self.positions_dir):
             return None
+        pos = self.spark.read.schema(
+            f"{POSITIONS_SCHEMA}, batch_id bigint"
+        ).parquet(self.positions_dir)
         return pos.filter(F.col("batch_id") <= self._manifest["last_batch_id"])
 
     def positions(self) -> DataFrame:

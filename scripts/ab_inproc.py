@@ -3,6 +3,7 @@
 Usage:
   python scripts/ab_inproc.py env VAR VAL_A VAL_B NAMES [PAIRS] [SF_DIR]
   python scripts/ab_inproc.py swap MODULE:FUNC FILE.py:FUNC NAMES [PAIRS] [SF_DIR]
+  python scripts/ab_inproc.py swap MODULE:Class.method FILE.py:FUNC NAMES [PAIRS] [SF_DIR]
 
 ``NAMES`` is a comma-separated list of registry queries; ``SF_DIR``
 defaults to ``$SPARK_GRAFT_SF_DIR``, and the warm-up runs at the
@@ -15,7 +16,10 @@ defaults to ``$SPARK_GRAFT_SF_DIR``, and the warm-up runs at the
   attribute ``FUNC`` of module ``MODULE`` with function ``FUNC`` loaded
   from ``FILE.py``. Callers that look the function up through its
   module (``similarity.ivf_train(...)``, or a bare call inside that
-  module) see the replacement, so an A/B needs no engine knob.
+  module) see the replacement, so an A/B needs no engine knob. Either
+  ``FUNC`` may be a dotted ``Class.method`` (say
+  ``CdcApplyPipeline._apply_batch_inner``): swapping it on the class
+  makes every instance run arm B, including ones a query builds.
 
 Each query runs as alternating A/B pairs inside ONE session (order
 A B B A A B ...), timing fn+count with the bench's warm-up/cache-clear
@@ -56,17 +60,29 @@ def env_arms(var: str, val_a: str, val_b: str) -> dict:
     return {"a": setter(val_a), "b": setter(val_b)}
 
 
+def _owner(root, dotted: str) -> tuple[object, str]:
+    """``(object holding the last name, last name)`` of a dotted path
+    under ``root``: ``Class.method`` -> ``(Class, "method")``."""
+    *outer, name = dotted.split(".")
+    for part in outer:
+        root = getattr(root, part)
+    return root, name
+
+
 def swap_arms(target: str, replacement: str) -> dict:
     mod_name, _, attr = target.partition(":")
     path, _, fn_name = replacement.partition(":")
-    module = importlib.import_module(mod_name)
     spec = importlib.util.spec_from_file_location("_ab_replacement", path)
     repl_mod = importlib.util.module_from_spec(spec)
     spec.loader.exec_module(repl_mod)
-    original, swapped = getattr(module, attr), getattr(repl_mod, fn_name)
+    owner, name = _owner(importlib.import_module(mod_name), attr)
+    repl_owner, repl_name = _owner(repl_mod, fn_name)
+    # vars(), not getattr(): a class keeps its raw function (or
+    # staticmethod) so restoring arm A puts back exactly what was there
+    original, swapped = vars(owner)[name], vars(repl_owner)[repl_name]
     return {
-        "a": lambda: setattr(module, attr, original),
-        "b": lambda: setattr(module, attr, swapped),
+        "a": lambda: setattr(owner, name, original),
+        "b": lambda: setattr(owner, name, swapped),
     }
 
 

@@ -4,6 +4,8 @@ from __future__ import annotations
 
 import json
 
+import pytest
+
 from milvus_cdc_spark.control.quarantine import ErrorQuarantine
 from milvus_cdc_spark.sources import kafka
 
@@ -571,3 +573,26 @@ sourceConfig:
 
     with _pytest.raises(ValueError):
         load_cdc_yaml(str(y3))
+
+
+def test_task_registry_persist_is_atomic(spark, tmp_path, monkeypatch):
+    """A write that dies mid-way through tasks.json (json.dump failing
+    after part of the document is out) leaves the previous registry file
+    loadable with every task in it: _persist writes a temp file and
+    renames it into place."""
+    from milvus_cdc_spark.control.tasks import TaskRegistry
+
+    reg = TaskRegistry(spark, str(tmp_path))
+    ids = {reg.create("/dev/null", [f"c_atomic_{i}"]).task_id for i in range(2)}
+
+    def torn_dump(obj, f, **kw):
+        f.write('{"torn": ')
+        raise OSError("injected failure mid-write")
+
+    monkeypatch.setattr(json, "dump", torn_dump)
+    with pytest.raises(OSError, match="mid-write"):
+        reg.create("/dev/null", ["c_atomic_2"])
+    monkeypatch.undo()
+    with open(reg.meta_path) as f:
+        assert set(json.load(f)) == ids
+    assert {t["task_id"] for t in TaskRegistry(spark, str(tmp_path)).list()} == ids

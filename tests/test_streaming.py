@@ -2051,3 +2051,195 @@ def test_dropfree_whitelist_skips_drop_branch(spark, monkeypatch):
     pipe2.run_available_now()
     assert pipe2._manifest["part_drops"] == {"c0|p0": 5}
     assert pipe2.alive().count() == 0
+
+
+def _budget_ops(spark, bid):
+    """A fixed microbatch: inserts over two partitions and two channels,
+    deletes, and one partition drop."""
+    from milvus_cdc_spark.streaming import pipeline as pipeline_mod
+
+    rows = [
+        (100 * bid + i, "insert", "default", "c0", f"p{i % 2}", f"ch{i % 2}",
+         i, 1, i)
+        for i in range(12)
+    ]
+    rows += [
+        (100 * bid + 50 + i, "delete", "default", "c0", "p0", "ch1", i, 1, 20 + i)
+        for i in range(3)
+    ]
+    rows.append(
+        (100 * bid + 60, "drop_partition", "default", "c0", "p1", "ch0", -1, 0, 30)
+    )
+    return spark.createDataFrame(rows, pipeline_mod.OPLOG_SCHEMA)
+
+
+def test_apply_batch_job_budget(spark):
+    """A microbatch over existing state costs at most five Spark jobs:
+    the ops cache, the control aggregate (map + collect) and the merge
+    (map + write). Positions are written by the driver and the state
+    read has an explicit schema, so neither may add a job."""
+    import uuid
+
+    tmp = tempfile.mkdtemp(prefix="job_budget_")
+    pipe = CdcApplyPipeline(spark, tmp + "/src", tmp + "/work", n_buckets=4)
+    pipe.apply_batch(_budget_ops(spark, 1), 0)  # existing state to merge into
+    batch = _budget_ops(spark, 2)
+    sc = spark.sparkContext
+    group = f"job_budget_{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "one CDC microbatch")
+    try:
+        pipe.apply_batch(batch, 1)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    jobs = sc.statusTracker().getJobIdsForGroup(group)
+    assert len(jobs) <= 5, sorted(jobs)
+    assert pipe.last_batch_id == 1
+
+
+def test_driver_written_positions_read_back(spark, sf_dir):
+    """The driver-written positions file is one parquet file per batch
+    dir with the (vchannel string, position_ts bigint, n_msgs bigint)
+    schema, and every reader agrees on it: positions(), channel_lag(),
+    compact_positions() and the DuckDB-based position_tool listing."""
+    import glob
+    import json
+    import os
+    import subprocess
+
+    import pyarrow.parquet as pq
+
+    from milvus_cdc_spark.operators import filters
+
+    ops = oplog.derive_oplog(catalog.load_table(spark, sf_dir, "lineitem"))
+    tmp = tempfile.mkdtemp(prefix="driver_pos_")
+    ops.repartition(8).write.parquet(tmp + "/src")
+    ops = filters.msg_type_whitelist(ops, filters.DML_WHITELIST)
+    pipe = CdcApplyPipeline(spark, tmp + "/src", tmp + "/work", compact_every=0)
+    pipe.run_available_now()
+    assert pipe.last_batch_id >= 1
+    for d in glob.glob(os.path.join(pipe.positions_dir, "batch_id=*")):
+        [f] = os.listdir(d)
+        assert f.endswith(".parquet") and not f.startswith(".")
+        assert str(pq.read_schema(os.path.join(d, f))) == (
+            "vchannel: string\nposition_ts: int64\nn_msgs: int64"
+        )
+    want = {
+        r.vchannel: (r.mx, r.n)
+        for r in ops.groupBy("vchannel")
+        .agg(F.max("ts").alias("mx"), F.count("*").alias("n"))
+        .collect()
+    }
+    assert {
+        r.vchannel: r.position_ts for r in pipe.positions().collect()
+    } == {v: mx for v, (mx, _) in want.items()}
+    gmax = max(mx for mx, _ in want.values())
+    assert {r.vchannel: r.lag_ms for r in pipe.channel_lag().collect()} == {
+        v: (gmax >> 18) - (mx >> 18) for v, (mx, _) in want.items()
+    }
+    tool = os.path.join(
+        os.path.dirname(os.path.abspath(__file__)), "..", "scripts",
+        "position_tool.py",
+    )
+    out = subprocess.run(
+        [sys.executable, tool, "list", pipe.positions_dir],
+        capture_output=True, text=True, check=True,
+    )
+    listed = [json.loads(line) for line in out.stdout.splitlines()]
+    assert {r["vchannel"]: (r["position_ts"], r["n_msgs"]) for r in listed} == want
+    pipe.compact_positions()
+    [summary] = glob.glob(os.path.join(pipe.positions_dir, "*", "*.parquet"))
+    got = {
+        r["vchannel"]: (r["position_ts"], r["n_msgs"])
+        for r in pq.read_table(summary).to_pylist()
+    }
+    assert got == want
+
+
+def test_replayed_positions_replace_older_part_files(spark):
+    """An uncommitted batch whose positions dir still holds part files
+    from an earlier attempt (here a two-file Spark write) is replayed
+    into exactly one file, and its n_msgs is the batch's count, not the
+    sum over the attempts."""
+    import os
+
+    from milvus_cdc_spark.streaming import pipeline as pipeline_mod
+
+    tmp = tempfile.mkdtemp(prefix="pos_replay_")
+    pipe = CdcApplyPipeline(spark, tmp + "/src", tmp + "/work", n_buckets=2)
+    batch = spark.createDataFrame(
+        [
+            (100, "insert", "default", "c0", "p0", "ch0", 1, 1, 1),
+            (200, "insert", "default", "c0", "p0", "ch0", 2, 1, 2),
+            (300, "delete", "default", "c0", "p0", "ch1", 1, 1, 3),
+        ],
+        pipeline_mod.OPLOG_SCHEMA,
+    )
+    stale = os.path.join(pipe.positions_dir, "batch_id=0")
+    batch.groupBy("vchannel").agg(
+        F.max("ts").alias("position_ts"), F.count("*").alias("n_msgs")
+    ).repartition(2).write.parquet(stale)
+    assert sum(f.endswith(".parquet") for f in os.listdir(stale)) == 2
+    assert pipe.positions().count() == 0  # uncommitted: hidden
+    pipe.apply_batch(batch, 0)
+    assert [f for f in os.listdir(stale) if not f.startswith(".")] == [
+        "part-00000.parquet"
+    ]
+    got = pipe._committed_positions().collect()
+    assert {(r.vchannel, r.position_ts, r.n_msgs) for r in got} == {
+        ("ch0", 200, 2),
+        ("ch1", 300, 1),
+    }
+
+
+@pytest.mark.parametrize(
+    "msg_types",
+    [None, ("insert", "upsert", "import", "delete")],
+    ids=["drops_admitted", "drop_free"],
+)
+def test_control_aggregate_drop_cutoffs_match_reference(spark, msg_types):
+    """The drop cutoffs the single control aggregate yields equal a
+    per-scope max-ts computed here over the whitelisted ops — with a
+    whitelist that admits drops and with one that does not (then there
+    are none), across two batches so the manifest max-merge is covered."""
+    from milvus_cdc_spark.operators.filters import DML_WHITELIST
+    from milvus_cdc_spark.streaming import pipeline as pipeline_mod
+
+    batches = [
+        [
+            (10, "insert", "default", "c0", "p0", "ch0", 1, 1, 1),
+            (15, "drop_partition", "default", "c0", "p0", "ch0", -1, 0, 2),
+            (17, "drop_partition", "default", "c0", "p0", "ch1", -1, 0, 3),
+            (18, "drop_partition", "default", "c0", "p1", "ch1", -1, 0, 4),
+            (20, "drop_collection", "default", "c1", "_default", "ch0", -1, 0, 5),
+            (25, "delete", "default", "c0", "p1", "ch1", 1, 1, 6),
+        ],
+        [
+            (30, "insert", "default", "c1", "p0", "ch0", 7, 1, 7),
+            (16, "drop_partition", "default", "c0", "p0", "ch0", -1, 0, 8),
+            (40, "drop_collection", "default", "c1", "p9", "ch1", -1, 0, 9),
+            (41, "drop_partition", "default", "c2", "p0", "ch0", -1, 0, 10),
+        ],
+    ]
+    admitted = msg_types or DML_WHITELIST
+    want_coll, want_part = {}, {}
+    for rows in batches:
+        for ts, op, _db, coll, part, *_ in rows:
+            if op not in admitted:
+                continue
+            if op == "drop_collection":
+                want_coll[coll] = max(want_coll.get(coll, -1), ts)
+            elif op == "drop_partition":
+                k = f"{coll}|{part}"
+                want_part[k] = max(want_part.get(k, -1), ts)
+    if msg_types is None:
+        assert want_coll and want_part  # the reference is not vacuous
+    tmp = tempfile.mkdtemp(prefix="drop_ref_")
+    pipe = CdcApplyPipeline(
+        spark, tmp + "/src", tmp + "/work", n_buckets=4, msg_types=msg_types
+    )
+    for bid, rows in enumerate(batches):
+        pipe.apply_batch(
+            spark.createDataFrame(rows, pipeline_mod.OPLOG_SCHEMA), bid
+        )
+    assert pipe._manifest.get("coll_drops", {}) == want_coll
+    assert pipe._manifest.get("part_drops", {}) == want_part

@@ -20,7 +20,11 @@ import subprocess
 import sys
 
 SCRIPT = r"""
+import glob
+import os
+import shutil
 import sys
+import tempfile
 sys.path.insert(0, "/root/repo")
 sys.path.insert(0, "/root/repo/scripts")
 import duckdb
@@ -44,6 +48,10 @@ assert spark.conf.get("spark.sql.codegen.cache.maxEntries") == "100"
 from milvus_cdc_spark import suite
 from milvus_cdc_spark.catalog import TABLES, load_table
 
+# a private temp root, so the layout check below sees only this run's
+# pipeline work dirs
+tempfile.tempdir = tempfile.mkdtemp(prefix="vanilla_contract_")
+
 # (1) TIMESTAMP(NANOS) readable via load_table on a vanilla session
 ev = load_table(spark, SF_DIR, "events")
 assert dict(ev.dtypes)["ts"] == "timestamp", ev.dtypes
@@ -60,6 +68,8 @@ for name in (
     "ready_set_equality",       # bug 3: array columns
     "partition_drop_replay",    # r15: local_frame NULL bigint, Arrow off
     "kmeans_silhouette",        # long-form Lloyd step, no codegen conf
+    "streaming_cdc_apply",      # CDC merge at 200 shuffle partitions
+    "streaming_positions",      # driver-written positions, Arrow off
 ):
     spec = suite.QUERIES[name]
     spdf = spec.fn(spark, SF_DIR).toPandas()
@@ -67,8 +77,18 @@ for name in (
     problems = compare_frames(spdf, opdf)
     assert not problems, (name, problems)
 
+# the CDC merge keeps one file per touched bucket per state version even
+# at the default 200 shuffle partitions
+bucket_dirs = glob.glob(os.path.join(tempfile.gettempdir(), "cdc_*", "work",
+                                     "state", "v*", "bucket=*"))
+assert bucket_dirs
+for d in bucket_dirs:
+    n = sum(f.endswith(".parquet") for f in os.listdir(d))
+    assert n <= 1, (d, n)
+
 print("VANILLA_CONTRACT_OK")
 spark.stop()
+shutil.rmtree(tempfile.tempdir, ignore_errors=True)
 """
 
 
