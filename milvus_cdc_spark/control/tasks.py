@@ -18,6 +18,7 @@ from __future__ import annotations
 
 import json
 import os
+import threading
 import uuid
 from dataclasses import asdict, dataclass, field
 
@@ -97,6 +98,9 @@ class TaskRegistry:
         self.tasks: dict[str, TaskSpec] = {}
         self.pipelines: dict[str, CdcApplyPipeline] = {}
         self.quarantines: dict[str, ErrorQuarantine] = {}
+        # tasks start concurrently, one thread each, and every start ends
+        # in _persist: its fixed temp name must have one writer at a time
+        self._persist_lock = threading.Lock()
         os.makedirs(root_dir, exist_ok=True)
         self._reload()
 
@@ -105,9 +109,12 @@ class TaskRegistry:
         """Write-then-rename, like the state manifest's commit: a failure
         mid-write leaves the previous ``tasks.json`` whole."""
         tmp = self.meta_path + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump({tid: asdict(t) for tid, t in self.tasks.items()}, f, indent=2)
-        os.replace(tmp, self.meta_path)
+        with self._persist_lock:
+            with open(tmp, "w") as f:
+                json.dump(
+                    {tid: asdict(t) for tid, t in self.tasks.items()}, f, indent=2
+                )
+            os.replace(tmp, self.meta_path)
 
     def _reload(self) -> None:
         """ReloadTask semantics (cdc_impl.go:183-216): tasks survive restart;
@@ -306,16 +313,9 @@ class TaskRegistry:
         if op == "force_log":
             log.warning("forced log message: %s", data.get("message", ""))
             return {"ok": True}
-        if op == "compact_positions":
-            # small-file control on demand (the pipeline also self-schedules
-            # via compact_every); one task or all
-            tids = [data["task_id"]] if data.get("task_id") else list(self.pipelines)
-            for tid in tids:
-                self.pipelines[tid].compact_positions()
-            return {"ok": True, "compacted": tids}
         if op == "compact_state":
             # state-table version-sprawl control (bucket dirs fold into one
-            # compaction epoch; logical content unchanged)
+            # compaction epoch; logical content unchanged); one task or all
             tids = [data["task_id"]] if data.get("task_id") else list(self.pipelines)
             for tid in tids:
                 self.pipelines[tid].compact_state()

@@ -19,17 +19,19 @@ Spark shape:
              (idempotent, commutative: per-pk max of insert/delete ts —
              so replay, reordering, and at-least-once delivery all
              converge to the same state), with a single shuffle on bucket
-      → the driver writes the batch's positions file, AFTER the apply and
-        before the commit, mirroring the reference's position-after-apply
-        ordering (server/cdc_impl.go:1116-1173)
-      → manifest commit (atomic rename)
+      → manifest commit (atomic rename), which also carries each
+        vchannel's position: the commit happens AFTER the apply, mirroring
+        the reference's position-after-apply ordering
+        (server/cdc_impl.go:1116-1173)
 
 State layout — designed so per-batch I/O scales with the BATCH, not the
 state (the reference applies per channel and touches only affected rows,
 core/writer/replicate_message_manager.go:33-128):
 
     state/
-      MANIFEST.json          ← {bucket → version, last_batch_id}; committed
+      MANIFEST.json          ← {bucket → version, last_batch_id, drop
+                               cutoffs, per-vchannel [vchannel,
+                               position_ts, n_msgs] rows}; committed
                                atomically (tmp + rename) AFTER the batch's
                                writes — the parquet Delta-MERGE stand-in
       v{batch_id}/bucket=K/  ← only buckets whose pks appear in that batch
@@ -43,9 +45,14 @@ outright. On restart the manifest is re-read from disk, so a NEW process
 over the same work_dir resumes with full state (no in-memory-only version
 counter).
 
-On a Delta-enabled cluster the same foreachBatch body becomes
-``MERGE INTO state`` + a transactional positions upsert; the bucketed
-parquet layout is the no-Delta equivalent with the same write amplification.
+Positions are control-sized metadata, so they live in the manifest like
+the reference's per-channel checkpoints live in its meta store beside the
+task (server/model/meta/task.go:99-116): a position is visible exactly
+when its batch is committed, with no table, compaction or recovery of its
+own. On a Delta-enabled cluster the foreachBatch body becomes ``MERGE INTO
+state`` and the manifest becomes the Delta log's commit; the bucketed
+parquet layout is the no-Delta equivalent with the same write
+amplification.
 """
 
 from __future__ import annotations
@@ -78,21 +85,19 @@ STATE_SCHEMA = (
 #:   1 — pre-``partition`` state rows, no ``format_version`` key (legacy;
 #:       readable — ``read_state``'s explicit STATE_SCHEMA reads the
 #:       missing column as null, which a partition-drop cutoff never hits)
-#:   2 — current: ``partition`` in STATE_COLS, drop cutoffs + history in
-#:       the manifest.
-#: The migrate-on-load stamp in ``_load_manifest`` is a ONE-WAY upgrade
-#: for the state dir: committing even one batch from a v1 dir rewrites
-#: the manifest as v2, and a v1-era engine (which has no version gate)
-#: would mis-read v2-only manifest keys — roll back the engine only
-#: together with a state-dir restore (the history/time-travel entries
-#: exist for exactly that).
+#:   2 — ``partition`` in STATE_COLS, drop cutoffs + history in the
+#:       manifest; positions in a ``positions/batch_id=N/`` parquet table.
+#:   3 — current: per-vchannel positions in the manifest.
+#: The migrate-on-load in ``_load_manifest`` is a ONE-WAY upgrade for the
+#: state dir: committing even one batch from an older dir rewrites the
+#: manifest as v3. A v2 engine refuses it at its version gate, and a
+#: v1-era engine (which has no version gate) would mis-read newer
+#: manifest keys — roll back the engine only together with a state-dir
+#: restore (the history/time-travel entries exist for exactly that).
 #: A manifest from a NEWER writer is refused at load (``StateFormatError``)
 #: instead of silently null-backfilling columns whose semantics this
 #: reader does not know — the silent-accept path was VERDICT r7 item 5.
-STATE_FORMAT_VERSION = 2
-
-#: One row per vchannel per batch in ``positions/batch_id=N/``.
-POSITIONS_SCHEMA = "vchannel string, position_ts bigint, n_msgs bigint"
+STATE_FORMAT_VERSION = 3
 
 
 class StateFormatError(RuntimeError):
@@ -110,62 +115,33 @@ def _vdir_name(v) -> str:
     return f"v{v}" if isinstance(v, int) else str(v)
 
 
-def batch_to_state(batch: DataFrame) -> DataFrame:
-    """Collapse one microbatch to per-pk partial state."""
-    # insert/upsert/import advance last_insert_ts uniformly — the shared
-    # filters.INSERT_LIKE contract, kept identical to the P1 whitelist and
-    # the batch replay so the apply path never drops a whitelisted row
-    from milvus_cdc_spark.operators.filters import insert_like
-
-    is_ins = insert_like()
-    # the LATEST insert's partition rides a struct max with last_insert_ts
-    # (ties broken by partition string — deterministic): under per-pk LWW a
-    # pk lives in exactly one partition, and DropPartition cutoffs at
-    # alive() need to know which (channel_writer.go:245-267 drops are DML)
-    part = (
-        F.col("partition")
-        if "partition" in batch.columns
-        else F.lit(None).cast("string")
-    )
-    return (
-        batch.groupBy("collection", "pk")
-        .agg(
-            F.max(
-                F.when(is_ins, F.struct(F.col("ts").alias("ts"), part.alias("p")))
-            ).alias("_ins"),
-            F.max(F.when(F.col("op_type") == "delete", F.col("ts"))).alias(
-                "last_delete_ts"
-            ),
-            F.sum(F.when(is_ins, F.col("num_rows")).otherwise(F.lit(0))).alias(
-                "n_inserts"
-            ),
-        )
-        .select(
-            "collection",
-            "pk",
-            F.col("_ins.ts").alias("last_insert_ts"),
-            "last_delete_ts",
-            "n_inserts",
-            F.col("_ins.p").alias("partition"),
-        )
-    )
+def _fold_positions(rows, positions: list) -> list:
+    """Fold ``(vchannel, ts, n)`` rows into the manifest's position rows:
+    max ts and summed count per vchannel, sorted with a null vchannel
+    last. Rows, not a dict keyed by vchannel: ``json.dump`` would turn a
+    ``None`` key into the string ``"null"``."""
+    acc = {v: (ts, n) for v, ts, n in positions}
+    for v, ts, n in rows:
+        ts0, n0 = acc.get(v, (None, 0))
+        acc[v] = (_max_ts(ts0, ts), n0 + n)
+    return [[v, *acc[v]] for v in sorted(acc, key=lambda v: (v is None, v or ""))]
 
 
 def ops_as_partial_state(batch: DataFrame) -> DataFrame:
-    """Row-wise (no shuffle) projection of raw ops into STATE_COLS shape,
-    so ``merge_state`` can fold a microbatch in ONE aggregation.
+    """Row-wise (no shuffle) projection of raw ops into STATE_COLS shape:
+    inserts carry (ts, num_rows, partition), deletes carry ts.
 
-    Composing ``merge_state(existing, batch_to_state(ops))`` runs two
-    hash aggregates + two exchanges per microbatch; but every state
-    column is an associative/commutative fold (max struct, max, sum), and
-    Catalyst already performs map-side partial aggregation inside a
-    single groupBy — so pre-collapsing the batch buys nothing and costs
-    an exchange (guide §1.2/§2.4). Each op row becomes one partial-state
-    row: inserts carry (ts, num_rows, partition), deletes carry ts, and
-    ``merge_state``'s max/max/sum over the union is identical to the
-    two-level result by associativity (tie-breaks included: the struct
-    max compares the same candidate set either way).
+    Every state column is an associative/commutative fold (max struct,
+    max, sum), so one aggregation over these rows — alone or unioned with
+    existing state — yields the same state as collapsing the batch first
+    and merging after, tie-breaks included: the struct max compares the
+    same candidate set either way. Catalyst already performs map-side
+    partial aggregation inside a single groupBy, so pre-collapsing the
+    batch would only cost an extra exchange (guide §1.2/§2.4).
     """
+    # insert/upsert/import advance last_insert_ts uniformly — the shared
+    # filters.INSERT_LIKE contract, kept identical to the P1 whitelist and
+    # the batch replay so the apply path never drops a whitelisted row
     from milvus_cdc_spark.operators.filters import insert_like
 
     is_ins = insert_like()
@@ -184,28 +160,15 @@ def ops_as_partial_state(batch: DataFrame) -> DataFrame:
     )
 
 
-def merge_state(existing: DataFrame, update: DataFrame) -> DataFrame:
-    """Idempotent commutative merge: max timestamps, summed insert counts.
-
-    Equivalent to ``MERGE INTO state USING update ON pk WHEN MATCHED
-    UPDATE max(...)`` — expressed as union+re-aggregate so it needs no
-    Delta. When called from the pipeline ``existing`` is only the touched
-    buckets, not the whole state table.
-
-    When ``update`` carries a ``bucket`` column (so must ``existing``),
-    the result keeps it and the union is hash-repartitioned on ``bucket``
-    before the aggregate: that one exchange also satisfies the per-pk
-    grouping, and every bucket lands whole in one partition, ready for a
-    ``partitionBy("bucket")`` write of one file per bucket.
-    """
-    keys = ["bucket"] if "bucket" in update.columns else []
-    both = existing.select(*keys, *STATE_COLS).unionByName(
-        update.select(*keys, *STATE_COLS)
-    )
-    if keys:
-        both = both.repartition(*keys)
+def _fold_state(rows: DataFrame, keys: list[str]) -> DataFrame:
+    """The one per-pk state fold over partial-state rows. The LATEST
+    insert's partition rides a struct max with last_insert_ts (ties broken
+    by partition string — deterministic): under per-pk LWW a pk lives in
+    exactly one partition, and DropPartition cutoffs at alive() need to
+    know which (channel_writer.go:245-267 drops are DML). An insert with a
+    null ts is not a partition candidate."""
     return (
-        both.groupBy(*keys, "collection", "pk")
+        rows.groupBy(*keys, "collection", "pk")
         .agg(
             F.max(
                 F.when(
@@ -231,6 +194,34 @@ def merge_state(existing: DataFrame, update: DataFrame) -> DataFrame:
     )
 
 
+def batch_to_state(batch: DataFrame) -> DataFrame:
+    """Collapse one microbatch to per-pk partial state."""
+    return _fold_state(ops_as_partial_state(batch), [])
+
+
+def merge_state(existing: DataFrame, update: DataFrame) -> DataFrame:
+    """Idempotent commutative merge: max timestamps, summed insert counts.
+
+    Equivalent to ``MERGE INTO state USING update ON pk WHEN MATCHED
+    UPDATE max(...)`` — expressed as union+re-aggregate so it needs no
+    Delta. When called from the pipeline ``existing`` is only the touched
+    buckets, not the whole state table.
+
+    When ``update`` carries a ``bucket`` column (so must ``existing``),
+    the result keeps it and the union is hash-repartitioned on ``bucket``
+    before the aggregate: that one exchange also satisfies the per-pk
+    grouping, and every bucket lands whole in one partition, ready for a
+    ``partitionBy("bucket")`` write of one file per bucket.
+    """
+    keys = ["bucket"] if "bucket" in update.columns else []
+    both = existing.select(*keys, *STATE_COLS).unionByName(
+        update.select(*keys, *STATE_COLS)
+    )
+    if keys:
+        both = both.repartition(*keys)
+    return _fold_state(both, keys)
+
+
 def alive_view(state: DataFrame) -> DataFrame:
     """data_diff rule (main.go:160-174): alive iff max(ins) >= max(del)."""
     return state.filter(
@@ -254,20 +245,15 @@ class CdcApplyPipeline:
     is the knob that keeps a 500 ms trigger from rewriting the world; the
     local default keeps bucket files non-trivial at test scale.
 
-    ``compact_every`` schedules positions compaction (K6 small-file
-    control): every K committed batches the per-batch position partitions
-    fold into one summary partition.
-
     ``files_per_trigger`` is how many source files one microbatch admits.
     The default changed from 2 to 4: the converged state is the same, but
     a drain now takes half as many batches, so callers that count batches
-    or pin batch ids see fewer of them. ``SPARK_GRAFT_CDC_FPT`` overrides
-    it for measurement.
+    or pin batch ids see fewer of them.
 
-    Positions are written by the driver, one small parquet file per batch,
-    from the control aggregate the batch already collects; no Spark job
-    and no background thread writes them. The ``SPARK_GRAFT_CDC_OVERLAP``
-    knob, which switched that thread off, is gone.
+    Positions are folded into the manifest at the commit point from the
+    control aggregate the batch already collects; no Spark job writes or
+    reads them. ``phase_timings``' ``positions_write`` is that in-memory
+    fold.
     """
 
     def __init__(self, spark: SparkSession, source_dir: str, work_dir: str,
@@ -277,13 +263,14 @@ class CdcApplyPipeline:
                  start_positions: dict[str, dict[str, int]] | None = None,
                  mirror: bool = False,
                  n_buckets: int = 16,
-                 compact_every: int = 64,
                  history_keep: int = 8,
                  msg_types: tuple[str, ...] | None = None,
                  files_per_trigger: int = 4):
         self.spark = spark
         self.source_dir = source_dir
         self.state_dir = os.path.join(work_dir, "state")
+        # where format-2 work dirs kept their positions table; read once,
+        # by the migration in _load_manifest
         self.positions_dir = os.path.join(work_dir, "positions")
         self.checkpoint_dir = os.path.join(work_dir, "checkpoint")
         self.collections = collections
@@ -316,10 +303,7 @@ class CdcApplyPipeline:
             self._start_pos_df = local_frame(
                 spark, rows, "collection string, vchannel string, start_ts bigint"
             )
-        # measurement override (A/B harness only — production callers
-        # size n_buckets to state volume explicitly)
-        env_buckets = os.environ.get("SPARK_GRAFT_CDC_BUCKETS")
-        self.n_buckets = int(env_buckets) if env_buckets else n_buckets
+        self.n_buckets = n_buckets
         # Microbatch granularity (r15 verdict #7): how many source files
         # each trigger admits. Results are granularity-independent (the
         # state fold is associative and the oracle pins convergence; the
@@ -333,10 +317,7 @@ class CdcApplyPipeline:
         # would stop exercising the incremental merge/resume path the
         # oracle contract exists to pin; 4 keeps ≥2 microbatches.
         # Production sizes this to source arrival rate.
-        # SPARK_GRAFT_CDC_FPT is the measurement override.
-        env_fpt = os.environ.get("SPARK_GRAFT_CDC_FPT")
-        self.files_per_trigger = int(env_fpt) if env_fpt else files_per_trigger
-        self.compact_every = compact_every
+        self.files_per_trigger = files_per_trigger
         self.history_keep = history_keep
         # P1 whitelist for this task (reference task-level msg-type config,
         # extra_param.go MessageTypeWhiteList). When it admits no drop op,
@@ -351,7 +332,7 @@ class CdcApplyPipeline:
         self._manifest_path = os.path.join(self.state_dir, "MANIFEST.json")
         self._manifest = self._load_manifest()
         #: per-batch wall-clock phase breakdown (control collect / state
-        #: merge+write / positions write / manifest commit+GC), one dict
+        #: merge+write / positions fold / manifest commit+GC), one dict
         #: per applied batch — the observability that sized the r13
         #: per-microbatch cost profile (SCALE.md §5t). ~4 clock reads per
         #: batch; negligible against any Spark job it brackets.
@@ -371,8 +352,7 @@ class CdcApplyPipeline:
         if os.path.exists(self._manifest_path):
             with open(self._manifest_path) as f:
                 m = json.load(f)
-                # version gate: absent key = format 1 (legacy, migratable —
-                # state rows get null-backfilled by _upgrade_state_format);
+                # version gate: absent key = format 1 (legacy, migratable);
                 # a version BEYOND this reader is a hard refuse, never a
                 # silent null-backfill of unknown-semantics columns
                 v = m.setdefault("format_version", 1)
@@ -384,25 +364,27 @@ class CdcApplyPipeline:
                     )
                 # migrate-on-load: stamping the current version is safe
                 # because every pre-2 difference is read-side (column
-                # backfill); the stamp persists at the next commit
+                # backfill) and the pre-3 positions table is folded in
+                # below; the stamp persists at the next commit
                 m["format_version"] = STATE_FORMAT_VERSION
                 m.setdefault("history", [])
+                if "positions" not in m:
+                    m["positions"] = self._legacy_positions(m["last_batch_id"])
                 # bucket-count pin (ADVICE r14): state rows are placed by
                 # pmod(xxhash64(pk), n_buckets), so resuming an existing
-                # work_dir under a DIFFERENT bucket count (constructor
-                # change or the SPARK_GRAFT_CDC_BUCKETS measurement
-                # override) silently misroutes every subsequent probe and
-                # merge. Legacy manifests without the key adopt the
-                # current count (their state was written by this
-                # process's ancestors under the same default); a recorded
-                # mismatch is a hard refuse.
+                # work_dir under a DIFFERENT bucket count silently
+                # misroutes every subsequent probe and merge. Legacy
+                # manifests without the key adopt the current count
+                # (their state was written by this process's ancestors
+                # under the same default); a recorded mismatch is a hard
+                # refuse.
                 recorded = m.setdefault("n_buckets", self.n_buckets)
                 if recorded != self.n_buckets:
                     raise StateFormatError(
                         f"state dir {self.state_dir} was written with "
                         f"n_buckets={recorded}; this pipeline is configured "
                         f"with n_buckets={self.n_buckets} — resume with the "
-                        "recorded bucket count (check SPARK_GRAFT_CDC_BUCKETS)"
+                        "recorded bucket count"
                     )
                 return m
         return {
@@ -411,7 +393,33 @@ class CdcApplyPipeline:
             "history": [],
             "format_version": STATE_FORMAT_VERSION,
             "n_buckets": self.n_buckets,
+            "positions": [],
         }
+
+    def _legacy_positions(self, last_batch_id: int) -> list:
+        """Manifest position rows from a format-2 ``positions/batch_id=N/``
+        table, committed batches only: a dir above ``last_batch_id`` is an
+        orphan of a batch that never committed and will be replayed."""
+        if not os.path.isdir(self.positions_dir):
+            return []
+        import pyarrow as pa
+        import pyarrow.dataset as ds
+
+        table = ds.dataset(
+            self.positions_dir,
+            schema=pa.schema([
+                ("vchannel", pa.string()),
+                ("position_ts", pa.int64()),
+                ("n_msgs", pa.int64()),
+                ("batch_id", pa.int64()),
+            ]),
+            partitioning="hive",
+        ).to_table(filter=ds.field("batch_id") <= last_batch_id)
+        return _fold_positions(
+            zip(*(table.column(c).to_pylist()
+                  for c in ("vchannel", "position_ts", "n_msgs"))),
+            [],
+        )
 
     def _commit_manifest(self) -> None:
         """Atomic write-then-rename: the commit point of a batch. A crash
@@ -420,10 +428,10 @@ class CdcApplyPipeline:
 
         If the disk write itself fails, the in-memory manifest rolls back
         to what is on disk: the pre-commit mutations (last_batch_id,
-        bucket versions, drop cutoffs, history) would otherwise make the
-        live process treat the batch as committed — skipping its replay
-        and serving its drops — while the durable truth says it never
-        happened."""
+        bucket versions, drop cutoffs, positions, history) would otherwise
+        make the live process treat the batch as committed — skipping its
+        replay and serving its drops and positions — while the durable
+        truth says it never happened."""
         os.makedirs(self.state_dir, exist_ok=True)
         tmp = self._manifest_path + ".tmp"
         try:
@@ -552,9 +560,9 @@ class CdcApplyPipeline:
         # A microbatch is two passes over the batch, five Spark jobs in all
         # (eleven before; tests/test_streaming.py pins the budget): the
         # ops cache, the control aggregate (map + collect) and the
-        # single-shuffle merge (map + write). The driver writes the
-        # positions file with no Spark job, and state/positions reads carry
-        # an explicit schema, so none of them fires a footer-inference job.
+        # single-shuffle merge (map + write). Positions fold into the
+        # manifest with no Spark job, and the state read carries an
+        # explicit schema, so it fires no footer-inference job.
         # In-JVM A/B of each lever against its former shape
         # (scripts/ab_inproc.py swap, sf0.01, local[4], 4-core host);
         # new/old median CPU and wall, streaming_cdc_apply | _positions:
@@ -562,8 +570,6 @@ class CdcApplyPipeline:
         #     CPU 0.69 | 0.59, wall 0.81 | 0.79
         #   one control aggregate vs distinct ∪ drop-agg plus a separate
         #   positions aggregate, 6 pairs: CPU 0.86 | 0.95, wall 0.93 | 0.88
-        #   driver-written positions vs the overlapped Spark write in a
-        #   thread, 6 pairs: CPU 0.83 | 0.83, wall 0.92 | 0.97
         #   bucket-carrying single-shuffle merge vs groupBy then
         #   repartition(len(touched), "bucket"), 6 pairs:
         #     CPU 0.75 | 0.68, wall 0.80 | 0.83
@@ -573,8 +579,6 @@ class CdcApplyPipeline:
         #     its pairs split 12/24, and a swap of a method that query
         #     never calls read 1.07, so the 1.01-1.03 is noise; the alive()
         #     read of streaming_cdc_apply is where the saved job shows.
-        #   explicit positions-read schema vs inference, 12 pairs:
-        #     streaming_positions CPU 0.94, wall 0.98
         # The persist stays: both passes read ops, and without it the
         # stream's observe("apply_metrics") counts every op twice.
         ops = ops.persist()
@@ -602,11 +606,8 @@ class CdcApplyPipeline:
             )
             t_control = time.time()
             touched = sorted({r.bucket for r in control})
-            positions: dict = {}
             drops: dict = {}
             for r in control:
-                ts, n = positions.get(r.vchannel, (None, 0))
-                positions[r.vchannel] = (_max_ts(ts, r.ts), n + r.n)
                 if r.d_op is not None:
                     k = (r.d_op, r.d_coll, r.d_part)
                     drops[k] = _max_ts(drops.get(k), r.ts)
@@ -637,17 +638,22 @@ class CdcApplyPipeline:
                 )
         finally:
             ops.unpersist()
-        # position write-back AFTER the apply (reference ordering,
-        # server/cdc_impl.go:1116-1173), still before the commit point
-        self._write_positions(batch_id, positions)
-        t_positions = time.time()
         # commit point: everything above is keyed by batch_id and
-        # re-runnable. Drop cutoffs are CATALOG-SIZED control state: they
-        # live in the manifest (atomic with the batch commit, max-merged so
-        # replay is idempotent) and are applied at alive() read time. They
-        # merge only here: if a state or positions write failed above, the
-        # in-memory manifest must not already reflect this batch's drops
-        # (ADVICE r6).
+        # re-runnable. Positions and drop cutoffs are CATALOG-SIZED control
+        # state: they live in the manifest, atomic with the batch commit,
+        # and merge into it only here — if a state write failed above, the
+        # in-memory manifest must not already reflect this batch (ADVICE
+        # r6), and a failed commit reloads them from disk. Position
+        # write-back still follows the apply (reference ordering,
+        # server/cdc_impl.go:1116-1173). Only an uncommitted batch is ever
+        # replayed, so n_msgs is never counted twice.
+        self._manifest["positions"] = _fold_positions(
+            ((r.vchannel, r.ts, r.n) for r in control),
+            self._manifest["positions"],
+        )
+        t_positions = time.time()
+        # Drop cutoffs are max-merged (replay-idempotent) and applied at
+        # alive() read time.
         for (op, coll, part), ts in drops.items():
             if op == "drop_collection":
                 d = self._manifest.setdefault("coll_drops", {})
@@ -665,8 +671,6 @@ class CdcApplyPipeline:
         del self._manifest["history"][: -self.history_keep]
         self._commit_manifest()
         self._gc_stale_state_versions()
-        if self.compact_every and batch_id % self.compact_every == self.compact_every - 1:
-            self.compact_positions()
         self.phase_timings.append({
             "batch_id": batch_id,
             "control_collect": round(t_control - t0, 3),
@@ -674,38 +678,6 @@ class CdcApplyPipeline:
             "positions_write": round(t_positions - t_state, 3),
             "commit_gc": round(time.time() - t_positions, 3),
         })
-
-    def _write_positions(self, batch_id: int, positions: dict) -> None:
-        """Write one batch's ``{vchannel: (position_ts, n_msgs)}`` as the
-        single parquet file of ``positions/batch_id=N/``, from the driver.
-
-        The dir is cleared first, so a replayed batch replaces whatever an
-        earlier attempt left there (including a multi-part Spark write) and
-        ``n_msgs`` is never counted twice. The file lands under a dot-temp
-        name (skipped by Spark and by ``*.parquet`` globs) and is renamed
-        into place, so a reader never sees a torn file."""
-        import pyarrow as pa
-        import pyarrow.parquet as pq
-
-        out = os.path.join(self.positions_dir, f"batch_id={batch_id}")
-        shutil.rmtree(out, ignore_errors=True)
-        os.makedirs(out)
-        names = sorted(positions, key=lambda v: (v is None, v or ""))
-        table = pa.table(
-            {
-                "vchannel": names,
-                "position_ts": [positions[v][0] for v in names],
-                "n_msgs": [positions[v][1] for v in names],
-            },
-            schema=pa.schema([
-                ("vchannel", pa.string()),
-                ("position_ts", pa.int64()),
-                ("n_msgs", pa.int64()),
-            ]),
-        )
-        tmp = os.path.join(out, ".part-00000.parquet.tmp")
-        pq.write_table(table, tmp)
-        os.replace(tmp, os.path.join(out, "part-00000.parquet"))
 
     def _gc_stale_state_versions(self) -> None:
         """Drop version directories no bucket references anymore (bounded
@@ -795,62 +767,9 @@ class CdcApplyPipeline:
             "_coll_drop_ts", "_part_drop_ts"
         )
 
-    def _recover_positions(self) -> None:
-        """Crash recovery for the compaction swap (mirrors the state path's
-        atomic manifest commit): if a crash landed between the two renames
-        the live dir is missing and the ``.old.N`` snapshot is
-        authoritative — roll it back; any ``.old``/``.compact`` leftovers
-        next to a live dir are superseded — drop them."""
-        import glob as _glob
-
-        old_dirs = sorted(
-            _glob.glob(self.positions_dir + ".old.*"),
-            key=lambda d: int(d.rsplit(".", 1)[1]),
-        )
-        if not os.path.isdir(self.positions_dir) and old_dirs:
-            os.rename(old_dirs.pop(), self.positions_dir)
-        for d in old_dirs:
-            shutil.rmtree(d, ignore_errors=True)
-        shutil.rmtree(self.positions_dir + ".compact", ignore_errors=True)
-
-    def compact_positions(self) -> None:
-        """Fold the per-batch position partitions into one summary partition
-        (small-file control: a 500 ms trigger appends ~170k partition dirs
-        per day unscheduled; ``compact_every`` wires this into the apply
-        loop — the reference's maintenance op, maintenance.go:27-35).
-
-        Crash-safe: the summary is FULLY written to a side dir first, then
-        swapped live with two atomic renames (live → .old.N, .compact →
-        live); the old table is deleted only after both renames. A crash
-        at any step leaves either the old or the new table on disk —
-        ``_recover_positions`` rolls an interrupted swap back — so the K6
-        checkpoint surface is never lost (round-2/3 defect: rmtree-then-
-        rename had a window that dropped every position)."""
-        self._recover_positions()
-        # committed batches only: folding an uncommitted orphan
-        # (crash/failure between positions write and manifest commit)
-        # into the summary would promote it past the read-time filter
-        pos = self._committed_positions()
-        if pos is None:
-            return
-        latest = pos.groupBy("vchannel").agg(
-            F.max("position_ts").alias("position_ts"),
-            F.sum("n_msgs").alias("n_msgs"),
-        )
-        max_bid = self._manifest["last_batch_id"]
-        tmp_dir = self.positions_dir + ".compact"
-        latest.coalesce(1).write.mode("overwrite").parquet(
-            os.path.join(tmp_dir, f"batch_id={max_bid}")
-        )
-        old_dir = f"{self.positions_dir}.old.{max_bid}"
-        os.rename(self.positions_dir, old_dir)  # atomic; old table kept
-        os.rename(tmp_dir, self.positions_dir)  # atomic; new table live
-        shutil.rmtree(old_dir)  # cleanup strictly after both renames
-
     def compact_state(self) -> None:
         """Fold every live bucket partition into one compaction-epoch dir
-        (``c{N}``) — the state-side twin of ``compact_positions``. After
-        many incremental batches the state spreads across one version dir
+        (``c{N}``). After many incremental batches the state spreads across one version dir
         per recent batch; compaction bounds that version sprawl (and the
         per-dir small files) without changing logical content:
         ``read_state`` before == after, and time-travel history keeps
@@ -895,32 +814,13 @@ class CdcApplyPipeline:
             .orderBy("vchannel")
         )
 
-    def _committed_positions(self) -> DataFrame | None:
-        """The positions table restricted to COMMITTED batches.
-
-        Visibility is directory-level: a crash or failure between the
-        positions write and the manifest commit leaves ``batch_id=N`` on
-        disk while the manifest still says N-1 — a position for a batch
-        that never committed (ADVICE r14). ``batch_id`` is a partition
-        column of positions_dir, so filtering to ``batch_id <=
-        last_batch_id`` hides the orphan; replay later replaces the orphan
-        dir in place. The explicit schema spares every read a
-        footer-inference job. Returns None when the directory does not
-        exist yet."""
-        if not os.path.isdir(self.positions_dir):
-            return None
-        pos = self.spark.read.schema(
-            f"{POSITIONS_SCHEMA}, batch_id bigint"
-        ).parquet(self.positions_dir)
-        return pos.filter(F.col("batch_id") <= self._manifest["last_batch_id"])
-
     def positions(self) -> DataFrame:
-        """Latest position per vchannel (K6 checkpoint semantics)."""
-        pos = self._committed_positions()
-        if pos is None:
-            from milvus_cdc_spark.catalog import local_frame
+        """Latest position per vchannel (K6 checkpoint semantics), as of
+        the last committed batch."""
+        from milvus_cdc_spark.catalog import local_frame
 
-            return local_frame(
-                self.spark, [], "vchannel string, position_ts bigint"
-            )
-        return pos.groupBy("vchannel").agg(F.max("position_ts").alias("position_ts"))
+        return local_frame(
+            self.spark,
+            [(v, ts) for v, ts, _ in self._manifest["positions"]],
+            "vchannel string, position_ts bigint",
+        )

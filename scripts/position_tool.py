@@ -16,10 +16,10 @@ Usage:
   python scripts/position_tool.py encode CHANNEL TS        # -> base64 position
   python scripts/position_tool.py decode-msgid B64         # Pulsar MessageIdData fields
   python scripts/position_tool.py encode-msgid LEDGER ENTRY [PARTITION [BATCH]]
-  python scripts/position_tool.py list POSITIONS_DIR       # per-channel latest
+  python scripts/position_tool.py list WORK_DIR            # per-channel latest
 
-Driver-side tool: no Spark session; ``list`` reads the positions
-parquet with DuckDB (control-sized output by construction).
+Driver-side tool: no Spark session; ``list`` reads a pipeline work
+dir's committed positions from ``state/MANIFEST.json``.
 """
 
 from __future__ import annotations
@@ -27,6 +27,7 @@ from __future__ import annotations
 import base64
 import datetime
 import json
+import os
 import sys
 
 sys.path.insert(0, "/root/repo")
@@ -73,22 +74,15 @@ def cmd_encode_msgid(*args: str) -> dict:
     return {"msgid": base64.b64encode(data).decode("ascii")}
 
 
-def cmd_list(positions_dir: str) -> list[dict]:
-    import duckdb
-
-    con = duckdb.connect()
-    rows = con.execute(
-        "SELECT vchannel, max(position_ts) AS position_ts, "
-        "CAST(sum(n_msgs) AS BIGINT) AS n_msgs "
-        f"FROM read_parquet('{positions_dir}/*/*.parquet') "
-        "GROUP BY vchannel ORDER BY vchannel"
-    ).fetchall()
+def cmd_list(work_dir: str) -> list[dict]:
+    with open(os.path.join(work_dir, "state", "MANIFEST.json")) as f:
+        rows = json.load(f)["positions"]
     return [
         {
             "vchannel": v,
-            "position_ts": int(ts),
-            "physical_time": _physical_iso(int(ts)),
-            "n_msgs": int(n),
+            "position_ts": ts,
+            "physical_time": _physical_iso(ts),
+            "n_msgs": n,
         }
         for v, ts, n in rows
     ]

@@ -61,7 +61,6 @@ def profile_cdc_apply(spark, sf_dir: str, positions_only: bool = False) -> dict:
     out["machinery"] = round(stream_total - batch_total, 3)
     out["batches"] = pipe.phase_timings
     out["state_files"] = _count_files(pipe.state_dir)
-    out["positions_files"] = _count_files(pipe.positions_dir)
 
     t2 = time.time()
     if positions_only:

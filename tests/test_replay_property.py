@@ -749,12 +749,14 @@ def test_pause_resume_seek_matches_interpreter(spark, ops, n_files, kill_at, see
     suppress_health_check=[HealthCheck.too_slow, HealthCheck.function_scoped_fixture],
 )
 def test_crash_at_commit_point_replays_idempotently(spark, ops, n_files, kill_at):
-    """The strongest crash point: batch k's state/mirror/positions writes
-    ALL landed on disk, but the manifest rename — the commit — never
-    happened. The durable truth says the batch never ran, so the resume
-    must replay it over its own orphaned files (batch_id-keyed
-    overwrites), and the final state must still equal the single-pass
-    interpreter — no double-counted n_inserts, no phantom drops."""
+    """The strongest crash point: batch k's state writes ALL landed on
+    disk, but the manifest rename — the commit — never happened. The
+    durable truth says the batch never ran, so the resume must replay it
+    over its own orphaned files (batch_id-keyed overwrites), and the final
+    state must still equal the single-pass interpreter — no double-counted
+    n_inserts, no phantom drops — and the positions must be each
+    vchannel's max ts and op count, with no batch's n_msgs counted
+    twice."""
     import tempfile
 
     import pyarrow as pa
@@ -814,3 +816,13 @@ def test_crash_at_commit_point_replays_idempotently(spark, ops, n_files, kill_at
         for r in pipe2.alive().collect()
     }
     assert got == _python_cdc_state(ops)
+    want_pos: dict = {}
+    for ts, _op, _coll, _part, pk in ops:
+        mx, n = want_pos.get(f"ch_{pk % 2}", (-1, 0))
+        want_pos[f"ch_{pk % 2}"] = (max(mx, ts), n + 1)
+    assert {r.vchannel: r.position_ts for r in pipe2.positions().collect()} == {
+        v: mx for v, (mx, _) in want_pos.items()
+    }
+    assert pipe2._manifest["positions"] == [
+        [v, mx, n] for v, (mx, n) in sorted(want_pos.items())
+    ]

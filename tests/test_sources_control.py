@@ -270,58 +270,6 @@ def test_error_quarantine_trips_in_window():
     assert q.last_reason == "e3"
 
 
-def test_pipeline_listener_metrics_and_quarantine(spark):
-    """Listener observes real streaming progress (rows/batches) and feeds
-    failures into the quarantine with the auto-pause hook."""
-    import tempfile
-    import time
-    import uuid
-
-    from milvus_cdc_spark.control.listener import PipelineListener
-
-    tripped = []
-    listener = PipelineListener(on_trip=lambda name, why: tripped.append((name, why)),
-                                max_errors=1)
-    spark.streams.addListener(listener)
-    try:
-        tmp = tempfile.mkdtemp(prefix="listen_")
-        spark.createDataFrame(
-            [(i, i * 10) for i in range(20)], "k bigint, v bigint"
-        ).repartition(2).write.mode("overwrite").parquet(tmp + "/src")
-        name = f"ok_{uuid.uuid4().hex[:6]}"
-        q = (
-            spark.readStream.schema("k bigint, v bigint")
-            .option("maxFilesPerTrigger", 1).parquet(tmp + "/src")
-            .writeStream.format("memory").queryName(name)
-            .trigger(availableNow=True).start()
-        )
-        q.awaitTermination()
-
-        def fail_batch(batch, batch_id):
-            raise RuntimeError("sink exploded")
-
-        q2 = (
-            spark.readStream.schema("k bigint, v bigint")
-            .option("maxFilesPerTrigger", 1).parquet(tmp + "/src")
-            .writeStream.foreachBatch(fail_batch)
-            .option("checkpointLocation", tmp + "/ckpt")
-            .trigger(availableNow=True).start()
-        )
-        try:
-            q2.awaitTermination()
-        except Exception:
-            pass
-        # listener events are delivered asynchronously
-        deadline = time.time() + 30
-        while time.time() < deadline and not tripped:
-            time.sleep(0.5)
-        assert listener.metrics[name]["num_input_rows"] == 20
-        assert listener.metrics[name]["num_batches"] >= 2
-        assert tripped and "sink exploded" in tripped[0][1]
-    finally:
-        spark.streams.removeListener(listener)
-
-
 def test_credentials_scrubbed_on_read(spark, tmp_path):
     """get/list mask secret-bearing connect params (base.go:59-74) while
     the persisted spec keeps them for restart."""
@@ -345,19 +293,16 @@ def test_credentials_scrubbed_on_read(spark, tmp_path):
 
 def test_position_tool_roundtrips(tmp_path):
     """position_tool: native position and MessageIdData roundtrips, and
-    the per-channel listing over a positions parquet layout."""
+    the per-channel listing of a work dir's manifest positions."""
+    import json
     import subprocess
     import sys as _sys
-
-    import duckdb
 
     def run(*args):
         out = subprocess.run(
             [_sys.executable, "/root/repo/scripts/position_tool.py", *args],
             capture_output=True, text=True, check=True,
         )
-        import json
-
         return [json.loads(line) for line in out.stdout.strip().splitlines()]
 
     ts = 1700000000000 << 18 | 5
@@ -370,21 +315,19 @@ def test_position_tool_roundtrips(tmp_path):
     [mdec] = run("decode-msgid", mid["msgid"])
     assert mdec == {"ledger_id": 9, "entry_id": 77, "partition": 2, "batch_index": -1}
 
-    pos_dir = tmp_path / "positions"
-    for bid, (ch, pts, n) in enumerate(
-        [("ch-0", 100 << 18, 3), ("ch-0", 200 << 18, 2), ("ch-1", 150 << 18, 7)]
-    ):
-        d = pos_dir / f"batch_id={bid}"
-        d.mkdir(parents=True)
-        duckdb.connect().execute(
-            f"COPY (SELECT '{ch}' AS vchannel, {pts}::BIGINT AS position_ts, "
-            f"{n}::BIGINT AS n_msgs) TO '{d}/part.parquet' (FORMAT PARQUET)"
-        )
-    rows = run("list", str(pos_dir))
+    state = tmp_path / "work" / "state"
+    state.mkdir(parents=True)
+    (state / "MANIFEST.json").write_text(json.dumps({
+        "last_batch_id": 2,
+        "format_version": 3,
+        "positions": [["ch-0", 200 << 18, 5], ["ch-1", 150 << 18, 7]],
+    }))
+    rows = run("list", str(tmp_path / "work"))
     assert [(r["vchannel"], r["position_ts"], r["n_msgs"]) for r in rows] == [
         ("ch-0", 200 << 18, 5),
         ("ch-1", 150 << 18, 7),
     ]
+    assert rows[0]["physical_time"].startswith("1970-01-01T00:00:00.2")
 
 
 def test_file_broker_executes_envelope_and_seek(spark, tmp_path):
@@ -596,3 +539,33 @@ def test_task_registry_persist_is_atomic(spark, tmp_path, monkeypatch):
     with open(reg.meta_path) as f:
         assert set(json.load(f)) == ids
     assert {t["task_id"] for t in TaskRegistry(spark, str(tmp_path)).list()} == ids
+
+
+def test_task_registry_persist_is_thread_safe(spark, tmp_path):
+    """Tasks start on their own threads and each start persists the
+    registry; concurrent _persist calls share one temp file name, so
+    without a lock one thread's rename moves another's temp file away
+    (FileNotFoundError)."""
+    import threading
+
+    from milvus_cdc_spark.control.tasks import TaskRegistry
+
+    reg = TaskRegistry(spark, str(tmp_path))
+    ids = {reg.create("/dev/null", [f"c_threads_{i}"]).task_id for i in range(3)}
+    errors = []
+
+    def persist_many():
+        try:
+            for _ in range(200):
+                reg._persist()
+        except OSError as e:
+            errors.append(e)
+
+    threads = [threading.Thread(target=persist_many) for _ in range(4)]
+    for t in threads:
+        t.start()
+    for t in threads:
+        t.join()
+    assert not errors
+    with open(reg.meta_path) as f:
+        assert set(json.load(f)) == ids

@@ -43,22 +43,16 @@ def test_streaming_apply_converges_to_batch_replay(spark, sf_dir, oplog_dir):
     assert got == want
 
 
-def test_files_per_trigger_sets_granularity_not_results(
-    spark, oplog_dir, monkeypatch
-):
-    """r15 verdict #7: microbatch granularity (files_per_trigger, env
-    override SPARK_GRAFT_CDC_FPT) changes how many batches a drain takes,
-    never the converged state."""
+def test_files_per_trigger_sets_granularity_not_results(spark, oplog_dir):
+    """r15 verdict #7: microbatch granularity (files_per_trigger) changes
+    how many batches a drain takes, never the converged state."""
     work1 = tempfile.mkdtemp(prefix="fpt_a_")
     pipe = CdcApplyPipeline(spark, oplog_dir, work1, files_per_trigger=3)
     pipe.run_available_now()
     assert pipe.last_batch_id == 1  # 6 staged files / 3 per trigger
 
     work2 = tempfile.mkdtemp(prefix="fpt_b_")
-    monkeypatch.setenv("SPARK_GRAFT_CDC_FPT", "6")
-    pipe2 = CdcApplyPipeline(spark, oplog_dir, work2, files_per_trigger=3)
-    monkeypatch.delenv("SPARK_GRAFT_CDC_FPT")
-    assert pipe2.files_per_trigger == 6  # env override wins
+    pipe2 = CdcApplyPipeline(spark, oplog_dir, work2, files_per_trigger=6)
     pipe2.run_available_now()
     assert pipe2.last_batch_id == 0
 
@@ -412,10 +406,10 @@ def test_maintenance_and_http_facade(spark, oplog_dir):
          "request_data": {"operation": "set_log_level", "level": "warn"}}
     )["level"] == "WARN"
     spark.sparkContext.setLogLevel("ERROR")  # restore test quiet
-    # on-demand positions compaction (no tasks yet → no-op, ok:true)
+    # on-demand state compaction (no tasks yet → no-op, ok:true)
     assert reg.handle(
         {"request_type": "maintenance",
-         "request_data": {"operation": "compact_positions"}}
+         "request_data": {"operation": "compact_state"}}
     )["ok"] is True
 
     server = serve(reg, port=0)  # ephemeral port
@@ -888,73 +882,6 @@ def test_state_version_writes_one_file_per_bucket(spark, oplog_dir):
             assert n <= 1, (v, b, n)
 
 
-def test_positions_compaction(spark, oplog_dir):
-    """Compaction folds the per-batch position appends into one summary
-    per vchannel without changing the answer."""
-    import os
-
-    def count_parquet(root):
-        return sum(
-            1
-            for _, _, files in os.walk(root)
-            for f in files
-            if f.endswith(".parquet")
-        )
-
-    work = tempfile.mkdtemp(prefix="compact_")
-    # compact_every=0 disables the scheduled compaction so the manual call
-    # is what's under test
-    pipe = CdcApplyPipeline(spark, oplog_dir, work, compact_every=0)
-    pipe.run_available_now()
-    before = {(r.vchannel, r.position_ts) for r in pipe.positions().collect()}
-    n_files_before = count_parquet(pipe.positions_dir)
-    pipe.compact_positions()
-    after = {(r.vchannel, r.position_ts) for r in pipe.positions().collect()}
-    n_files_after = count_parquet(pipe.positions_dir)
-    assert before == after
-    assert n_files_after == 1 and n_files_before > 1
-
-
-def test_compact_positions_survives_crash_between_steps(spark, oplog_dir):
-    """Kill-between-steps recovery for the compaction swap (round-2/3
-    defect: rmtree-then-rename lost the whole K6 checkpoint surface).
-    Simulate a crash at each dangerous point and assert a restarted
-    pipeline still serves the full positions table."""
-    import os
-    import shutil
-
-    work = tempfile.mkdtemp(prefix="compact_crash_")
-    pipe = CdcApplyPipeline(spark, oplog_dir, work, compact_every=0)
-    pipe.run_available_now()
-    want = {(r.vchannel, r.position_ts) for r in pipe.positions().collect()}
-    pos_dir = pipe.positions_dir
-
-    # crash point A: .compact fully written, neither rename happened —
-    # live table intact, leftover must be swept
-    os.makedirs(pos_dir + ".compact/batch_id=999")
-    pipe2 = CdcApplyPipeline(spark, pipe.source_dir, work, compact_every=0)
-    pipe2.compact_positions()
-    assert {(r.vchannel, r.position_ts) for r in pipe2.positions().collect()} == want
-    assert not os.path.exists(pos_dir + ".compact")
-
-    # crash point B: between the two renames — live dir gone, .old.N is
-    # the only copy; recovery must roll it back, not lose it
-    os.rename(pos_dir, pos_dir + ".old.7")
-    assert not os.path.isdir(pos_dir)
-    pipe3 = CdcApplyPipeline(spark, pipe.source_dir, work, compact_every=0)
-    pipe3.compact_positions()
-    got = {(r.vchannel, r.position_ts) for r in pipe3.positions().collect()}
-    assert got == want
-    assert os.path.isdir(pos_dir) and not os.path.exists(pos_dir + ".old.7")
-
-    # crash point C: second rename done, .old.N cleanup missed — superseded
-    # snapshot must be dropped, table unchanged
-    shutil.copytree(pos_dir, pos_dir + ".old.3")
-    pipe3._recover_positions()
-    assert not os.path.exists(pos_dir + ".old.3")
-    assert {(r.vchannel, r.position_ts) for r in pipe3.positions().collect()} == want
-
-
 def test_streaming_minhash_maintenance(spark, sf_dir):
     """Incremental MinHash signature maintenance: per-doc min-hashes are
     commutative, so streaming batches folded with min() equal the batch
@@ -1283,31 +1210,6 @@ def test_cold_restart_recovers_state_from_manifest(spark, sf_dir):
         (r.collection, r.pk): (r.last_insert_ts, r.n_inserts)
         for r in apply_op.replay_alive(ops).collect()
     }
-    assert got == want
-
-
-def test_scheduled_compaction_bounds_position_files(spark, sf_dir):
-    """compact_every wires compaction into the apply loop: after a long
-    run the positions table holds a bounded number of partition dirs
-    instead of one per batch."""
-    import os
-
-    ops = oplog.derive_oplog(catalog.load_table(spark, sf_dir, "lineitem"))
-    tmp = tempfile.mkdtemp(prefix="sched_compact_")
-    ops.repartition(12).write.mode("overwrite").parquet(tmp + "/src")
-    # 12 files / 2 per trigger = 6 batches; compact every 2
-    pipe = CdcApplyPipeline(spark, tmp + "/src", tmp + "/work", compact_every=2)
-    pipe.run_available_now()
-    dirs = [d for d in os.listdir(pipe.positions_dir) if d.startswith("batch_id=")]
-    # without scheduling there would be 6 partition dirs; compaction at
-    # batches 1,3,5 folds the tail each time
-    assert len(dirs) <= 2
-    # and the answer still converges to the oracle per-channel max
-    want = {
-        (r.vchannel, r.mx)
-        for r in ops.groupBy("vchannel").agg(F.max("ts").alias("mx")).collect()
-    }
-    got = {(r.vchannel, r.position_ts) for r in pipe.positions().collect()}
     assert got == want
 
 
@@ -1695,51 +1597,84 @@ def test_resume_over_legacy_state_format(spark):
 
 
 def test_positions_hide_uncommitted_batch(spark, monkeypatch):
-    """ADVICE r14 (medium): the overlapped positions thread can land
-    positions/batch_id=N on disk before the state merge for batch N
-    fails; visibility is directory-level, so positions()/channel_lag()
-    reported a position for a never-applied batch. The read path now
-    filters to batch_id <= last_batch_id, and compact_positions() must
-    not fold the orphan into the summary (which would promote it)."""
-    import pyspark.errors
+    """Positions fold into the manifest only at the commit point: a batch
+    whose state write fails, or whose manifest commit fails, leaves
+    positions() and channel_lag() at the last committed batch, in the
+    live process and after a restart. The replay then commits the batch
+    once, so n_msgs is not counted twice."""
+    import os as os_mod
 
     from milvus_cdc_spark.streaming import pipeline as pipeline_mod
 
     tmp = tempfile.mkdtemp(prefix="test_orphan_pos_")
-    rows = [
-        (100, "insert", "default", "c0", "p0", "ch0", 1, 1, 1),
-        (200, "insert", "default", "c0", "p0", "ch0", 2, 1, 2),
-    ]
-    spark.createDataFrame(
-        rows, pipeline_mod.OPLOG_SCHEMA
-    ).coalesce(1).write.parquet(tmp + "/src")
-    pipe = CdcApplyPipeline(spark, tmp + "/src", tmp + "/work", n_buckets=2)
+    src, work = tmp + "/src", tmp + "/work"
+    b0 = spark.createDataFrame(
+        [
+            (100 << 18, "insert", "default", "c0", "p0", "ch0", 1, 1, 1),
+            (300 << 18, "insert", "default", "c0", "p0", "ch1", 2, 1, 2),
+        ],
+        pipeline_mod.OPLOG_SCHEMA,
+    )
+    b1 = spark.createDataFrame(
+        [
+            (200 << 18, "insert", "default", "c0", "p0", "ch0", 3, 1, 3),
+            (400 << 18, "delete", "default", "c0", "p0", "ch1", 2, 1, 4),
+        ],
+        pipeline_mod.OPLOG_SCHEMA,
+    )
+    pipe = CdcApplyPipeline(spark, src, work, n_buckets=2)
+    pipe.apply_batch(b0, 0)
+    committed = (
+        {("ch0", 100 << 18), ("ch1", 300 << 18)},
+        {"ch0": 200, "ch1": 0},
+    )
+
+    def observed(p):
+        return (
+            {(r.vchannel, r.position_ts) for r in p.positions().collect()},
+            {r.vchannel: r.lag_ms for r in p.channel_lag().collect()},
+        )
 
     def boom(existing, update):
         raise RuntimeError("injected state-write failure")
 
     monkeypatch.setattr(pipeline_mod, "merge_state", boom)
-    with pytest.raises(pyspark.errors.exceptions.base.PySparkException):
-        pipe.run_available_now()
-    assert pipe._manifest["last_batch_id"] == -1
-    # an orphan positions dir may exist on disk — it must be invisible
-    assert pipe.positions().count() == 0
-    assert pipe.channel_lag().count() == 0
-    pipe.compact_positions()
-    assert pipe.positions().count() == 0
-    # replay over the same source applies the batch and the positions
-    # become visible exactly once
+    with pytest.raises(RuntimeError, match="state-write"):
+        pipe.apply_batch(b1, 1)
     monkeypatch.undo()
-    pipe2 = CdcApplyPipeline(spark, tmp + "/src", tmp + "/work", n_buckets=2)
-    pipe2.run_available_now()
-    got = {(r.vchannel, r.position_ts) for r in pipe2.positions().collect()}
-    assert got == {("ch0", 200)}
+    assert observed(pipe) == committed
+    assert observed(CdcApplyPipeline(spark, src, work, n_buckets=2)) == committed
+
+    real_replace = os_mod.replace
+
+    def flaky_replace(src_path, dst, *a, **k):
+        if dst == pipe._manifest_path:
+            raise OSError("disk full")
+        return real_replace(src_path, dst, *a, **k)
+
+    monkeypatch.setattr(os_mod, "replace", flaky_replace)
+    with pytest.raises(OSError, match="disk full"):
+        pipe.apply_batch(b1, 1)
+    monkeypatch.undo()
+    assert pipe.last_batch_id == 0
+    assert observed(pipe) == committed
+    assert observed(CdcApplyPipeline(spark, src, work, n_buckets=2)) == committed
+
+    pipe.apply_batch(b1, 1)  # the replay commits
+    assert observed(pipe) == (
+        {("ch0", 200 << 18), ("ch1", 400 << 18)},
+        {"ch0": 200, "ch1": 0},
+    )
+    assert pipe._manifest["positions"] == [
+        ["ch0", 200 << 18, 2],
+        ["ch1", 400 << 18, 2],
+    ]
 
 
 def test_resume_refuses_bucket_count_change(spark):
     """ADVICE r14: state rows are placed by pmod(xxhash64, n_buckets) —
-    resuming a work_dir under a different bucket count (constructor or
-    SPARK_GRAFT_CDC_BUCKETS) would silently misroute every probe/merge
+    resuming a work_dir under a different bucket count would silently
+    misroute every probe/merge
     against the existing state. The manifest records n_buckets; a
     mismatch on resume is a hard refuse."""
     from milvus_cdc_spark.streaming import pipeline as pipeline_mod
@@ -2097,16 +2032,13 @@ def test_apply_batch_job_budget(spark):
 
 
 def test_driver_written_positions_read_back(spark, sf_dir):
-    """The driver-written positions file is one parquet file per batch
-    dir with the (vchannel string, position_ts bigint, n_msgs bigint)
-    schema, and every reader agrees on it: positions(), channel_lag(),
-    compact_positions() and the DuckDB-based position_tool listing."""
-    import glob
+    """Positions live in the committed manifest, and every reader agrees
+    on them: positions(), channel_lag() and the position_tool listing
+    give each vchannel's max ts and op count over the whitelisted ops. A
+    fresh work dir gets no positions/ table."""
     import json
     import os
     import subprocess
-
-    import pyarrow.parquet as pq
 
     from milvus_cdc_spark.operators import filters
 
@@ -2114,15 +2046,10 @@ def test_driver_written_positions_read_back(spark, sf_dir):
     tmp = tempfile.mkdtemp(prefix="driver_pos_")
     ops.repartition(8).write.parquet(tmp + "/src")
     ops = filters.msg_type_whitelist(ops, filters.DML_WHITELIST)
-    pipe = CdcApplyPipeline(spark, tmp + "/src", tmp + "/work", compact_every=0)
+    pipe = CdcApplyPipeline(spark, tmp + "/src", tmp + "/work")
     pipe.run_available_now()
     assert pipe.last_batch_id >= 1
-    for d in glob.glob(os.path.join(pipe.positions_dir, "batch_id=*")):
-        [f] = os.listdir(d)
-        assert f.endswith(".parquet") and not f.startswith(".")
-        assert str(pq.read_schema(os.path.join(d, f))) == (
-            "vchannel: string\nposition_ts: int64\nn_msgs: int64"
-        )
+    assert not os.path.exists(pipe.positions_dir)
     want = {
         r.vchannel: (r.mx, r.n)
         for r in ops.groupBy("vchannel")
@@ -2141,54 +2068,109 @@ def test_driver_written_positions_read_back(spark, sf_dir):
         "position_tool.py",
     )
     out = subprocess.run(
-        [sys.executable, tool, "list", pipe.positions_dir],
+        [sys.executable, tool, "list", tmp + "/work"],
         capture_output=True, text=True, check=True,
     )
     listed = [json.loads(line) for line in out.stdout.splitlines()]
     assert {r["vchannel"]: (r["position_ts"], r["n_msgs"]) for r in listed} == want
-    pipe.compact_positions()
-    [summary] = glob.glob(os.path.join(pipe.positions_dir, "*", "*.parquet"))
-    got = {
-        r["vchannel"]: (r["position_ts"], r["n_msgs"])
-        for r in pq.read_table(summary).to_pylist()
-    }
-    assert got == want
 
 
-def test_replayed_positions_replace_older_part_files(spark):
-    """An uncommitted batch whose positions dir still holds part files
-    from an earlier attempt (here a two-file Spark write) is replayed
-    into exactly one file, and its n_msgs is the batch's count, not the
-    sum over the attempts."""
+def test_resume_over_format2_positions_table(spark):
+    """A format-2 work dir kept positions in a positions/batch_id=N/
+    parquet table. Resuming folds its committed batches into the manifest
+    once; an orphan dir above last_batch_id stays invisible. positions()
+    answers as the format-2 reader did, the first commit stamps format 3,
+    and the legacy table is never read again."""
+    import json
     import os
+    import shutil
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
 
     from milvus_cdc_spark.streaming import pipeline as pipeline_mod
 
-    tmp = tempfile.mkdtemp(prefix="pos_replay_")
-    pipe = CdcApplyPipeline(spark, tmp + "/src", tmp + "/work", n_buckets=2)
-    batch = spark.createDataFrame(
+    tmp = tempfile.mkdtemp(prefix="test_fmt2_pos_")
+    src, work = tmp + "/src", tmp + "/work"
+    os.makedirs(work + "/state")
+    with open(work + "/state/MANIFEST.json", "w") as f:
+        json.dump(
+            {"buckets": {}, "last_batch_id": 1, "history": [],
+             "format_version": 2, "n_buckets": 2},
+            f,
+        )
+    pos_dir = work + "/positions"
+    # batch 0 as an older engine's Spark write (_SUCCESS, .crc files),
+    # batch 1 and the orphan batch 2 as driver-written pyarrow files
+    spark.createDataFrame(
+        [("ch0", 100, 2), ("ch1", 150, 1)],
+        "vchannel string, position_ts bigint, n_msgs bigint",
+    ).coalesce(1).write.parquet(pos_dir + "/batch_id=0")
+    for bid, rows in ((1, [("ch0", 120, 1)]), (2, [("ch0", 999, 5), ("ch2", 999, 1)])):
+        os.makedirs(f"{pos_dir}/batch_id={bid}")
+        pq.write_table(
+            pa.table({
+                "vchannel": [r[0] for r in rows],
+                "position_ts": pa.array([r[1] for r in rows], pa.int64()),
+                "n_msgs": pa.array([r[2] for r in rows], pa.int64()),
+            }),
+            f"{pos_dir}/batch_id={bid}/part-00000.parquet",
+        )
+
+    def positions(p):
+        return {(r.vchannel, r.position_ts) for r in p.positions().collect()}
+
+    pipe = CdcApplyPipeline(spark, src, work, n_buckets=2)
+    assert positions(pipe) == {("ch0", 120), ("ch1", 150)}
+    assert pipe._manifest["positions"] == [["ch0", 120, 3], ["ch1", 150, 1]]
+    # the orphan batch replays with its real ops
+    pipe.apply_batch(
+        spark.createDataFrame(
+            [(130, "insert", "default", "c0", "p0", "ch0", 1, 1, 1)],
+            pipeline_mod.OPLOG_SCHEMA,
+        ),
+        2,
+    )
+    with open(work + "/state/MANIFEST.json") as f:
+        on_disk = json.load(f)
+    assert on_disk["format_version"] == 3
+    assert on_disk["positions"] == [["ch0", 130, 4], ["ch1", 150, 1]]
+    shutil.rmtree(pos_dir)
+    assert positions(CdcApplyPipeline(spark, src, work, n_buckets=2)) == {
+        ("ch0", 130), ("ch1", 150),
+    }
+
+
+def test_task_position_runs_no_spark_job(spark):
+    """TaskRegistry.position() answers from the committed manifest: with
+    Arrow on, its local frame collects on the driver without a Spark
+    job."""
+    import uuid
+
+    from milvus_cdc_spark.streaming import pipeline as pipeline_mod
+
+    tmp = tempfile.mkdtemp(prefix="test_position_jobs_")
+    spark.createDataFrame(
         [
-            (100, "insert", "default", "c0", "p0", "ch0", 1, 1, 1),
-            (200, "insert", "default", "c0", "p0", "ch0", 2, 1, 2),
-            (300, "delete", "default", "c0", "p0", "ch1", 1, 1, 3),
+            (200, "insert", "default", "c0", "p0", "ch0", 1, 1, 1),
+            (300, "insert", "default", "c0", "p0", "ch1", 2, 1, 2),
         ],
         pipeline_mod.OPLOG_SCHEMA,
-    )
-    stale = os.path.join(pipe.positions_dir, "batch_id=0")
-    batch.groupBy("vchannel").agg(
-        F.max("ts").alias("position_ts"), F.count("*").alias("n_msgs")
-    ).repartition(2).write.parquet(stale)
-    assert sum(f.endswith(".parquet") for f in os.listdir(stale)) == 2
-    assert pipe.positions().count() == 0  # uncommitted: hidden
-    pipe.apply_batch(batch, 0)
-    assert [f for f in os.listdir(stale) if not f.startswith(".")] == [
-        "part-00000.parquet"
+    ).coalesce(1).write.parquet(tmp + "/src")
+    registry = TaskRegistry(spark, tmp + "/reg")
+    spec = registry.create(tmp + "/src")
+    registry.start(spec.task_id)
+    sc = spark.sparkContext
+    group = f"position_jobs_{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "TaskRegistry.position")
+    try:
+        got = registry.position(spec.task_id)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert sc.statusTracker().getJobIdsForGroup(group) == []
+    assert [(p["vchannel"], p["position_ts"]) for p in got] == [
+        ("ch0", 200), ("ch1", 300),
     ]
-    got = pipe._committed_positions().collect()
-    assert {(r.vchannel, r.position_ts, r.n_msgs) for r in got} == {
-        ("ch0", 200, 2),
-        ("ch1", 300, 1),
-    }
 
 
 @pytest.mark.parametrize(

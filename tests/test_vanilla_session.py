@@ -69,7 +69,7 @@ for name in (
     "partition_drop_replay",    # r15: local_frame NULL bigint, Arrow off
     "kmeans_silhouette",        # long-form Lloyd step, no codegen conf
     "streaming_cdc_apply",      # CDC merge at 200 shuffle partitions
-    "streaming_positions",      # driver-written positions, Arrow off
+    "streaming_positions",      # manifest positions via local_frame, Arrow off
 ):
     spec = suite.QUERIES[name]
     spdf = spec.fn(spark, SF_DIR).toPandas()
