@@ -594,10 +594,10 @@ def run_segment_mode(
     Prints one compact JSON line. Used directly for anchor-regression
     bisection, and spawned by the full run to produce ``r1_isolated`` —
     an anchor number measured in a fresh JVM with nothing else in the
-    session, immune to suite growth. ``names`` overrides the segment's
-    query list while keeping the identical output contract — the
-    second-draw replay path (scripts/bcov_second_draw.py), so contract
-    changes here reach second draws automatically.
+    session, immune to suite growth. ``names`` (``bench.py --segment
+    LABEL NAME,...``) overrides the segment's query list while keeping
+    the identical output contract — an ad-hoc name list, or a second draw
+    of a previous round's bcov window by its recorded names.
     """
     spark = get_spark(f"bench-{segment}")
     spark.sparkContext.setLogLevel("ERROR")
@@ -666,10 +666,11 @@ def main() -> None:
     if len(sys.argv) >= 2 and sys.argv[1] == "--segment":
         if len(sys.argv) < 3:
             raise SystemExit(
-                "usage: bench.py --segment <name>; "
+                "usage: bench.py --segment <name> [NAME,...]; "
                 f"known: {[k for k, _ in SEGMENTS]}"
             )
-        run_segment_mode(sys.argv[2], sf_dir, sf)
+        names = sys.argv[3].split(",") if len(sys.argv) > 3 else None
+        run_segment_mode(sys.argv[2], sf_dir, sf, names)
         return
 
     # Isolated anchor segments FIRST, each in its own JVM (nothing else has

@@ -18,14 +18,10 @@ replay / consistency-read family).
 parallelism ONLY when its current plan carries fewer partitions. At real
 scale a 100 TB table arrives with thousands of splits, so the helper
 reduces to the partition probe — the same no-op-at-scale contract as
-parallelize_expansion. ``SPARK_GRAFT_WIDEN_SCAN=off`` disables it
-(the A/B kill-switch; also the right setting if a deployment's fixture
-files are already multi-row-group).
+parallelize_expansion.
 """
 
 from __future__ import annotations
-
-import os
 
 from pyspark.sql import DataFrame
 
@@ -66,8 +62,6 @@ def widen_small_scan(df: DataFrame, *key_cols: str) -> DataFrame:
     sole use in this codebase): the probe memo assumes the partition
     count is the scan's split count for the frame's input file set.
     """
-    if os.environ.get("SPARK_GRAFT_WIDEN_SCAN", "auto") == "off":
-        return df
     sc = df.sparkSession.sparkContext
     target = sc.defaultParallelism
     try:

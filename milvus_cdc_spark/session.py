@@ -82,11 +82,8 @@ def get_spark(app_name: str = "milvus_cdc_spark", shuffle_partitions: int | None
         # 100 TB brief): the default 128 MB leaves the ≤11 MB single-file
         # test tables as one-split scans that serialize 32 cores. 4 MB
         # spreads the local fixtures across the machine; a cluster run at
-        # real scale overrides via SPARK_GRAFT_MAX_PARTITION_BYTES (128 MB+).
-        .config(
-            "spark.sql.files.maxPartitionBytes",
-            os.environ.get("SPARK_GRAFT_MAX_PARTITION_BYTES", str(4 * 1024 * 1024)),
-        )
+        # real scale overrides it via SPARK_GRAFT_EXTRA_CONF (128 MB+).
+        .config("spark.sql.files.maxPartitionBytes", str(4 * 1024 * 1024))
         # AQE coalesces post-shuffle partitions by BYTES, and the default
         # 1 MB floor under-parallelizes expression-dense stages whose
         # array payloads arrive via broadcast joins (the candidate-verify
@@ -98,10 +95,7 @@ def get_spark(app_name: str = "milvus_cdc_spark", shuffle_partitions: int | None
         # real scale post-shuffle partitions dwarf both floors and the
         # 64 MB advisory target governs; the floor binds exactly when
         # bytes underestimate work.
-        .config(
-            "spark.sql.adaptive.coalescePartitions.minPartitionSize",
-            os.environ.get("SPARK_GRAFT_MIN_PARTITION_SIZE", "64k"),
-        )
+        .config("spark.sql.adaptive.coalescePartitions.minPartitionSize", "64k")
         # Generated-class cache sized to hold a query MIX. One pass of
         # perfbench's analytics mix (q1_pricing_summary,
         # cdc_replay_summary, bm25_topk, kmeans_silhouette) compiles

@@ -127,6 +127,26 @@ def _fold_positions(rows, positions: list) -> list:
     return [[v, *acc[v]] for v in sorted(acc, key=lambda v: (v is None, v or ""))]
 
 
+def committed_positions(work_dir: str) -> list:
+    """A work dir's committed ``[vchannel, position_ts, n_msgs]`` rows,
+    read from its state manifest without a Spark session: what
+    ``positions()`` serves after a restart. Empty before the first
+    commit. A format-2 manifest keeps its positions in a table that only
+    a pipeline's load migrates, so it is refused rather than read as
+    empty."""
+    path = os.path.join(work_dir, "state", "MANIFEST.json")
+    if not os.path.exists(path):
+        return []
+    with open(path) as f:
+        manifest = json.load(f)
+    if "positions" not in manifest:
+        raise StateFormatError(
+            f"{path} predates format 3; open the work dir with a "
+            "CdcApplyPipeline once to migrate its positions"
+        )
+    return manifest["positions"]
+
+
 def ops_as_partial_state(batch: DataFrame) -> DataFrame:
     """Row-wise (no shuffle) projection of raw ops into STATE_COLS shape:
     inserts carry (ts, num_rows, partition), deletes carry ts.

@@ -1989,7 +1989,7 @@ def _write_oplog_files(spark: SparkSession, sf_dir: str, out_dir: str | None = N
     ops.repartition(n_files).write.mode("overwrite").parquet(out_dir)
     if owned:
         # memoize ONLY the helper-owned mkdtemp path (ADVICE r13): a
-        # caller-supplied out_dir (profile_streaming.py) may be deleted
+        # caller-supplied out_dir (perfbench's op-log staging) may be deleted
         # or rewritten by its owner, and the isdir guard above cannot
         # catch a rewrite-in-place
         _OPLOG_STAGE_CACHE[key] = out_dir

@@ -66,17 +66,9 @@ def _run_to_memory(
     The conf is restored after the drain — suite queries run
     sequentially, and batch queries plan their own shuffle count at
     execution time anyway."""
-    import os as _os
-
     spark = df.sparkSession
     sink = f"mem_{_uuid.uuid4().hex[:8]}"
     prev = spark.conf.get("spark.sql.shuffle.partitions")
-    # measurement override (A/B harness only): forces every caller's
-    # state-partition count without touching the documented per-query
-    # values below
-    env_parts = _os.environ.get("SPARK_GRAFT_STATE_PARTS")
-    if env_parts:
-        state_partitions = int(env_parts)
     # ``no_data_batches=False`` skips the trailing empty microbatch Spark
     # schedules to advance the watermark and evict state. ONLY valid for
     # queries whose OUTPUT does not depend on watermark finalization —
@@ -86,16 +78,6 @@ def _run_to_memory(
     # default. State eviction is irrelevant for an availableNow drain
     # into a memory sink (the state dies with the query).
     prev_ndb = spark.conf.get("spark.sql.streaming.noDataMicroBatches.enabled")
-    # Measurement override, OPT-OUT CALLERS ONLY (ADVICE r14): an
-    # append-mode aggregation's final windows are emitted BY the
-    # trailing no-data batch, so force-disabling it for every caller
-    # would silently produce wrong results for those queries — unlike
-    # the perf-only knobs. The env var therefore only reaches callers
-    # that already declared themselves emission-independent by passing
-    # no_data_batches=False (it can flip THEM back on for an A/B).
-    env_ndb = _os.environ.get("SPARK_GRAFT_NO_DATA_BATCHES")
-    if env_ndb is not None and not no_data_batches:
-        no_data_batches = env_ndb != "0"
     if state_partitions is not None:
         spark.conf.set("spark.sql.shuffle.partitions", str(state_partitions))
     if not no_data_batches:

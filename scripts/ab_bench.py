@@ -13,8 +13,10 @@ Usage:
 
 Arms are SPARK_GRAFT_EXTRA_CONF values (semicolon-separated key=value);
 an empty string is the current session defaults. Each draw is a fresh
-subprocess JVM timing the name list with bench.run_queries (same warm-up
-and cache-clear discipline as the real bench).
+``bench.py --segment ab NAMES`` process (the real bench's warm-up and
+cache-clear discipline and its JSON line). This is the A/B for what
+``scripts/ab_inproc.py`` cannot swap inside one JVM: static Spark confs
+and JVM flags.
 """
 
 from __future__ import annotations
@@ -24,39 +26,12 @@ import os
 import statistics
 import subprocess
 import sys
-import time
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-
-
-def _child(names: list[str], sf_dir: str) -> None:
-    import bench
-    from milvus_cdc_spark.session import get_spark
-
-    spark = get_spark("ab-bench")
-    spark.sparkContext.setLogLevel("ERROR")
-    spark.range(1000).selectExpr("sum(id)").collect()
-    canary = bench._canary_sec(spark, sf_dir)
-    t0 = time.time()
-    timings = bench.run_queries(spark, names, sf_dir)
-    wall = round(time.time() - t0, 3)
-    print(json.dumps({
-        "canary_sec": canary,
-        "value": round(sum(timings.values()), 3),
-        "wall": wall,
-        "queries": timings,
-    }, separators=(",", ":")))
-    spark.stop()
+BENCH = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "bench.py")
 
 
 def main() -> None:
     args = sys.argv[1:]
-    if args and args[0] == "--child":
-        names = args[1].split(",")
-        sf_dir = args[2]
-        _child(names, sf_dir)
-        return
-
     opts: dict[str, str] = {}
     i = 0
     while i < len(args):
@@ -96,7 +71,7 @@ def main() -> None:
                "SPARK_GRAFT_EXTRA_CONF": ";".join(spark_pairs),
                "SPARK_GRAFT_SF_DIR": sf_dir}
         proc = subprocess.run(
-            [sys.executable, os.path.abspath(__file__), "--child", names, sf_dir],
+            [sys.executable, BENCH, "--segment", "ab", names],
             capture_output=True, text=True, timeout=3600, env=env,
         )
         line = next(

@@ -1,25 +1,22 @@
 """Within-JVM interleaved A/B of two code paths, by wall, CPU and codegen.
 
 Usage:
-  python scripts/ab_inproc.py env VAR VAL_A VAL_B NAMES [PAIRS] [SF_DIR]
   python scripts/ab_inproc.py swap MODULE:FUNC FILE.py:FUNC NAMES [PAIRS] [SF_DIR]
   python scripts/ab_inproc.py swap MODULE:Class.method FILE.py:FUNC NAMES [PAIRS] [SF_DIR]
 
 ``NAMES`` is a comma-separated list of registry queries; ``SF_DIR``
 defaults to ``$SPARK_GRAFT_SF_DIR``, and the warm-up runs at the
-``sf0.001`` directory beside it. The two arm modes:
+``sf0.001`` directory beside it.
 
-- ``env``: arm A sets ``VAR=VAL_A``, arm B ``VAR=VAL_B``. Only valid
-  for toggles read at query-construction time (e.g.
-  SPARK_GRAFT_WIDEN_SCAN), not static Spark confs.
-- ``swap``: arm A runs the engine as it is; arm B replaces the
-  attribute ``FUNC`` of module ``MODULE`` with function ``FUNC`` loaded
-  from ``FILE.py``. Callers that look the function up through its
-  module (``similarity.ivf_train(...)``, or a bare call inside that
-  module) see the replacement, so an A/B needs no engine knob. Either
-  ``FUNC`` may be a dotted ``Class.method`` (say
-  ``CdcApplyPipeline._apply_batch_inner``): swapping it on the class
-  makes every instance run arm B, including ones a query builds.
+Arm A runs the engine as it is; arm B replaces the attribute ``FUNC``
+of module ``MODULE`` with function ``FUNC`` loaded from ``FILE.py``.
+Callers that look the function up through its module
+(``similarity.ivf_train(...)``, or a bare call inside that module) see
+the replacement, so an A/B needs no engine knob. Either ``FUNC`` may be
+a dotted ``Class.method`` (say ``CdcApplyPipeline._apply_batch_inner``):
+swapping it on the class makes every instance run arm B, including ones
+a query builds. Static Spark confs and JVM flags cannot change inside
+one JVM; ``scripts/ab_bench.py`` A/Bs those across fresh processes.
 
 Each query runs as alternating A/B pairs inside ONE session (order
 A B B A A B ...), timing fn+count with the bench's warm-up/cache-clear
@@ -53,13 +50,6 @@ def compiles(spark) -> int:
     return metrics.METRIC_COMPILATION_TIME().getCount()
 
 
-def env_arms(var: str, val_a: str, val_b: str) -> dict:
-    def setter(value):
-        return lambda: os.environ.__setitem__(var, value)
-
-    return {"a": setter(val_a), "b": setter(val_b)}
-
-
 def _owner(root, dotted: str) -> tuple[object, str]:
     """``(object holding the last name, last name)`` of a dotted path
     under ``root``: ``Class.method`` -> ``(Class, "method")``."""
@@ -87,15 +77,10 @@ def swap_arms(target: str, replacement: str) -> dict:
 
 
 def main() -> None:
-    mode = sys.argv[1] if len(sys.argv) > 1 else ""
-    if mode == "env":
-        arms = env_arms(*sys.argv[2:5])
-        rest = sys.argv[5:]
-    elif mode == "swap":
-        arms = swap_arms(*sys.argv[2:4])
-        rest = sys.argv[4:]
-    else:
+    if sys.argv[1:2] != ["swap"] or len(sys.argv) < 5:
         sys.exit(__doc__)
+    arms = swap_arms(*sys.argv[2:4])
+    rest = sys.argv[4:]
     names = rest[0].split(",")
     pairs = int(rest[1]) if len(rest) > 1 else 5
     sf_dir = rest[2] if len(rest) > 2 else os.environ["SPARK_GRAFT_SF_DIR"]

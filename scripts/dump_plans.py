@@ -2,14 +2,23 @@
 queries with the scale-relevant properties (PushedFilters, ReadSchema,
 broadcast vs sort-merge, exchange count) visible for review.
 
-Usage: python scripts/dump_plans.py [sf_dir]
+Usage:
+  python scripts/dump_plans.py [sf_dir]
+  python scripts/dump_plans.py --tag TAG before|after NAME [NAME ...]
+
+The ``--tag`` form snapshots the named queries' plans at
+``$SPARK_GRAFT_SF_DIR`` into ``plans/TAG/<name>_<before|after>.txt``,
+the before/after pair a plan-changing optimization keeps beside it.
+Both forms plan with AQE off, so the static plan is readable.
 """
 
 from __future__ import annotations
 
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 SHOWCASE = [
     "q1_pricing_summary",
@@ -134,17 +143,17 @@ SHOWCASE = [
 
 
 def main() -> None:
+    if sys.argv[1:2] == ["--tag"]:
+        if len(sys.argv) < 5 or sys.argv[3] not in ("before", "after"):
+            sys.exit(__doc__)
+        dump_tagged(sys.argv[2], sys.argv[3], sys.argv[4:])
+        return
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
 
     from milvus_cdc_spark import suite
     from milvus_cdc_spark.plans import audit
-    from milvus_cdc_spark.session import get_spark
 
-    spark = get_spark("dump_plans")
-    spark.sparkContext.setLogLevel("ERROR")
-    # AQE hides the final plan behind AdaptiveSparkPlan pre-execution;
-    # disable for a readable static plan (properties are identical)
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    spark = _session()
 
     out = [
         "# PLANS — physical plans of representative queries",
@@ -247,7 +256,7 @@ def main() -> None:
         out.append("\n".join(lines[:cut]).rstrip())
         out.append("```")
         out.append("")
-    with open("/root/repo/PLANS.md", "w") as f:
+    with open(os.path.join(ROOT, "PLANS.md"), "w") as f:
         f.write("\n".join(out))
     print(f"wrote PLANS.md with {len(SHOWCASE)} plans")
     spark.stop()
@@ -256,6 +265,36 @@ def main() -> None:
             print(f"data-sized plan violation in {name}: {bad}", file=sys.stderr)
         sys.exit(1)
 
+
+def _session():
+    from milvus_cdc_spark.session import get_spark
+
+    spark = get_spark("dump_plans")
+    spark.sparkContext.setLogLevel("ERROR")
+    # AQE hides the final plan behind AdaptiveSparkPlan pre-execution;
+    # disable for a readable static plan (properties are identical)
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    return spark
+
+
+def dump_tagged(tag: str, suffix: str, names: list[str]) -> None:
+    from milvus_cdc_spark import suite
+    from milvus_cdc_spark.plans import audit
+
+    sf_dir = os.environ["SPARK_GRAFT_SF_DIR"]
+    out_dir = os.path.join(ROOT, "plans", tag)
+    os.makedirs(out_dir, exist_ok=True)
+    spark = _session()
+    for name in names:
+        plan = audit.formatted_plan(suite.QUERIES[name].fn(spark, sf_dir))
+        path = os.path.join(out_dir, f"{name}_{suffix}.txt")
+        with open(path, "w") as f:
+            f.write(plan)
+        print(
+            f"{name}: exchanges={audit.count_exchanges(plan)} "
+            f"broadcast_joins={audit.count_broadcast_joins(plan)} -> {path}"
+        )
+    spark.stop()
 
 if __name__ == "__main__":
     main()

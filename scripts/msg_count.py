@@ -12,14 +12,14 @@ Spark shape: ONE parquet scan, ts-window filter pushed to the scan, one
 aggregation keyed by (vchannel, op_type) — a single shuffle whose
 cardinality is channels × op types (control-sized). Nothing collects
 except the printed per-channel summary. Positions-seek parity: with
-``--positions DIR`` each channel counts strictly AFTER its stored
-position ("not including the current msg", main.go:294-301), channels
-without a stored position count from earliest
-(SubscriptionPositionEarliest, main.go:284-286).
+``--positions=WORK_DIR`` each channel counts strictly AFTER the position
+that CDC task's work dir last committed ("not including the current
+msg", main.go:294-301), channels without a stored position count from
+earliest (SubscriptionPositionEarliest, main.go:284-286).
 
 Usage:
-  python scripts/msg_count.py OPLOG_DIR [--positions DIR]
-                              [--from-ts T] [--to-ts T] [--collection C]
+  python scripts/msg_count.py OPLOG_DIR [--positions=WORK_DIR]
+                              [--from-ts=T] [--to-ts=T] [--collection=C]
 
 ``--from-ts``/``--to-ts`` bound the counted hybrid-ts window (from
 exclusive, to inclusive) — the two-timestamp delta form; ``--collection``
@@ -29,12 +29,26 @@ mirrors the tool's CollectionID scoping (main.go:425-429). Exit 0 always
 
 from __future__ import annotations
 
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
 from milvus_cdc_spark.control.msgcount import count_messages  # noqa: E402
+
+
+def work_dir_positions(spark, work_dir: str):
+    """A CDC work dir's committed positions as ``(vchannel,
+    position_ts)`` rows, the seek input of ``count_messages``."""
+    from milvus_cdc_spark.catalog import local_frame
+    from milvus_cdc_spark.streaming.pipeline import committed_positions
+
+    return local_frame(
+        spark,
+        [(v, ts) for v, ts, _ in committed_positions(work_dir)],
+        "vchannel string, position_ts bigint",
+    )
 
 
 def main() -> None:
@@ -55,7 +69,7 @@ def main() -> None:
     spark.sparkContext.setLogLevel("ERROR")
     ops = spark.read.schema(OPLOG_SCHEMA).parquet(args[0])
     positions = (
-        spark.read.parquet(opts["positions"]) if "positions" in opts else None
+        work_dir_positions(spark, opts["positions"]) if "positions" in opts else None
     )
     summary = count_messages(
         spark,

@@ -19,7 +19,8 @@ Usage:
   python scripts/position_tool.py list WORK_DIR            # per-channel latest
 
 Driver-side tool: no Spark session; ``list`` reads a pipeline work
-dir's committed positions from ``state/MANIFEST.json``.
+dir's committed positions from its state manifest
+(``pipeline.committed_positions``).
 """
 
 from __future__ import annotations
@@ -30,7 +31,7 @@ import json
 import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 LOGICAL_BITS = 18
 
@@ -75,8 +76,8 @@ def cmd_encode_msgid(*args: str) -> dict:
 
 
 def cmd_list(work_dir: str) -> list[dict]:
-    with open(os.path.join(work_dir, "state", "MANIFEST.json")) as f:
-        rows = json.load(f)["positions"]
+    from milvus_cdc_spark.streaming.pipeline import committed_positions
+
     return [
         {
             "vchannel": v,
@@ -84,7 +85,7 @@ def cmd_list(work_dir: str) -> list[dict]:
             "physical_time": _physical_iso(ts),
             "n_msgs": n,
         }
-        for v, ts, n in rows
+        for v, ts, n in committed_positions(work_dir)
     ]
 
 

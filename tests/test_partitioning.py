@@ -6,12 +6,14 @@ Contract under test (partitioning.py):
 - a frame already at/above defaultParallelism passes through UNTOUCHED
   (the no-op-at-real-scale guarantee — at 100 TB the input arrives with
   thousands of splits and the helper must add nothing);
-- SPARK_GRAFT_WIDEN_SCAN=off disables widening entirely (the A/B switch);
-- widening never changes the rows, only their placement.
+- widening never changes the rows, only their placement;
+- at every engine call site the memoized partition count equals a
+  direct probe of the frame passed in.
 """
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from milvus_cdc_spark.partitioning import widen_small_scan
@@ -38,15 +40,6 @@ def test_keyed_widening_is_hash_not_roundrobin(spark):
     plan = widen_small_scan(narrow, "id")._jdf.queryExecution().executedPlan().toString()
     assert "hashpartitioning" in plan
     assert "roundrobinpartitioning" not in plan
-
-
-def test_off_switch_disables(spark, monkeypatch):
-    narrow = spark.range(0, 100).coalesce(1)
-    # monkeypatch restores any pre-existing value after the test
-    # (a bare os.environ.pop clobbered it for the session — ADVICE r14)
-    monkeypatch.setenv("SPARK_GRAFT_WIDEN_SCAN", "off")
-    out = widen_small_scan(narrow, "id")
-    assert out is narrow
 
 
 def test_probe_memoized_per_file_set(spark, tmp_path, monkeypatch):
@@ -90,3 +83,51 @@ def test_rows_unchanged_by_widening(spark):
     a = sorted(tuple(r) for r in narrow.collect())
     b = sorted(tuple(r) for r in wide.collect())
     assert a == b
+
+
+#: One registry query per ``widen_small_scan`` call site in the engine.
+WIDEN_CALL_SITES = {
+    "oplog.derive_oplog(widen=True)": "cdc_replay_summary",
+    "textrank.bm25_index(widen=True)": "fulltext_sparse_search",
+    "suite.ivf_topk": "ivf_topk",
+    "suite_eval.delete_by_expr_replay": "delete_by_expr_replay",
+    "suite_eval.maxsim_multivector_topk": "maxsim_multivector_topk",
+    "suite_eval.maxsim_ann_rerank": "maxsim_ann_rerank",
+    "suite_search.ivf_kmeans_build": "ivf_kmeans_build",
+    "suite_search.pq_codebooks": "pq_codebooks",
+    "suite_search.hashed_embedding_search": "hashed_embedding_search",
+    "suite_search.kmeans_silhouette": "kmeans_silhouette",
+}
+
+
+@pytest.mark.parametrize("site", sorted(WIDEN_CALL_SITES))
+def test_memoized_probe_matches_direct_probe(spark, sf_dir, monkeypatch, site):
+    """The probe memo assumes every frame passed in is a scan plus narrow
+    transforms, whose partition count is a function of its input files.
+    Each call site's frame is checked against that: the memoized count
+    must equal a direct ``getNumPartitions()`` of the same frame. The
+    query must reach the wrapper, so a call site that moves or goes away
+    fails here instead of leaving the list stale."""
+    from milvus_cdc_spark import oplog, partitioning, suite
+    from milvus_cdc_spark.analytics import textrank
+
+    real = partitioning.widen_small_scan
+    probes = []
+
+    def checked(df, *key_cols):
+        out = real(df, *key_cols)
+        key = (id(df.sparkSession.sparkContext), tuple(sorted(df.inputFiles())))
+        probes.append((partitioning._PROBE_CACHE.get(key), df.rdd.getNumPartitions()))
+        return out
+
+    # oplog binds the name at import; the others import it per call
+    for mod in (partitioning, oplog, textrank):
+        if hasattr(mod, "widen_small_scan"):
+            monkeypatch.setattr(mod, "widen_small_scan", checked)
+    try:
+        suite.QUERIES[WIDEN_CALL_SITES[site]].fn(spark, sf_dir)
+    finally:
+        spark.catalog.clearCache()
+    assert probes, f"{site} no longer calls widen_small_scan"
+    for memo, direct in probes:
+        assert memo == direct, (site, memo, direct)

@@ -677,13 +677,17 @@ def test_maxsim_rerank_single_scoring_pass(spark, sf_dir, monkeypatch):
     carries no join between ranked frames and exactly one window
     exchange over the scored data.
 
-    Pinned with the r14 corpus scan-widening OFF: the widen adds one
-    orthogonal hashpartitioning(vec_id) exchange above the scan (its own
-    contract lives in tests/test_partitioning.py) and this test guards
-    the scoring/window shape, not the input layout."""
+    Pinned with the r14 corpus scan-widening patched out: the widen adds
+    one orthogonal hashpartitioning(vec_id) exchange above the scan (its
+    own contract lives in tests/test_partitioning.py) and this test guards
+    the scoring/window shape, not the input layout. ``maxsim_ann_rerank``
+    imports ``widen_small_scan`` inside the function, so patching the
+    module attribute reaches it."""
     import re
 
-    monkeypatch.setenv("SPARK_GRAFT_WIDEN_SCAN", "off")
+    from milvus_cdc_spark import partitioning
+
+    monkeypatch.setattr(partitioning, "widen_small_scan", lambda df, *k: df)
     df = suite.QUERIES["maxsim_ann_rerank"].fn(spark, sf_dir)
     plan = audit.formatted_plan(df)
     assert "SortMergeJoin" not in plan
