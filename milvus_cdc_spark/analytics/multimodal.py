@@ -33,13 +33,6 @@ def _decode_stub(payload: bytes) -> dict:
     return {"n_bytes": len(payload), "content_hash": hashlib.md5(payload).hexdigest()}
 
 
-def decode_real(payload: bytes, media_type: str):
-    raise NotImplementedError(
-        "media codecs (PIL/librosa/pyav) are not available in this container; "
-        "use _decode_stub for plumbing tests"
-    )
-
-
 def as_media_table(df: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
     """Test harness: treat utf-8 text bytes as an opaque media payload."""
     return df.select(

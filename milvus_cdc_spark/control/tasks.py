@@ -26,7 +26,9 @@ from pyspark.sql import SparkSession
 
 from milvus_cdc_spark.control.quarantine import ErrorQuarantine
 from milvus_cdc_spark.operators import filters
-from milvus_cdc_spark.streaming.pipeline import CdcApplyPipeline
+from milvus_cdc_spark.streaming.pipeline import (
+    CdcApplyPipeline, batch_records, committed_manifest, committed_positions,
+)
 
 STATE_INITIAL = "initial"
 STATE_RUNNING = "running"
@@ -239,29 +241,35 @@ class TaskRegistry:
         self._persist()
 
     def get(self, task_id: str) -> dict:
-        return _scrub(asdict(self.tasks[task_id]))
+        """The spec plus ``batches``, its work dir's committed per-batch
+        records (the reference's per-task replicate counters)."""
+        spec = self.tasks[task_id]
+        batches = batch_records(committed_manifest(spec.work_dir))
+        return {**_scrub(asdict(spec)), "batches": batches}
 
     def list(self) -> list[dict]:
         return [_scrub(asdict(t)) for t in self.tasks.values()]
 
     def position(self, task_id: str) -> list[dict]:
         """Per-vchannel positions of a task (GetPosition semantics,
-        cdc_impl.go:1503-1561) — base64-encoded like the reference."""
+        cdc_impl.go:1503-1561) — base64-encoded like the reference. Read
+        from the committed manifest, the live pipeline's or, after a
+        registry restart, the work dir's, as the reference reads its meta
+        store; no DataFrame is built."""
         import base64
 
         pipeline = self.pipelines.get(task_id)
-        if pipeline is None:
-            return []
-        rows = pipeline.positions().collect()
+        rows = (
+            pipeline.manifest["positions"] if pipeline is not None
+            else committed_positions(self.tasks[task_id].work_dir)
+        )
         return [
             {
-                "vchannel": r.vchannel,
-                "position_ts": r.position_ts,
-                "encoded": base64.b64encode(
-                    f"{r.vchannel}:{r.position_ts}".encode()
-                ).decode(),
+                "vchannel": v,
+                "position_ts": ts,
+                "encoded": base64.b64encode(f"{v}:{ts}".encode()).decode(),
             }
-            for r in rows
+            for v, ts, _ in rows
         ]
 
     def handle(self, request: dict) -> dict:

@@ -18,14 +18,6 @@ def encode_position(channel: Column, ts: Column) -> Column:
     return F.base64(F.concat_ws(":", channel, ts.cast("string")).cast("binary"))
 
 
-def decode_position_channel(pos: Column) -> Column:
-    return F.substring_index(F.unbase64(pos).cast("string"), ":", 1)
-
-
-def decode_position_ts(pos: Column) -> Column:
-    return F.substring_index(F.unbase64(pos).cast("string"), ":", -1).cast("bigint")
-
-
 def kafka_envelope(df: DataFrame, value_cols: list[str]) -> DataFrame:
     """K3/K4: one JSON envelope per op, ready for a Kafka value column."""
     payload = F.to_json(

@@ -171,18 +171,6 @@ def stopword_ratio(text: Column, stopwords: tuple[str, ...] = LANG_STOPWORDS["en
     return hits / F.greatest(F.size(toks), F.lit(1))
 
 
-def quality_score(text: Column) -> Column:
-    """Composite [0,1] quality heuristic: long enough, low punctuation,
-    some stopwords. Deterministic; mirrored in SQL by the oracle."""
-    length_ok = F.when(F.length(text) >= 100, F.lit(1.0)).otherwise(F.length(text) / F.lit(100.0))
-    return F.round(
-        F.lit(0.5) * length_ok
-        + F.lit(0.25) * (F.lit(1.0) - F.least(punct_ratio(text) * 5, F.lit(1.0)))
-        + F.lit(0.25) * F.least(stopword_ratio(text) * 5, F.lit(1.0)),
-        6,
-    )
-
-
 def lang_hits(text: Column, lang: str) -> Column:
     """Number of tokens that are stopwords of ``lang``."""
     sw = LANG_STOPWORDS[lang]

@@ -25,10 +25,6 @@ def physical_ms(ts: Column) -> Column:
     return F.shiftrightunsigned(ts.cast("bigint"), LOGICAL_BITS)
 
 
-def logical_part(ts: Column) -> Column:
-    return (ts.cast("bigint") % F.lit(1 << LOGICAL_BITS)).cast("bigint")
-
-
 def physical_timestamp(ts: Column) -> Column:
     """Hybrid ts → Spark TimestampType, for event-time windows."""
     return F.timestamp_millis(physical_ms(ts))

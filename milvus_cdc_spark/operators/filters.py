@@ -188,11 +188,6 @@ def rbac_gate(df: DataFrame, enable_user_role: bool, op_col: str = "op_type") ->
     return df.filter(~is_rbac | F.lit(enable_user_role))
 
 
-def drop_system_fields(fields: DataFrame, field_id_col: str = "field_id") -> DataFrame:
-    """P7: system fields have FieldID < 100."""
-    return fields.filter(F.col(field_id_col) >= 100)
-
-
 def not_tombstone(df: DataFrame, value_col: str = "value") -> DataFrame:
     """P8: skip tombstoned metadata values."""
     return df.filter(F.col(value_col) != F.lit(TOMBSTONE))

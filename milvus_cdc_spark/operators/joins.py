@@ -24,18 +24,6 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 
-def dim_enrich(
-    fact: DataFrame, dims: list[tuple[DataFrame, str]], how: str = "left"
-) -> DataFrame:
-    """J1-J4: enrich a fact/stream table with small dimension tables via
-    broadcast equi-joins (reference: collectionRecords / dbID→name map probes,
-    replicate_channel_manager.go:1327-1363, etcd_op.go:706-733)."""
-    out = fact
-    for dim, key in dims:
-        out = out.join(F.broadcast(dim), key, how)
-    return out
-
-
 def rank_zip_join(
     left: DataFrame,
     right: DataFrame,

@@ -24,7 +24,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from milvus_cdc_spark.operators.filters import ALL, DEFAULT_DB, full_name
+from milvus_cdc_spark.operators.filters import ALL, DEFAULT_DB
 
 #: Row shape of a mapping table: source/target full-name parts.
 MAPPING_SCHEMA = "src_db string, src_coll string, dst_db string, dst_coll string"
@@ -51,21 +51,6 @@ def name_mapping_df(spark: SparkSession, mappings: list[dict]) -> DataFrame:
     from milvus_cdc_spark.catalog import local_frame
 
     return local_frame(spark, rows, MAPPING_SCHEMA)
-
-
-def mapping_pairs(mappings: list[dict]) -> dict[str, str]:
-    """The flat ``src_full → dst_full`` dict the duplicate guard consumes
-    (mirrors GetCollectionMappingFromReq's map shape)."""
-    out: dict[str, str] = {}
-    for m in mappings:
-        src_db = m.get("source_db", DEFAULT_DB)
-        dst_db = m.get("target_db", DEFAULT_DB)
-        colls = m.get("collections") or {}
-        if not colls:
-            out[full_name(ALL, src_db)] = full_name(ALL, dst_db)
-        for s, t in colls.items():
-            out[full_name(s, src_db)] = full_name(t, dst_db)
-    return out
 
 
 def map_db_and_collection(

@@ -220,16 +220,6 @@ def distributed_prefix_sum(
     return local.withColumn(out_col, out.cast("bigint")).drop("_pid", "_lsum")
 
 
-def last_sent_lag(df: DataFrame, partition_keys: list[str], ts_col: str) -> DataFrame:
-    """W5: per-channel last-sent-ts tracking (ts_manager.go:338-366) — decides
-    whether a TimeTick needs emitting. Batch analog: lag() over the channel
-    partition ordered by time."""
-    w = Window.partitionBy(*partition_keys).orderBy(F.col(ts_col).asc())
-    return df.withColumn("prev_ts", F.lag(F.col(ts_col)).over(w)).withColumn(
-        "gap", F.col(ts_col) - F.coalesce(F.col("prev_ts"), F.col(ts_col))
-    )
-
-
 def sessionize(
     events: DataFrame,
     user_col: str = "user_id",

@@ -29,10 +29,6 @@ def pushed_filters(plan: str) -> list[str]:
     ]
 
 
-def has_pushed_filter(df: DataFrame, fragment: str) -> bool:
-    return any(fragment in p for p in pushed_filters(formatted_plan(df)))
-
-
 def read_schema_columns(plan: str) -> list[str]:
     """Column lists actually read from parquet (pruning check)."""
     cols = []

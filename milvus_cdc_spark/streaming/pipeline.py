@@ -31,10 +31,18 @@ core/writer/replicate_message_manager.go:33-128):
     state/
       MANIFEST.json          ← {bucket → version, last_batch_id, drop
                                cutoffs, per-vchannel [vchannel,
-                               position_ts, n_msgs] rows}; committed
-                               atomically (tmp + rename) AFTER the batch's
-                               writes — the parquet Delta-MERGE stand-in
+                               position_ts, n_msgs] rows, history};
+                               committed atomically (tmp + rename) AFTER
+                               the batch's writes — the parquet
+                               Delta-MERGE stand-in
       v{batch_id}/bucket=K/  ← only buckets whose pks appear in that batch
+
+``history`` holds one record per committed batch, the last
+``history_keep``: its bucket map (time travel) and its telemetry, ``ops``
+per op_type, ``payload_rows``, ``touched`` buckets, ``lag`` as
+``[vchannel, lag_ms]`` rows and ``phases`` seconds. The reference's replicate counters
+(server/metrics/metrics.go:85-135) thus commit with the batch and survive
+a restart.
 
 A batch rewrites only the buckets it touches; unaffected buckets keep
 their old versioned files. Every write is keyed by batch_id and uses
@@ -127,6 +135,35 @@ def _fold_positions(rows, positions: list) -> list:
     return [[v, *acc[v]] for v in sorted(acc, key=lambda v: (v is None, v or ""))]
 
 
+def _lag_rows(positions: list) -> list:
+    """``[vchannel, lag_ms]`` per manifest position row: how far each
+    position trails the most advanced one in physical ms, the hybrid TSO
+    shifted right (unsigned) past its 18 logical bits (reference
+    replicate-lag metric, server/metrics/metrics.go:111-135)."""
+    def phys(ts):
+        return (ts & 0xFFFF_FFFF_FFFF_FFFF) >> 18
+
+    top = max((ts for _, ts, _ in positions if ts is not None), default=None)
+    return [[v, None if ts is None else phys(top) - phys(ts)] for v, ts, _ in positions]
+
+
+def committed_manifest(work_dir: str) -> dict:
+    """A work dir's committed state manifest, read without a Spark
+    session: what a restarted pipeline loads. Empty before the first
+    commit."""
+    path = os.path.join(work_dir, "state", "MANIFEST.json")
+    if not os.path.exists(path):
+        return {}
+    with open(path) as f:
+        return json.load(f)
+
+
+def batch_records(manifest: dict) -> list:
+    """A manifest's per-batch records, oldest first. A history entry
+    committed before records existed has no telemetry and is skipped."""
+    return [h for h in manifest.get("history", []) if "ops" in h]
+
+
 def committed_positions(work_dir: str) -> list:
     """A work dir's committed ``[vchannel, position_ts, n_msgs]`` rows,
     read from its state manifest without a Spark session: what
@@ -134,14 +171,12 @@ def committed_positions(work_dir: str) -> list:
     commit. A format-2 manifest keeps its positions in a table that only
     a pipeline's load migrates, so it is refused rather than read as
     empty."""
-    path = os.path.join(work_dir, "state", "MANIFEST.json")
-    if not os.path.exists(path):
+    manifest = committed_manifest(work_dir)
+    if not manifest:
         return []
-    with open(path) as f:
-        manifest = json.load(f)
     if "positions" not in manifest:
         raise StateFormatError(
-            f"{path} predates format 3; open the work dir with a "
+            f"{work_dir} predates format 3; open the work dir with a "
             "CdcApplyPipeline once to migrate its positions"
         )
     return manifest["positions"]
@@ -270,10 +305,10 @@ class CdcApplyPipeline:
     a drain now takes half as many batches, so callers that count batches
     or pin batch ids see fewer of them.
 
-    Positions are folded into the manifest at the commit point from the
-    control aggregate the batch already collects; no Spark job writes or
-    reads them. ``phase_timings``' ``positions_write`` is that in-memory
-    fold.
+    Positions and the batch's record are folded into the manifest at the
+    commit point from the control aggregate the batch already collects;
+    no Spark job writes or reads them. The record's ``positions_write``
+    phase is that in-memory fold.
     """
 
     def __init__(self, spark: SparkSession, source_dir: str, work_dir: str,
@@ -351,12 +386,6 @@ class CdcApplyPipeline:
         # disk, not an in-memory counter, is the source of truth
         self._manifest_path = os.path.join(self.state_dir, "MANIFEST.json")
         self._manifest = self._load_manifest()
-        #: per-batch wall-clock phase breakdown (control collect / state
-        #: merge+write / positions fold / manifest commit+GC), one dict
-        #: per applied batch — the observability that sized the r13
-        #: per-microbatch cost profile (SCALE.md §5t). ~4 clock reads per
-        #: batch; negligible against any Spark job it brackets.
-        self.phase_timings: list[dict] = []
         # optional downstream mirror (the Kafka-sink analog, K3): ops are
         # monotonic-ts-repaired (T2) before emission, exactly the
         # reference's handlePack → sink ordering
@@ -369,52 +398,50 @@ class CdcApplyPipeline:
 
     # -- manifest ---------------------------------------------------------
     def _load_manifest(self) -> dict:
-        if os.path.exists(self._manifest_path):
-            with open(self._manifest_path) as f:
-                m = json.load(f)
-                # version gate: absent key = format 1 (legacy, migratable);
-                # a version BEYOND this reader is a hard refuse, never a
-                # silent null-backfill of unknown-semantics columns
-                v = m.setdefault("format_version", 1)
-                if v > STATE_FORMAT_VERSION:
-                    raise StateFormatError(
-                        f"state dir {self.state_dir} has format_version {v}; "
-                        f"this reader supports <= {STATE_FORMAT_VERSION} — "
-                        "resume with a matching or newer engine version"
-                    )
-                # migrate-on-load: stamping the current version is safe
-                # because every pre-2 difference is read-side (column
-                # backfill) and the pre-3 positions table is folded in
-                # below; the stamp persists at the next commit
-                m["format_version"] = STATE_FORMAT_VERSION
-                m.setdefault("history", [])
-                if "positions" not in m:
-                    m["positions"] = self._legacy_positions(m["last_batch_id"])
-                # bucket-count pin (ADVICE r14): state rows are placed by
-                # pmod(xxhash64(pk), n_buckets), so resuming an existing
-                # work_dir under a DIFFERENT bucket count silently
-                # misroutes every subsequent probe and merge. Legacy
-                # manifests without the key adopt the current count
-                # (their state was written by this process's ancestors
-                # under the same default); a recorded mismatch is a hard
-                # refuse.
-                recorded = m.setdefault("n_buckets", self.n_buckets)
-                if recorded != self.n_buckets:
-                    raise StateFormatError(
-                        f"state dir {self.state_dir} was written with "
-                        f"n_buckets={recorded}; this pipeline is configured "
-                        f"with n_buckets={self.n_buckets} — resume with the "
-                        "recorded bucket count"
-                    )
-                return m
-        return {
-            "buckets": {},
-            "last_batch_id": -1,
-            "history": [],
-            "format_version": STATE_FORMAT_VERSION,
-            "n_buckets": self.n_buckets,
-            "positions": [],
-        }
+        m = committed_manifest(os.path.dirname(self.state_dir))
+        if not m:
+            return {
+                "buckets": {},
+                "last_batch_id": -1,
+                "history": [],
+                "format_version": STATE_FORMAT_VERSION,
+                "n_buckets": self.n_buckets,
+                "positions": [],
+            }
+        # version gate: absent key = format 1 (legacy, migratable); a
+        # version BEYOND this reader is a hard refuse, never a silent
+        # null-backfill of unknown-semantics columns
+        v = m.setdefault("format_version", 1)
+        if v > STATE_FORMAT_VERSION:
+            raise StateFormatError(
+                f"state dir {self.state_dir} has format_version {v}; "
+                f"this reader supports <= {STATE_FORMAT_VERSION} — "
+                "resume with a matching or newer engine version"
+            )
+        # migrate-on-load: stamping the current version is safe because
+        # every pre-2 difference is read-side (column backfill) and the
+        # pre-3 positions table is folded in below; the stamp persists at
+        # the next commit
+        m["format_version"] = STATE_FORMAT_VERSION
+        m.setdefault("history", [])
+        if "positions" not in m:
+            m["positions"] = self._legacy_positions(m["last_batch_id"])
+        # bucket-count pin (ADVICE r14): state rows are placed by
+        # pmod(xxhash64(pk), n_buckets), so resuming an existing work_dir
+        # under a DIFFERENT bucket count silently misroutes every
+        # subsequent probe and merge. Legacy manifests without the key
+        # adopt the current count (their state was written by this
+        # process's ancestors under the same default); a recorded
+        # mismatch is a hard refuse.
+        recorded = m.setdefault("n_buckets", self.n_buckets)
+        if recorded != self.n_buckets:
+            raise StateFormatError(
+                f"state dir {self.state_dir} was written with "
+                f"n_buckets={recorded}; this pipeline is configured "
+                f"with n_buckets={self.n_buckets} — resume with the "
+                "recorded bucket count"
+            )
+        return m
 
     def _legacy_positions(self, last_batch_id: int) -> list:
         """Manifest position rows from a format-2 ``positions/batch_id=N/``
@@ -469,6 +496,22 @@ class CdcApplyPipeline:
     @property
     def last_batch_id(self) -> int:
         return self._manifest["last_batch_id"]
+
+    @property
+    def manifest(self) -> dict:
+        """The manifest as this process holds it: the last commit, once
+        ``apply_batch`` has returned. Read only."""
+        return self._manifest
+
+    # phase_timings and last_observed are views over the batch records,
+    # kept only because perfbench's drain_counters reads them: delete both
+    # at the next benchmark change
+    @property
+    def phase_timings(self) -> list:
+        return [
+            {"batch_id": h["batch_id"], **h["phases"]}
+            for h in batch_records(self._manifest)
+        ]
 
     # -- state table ------------------------------------------------------
     def _bucket(self, df: DataFrame) -> DataFrame:
@@ -599,37 +642,43 @@ class CdcApplyPipeline:
         #     its pairs split 12/24, and a swap of a method that query
         #     never calls read 1.07, so the 1.01-1.03 is noise; the alive()
         #     read of streaming_cdc_apply is where the saved job shows.
-        # The persist stays: both passes read ops, and without it the
-        # stream's observe("apply_metrics") counts every op twice.
+        # The persist stays: both passes read ops.
         ops = ops.persist()
         try:
             # ONE control aggregate answers every driver-side question of
             # the batch: the touched buckets (the only state partitions the
-            # merge reads and rewrites), the per-vchannel positions, and the
-            # bulk-drop cutoffs. The d_* columns are null for DML, so the
-            # output stays driver-sized: buckets x vchannels plus the
+            # merge reads and rewrites), the per-vchannel positions, the
+            # bulk-drop cutoffs and the batch record's per-op-type counts
+            # (the reference's groupBy(task, op) counters, SURVEY A6). The
+            # d_* columns are null for DML, so the output stays
+            # driver-sized: buckets x vchannels x op types plus the
             # catalog-sized drop scopes (DropPartition / DropCollection ride
             # the DML stream, channel_writer.go:245-267).
-            is_drop = F.col("op_type").isin("drop_collection", "drop_partition")
+            drop_ops = ("drop_collection", "drop_partition")
+            is_drop = F.col("op_type").isin(*drop_ops)
             t0 = time.time()
             control = (
                 self._bucket(ops)
                 .groupBy(
                     "bucket",
                     "vchannel",
-                    F.when(is_drop, F.col("op_type")).alias("d_op"),
+                    "op_type",
                     F.when(is_drop, F.col("collection")).alias("d_coll"),
                     F.when(is_drop, F.col("partition")).alias("d_part"),
                 )
-                .agg(F.max("ts").alias("ts"), F.count("*").alias("n"))
+                .agg(
+                    F.max("ts").alias("ts"),
+                    F.count("*").alias("n"),
+                    F.sum("num_rows").alias("rows"),
+                )
                 .collect()
             )
             t_control = time.time()
             touched = sorted({r.bucket for r in control})
             drops: dict = {}
             for r in control:
-                if r.d_op is not None:
-                    k = (r.d_op, r.d_coll, r.d_part)
+                if r.op_type in drop_ops:
+                    k = (r.op_type, r.d_coll, r.d_part)
                     drops[k] = _max_ts(drops.get(k), r.ts)
             if touched:
                 # both merge sides carry bucket, so merge_state hash-
@@ -683,21 +732,32 @@ class CdcApplyPipeline:
                 k = f"{coll}|{part}"
             d[k] = max(d.get(k, -1), ts)
         self._manifest["last_batch_id"] = batch_id
-        # time-travel history: snapshot the bucket map per commit, bounded
-        # retention (metadata only — versions stay alive via GC liveness)
-        self._manifest["history"].append(
-            {"batch_id": batch_id, "buckets": dict(self._manifest["buckets"])}
-        )
+        # the batch's record, bounded retention: the bucket map snapshot
+        # for time travel (metadata only — versions stay alive via GC
+        # liveness) and the batch's telemetry
+        ops_by_type: dict = {}
+        for r in control:
+            ops_by_type[r.op_type] = ops_by_type.get(r.op_type, 0) + r.n
+        record = {
+            "batch_id": batch_id,
+            "buckets": dict(self._manifest["buckets"]),
+            "ops": ops_by_type,
+            "payload_rows": sum(r.rows or 0 for r in control),
+            "touched": len(touched),
+            "lag": _lag_rows(self._manifest["positions"]),
+            "phases": {
+                "control_collect": round(t_control - t0, 3),
+                "state_merge_write": round(t_state - t_control, 3),
+                "positions_write": round(t_positions - t_state, 3),
+            },
+        }
+        self._manifest["history"].append(record)
         del self._manifest["history"][: -self.history_keep]
         self._commit_manifest()
         self._gc_stale_state_versions()
-        self.phase_timings.append({
-            "batch_id": batch_id,
-            "control_collect": round(t_control - t0, 3),
-            "state_merge_write": round(t_state - t_control, 3),
-            "positions_write": round(t_positions - t_state, 3),
-            "commit_gc": round(time.time() - t_positions, 3),
-        })
+        # commit_gc is only known once the commit is done: it is set in
+        # memory here and reaches disk with the next batch's commit
+        record["phases"]["commit_gc"] = round(time.time() - t_positions, 3)
 
     def _gc_stale_state_versions(self) -> None:
         """Drop version directories no bucket references anymore (bounded
@@ -714,32 +774,21 @@ class CdcApplyPipeline:
 
     # -- run --------------------------------------------------------------
     def run_available_now(self) -> None:
-        stream = (
+        before = self.last_batch_id
+        query = (
             self.spark.readStream.schema(OPLOG_SCHEMA)
             .option("maxFilesPerTrigger", self.files_per_trigger)
             .parquet(self.source_dir)
-            # Spark-native counters (reference metrics.go replicate_data_cnt
-            # / _size): observed per microbatch, surfaced in progress events
-            # as observedMetrics["apply_metrics"] — no hand-kept atomics
-            .observe(
-                "apply_metrics",
-                F.count(F.lit(1)).alias("ops"),
-                F.sum("num_rows").alias("payload_rows"),
-            )
-        )
-        query = (
-            stream.writeStream.foreachBatch(self.apply_batch)
+            .writeStream.foreachBatch(self.apply_batch)
             .option("checkpointLocation", self.checkpoint_dir)
             .trigger(availableNow=True)
             .start()
         )
         query.awaitTermination()
-        observed = []
-        for p in query.recentProgress:
-            m = p.get("observedMetrics", {}).get("apply_metrics")
-            if m is not None:
-                observed.append(m.asDict() if hasattr(m, "asDict") else dict(m))
-        self.last_observed = observed
+        self.last_observed = [
+            {"ops": sum(h["ops"].values()), "payload_rows": h["payload_rows"]}
+            for h in batch_records(self._manifest) if h["batch_id"] > before
+        ]
 
     def alive(self) -> DataFrame:
         """Alive rows = per-pk LWW view minus bulk-drop scopes.
@@ -816,22 +865,17 @@ class CdcApplyPipeline:
 
     def channel_lag(self) -> DataFrame:
         """Per-vchannel replicate lag in physical ms (reference Prometheus
-        replicate-lag metric, server/metrics/metrics.go:111-135): the
-        channel-safe global maximum position minus each channel's
-        position, hybrid-TSO shifted back to wall-clock ms."""
-        pos = self.positions()
-        gmax = pos.agg(F.max("position_ts").alias("_gmax"))
-        return (
-            pos.crossJoin(F.broadcast(gmax))
-            .select(
-                "vchannel",
-                "position_ts",
-                (
-                    F.shiftrightunsigned(F.col("_gmax"), 18)
-                    - F.shiftrightunsigned(F.col("position_ts"), 18)
-                ).alias("lag_ms"),
-            )
-            .orderBy("vchannel")
+        replicate-lag metric, server/metrics/metrics.go:111-135), as of
+        the last committed batch: ``_lag_rows``, the batch record's lag,
+        ordered by vchannel with a null vchannel first."""
+        from milvus_cdc_spark.catalog import local_frame
+
+        positions = self._manifest["positions"]
+        rows = [(v, ts, lag) for (v, ts, _), (_, lag)
+                in zip(positions, _lag_rows(positions))]
+        rows.sort(key=lambda r: r[0] is not None)  # stable: null vchannel first
+        return local_frame(
+            self.spark, rows, "vchannel string, position_ts bigint, lag_ms bigint"
         )
 
     def positions(self) -> DataFrame:

@@ -826,3 +826,10 @@ def test_crash_at_commit_point_replays_idempotently(spark, ops, n_files, kill_at
     assert pipe2._manifest["positions"] == [
         [v, mx, n] for v, (mx, n) in sorted(want_pos.items())
     ]
+    # a replayed batch's record is committed once: the records' op counts
+    # sum to the op count (history_keep retains every batch here)
+    from milvus_cdc_spark.streaming.pipeline import batch_records
+
+    records = batch_records(pipe2.manifest)
+    assert len(records) == pipe2.last_batch_id + 1
+    assert sum(n for h in records for n in h["ops"].values()) == len(ops)

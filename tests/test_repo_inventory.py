@@ -99,3 +99,32 @@ def test_engine_reads_only_documented_env_vars():
     }
     extra = {k: v for k, v in reads.items() if k not in ENGINE_ENV}
     assert not extra, f"env reads beyond {sorted(ENGINE_ENV)}: {extra}"
+
+
+#: Where a call of an engine function may live.
+CALLER_ROOTS = ("milvus_cdc_spark", "scripts", "perfbench", "tests")
+CALLER_FILES = ("bench.py", "__spark_entry__.py")
+
+
+def test_every_engine_function_is_named_elsewhere():
+    """A module-level function that no code, script or test names is dead:
+    its only mention is its own ``def`` line."""
+    from collections import Counter
+
+    paths = [p for top in CALLER_ROOTS for p in _python_files(os.path.join(ROOT, top))]
+    paths += [os.path.join(ROOT, f) for f in CALLER_FILES]
+    words = Counter()
+    for p in paths:
+        words.update(re.findall(r"\w+", open(p).read()))
+    engine = os.path.join(ROOT, "milvus_cdc_spark")
+    unnamed = []
+    for p in _python_files(engine):
+        if os.path.relpath(p, engine).split(os.sep)[0] == "vendor":
+            continue
+        lines = open(p).read().splitlines()
+        for node in ast.parse("\n".join(lines)).body:
+            if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                own = re.findall(r"\w+", lines[node.lineno - 1]).count(node.name)
+                if words[node.name] <= own:
+                    unnamed.append(f"{os.path.relpath(p, ROOT)}:{node.name}")
+    assert not unnamed, f"functions nothing names: {sorted(unnamed)}"

@@ -804,17 +804,54 @@ def test_mirror_emits_monotonic_repaired_ops(spark):
 
 
 def test_observed_metrics_count_ops(spark, oplog_dir, sf_dir):
-    """A5/A6 via Spark's observe(): per-batch op/payload counters from
-    progress telemetry sum to the exact source row count."""
-    work = tempfile.mkdtemp(prefix="obs_")
-    pipe = CdcApplyPipeline(spark, oplog_dir, work)
-    pipe.run_available_now()
-    total_ops = sum(m["ops"] for m in pipe.last_observed)
-    want = oplog.derive_oplog(
-        catalog.load_table(spark, sf_dir, "lineitem")
-    ).count()
-    assert total_ops == want
-    assert sum(m["payload_rows"] for m in pipe.last_observed) == want  # num_rows==1
+    """A5/A6 from the batch records: each committed batch's manifest
+    record counts its ops per op_type and its payload rows, and the sums
+    over the records equal the source op-log's. The records are durable:
+    a new pipeline over the work dir, TaskRegistry.get and a restarted
+    registry read the same ones."""
+    from collections import Counter
+
+    from milvus_cdc_spark.streaming.pipeline import batch_records
+
+    root = tempfile.mkdtemp(prefix="obs_")
+    registry = TaskRegistry(spark, root)
+    spec = registry.create(oplog_dir)
+    registry.start(spec.task_id)
+    pipe = registry.pipelines[spec.task_id]
+    records = batch_records(pipe.manifest)
+    assert [h["batch_id"] for h in records] == list(range(pipe.last_batch_id + 1))
+    want = {
+        r.op_type: (r.n, r.rows)
+        for r in oplog.derive_oplog(catalog.load_table(spark, sf_dir, "lineitem"))
+        .groupBy("op_type")
+        .agg(F.count("*").alias("n"), F.sum("num_rows").alias("rows"))
+        .collect()
+    }
+    ops = Counter()
+    for h in records:
+        ops.update(h["ops"])
+        assert 1 <= h["touched"] <= pipe.n_buckets
+        assert set(h["phases"]) == {
+            "control_collect", "state_merge_write", "positions_write", "commit_gc",
+        }
+    assert dict(ops) == {op: n for op, (n, _) in want.items()}
+    assert sum(h["payload_rows"] for h in records) == sum(
+        rows for _, rows in want.values()
+    )
+    assert {v: lag for v, lag in records[-1]["lag"]} == {
+        r.vchannel: r.lag_ms for r in pipe.channel_lag().collect()
+    }
+    # the perfbench views over the records
+    assert sum(o["ops"] for o in pipe.last_observed) == sum(ops.values())
+    assert [t["batch_id"] for t in pipe.phase_timings] == [
+        h["batch_id"] for h in records
+    ]
+    # durable: the last commit_gc reaches disk only with the next commit
+    disk = batch_records(CdcApplyPipeline(spark, oplog_dir, spec.work_dir).manifest)
+    assert disk[:-1] == records[:-1]
+    assert "commit_gc" not in disk[-1]["phases"]
+    assert registry.get(spec.task_id)["batches"] == disk
+    assert TaskRegistry(spark, root).get(spec.task_id)["batches"] == disk
 
 
 def test_streaming_ivf_index_maintenance(spark, sf_dir):
@@ -2180,6 +2217,57 @@ def test_task_position_runs_no_spark_job(spark):
     assert sc.statusTracker().getJobIdsForGroup(group) == []
     assert [(p["vchannel"], p["position_ts"]) for p in got] == [
         ("ch0", 200), ("ch1", 300),
+    ]
+
+
+def test_task_position_survives_registry_restart(spark):
+    """A restarted registry has the task specs but no live pipelines:
+    position() reads the work dir's committed manifest and gives the
+    first registry's answer."""
+    from milvus_cdc_spark.streaming import pipeline as pipeline_mod
+
+    tmp = tempfile.mkdtemp(prefix="test_position_restart_")
+    spark.createDataFrame(
+        [
+            (200, "insert", "default", "c0", "p0", "ch0", 1, 1, 1),
+            (300, "insert", "default", "c0", "p0", "ch1", 2, 1, 2),
+        ],
+        pipeline_mod.OPLOG_SCHEMA,
+    ).coalesce(1).write.parquet(tmp + "/src")
+    registry = TaskRegistry(spark, tmp + "/reg")
+    spec = registry.create(tmp + "/src")
+    assert registry.position(spec.task_id) == []  # nothing committed yet
+    registry.start(spec.task_id)
+    live = registry.position(spec.task_id)
+    assert [p["position_ts"] for p in live] == [200, 300]
+    assert TaskRegistry(spark, tmp + "/reg").position(spec.task_id) == live
+
+
+def test_channel_lag_orders_null_vchannel_first(spark):
+    """channel_lag keeps Spark's orderBy order, a null vchannel first,
+    while the manifest's position rows keep it last; a null vchannel's
+    lag is measured like any other channel's."""
+    from milvus_cdc_spark.streaming import pipeline as pipeline_mod
+
+    tmp = tempfile.mkdtemp(prefix="chlag_null_")
+    pipe = CdcApplyPipeline(spark, tmp + "/src", tmp + "/work")
+    pipe.apply_batch(
+        spark.createDataFrame(
+            [
+                (5000 << 18, "insert", "default", "c", "_p", "ch_b", 1, 1, 1),
+                (1000 << 18, "insert", "default", "c", "_p", None, 2, 1, 2),
+                (4000 << 18, "insert", "default", "c", "_p", "ch_a", 3, 1, 3),
+            ],
+            pipeline_mod.OPLOG_SCHEMA,
+        ),
+        0,
+    )
+    assert [r[0] for r in pipe.manifest["positions"]] == ["ch_a", "ch_b", None]
+    assert [tuple(r) for r in pipe.channel_lag().collect()] == [
+        (None, 1000 << 18, 4000), ("ch_a", 4000 << 18, 1000), ("ch_b", 5000 << 18, 0),
+    ]
+    assert pipe.manifest["history"][-1]["lag"] == [
+        ["ch_a", 1000], ["ch_b", 0], [None, 4000],
     ]
 
 
