@@ -190,10 +190,12 @@ class TaskRegistry:
             )
         ]
 
-    def start(self, task_id: str) -> None:
-        spec = self.tasks[task_id]
+    def _pipeline(self, task_id: str) -> CdcApplyPipeline:
+        """The task's live pipeline, built from its spec on first use; a
+        restarted registry has the specs but no pipelines."""
         pipeline = self.pipelines.get(task_id)
         if pipeline is None:
+            spec = self.tasks[task_id]
             include = spec.full_names()
             if any(
                 filters.split_full_name(n) == (filters.ALL, filters.ALL)
@@ -207,6 +209,11 @@ class TaskRegistry:
                 start_positions=spec.start_positions or None,
             )
             self.pipelines[task_id] = pipeline
+        return pipeline
+
+    def start(self, task_id: str) -> None:
+        spec = self.tasks[task_id]
+        pipeline = self._pipeline(task_id)
         quarantine = self.quarantines.setdefault(task_id, ErrorQuarantine())
         try:
             pipeline.run_available_now()
@@ -308,7 +315,9 @@ class TaskRegistry:
     def maintenance(self, data: dict) -> dict:
         """Maintenance ops (server/maintenance/maintenance.go:27-35):
         set log level / force a log message. Spark mapping: JVM log4j
-        level via sparkContext plus the driver-side Python logger."""
+        level via sparkContext plus the driver-side Python logger. Plus
+        ``compact_state`` of one task's state table, or of every
+        registered task's."""
         import logging
 
         log = logging.getLogger("milvus_cdc_spark")
@@ -324,9 +333,9 @@ class TaskRegistry:
         if op == "compact_state":
             # state-table version-sprawl control (bucket dirs fold into one
             # compaction epoch; logical content unchanged); one task or all
-            tids = [data["task_id"]] if data.get("task_id") else list(self.pipelines)
+            tids = [data["task_id"]] if data.get("task_id") else list(self.tasks)
             for tid in tids:
-                self.pipelines[tid].compact_state()
+                self._pipeline(tid).compact_state()
             return {"ok": True, "compacted": tids}
         raise ValueError(f"unknown maintenance operation {op!r}")
 

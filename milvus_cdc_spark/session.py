@@ -10,56 +10,11 @@ parallelism at hand rather than the 200 default.
 from __future__ import annotations
 
 import os
-import sys
 
 from pyspark.sql import SparkSession
 
-#: Vendored minimal protobuf runtime (vendor/pbshim/google/protobuf): lets
-#: PySpark's transformWithStateInPandas run where google.protobuf is not
-#: installed. Activated ONLY when the real library is absent.
-_PBSHIM_DIR = os.path.join(
-    os.path.dirname(os.path.abspath(__file__)), "vendor", "pbshim"
-)
-
-
-def ensure_protobuf() -> None:
-    """Make ``google.protobuf`` importable — by the real library if
-    installed, else by the vendored minimal runtime.
-
-    Must run BEFORE the JVM launches: Python workers inherit the launching
-    process's ``PYTHONPATH`` (PythonWorkerFactory merges it into the worker
-    env), and transformWithState's state-server protocol runs in those
-    workers. ``get_spark`` calls this ahead of session construction.
-    """
-    try:
-        import google.protobuf  # noqa: F401  (the real one wins)
-        return
-    except ImportError:
-        pass
-    # Appended, not prepended: anything the environment already resolves
-    # must keep winning. (The shim's ``google`` package is additionally
-    # namespace-friendly via extend_path — see vendor/pbshim/google.)
-    if _PBSHIM_DIR not in sys.path:
-        sys.path.append(_PBSHIM_DIR)
-    existing = os.environ.get("PYTHONPATH", "")
-    if _PBSHIM_DIR not in existing.split(os.pathsep):
-        os.environ["PYTHONPATH"] = (
-            (existing + os.pathsep if existing else "") + _PBSHIM_DIR
-        )
-    # If a protobuf-less ``google`` (e.g. the PEP-420 namespace package from
-    # google-auth) was already imported — including by the probe above — the
-    # sys.path append alone is invisible to it: graft the shim's google dir
-    # onto the cached module's __path__ so ``google.protobuf`` resolves.
-    cached = sys.modules.get("google")
-    if cached is not None:
-        shim_google = os.path.join(_PBSHIM_DIR, "google")
-        paths = list(getattr(cached, "__path__", []))
-        if shim_google not in paths:
-            cached.__path__ = paths + [shim_google]
-
 
 def get_spark(app_name: str = "milvus_cdc_spark", shuffle_partitions: int | None = None) -> SparkSession:
-    ensure_protobuf()
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     if shuffle_partitions is None:
         shuffle_partitions = int(cpus)

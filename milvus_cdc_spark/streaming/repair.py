@@ -1,13 +1,9 @@
-"""Monotonic-timestamp repair + time-tick heartbeats (SURVEY §2.9 T1/T2).
+"""Monotonic-timestamp repair (SURVEY §2.9 T2).
 
-Reference semantics:
-
-- T2 (replicate_channel_manager.go:1764-1790 + 1846-1875): if an incoming
-  pack's timestamps are <= the channel's running max-ts, rebase the whole
-  pack to base = max-ts, preserving intra-pack order by the dense rank of
-  each msg's BeginTs.
-- T1 (ts_manager.go:324-336): a TimeTick heartbeat is due on a channel when
-  data was sent, a drop happened, or the TT interval elapsed.
+Reference semantics (replicate_channel_manager.go:1764-1790 + 1846-1875):
+if an incoming pack's timestamps are <= the channel's running max-ts,
+rebase the whole pack to base = max-ts, preserving intra-pack order by the
+dense rank of each msg's BeginTs.
 
 Spark shape: a foreachBatch stage. Per-channel max-ts is tiny keyed state
 (one row per channel) — kept in a versioned parquet table exactly like the
@@ -48,23 +44,6 @@ def next_channel_max(batch_repaired: DataFrame, channel_max: DataFrame) -> DataF
         channel_max.unionByName(update)
         .groupBy("vchannel")
         .agg(F.max("max_ts").alias("max_ts"))
-    )
-
-
-def timetick_due(
-    channel_state: DataFrame,
-    now_ts: int,
-    tt_interval: int,
-) -> DataFrame:
-    """Channels whose last emission is older than the TT interval → emit a
-    heartbeat row (ts_manager.go UnsafeShouldSendTSMsg). ``channel_state``
-    needs (vchannel, last_sent_ts)."""
-    return channel_state.filter(
-        F.lit(now_ts) - F.col("last_sent_ts") >= F.lit(tt_interval)
-    ).select(
-        "vchannel",
-        F.lit("timetick").alias("op_type"),
-        F.lit(now_ts).alias("ts"),
     )
 
 

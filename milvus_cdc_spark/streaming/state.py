@@ -1,15 +1,19 @@
-"""Stateful streaming operators: the drop-barrier as a streaming aggregate
-(SURVEY §2.9 T3; reference core/reader/data_barrier.go:27-59 count-to-N +
-restart-safe ready-set core/api/task_msg.go:44-56).
+"""Stateful streaming operators (SURVEY §2.9):
 
-Spark shape: ``groupBy(object).agg(collect_set(vchannel))`` in update mode.
-Structured Streaming keeps the per-object set in the state store (backed by
-the checkpoint → restart-safe exactly like the reference's persisted
-ReplicateMeta). A foreachBatch consumer releases objects whose set reached
-the expected channel count.
+- ``channel_ts_tracker`` (T1/W5): per-vchannel high-water mark and
+  regression counts, ``applyInPandasWithState`` without a timeout;
+- ``timetick_stream`` (T1): the time-tick heartbeat, the same operator
+  with a processing-time timeout that fires on idle channels;
+- ``barrier_stream`` (T3; reference core/reader/data_barrier.go:27-59
+  count-to-N + restart-safe ready-set core/api/task_msg.go:44-56).
 
-An applyInPandasWithState variant is deliberately NOT used: the built-in
-streaming aggregate covers the semantics with less code and JVM-side state.
+The barrier is ``groupBy(object).agg(collect_set(vchannel))`` in update
+mode. Structured Streaming keeps the per-object set in the state store
+(backed by the checkpoint → restart-safe exactly like the reference's
+persisted ReplicateMeta). A foreachBatch consumer releases objects whose
+set reached the expected channel count. An applyInPandasWithState variant
+is deliberately NOT used there: the built-in streaming aggregate covers
+the semantics with less code and JVM-side state.
 """
 
 from __future__ import annotations
@@ -72,107 +76,15 @@ def channel_ts_tracker(ops: DataFrame) -> DataFrame:
 
 
 def timetick_stream(ops: DataFrame, tt_interval_ms: int = 500) -> DataFrame:
-    """Time-tick heartbeat as a timer-driven stateful operator
-    (SURVEY §2.9 T1: emit a TT msg when a pack has data OR the TTInterval
-    elapsed — replicate_channel_manager.go:1764-1843, default 500 ms
+    """Time-tick heartbeat as a timer-driven stateful operator (SURVEY §2.9
+    T1: emit a TT msg when a pack has data OR the TTInterval elapsed —
+    UnsafeShouldSendTSMsg ts_manager.go:324-336, 500 ms default
     core/model/reader.go:63).
 
-    Uses Spark 4's ``transformWithStateInPandas`` because the heartbeat
-    needs *processing-time timers* — something neither built-in aggregates
-    nor applyInPandasWithState can express. Per vchannel: data arrival
-    updates the high-water mark and emits a data tick; an expired timer
-    emits a heartbeat tick carrying the last mark and re-arms itself.
-
-    State per key: one (max_ts) value + one armed timer — bounded by
-    channel cardinality.
-
-    Environment notes: Spark's transformWithState Python workers speak
-    the state-server wire protocol through ``google.protobuf``; where the
-    real library is absent, ``session.ensure_protobuf`` activates the
-    vendored minimal runtime (vendor/pbshim) so this path executes for
-    real (tests/test_streaming.py::test_timetick_stream_emits_heartbeats).
-    The operator also requires a multi-column-family state store —
-    set ``spark.sql.streaming.stateStore.providerClass`` to the bundled
-    RocksDBStateStoreProvider (the 100 TB-scale provider regardless).
-    ``channel_ts_tracker`` (applyInPandasWithState) plus
-    ``repair.timetick_due`` remains the dependency-free alternative.
-    """
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    class TimeTickProcessor(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._handle = handle
-            self._mark = handle.getValueState("mark", "max_ts long")
-
-        def handleInputRows(self, key, rows, timerValues):
-            import pandas as pd
-
-            max_ts = self._mark.get()[0] if self._mark.exists() else 0
-            n = 0
-            for pdf in rows:
-                if len(pdf):
-                    max_ts = max(max_ts, int(pdf["ts"].max()))
-                    n += len(pdf)
-            self._mark.update((max_ts,))
-            self._handle.registerTimer(
-                timerValues.getCurrentProcessingTimeInMs() + tt_interval_ms
-            )
-            yield pd.DataFrame(
-                {
-                    "vchannel": [key[0]],
-                    "tick_ts": [max_ts],
-                    "n_msgs": [n],
-                    "is_heartbeat": [False],
-                }
-            )
-
-        def handleExpiredTimer(self, key, timerValues, expiredTimerInfo):
-            import pandas as pd
-
-            max_ts = self._mark.get()[0] if self._mark.exists() else 0
-            # re-arm: heartbeats continue while the channel is idle
-            self._handle.registerTimer(
-                timerValues.getCurrentProcessingTimeInMs() + tt_interval_ms
-            )
-            yield pd.DataFrame(
-                {
-                    "vchannel": [key[0]],
-                    "tick_ts": [max_ts],
-                    "n_msgs": [0],
-                    "is_heartbeat": [True],
-                }
-            )
-
-        def close(self) -> None:
-            pass
-
-    return (
-        ops.select("vchannel", "ts")
-        .groupBy("vchannel")
-        .transformWithStateInPandas(
-            TimeTickProcessor(),
-            outputStructType="vchannel string, tick_ts long, n_msgs long, is_heartbeat boolean",
-            outputMode="Append",
-            timeMode="ProcessingTime",
-        )
-    )
-
-
-def timetick_fallback(ops: DataFrame, tt_interval_ms: int = 500) -> DataFrame:
-    """Timer-driven TT heartbeat WITHOUT transformWithState (SURVEY §2.9 T1;
-    reference UnsafeShouldSendTSMsg ts_manager.go:324-336, 500 ms default
-    core/model/reader.go:63).
-
-    ``transformWithStateInPandas`` needs google.protobuf (vendored shim
-    where absent) and a RocksDB state store; this alternative uses
-    ``applyInPandasWithState`` with a
-    *processing-time timeout*: a data arrival updates the per-channel
-    high-water mark and emits a data tick; when a channel goes idle the
-    group times out and emits a heartbeat tick carrying the last mark,
-    re-arming itself. Same semantics, plain Arrow wire protocol.
+    ``applyInPandasWithState`` with a *processing-time timeout*: a data
+    arrival updates the per-channel high-water mark and emits a data tick;
+    when a channel goes idle the group times out and emits a heartbeat
+    tick carrying the last mark, re-arming itself.
 
     State per key: (max_ts, n_msgs) — bounded by channel cardinality.
     """

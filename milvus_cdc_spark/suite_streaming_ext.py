@@ -360,7 +360,7 @@ def streaming_session_window(spark: SparkSession, sf_dir: str) -> DataFrame:
 # gaps: a gap of G ms emits greatest(G-1,0) div 500 idle heartbeats.
 #
 # The *processing-time* operator itself (applyInPandasWithState with
-# ProcessingTimeTimeout, streaming/state.timetick_fallback) is executed and
+# ProcessingTimeTimeout, streaming/state.timetick_stream) is executed and
 # asserted in tests/test_streaming.py — timers aren't batch-deterministic,
 # so the suite entry checks the schedule arithmetic both engines can agree
 # on. Scale: one window + one agg per channel, shuffle bounded by channel

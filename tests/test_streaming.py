@@ -99,14 +99,6 @@ def test_monotonic_repair_stage(spark):
     assert stage.read_channel_max().collect()[0].max_ts == 300
 
 
-def test_timetick_due(spark):
-    state = spark.createDataFrame(
-        [("a", 1000), ("b", 1400)], "vchannel string, last_sent_ts bigint"
-    )
-    due = repair.timetick_due(state, now_ts=1500, tt_interval=500)
-    assert {r.vchannel for r in due.collect()} == {"a"}
-
-
 def test_task_registry_lifecycle(spark, oplog_dir):
     root = tempfile.mkdtemp(prefix="tasks_")
     reg = TaskRegistry(spark, root)
@@ -499,69 +491,6 @@ def test_watermark_drops_late_data(spark):
         if p.get("stateOperators")
     )
     assert dropped == 1
-
-
-def test_timetick_stream_emits_heartbeats(spark):
-    """transformWithStateInPandas TT operator: data arrival emits a data
-    tick; an idle channel keeps emitting timer-driven heartbeats carrying
-    the last high-water mark (T1)."""
-    import uuid
-
-    # Spark's transformWithState Python workers speak protobuf to the JVM
-    # state server. Where google.protobuf is absent, get_spark activates
-    # the vendored minimal runtime (vendor/pbshim) before the JVM launches,
-    # so this path executes for real either way.
-    from milvus_cdc_spark.streaming.state import timetick_stream
-
-    tmp = tempfile.mkdtemp(prefix="tt_")
-    spark.createDataFrame(
-        [("ch_0", 100), ("ch_0", 500)], "vchannel string, ts bigint"
-    ).coalesce(1).write.parquet(tmp + "/src")
-    stream = spark.readStream.schema("vchannel string, ts bigint").parquet(tmp + "/src")
-    name = f"tt_{uuid.uuid4().hex[:6]}"
-    # transformWithState keeps one column family per state variable/timer —
-    # the default HDFSBacked provider rejects that; RocksDB (bundled
-    # rocksdbjni) is the provider this operator is specified against.
-    prov_key = "spark.sql.streaming.stateStore.providerClass"
-    old_prov = spark.conf.get(prov_key, None)
-    spark.conf.set(
-        prov_key,
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-    )
-    q = None
-    try:
-        # inside the try: a failure in .start() (e.g. schema validation)
-        # must still restore the provider conf on the session fixture
-        q = (
-            timetick_stream(stream, tt_interval_ms=500)
-            .writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .option("checkpointLocation", tmp + "/ckpt")
-            .trigger(processingTime="500 milliseconds")
-            .start()
-        )
-        import time as _time
-
-        deadline = _time.time() + 45
-        while _time.time() < deadline:
-            rows = spark.table(name).collect()
-            if any(r.is_heartbeat for r in rows) and any(not r.is_heartbeat for r in rows):
-                break
-            _time.sleep(1.0)
-        rows = spark.table(name).collect()
-    finally:
-        if q is not None:
-            q.stop()
-        if old_prov is None:
-            spark.conf.unset(prov_key)
-        else:
-            spark.conf.set(prov_key, old_prov)
-    data_ticks = [r for r in rows if not r.is_heartbeat]
-    heartbeats = [r for r in rows if r.is_heartbeat]
-    assert data_ticks and data_ticks[0].tick_ts == 500 and data_ticks[0].n_msgs == 2
-    assert heartbeats, "idle channel must emit timer-driven heartbeats"
-    assert all(h.tick_ts == 500 and h.n_msgs == 0 for h in heartbeats)
 
 
 def test_rocksdb_state_store_provider(spark):
@@ -971,15 +900,16 @@ def test_streaming_minhash_maintenance(spark, sf_dir):
     assert got == want
 
 
-def test_timetick_fallback_emits_idle_heartbeats(spark):
-    """T1 heartbeat without protobuf: applyInPandasWithState with a
-    processing-time timeout emits data ticks on arrival and heartbeat rows
-    (is_heartbeat=true, carrying the high-water mark) once the channel goes
-    idle — the UnsafeShouldSendTSMsg semantics (ts_manager.go:324-336)."""
+def test_timetick_stream_emits_idle_heartbeats(spark):
+    """T1 heartbeat: applyInPandasWithState with a processing-time timeout
+    emits a data tick carrying the channel's high-water mark on arrival and
+    heartbeat rows (is_heartbeat=true, same mark, no messages) once the
+    channel goes idle — the UnsafeShouldSendTSMsg semantics
+    (ts_manager.go:324-336)."""
     import time
     import uuid
 
-    from milvus_cdc_spark.streaming.state import timetick_fallback
+    from milvus_cdc_spark.streaming.state import timetick_stream
 
     tmp = tempfile.mkdtemp(prefix="ttfall_")
     spark.createDataFrame(
@@ -992,7 +922,7 @@ def test_timetick_fallback_emits_idle_heartbeats(spark):
     )
     sink = f"tt_{uuid.uuid4().hex[:8]}"
     q = (
-        timetick_fallback(stream, tt_interval_ms=300)
+        timetick_stream(stream, tt_interval_ms=300)
         .writeStream.format("memory")
         .queryName(sink)
         .outputMode("update")
@@ -1014,7 +944,7 @@ def test_timetick_fallback_emits_idle_heartbeats(spark):
     # heartbeat carries the channel's high-water mark, no new data
     assert all(r.tick_ts == 2000 and r.n_msgs == 0 for r in hb)
     data = [r for r in spark.table(sink).collect() if not r.is_heartbeat]
-    assert any(r.n_msgs == 2 for r in data)
+    assert any(r.tick_ts == 2000 and r.n_msgs == 2 for r in data)
 
 
 def test_rbac_state_idempotent_apply():
@@ -2241,6 +2171,44 @@ def test_task_position_survives_registry_restart(spark):
     live = registry.position(spec.task_id)
     assert [p["position_ts"] for p in live] == [200, 300]
     assert TaskRegistry(spark, tmp + "/reg").position(spec.task_id) == live
+
+
+def test_compact_state_after_registry_restart(spark):
+    """A restarted registry has the task specs but no live pipelines:
+    maintenance compact_state builds the task's pipeline from its spec,
+    folds every bucket into the compaction epoch and keeps the logical
+    state."""
+    from milvus_cdc_spark.streaming import pipeline as pipeline_mod
+
+    tmp = tempfile.mkdtemp(prefix="test_compact_restart_")
+    spark.createDataFrame(
+        [
+            (200 + pk, "insert", "default", "c0", "p0", f"ch{pk % 2}", pk, 1, pk)
+            for pk in range(40)
+        ],
+        pipeline_mod.OPLOG_SCHEMA,
+    ).coalesce(1).write.parquet(tmp + "/src")
+    registry = TaskRegistry(spark, tmp + "/reg")
+    spec = registry.create(tmp + "/src")
+    registry.start(spec.task_id)
+
+    def state(pipe):
+        return sorted((r.pk, r.last_insert_ts) for r in pipe.read_state().collect())
+
+    before = state(registry.pipelines[spec.task_id])
+    restarted = TaskRegistry(spark, tmp + "/reg")
+    assert restarted.maintenance(
+        {"operation": "compact_state", "task_id": spec.task_id}
+    ) == {"ok": True, "compacted": [spec.task_id]}
+    pipe = restarted.pipelines[spec.task_id]
+    assert state(pipe) == before
+    assert set(pipe.manifest["buckets"].values()) == {"c1"}
+    # without a task_id every registered task is compacted, live or not
+    again = TaskRegistry(spark, tmp + "/reg")
+    assert again.maintenance({"operation": "compact_state"})["compacted"] == [
+        spec.task_id
+    ]
+    assert set(again.pipelines[spec.task_id].manifest["buckets"].values()) == {"c2"}
 
 
 def test_channel_lag_orders_null_vchannel_first(spark):
