@@ -43,19 +43,18 @@ from milvus_cdc_spark.cache_registry import CacheRegistry
 # digits after 10^6-node graphs divide it up.
 MASS = 10**12
 
-# Since round 10 the graph operators carry NO persist ledger: every
+# The graph operators themselves register nothing here: every
 # cross-iteration frame is an eager localCheckpoint whose blocks the
-# ContextCleaner reclaims when the returned DataFrame is dropped, so
-# there is nothing to release. The registry and release function are
-# retained because callers (suite queries, tests) invoke the release
-# point unconditionally, and so a future operator that genuinely needs
-# a persist has the ledger ready.
+# ContextCleaner reclaims when the returned DataFrame is dropped. The
+# ledger holds the suite's own graph-family persists — the
+# co-purchase query's ``baskets`` frame (suite_eval) — and callers
+# invoke the release point before each graph query.
 _GRAPH_CACHES = CacheRegistry("graph_caches")
 
 
 def release_graph_caches() -> None:
-    """Unpersist any graph-operator persists (no-op since round 10 —
-    the operators localCheckpoint instead of persisting)."""
+    """Unpersist the graph-family frames this thread registered (the
+    operators themselves localCheckpoint instead of persisting)."""
     _GRAPH_CACHES.release()
 
 

@@ -1154,7 +1154,6 @@ def ivf_pq_build(
     dim: int = 64,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    checkpoint: bool = False,
 ):
     """Train the full IVF_PQ index: coarse Lloyd k-means, residual
     computation, per-subspace PQ codebooks on the residuals, byte codes.
@@ -1173,37 +1172,18 @@ def ivf_pq_build(
     catalog-sized) — caching here is the local stand-in for that
     materialization.
 
-    ``checkpoint=True`` additionally TRUNCATES lineage (eager
-    localCheckpoint instead of persist) so downstream probe plans treat
-    the index as four leaf tables. MEASURED AND REJECTED for the suite
-    path (r11, SCALE.md §5r): a first unbalanced A/B read -17 % at
-    sf0.1, but the balanced protocol (B A A B B A A B B A, canary per
-    iteration, stable VM window) measured persist 3.8 s vs checkpoint
-    7.7 s median — checkpointed leaves surface as stats-less
+    Persist, not an eager localCheckpoint of the four outputs: measured
+    (r11, SCALE.md §5r, balanced B A A B B A A B B A protocol at sf0.1)
+    at 3.8 s vs 7.7 s median — checkpointed leaves surface as stats-less
     LogicalRDDs, so Catalyst loses size estimates and exchange reuse
     across the probe/recall joins, which costs roughly 2x what lineage
-    re-planning saves. The parameter stays for callers that genuinely
-    need a plan-depth cut (the §5o iterative-graph rule, where lineage
-    DOUBLES per round); results are identical either way. Release is
-    explicit on both branches: CacheRegistry.release() also drops
-    localCheckpoint RDD blocks (r11 ADVICE — plain unpersist left them
-    to ContextCleaner GC), so the next build call frees the prior
-    build's storage deterministically.
+    re-planning saves.
     """
     release_similarity_caches()  # prior query's build frames consumed
 
-    def _pin(df: DataFrame) -> DataFrame:
-        # checkpoint=True swaps persist for an eager localCheckpoint:
-        # same storage, but lineage is TRUNCATED, so the probe phase
-        # plans against four leaf tables instead of re-planning the
-        # whole Lloyd/PQ training graph into its (186-exchange) plan —
-        # the measured graph-family rule (ROUND_NOTES r10) applied to
-        # the index build/probe boundary.
-        return df.localCheckpoint() if checkpoint else df.persist()
-
     # NOTE (measured r15, do not re-try): eagerly localCheckpoint-ing
     # ONLY the catalog-sized outputs (coarse, codebooks) — the surgical
-    # variant of the r11-rejected checkpoint=True, with explicit
+    # variant of the r11-rejected all-four checkpoint, with explicit
     # broadcast hints at every consumer so no join could degrade — was
     # A/B'd and REGRESSED ivf_pq_recall 1.67x (3.96 -> 6.60 s median,
     # 4 interleaved pairs at sf0.1). Same failure mode as the pq_train
@@ -1211,11 +1191,11 @@ def ivf_pq_build(
     # eager jobs serialize the training chain into separate actions and
     # forfeit the one-action composite's scan/exchange/cache sharing,
     # costing ~2.5 s against the ~1 s of saved Catalyst re-planning.
-    coarse = _pin(ivf_train(
+    coarse = ivf_train(
         vectors, k=k_coarse, iters=coarse_iters, dim=dim,
         id_col=id_col, vec_col=vec_col,
-    ))
-    assigned = _pin(_l2_assign_one(vectors, coarse, id_col, vec_col))
+    ).persist()
+    assigned = _l2_assign_one(vectors, coarse, id_col, vec_col).persist()
     resid = (
         vectors.select(
             F.col(id_col),
@@ -1242,13 +1222,13 @@ def ivf_pq_build(
     # pq_train's iterations and pq_encode) was a wash — interleaved A/B
     # 1.02 at sf0.1; behind the persisted `assigned` its recompute is one
     # cheap join and Catalyst already reuses the exchange.
-    codebooks = _pin(pq_train(
+    codebooks = pq_train(
         resid, m=m, k=k_pq, iters=pq_iters, dim=dim,
         id_col=id_col, vec_col=vec_col,
-    ))
-    codes = _pin(pq_encode(
+    ).persist()
+    codes = pq_encode(
         resid, codebooks, m=m, dim=dim, id_col=id_col, vec_col=vec_col
-    ))
+    ).persist()
     _SIM_CACHES.extend([coarse, assigned, codebooks, codes])
     return coarse, assigned, codebooks, codes
 

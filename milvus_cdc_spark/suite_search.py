@@ -1779,10 +1779,11 @@ def ivf_pq_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     from milvus_cdc_spark.analytics import similarity
 
     emb = _t(spark, sf_dir, "embeddings")
-    # checkpoint=False (measured REVERT, r11): an early unbalanced A/B
-    # suggested localCheckpoint-ing the index between build and probe
-    # saved 17%, but the balanced re-run (B A A B B A A B B A with a
-    # per-iteration canary, stable 0.24-0.47) measured persist 3.8 s vs
+    # The build persists its outputs (localCheckpoint measured REVERT,
+    # r11): an early unbalanced A/B suggested localCheckpoint-ing the
+    # index between build and probe saved 17%, but the balanced re-run
+    # (B A A B B A A B B A with a per-iteration canary, stable
+    # 0.24-0.47) measured persist 3.8 s vs
     # checkpoint 7.7 s median at sf0.1 — checkpointed leaves lose
     # Catalyst statistics and ReusedExchange, costing far more than the
     # lineage re-planning saves. Full numbers in SCALE.md §5r.

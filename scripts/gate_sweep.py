@@ -15,10 +15,12 @@ Usage: python scripts/gate_sweep.py [sf_dir]
 from __future__ import annotations
 
 import json
+import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 
 def main() -> None:
@@ -84,7 +86,7 @@ def main() -> None:
             {"query": n, "records": bad} for n, bad in fails
         ],
     }
-    with open("/root/repo/GATES.json", "w") as f:
+    with open(os.path.join(ROOT, "GATES.json"), "w") as f:
         json.dump(summary, f, indent=1, sort_keys=True, default=str)
     print(json.dumps({k: v for k, v in summary.items()
                       if k != "gate_fails"}, default=str))

@@ -5,9 +5,11 @@ Usage: python scripts/gen_queries_md.py
 
 from __future__ import annotations
 
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 HEADER = """# QUERIES — the oracle-checked suite index
 
@@ -54,7 +56,7 @@ def main() -> None:
             f"| {i} | `{name}` | {', '.join(spec.tags)} | "
             f"{'yes' if spec.oracle else 'ROWS-ONLY'} | {summary} |"
         )
-    with open("/root/repo/QUERIES.md", "w") as f:
+    with open(os.path.join(ROOT, "QUERIES.md"), "w") as f:
         f.write(HEADER.format(n=len(names)))
         f.write("\n".join(rows) + "\n")
     print(f"wrote QUERIES.md with {len(names)} queries")

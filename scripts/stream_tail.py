@@ -16,9 +16,10 @@ from __future__ import annotations
 
 import datetime
 import json
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 LOGICAL_BITS = 18
 

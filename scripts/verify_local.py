@@ -26,10 +26,11 @@ Usage: python scripts/verify_local.py [sf_dir] [query ...]
 from __future__ import annotations
 
 import hashlib
+import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
 def array_typed_columns(pdf):

@@ -143,68 +143,6 @@ def test_concurrent_families_interleaved(spark, sf_dir):
     spark.catalog.clearCache()  # worker-thread ledgers are unreachable now
 
 
-def test_release_all_reclaims_dead_thread_frames(spark):
-    """Round-9 verdict "what's wrong" #1: a one-shot worker thread (e.g. a
-    ThreadPoolExecutor worker running a single query) exits without a
-    further family call, stranding its persists until clearCache/session
-    end. ``release_all()`` must reclaim them WITHOUT running another
-    suite query, while leaving the per-thread ``release()`` default
-    untouched."""
-    reg = CacheRegistry("test")
-    stranded: list = []
-
-    def one_shot_worker():
-        f = spark.range(50).withColumn("x", F.col("id") + 1).persist()
-        f.count()
-        reg.append(f)
-        stranded.append(f)
-        # worker exits WITHOUT calling release() — the r9 residue shape
-
-    t = threading.Thread(target=one_shot_worker)
-    t.start()
-    t.join()
-    assert _is_cached(stranded[0]), "setup: worker frame should be cached"
-
-    # main thread also has a live ledger — release_all drains it too
-    own = spark.range(7).persist()
-    own.count()
-    reg.append(own)
-
-    reg.release_all()
-    assert not _is_cached(stranded[0]), "dead thread's frame not reclaimed"
-    assert not _is_cached(own)
-    assert len(reg) == 0
-    # calling thread's ledger object survives the sweep and stays usable
-    again = spark.range(3).persist()
-    again.count()
-    reg.append(again)
-    assert len(reg) == 1
-    reg.release()
-    assert not _is_cached(again)
-
-
-def test_release_all_side_table_hygiene():
-    """release_all drops drained dead-thread ledgers from the side table
-    (no unbounded growth across many short-lived threads) but keeps the
-    calling thread's entry, since its threading.local slot still
-    references the list."""
-
-    class _FakeDF:
-        def unpersist(self, blocking):
-            pass
-
-    reg = CacheRegistry("hygiene")
-    for _ in range(20):
-        t = threading.Thread(target=lambda: reg.append(_FakeDF()))
-        t.start()
-        t.join()
-    assert len(reg._ledgers) == 20
-    reg.append(_FakeDF())  # materialize the calling thread's ledger
-    reg.release_all()
-    assert len(reg) == 0
-    assert list(reg._ledgers.values()) == [reg._frames]
-
-
 def test_registry_list_api_compat():
     """The call sites use append/extend/pop/len/bool/iter — pin them."""
     reg = CacheRegistry("compat")
@@ -277,24 +215,3 @@ def test_registry_thread_isolation_property():
             )
 
     run()
-
-
-def test_release_drops_local_checkpoint_blocks(spark):
-    """ADVICE r11 (low): release() must free localCheckpoint RDD storage
-    explicitly — DataFrame.unpersist() alone leaves the blocks to the
-    ContextCleaner's GC, silently weakening the 'prior build released at
-    next call' contract on checkpoint-mode index builds."""
-    from milvus_cdc_spark.cache_registry import CacheRegistry
-
-    reg = CacheRegistry("test_ckpt")
-    ck = spark.range(50_000).selectExpr("id", "id * 2 AS v").localCheckpoint()
-    rdd_id = ck._jdf.queryExecution().analyzed().rdd().id()
-    sc = spark.sparkContext._jsc.sc()
-    assert any(
-        info.id() == rdd_id for info in sc.getRDDStorageInfo()
-    ), "expected the checkpoint RDD to hold storage"
-    reg.append(ck)
-    reg.release()
-    assert not any(
-        info.id() == rdd_id for info in sc.getRDDStorageInfo()
-    ), "checkpoint blocks must be dropped at release()"

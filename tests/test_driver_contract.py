@@ -12,7 +12,8 @@ import os
 import subprocess
 import sys
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 import __spark_entry__ as entry_mod
 
@@ -71,12 +72,12 @@ def test_bench_prints_single_json_line(tmp_path):
         SPARK_GRAFT_DETAIL_PATH=str(tmp_path / "BENCH_DETAIL.json"),
     )
     out = subprocess.run(
-        [sys.executable, "/root/repo/bench.py", "--segment", "r1"],
+        [sys.executable, os.path.join(REPO, "bench.py"), "--segment", "r1"],
         capture_output=True,
         text=True,
         timeout=600,
         env=env,
-        cwd="/root/repo",
+        cwd=REPO,
     )
     assert out.returncode == 0, out.stderr[-2000:]
     lines = [line for line in out.stdout.splitlines() if line.strip()]
@@ -106,12 +107,12 @@ def test_full_bench_prints_single_json_line(tmp_path):
         SPARK_GRAFT_DETAIL_PATH=str(tmp_path / "BENCH_DETAIL.json"),
     )
     out = subprocess.run(
-        [sys.executable, "/root/repo/bench.py"],
+        [sys.executable, os.path.join(REPO, "bench.py")],
         capture_output=True,
         text=True,
         timeout=1500,
         env=env,
-        cwd="/root/repo",
+        cwd=REPO,
     )
     assert out.returncode == 0, out.stderr[-2000:]
     lines = [line for line in out.stdout.splitlines() if line.strip()]
@@ -129,7 +130,7 @@ def test_bench_final_line_fits_tail_capture():
     tail capture; the compact-output contract pins it well under ~4 KB."""
     import json as _json
 
-    detail = "/root/repo/BENCH_DETAIL.json"
+    detail = os.path.join(REPO, "BENCH_DETAIL.json")
     if os.path.exists(detail):
         d = _json.load(open(detail))
         assert "queries" in d  # the full map lives in the side file

@@ -7,7 +7,7 @@ delete-before-insert ties) against an independent implementation.
 
 from __future__ import annotations
 
-from hypothesis import HealthCheck, given, settings
+from hypothesis import HealthCheck, example, given, settings
 from hypothesis import strategies as st
 
 from milvus_cdc_spark.operators import apply as apply_op
@@ -754,13 +754,23 @@ def test_pause_resume_seek_matches_interpreter(spark, ops, n_files, kill_at, see
     cdc_ops_strategy,
     st.integers(min_value=1, max_value=4),   # file split
     st.integers(min_value=0, max_value=3),   # kill at commit of batch k
+    st.booleans(),                           # mirror
+)
+# the mirror arm, pinned: five files make two batches, the crash hits
+# batch 0's commit, and batch 1 regresses below batch 0's max ts
+@example(
+    ops=[(3, "insert", 0, 0, 1), (5, "insert", 0, 0, 2), (2, "delete", 0, 0, 1),
+         (6, "insert", 1, 0, 3), (1, "insert", 1, 1, 4), (4, "upsert", 0, 1, 0),
+         (7, "insert", 0, 0, 3), (8, "delete", 1, 0, 3), (2, "insert", 0, 1, 2),
+         (1, "insert", 1, 0, 1)],
+    n_files=4, kill_at=0, mirror=True,
 )
 @settings(
     max_examples=8,
     deadline=None,
     suppress_health_check=[HealthCheck.too_slow, HealthCheck.function_scoped_fixture],
 )
-def test_crash_at_commit_point_replays_idempotently(spark, ops, n_files, kill_at):
+def test_crash_at_commit_point_replays_idempotently(spark, ops, n_files, kill_at, mirror):
     """The strongest crash point: batch k's state writes ALL landed on
     disk, but the manifest rename — the commit — never happened. The
     durable truth says the batch never ran, so the resume must replay it
@@ -768,7 +778,9 @@ def test_crash_at_commit_point_replays_idempotently(spark, ops, n_files, kill_at
     state must still equal the single-pass interpreter — no double-counted
     n_inserts, no phantom drops — and the positions must be each
     vchannel's max ts and op count, with no batch's n_msgs counted
-    twice."""
+    twice. With the mirror on, every mirror/batch_id=N equals an
+    uninterrupted run's: the replay is rebased over the committed channel
+    max, not over its own."""
     import tempfile
 
     import pyarrow as pa
@@ -815,13 +827,13 @@ def test_crash_at_commit_point_replays_idempotently(spark, ops, n_files, kill_at
             CommitCrashPipeline.committed += 1
             super()._commit_manifest()
 
-    pipe = CommitCrashPipeline(spark, src, work, n_buckets=4)
+    pipe = CommitCrashPipeline(spark, src, work, n_buckets=4, mirror=mirror)
     try:
         pipe.run_available_now()
     except Exception:
         pass  # the kill fired (it may not, if there are < kill_at batches)
     # resume: fresh process over the same work dir + checkpoint
-    pipe2 = CdcApplyPipeline(spark, src, work, n_buckets=4)
+    pipe2 = CdcApplyPipeline(spark, src, work, n_buckets=4, mirror=mirror)
     pipe2.run_available_now()
     got = {
         (r.collection, r.pk): (r.last_insert_ts, r.n_inserts, r.partition)
@@ -845,3 +857,18 @@ def test_crash_at_commit_point_replays_idempotently(spark, ops, n_files, kill_at
     records = batch_records(pipe2.manifest)
     assert len(records) == pipe2.last_batch_id + 1
     assert sum(n for h in records for n in h["ops"].values()) == len(ops)
+    if mirror:
+        clean = CdcApplyPipeline(
+            spark, src, tempfile.mkdtemp(prefix="commit_crash_clean_"),
+            n_buckets=4, mirror=True,
+        )
+        clean.run_available_now()
+
+        def mirror_rows(p):
+            return sorted(
+                (r.batch_id, r.seq, r.repaired_ts)
+                for r in spark.read.parquet(p.mirror_dir).collect()
+            )
+
+        assert mirror_rows(pipe2) == mirror_rows(clean)
+        assert pipe2.manifest["channel_max"] == clean.manifest["channel_max"]

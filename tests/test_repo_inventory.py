@@ -1,5 +1,6 @@
 """Repo inventory: every script is documented and compiles, the docs name
-only scripts that exist, and the engine reads only its documented env vars.
+only scripts that exist, tests and scripts name no checkout path, and the
+engine reads only its documented env vars.
 
 Round records (ROUND_NOTES, OPTIMIZATION_r*, VERDICT, CHANGES) describe
 scripts as they were and are not checked.
@@ -69,6 +70,20 @@ def test_named_scripts_exist():
         if f"{name}.py" not in SCRIPTS
     )
     assert not stale, f"names of scripts that do not exist: {stale}"
+
+
+def test_tests_and_scripts_find_the_checkout_from_file():
+    """Tests and scripts derive the checkout root from ``__file__``. A
+    literal checkout path would make a second checkout (a parent commit's,
+    say) import and run the first one's engine instead of its own."""
+    literal = re.compile(re.escape(ROOT) + r"(?![\w.-])")
+    hits = sorted(
+        os.path.relpath(p, ROOT)
+        for top in ("tests", "scripts")
+        for p in _python_files(os.path.join(ROOT, top))
+        if literal.search(open(p).read())
+    )
+    assert not hits, f"files naming the checkout path {ROOT}: {hits}"
 
 
 def _env_reads(path: str) -> set:

@@ -3,11 +3,16 @@
 from __future__ import annotations
 
 import json
+import os
 
 import pytest
 
 from milvus_cdc_spark.control.quarantine import ErrorQuarantine
 from milvus_cdc_spark.sources import kafka
+
+SCRIPTS = os.path.join(
+    os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "scripts"
+)
 
 
 def test_starting_offsets_seek_vs_latest():
@@ -300,7 +305,7 @@ def test_position_tool_roundtrips(tmp_path):
 
     def run(*args):
         out = subprocess.run(
-            [_sys.executable, "/root/repo/scripts/position_tool.py", *args],
+            [_sys.executable, os.path.join(SCRIPTS, "position_tool.py"), *args],
             capture_output=True, text=True, check=True,
         )
         return [json.loads(line) for line in out.stdout.strip().splitlines()]
@@ -405,7 +410,7 @@ def test_stream_tail_parquet_and_jsonlines(spark, tmp_path):
 
     def run(*args):
         out = subprocess.run(
-            [_sys.executable, "/root/repo/scripts/stream_tail.py", *args],
+            [_sys.executable, os.path.join(SCRIPTS, "stream_tail.py"), *args],
             capture_output=True, text=True, check=True,
         )
         return [_json.loads(l) for l in out.stdout.strip().splitlines()]
@@ -436,7 +441,7 @@ def test_meta_dump_tool_lists_live_and_dropped(spark, sf_dir):
 
     def run(*args):
         out = subprocess.run(
-            [_sys.executable, "/root/repo/scripts/meta_dump.py", *args],
+            [_sys.executable, os.path.join(SCRIPTS, "meta_dump.py"), *args],
             capture_output=True, text=True, check=True,
         )
         return [json.loads(line) for line in out.stdout.strip().splitlines()]

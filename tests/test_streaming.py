@@ -2,6 +2,7 @@
 
 from __future__ import annotations
 
+import os
 import sys
 import tempfile
 
@@ -16,6 +17,10 @@ from milvus_cdc_spark.control.tasks import (
 from milvus_cdc_spark.operators import apply as apply_op
 from milvus_cdc_spark.streaming import repair
 from milvus_cdc_spark.streaming.pipeline import CdcApplyPipeline
+
+SCRIPTS = os.path.join(
+    os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "scripts"
+)
 
 
 @pytest.fixture(scope="module")
@@ -81,22 +86,32 @@ def test_streaming_apply_resume_is_idempotent(spark, oplog_dir):
 
 
 def test_monotonic_repair_stage(spark):
-    stage = repair.MonotonicRepairStage(spark, tempfile.mkdtemp(prefix="rep_"))
-    b1 = spark.createDataFrame(
-        [("ch", 100), ("ch", 200)], "vchannel string, ts bigint"
-    )
-    out1 = stage.process(b1).collect()
-    assert {r.ts: r.repaired_ts for r in out1} == {100: 100, 200: 200}
+    """T2 as the pipeline runs it: repair_batch over the manifest's
+    [vchannel, max_ts] rows, then the batch's repaired max folded into
+    them."""
+    from milvus_cdc_spark.streaming.pipeline import _fold_channel_max
+
+    def step(rows, channel_max):
+        b = spark.createDataFrame(rows, "vchannel string, ts bigint")
+        out = repair.repair_batch(b, channel_max).collect()
+        return (
+            {r.ts: r.repaired_ts for r in out},
+            _fold_channel_max(((r.vchannel, r.repaired_ts) for r in out), channel_max),
+        )
+
+    out1, channel_max = step([("ch", 100), ("ch", 200)], [])
+    assert out1 == {100: 100, 200: 200}
+    assert channel_max == [["ch", 200]]
     # second batch regresses below channel max (200) → rebased above it
-    b2 = spark.createDataFrame(
-        [("ch", 50), ("ch", 150), ("ch", 300)], "vchannel string, ts bigint"
-    )
-    out2 = {r.ts: r.repaired_ts for r in stage.process(b2).collect()}
+    out2, channel_max = step([("ch", 50), ("ch", 150), ("ch", 300)], channel_max)
     assert out2[300] == 300  # already monotonic
     assert out2[50] == 201  # dense_rank 1 over base 200
     assert out2[150] == 202
     # channel max advanced
-    assert stage.read_channel_max().collect()[0].max_ts == 300
+    assert channel_max == [["ch", 300]]
+    # another channel's max is no base for this one
+    out3, _ = step([("ch_b", 50)], channel_max)
+    assert out3 == {50: 50}
 
 
 def test_task_registry_lifecycle(spark, oplog_dir):
@@ -1301,7 +1316,7 @@ def test_msg_count_tool(spark):
     physical msg time; a stored position seeks strictly PAST it (the
     reference excludes the current msg on seek), and channels without a
     position count from earliest."""
-    sys.path.insert(0, "/root/repo/scripts")
+    sys.path.insert(0, SCRIPTS)
     from msg_count import count_messages
 
     ops = spark.createDataFrame(
@@ -1664,6 +1679,103 @@ def test_positions_hide_uncommitted_batch(spark, monkeypatch):
     ]
 
 
+def test_mirror_replay_after_failed_commit_matches_uninterrupted_run(
+    spark, monkeypatch
+):
+    """The mirror's channel max commits with the batch: after a failed
+    manifest rename, the replay (in the same process, or in a fresh
+    pipeline over the work dir) is rebased over the committed max, so
+    mirror/batch_id=0 holds the uninterrupted run's 100, 200 and not
+    201, 202. No channel_max/ table is written."""
+    import os as os_mod
+
+    from milvus_cdc_spark.streaming import pipeline as pipeline_mod
+
+    def batch(*ts):
+        return spark.createDataFrame(
+            [(t, "insert", "default", "c0", "p0", "ch_0", i, 1, i)
+             for i, t in enumerate(ts)],
+            pipeline_mod.OPLOG_SCHEMA,
+        )
+
+    real_replace = os_mod.replace
+    for fresh in (False, True):
+        work = tempfile.mkdtemp(prefix="test_mirror_replay_")
+        pipe = CdcApplyPipeline(spark, work + "/src", work, mirror=True)
+
+        def flaky_replace(src_path, dst, *a, **k):
+            if dst == pipe._manifest_path:
+                raise OSError("disk full")
+            return real_replace(src_path, dst, *a, **k)
+
+        monkeypatch.setattr(os_mod, "replace", flaky_replace)
+        with pytest.raises(OSError, match="disk full"):
+            pipe.apply_batch(batch(100, 200), 0)
+        monkeypatch.undo()
+        if fresh:
+            pipe = CdcApplyPipeline(spark, work + "/src", work, mirror=True)
+        pipe.apply_batch(batch(100, 200), 0)
+        pipe.apply_batch(batch(50, 300), 1)
+        got = {
+            (r.batch_id, r.ts): r.repaired_ts
+            for r in spark.read.parquet(pipe.mirror_dir).collect()
+        }
+        assert got == {(0, 100): 100, (0, 200): 200, (1, 50): 201, (1, 300): 300}
+        assert pipe.manifest["channel_max"] == [["ch_0", 300]]
+        assert not os_mod.path.exists(os_mod.path.join(work, "channel_max"))
+
+
+def test_resume_over_format3_channel_max_table(spark):
+    """A format-3 mirror kept its channel max in a channel_max/v{N}/
+    parquet table. Resuming seeds the manifest rows once from the newest
+    version (v10, not the lexically larger v2), which is the base a
+    format-3 restart rebased over; the first commit stamps the current
+    format and the table is never read or written again."""
+    import json
+    import os
+    import shutil
+
+    from milvus_cdc_spark.streaming import pipeline as pipeline_mod
+
+    tmp = tempfile.mkdtemp(prefix="test_fmt3_cmax_")
+    src, work = tmp + "/src", tmp + "/work"
+    os.makedirs(work + "/state")
+    with open(work + "/state/MANIFEST.json", "w") as f:
+        json.dump(
+            {"buckets": {}, "last_batch_id": 10, "history": [],
+             "format_version": 3, "n_buckets": 2,
+             "positions": [["ch0", 550, 4], ["ch1", 90, 1]]},
+            f,
+        )
+    for v, rows in (("v2", [("ch0", 300)]), ("v10", [("ch0", 550), ("ch1", 90)])):
+        spark.createDataFrame(rows, "vchannel string, max_ts bigint").coalesce(
+            1
+        ).write.parquet(f"{work}/channel_max/{v}")
+
+    pipe = CdcApplyPipeline(spark, src, work, n_buckets=2, mirror=True)
+    assert pipe.manifest["channel_max"] == [["ch0", 550], ["ch1", 90]]
+    pipe.apply_batch(
+        spark.createDataFrame(
+            [
+                (100, "insert", "default", "c0", "p0", "ch0", 1, 1, 1),
+                (120, "insert", "default", "c0", "p0", "ch1", 2, 1, 2),
+            ],
+            pipeline_mod.OPLOG_SCHEMA,
+        ),
+        11,
+    )
+    got = {r.vchannel: r.repaired_ts for r in spark.read.parquet(pipe.mirror_dir).collect()}
+    assert got == {"ch0": 551, "ch1": 120}
+    with open(work + "/state/MANIFEST.json") as f:
+        on_disk = json.load(f)
+    assert on_disk["format_version"] == pipeline_mod.STATE_FORMAT_VERSION
+    assert on_disk["channel_max"] == [["ch0", 551], ["ch1", 120]]
+    assert sorted(os.listdir(work + "/channel_max")) == ["v10", "v2"]
+    shutil.rmtree(work + "/channel_max")
+    again = CdcApplyPipeline(spark, src, work, n_buckets=2, mirror=True)
+    assert again.manifest["channel_max"] == [["ch0", 551], ["ch1", 120]]
+
+
 def test_resume_refuses_bucket_count_change(spark):
     """ADVICE r14: state rows are placed by pmod(xxhash64, n_buckets) —
     resuming a work_dir under a different bucket count would silently
@@ -1989,23 +2101,30 @@ def test_apply_batch_job_budget(spark):
     """A microbatch over existing state costs at most five Spark jobs:
     the ops cache, the control aggregate (map + collect) and the merge
     (map + write). Positions are written by the driver and the state
-    read has an explicit schema, so neither may add a job."""
+    read has an explicit schema, so neither may add a job. The mirror
+    adds four: the repaired write (map + write) and the read-back of its
+    per-vchannel max (map + collect); its channel max is driver-folded
+    into the manifest, so it adds no state read or write (thirteen
+    before)."""
     import uuid
 
-    tmp = tempfile.mkdtemp(prefix="job_budget_")
-    pipe = CdcApplyPipeline(spark, tmp + "/src", tmp + "/work", n_buckets=4)
-    pipe.apply_batch(_budget_ops(spark, 1), 0)  # existing state to merge into
-    batch = _budget_ops(spark, 2)
     sc = spark.sparkContext
-    group = f"job_budget_{uuid.uuid4().hex}"
-    sc.setJobGroup(group, "one CDC microbatch")
-    try:
-        pipe.apply_batch(batch, 1)
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    jobs = sc.statusTracker().getJobIdsForGroup(group)
-    assert len(jobs) <= 5, sorted(jobs)
-    assert pipe.last_batch_id == 1
+    for mirror, budget in ((False, 5), (True, 9)):
+        tmp = tempfile.mkdtemp(prefix="job_budget_")
+        pipe = CdcApplyPipeline(
+            spark, tmp + "/src", tmp + "/work", n_buckets=4, mirror=mirror
+        )
+        pipe.apply_batch(_budget_ops(spark, 1), 0)  # existing state to merge into
+        batch = _budget_ops(spark, 2)
+        group = f"job_budget_{uuid.uuid4().hex}"
+        sc.setJobGroup(group, "one CDC microbatch")
+        try:
+            pipe.apply_batch(batch, 1)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        jobs = sc.statusTracker().getJobIdsForGroup(group)
+        assert len(jobs) <= budget, (mirror, sorted(jobs))
+        assert pipe.last_batch_id == 1
 
 
 def test_driver_written_positions_read_back(spark, sf_dir):
@@ -2056,7 +2175,8 @@ def test_resume_over_format2_positions_table(spark):
     """A format-2 work dir kept positions in a positions/batch_id=N/
     parquet table. Resuming folds its committed batches into the manifest
     once; an orphan dir above last_batch_id stays invisible. positions()
-    answers as the format-2 reader did, the first commit stamps format 3,
+    answers as the format-2 reader did, the first commit stamps the
+    current format,
     and the legacy table is never read again."""
     import json
     import os
@@ -2110,7 +2230,7 @@ def test_resume_over_format2_positions_table(spark):
     )
     with open(work + "/state/MANIFEST.json") as f:
         on_disk = json.load(f)
-    assert on_disk["format_version"] == 3
+    assert on_disk["format_version"] == pipeline_mod.STATE_FORMAT_VERSION
     assert on_disk["positions"] == [["ch0", 130, 4], ["ch1", 150, 1]]
     shutil.rmtree(pos_dir)
     assert positions(CdcApplyPipeline(spark, src, work, n_buckets=2)) == {

@@ -12,9 +12,12 @@ import pytest
 from milvus_cdc_spark import suite
 from milvus_cdc_spark.catalog import TABLES
 
+import os
 import sys
 
-sys.path.insert(0, "/root/repo/scripts")
+sys.path.insert(
+    0, os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "scripts")
+)
 from verify_local import compare_frames  # noqa: E402
 
 

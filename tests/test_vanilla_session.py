@@ -16,6 +16,7 @@ reuses the configured context), so the whole check runs in a subprocess.
 
 from __future__ import annotations
 
+import os
 import subprocess
 import sys
 
@@ -25,8 +26,8 @@ import os
 import shutil
 import sys
 import tempfile
-sys.path.insert(0, "/root/repo")
-sys.path.insert(0, "/root/repo/scripts")
+sys.path.insert(0, sys.argv[1])  # the checkout under test
+sys.path.insert(0, os.path.join(sys.argv[1], "scripts"))
 import duckdb
 from pyspark.sql import SparkSession
 from verify_local import compare_frames
@@ -94,7 +95,8 @@ shutil.rmtree(tempfile.tempdir, ignore_errors=True)
 
 def test_vanilla_session_contract():
     out = subprocess.run(
-        [sys.executable, "-c", SCRIPT],
+        [sys.executable, "-c", SCRIPT,
+         os.path.dirname(os.path.dirname(os.path.abspath(__file__)))],
         capture_output=True,
         text=True,
         timeout=600,
