@@ -25,17 +25,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from milvus_cdc_spark.cache_registry import CacheRegistry
-
-# Frames persisted by corpus-LM scoring for reuse across their
-# consumers (the tokenize explode heads several aggregate arms) — same
-# release-at-next-build contract as the other analytics registries.
-_CORPUS_CACHES = CacheRegistry("corpus_caches")
-
-
-def release_corpus_caches() -> None:
-    """Unpersist frames cached by prior corpus-LM scoring calls."""
-    _CORPUS_CACHES.release()
+from milvus_cdc_spark.cache_registry import cache
 
 
 def chunk_documents(
@@ -410,15 +400,13 @@ def dsir_weights(
     # The bucketed stream feeds BOTH the bucket-count aggregate and the
     # final per-doc scoring join; persist it (feat text projected away —
     # only the bucket survives) so the corpus explode + md5 runs once.
-    release_corpus_caches()  # prior query's frames are consumed by now
     md5 = F.md5(F.col("feat"))
-    feats = feats.select(
+    feats = cache(feats.select(
         F.col(id_col),
         "is_target",
         (F.conv(F.substring(md5, 1, 2), 16, 10).cast("bigint") % n_buckets)
         .alias("bucket"),
-    ).persist()
-    _CORPUS_CACHES.append(feats)
+    ))
     counts = feats.groupBy("bucket").agg(
         F.sum(F.col("is_target").cast("bigint")).alias("tgt_n"),
         F.sum((~F.col("is_target")).cast("bigint")).alias("raw_n"),
@@ -482,13 +470,11 @@ def bigram_logprob(
     """
     from milvus_cdc_spark.functions import text as textf
 
-    release_corpus_caches()  # prior query's frames are consumed by now
     # the tokenize projection heads the unigram arm, the bigram-count
     # arm, AND the final per-doc scoring pass — persist it once
-    base = docs.select(
+    base = cache(docs.select(
         F.col(id_col), textf.tokens(F.lower(F.col(text_col))).alias("_toks")
-    ).persist()
-    _CORPUS_CACHES.append(base)
+    ))
     arr = F.col("_toks")
     toks = base.select(F.col(id_col), F.explode(arr).alias("tok"))
     # bigrams zip in-row from the token array's shifted tails — no
@@ -504,8 +490,7 @@ def bigram_logprob(
     )
     # vocab-sized, but its lineage embeds the bigram explode; it feeds
     # both the context totals and the probability dim
-    c2 = big.groupBy("prev", "cur").agg(F.count("*").alias("n2")).persist()
-    _CORPUS_CACHES.append(c2)
+    c2 = cache(big.groupBy("prev", "cur").agg(F.count("*").alias("n2")))
     ctx = c2.groupBy("prev").agg(F.sum("n2").alias("nctx"))
     c1 = toks.groupBy("tok").agg(F.count("*").alias("n1"))
     tot = c1.agg(F.sum("n1").alias("_t"))

@@ -23,23 +23,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from milvus_cdc_spark.cache_registry import CacheRegistry
-
+from milvus_cdc_spark.cache_registry import cache
 from milvus_cdc_spark.functions import text as textf
-
-# Persisted intermediates shared across a single query's stages (shingle
-# frames, deduped token frames). Mirrors _GRAPH_CACHES/_RANK_CACHES: the
-# caller owns the release point — call release_dedup_caches() once the
-# returned frame has been materialized. Without it, repeated calls in a
-# long-lived session accumulate cached frames until catalog.clearCache().
-_DEDUP_CACHES = CacheRegistry("dedup_caches")
-
-
-def release_dedup_caches() -> None:
-    """Unpersist intermediates cached by prior near_dup_pipeline /
-    set_similarity_join / containment_join calls. Safe once their returned
-    DataFrames have been materialized."""
-    _DEDUP_CACHES.release()
 
 
 def _shingle_array(arr, n: int):
@@ -512,9 +497,7 @@ def near_dup_pipeline(
     verification joins; persisting it halves the pipeline's dominant
     cost (tokenize + window n-gram assembly). At 100 TB the persist
     becomes a staged table (write once, read by both stages)."""
-    release_dedup_caches()  # the prior query's frames are consumed by now
-    sh = shingle_rows(df, id_col, text_col, shingle_n).persist()
-    _DEDUP_CACHES.append(sh)
+    sh = cache(shingle_rows(df, id_col, text_col, shingle_n))
     band_rows = minhash_bands(df, id_col, text_col, k, bands, shingle_n, shingles=sh)
     pairs = candidate_pairs(band_rows, id_col)
     return jaccard_pairs(df, pairs, id_col, text_col, shingle_n, shingles=sh)
@@ -554,18 +537,15 @@ def embedding_near_dup(
     """
     from milvus_cdc_spark.functions import vector as vecf
 
-    release_dedup_caches()  # the prior query's frames are consumed by now
     # ``vectors`` feeds three consumers (bucketing + both verify sides);
     # persist so the input (often a derived/augmented frame) is computed
     # once. Only persist (and register for release) when the CALLER has
     # not already cached it: persist() raises on a second call at a
     # different storage level, and cache levels are not refcounted — an
-    # unpersist here would silently drop the caller's own cache
-    # (ADVICE r7). _DEDUP_CACHES contract: we release what WE persisted.
+    # unpersist here would silently drop the caller's own cache.
     lvl = vectors.storageLevel
     if not (lvl.useMemory or lvl.useDisk):
-        vectors = vectors.persist()
-        _DEDUP_CACHES.append(vectors)
+        vectors = cache(vectors)
     vec = F.col(vec_col)
     band_cols = []
     for b in range(n_bands):
@@ -665,7 +645,6 @@ def semdedup(
     from milvus_cdc_spark.analytics import similarity
     from milvus_cdc_spark.functions import vector as vecf
 
-    release_dedup_caches()  # the prior query's frames are consumed by now
     cent = similarity.ivf_train(
         vectors, k=k, iters=iters, dim=dim, id_col=id_col, vec_col=vec_col
     )
@@ -692,7 +671,7 @@ def semdedup(
     # sort the n x k candidates WITH their vector payloads — dropped,
     # the sort moves ~24-byte rows and the vector joins back once by
     # id (r9 A/B with the ivf_train twin of this reshape).
-    assigned = (
+    assigned = cache(
         j.withColumn("_d2", d2)
         .groupBy("_id")
         .agg(F.min(F.struct("_d2", "centroid_id")).alias("_m"))
@@ -702,9 +681,7 @@ def semdedup(
             F.col("_m._d2").alias("_d2"),
         )
         .join(v.select("_id", "_v"), "_id")
-        .persist()
     )
-    _DEDUP_CACHES.append(assigned)
     a = assigned.select(
         F.col("centroid_id"),
         F.col("_id").alias("_ida"),
@@ -912,15 +889,12 @@ def set_similarity_join(
     Returns (a, b, inter, uni, jacc_ppm) with a < b and
     jacc_ppm >= threshold_ppm.
     """
-    release_dedup_caches()  # the prior query's frames are consumed by now
-    toks = (
+    toks = cache(
         items.select(
             F.col(id_col).alias("id"), F.col(item_col).alias("tok")
         )
         .distinct()
-        .persist()
     )
-    _DEDUP_CACHES.append(toks)
     dfreq = toks.groupBy("tok").agg(F.count("*").alias("df"))
     w = Window.partitionBy("id").orderBy("df", "tok")
     ranked = toks.join(dfreq, "tok").select(
@@ -1042,15 +1016,12 @@ def containment_join(
     (contrast set_similarity_join, where BOTH sides are already ranked
     for their prefixes and the length+positional prunes are free).
     """
-    release_dedup_caches()  # the prior query's frames are consumed by now
-    toks = (
+    toks = cache(
         items.select(
             F.col(id_col).alias("id"), F.col(item_col).alias("tok")
         )
         .distinct()
-        .persist()
     )
-    _DEDUP_CACHES.append(toks)
     dfreq = toks.groupBy("tok").agg(F.count("*").alias("df"))
     w = Window.partitionBy("id").orderBy("df", "tok")
     ranked = toks.join(dfreq, "tok").select(
@@ -1169,7 +1140,6 @@ def paragraph_near_dup(
     """
     from milvus_cdc_spark.analytics import corpus
 
-    release_dedup_caches()  # the prior query's frames are consumed by now
     paras = corpus.pseudo_lines(docs, width, id_col, text_col)
     base = paras.select(
         F.col(id_col),
@@ -1177,7 +1147,7 @@ def paragraph_near_dup(
         textf.tokens(F.col("line_text")).alias("_toks"),
     )
     z = _shingle_array(F.col("_toks"), shingle_n)
-    sh = (
+    sh = cache(
         base.select(F.col(id_col), F.col("para_id"), F.explode(z).alias("s"))
         .select(
             F.col(id_col),
@@ -1185,9 +1155,7 @@ def paragraph_near_dup(
             F.substring(F.md5(F.col("s")), 1, 16).alias("k"),
         )
         .distinct()
-        .persist()
     )
-    _DEDUP_CACHES.append(sh)
     sizes = sh.groupBy(id_col, "para_id").agg(
         F.count("*").alias("n_sh")
     )

@@ -37,25 +37,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from milvus_cdc_spark.cache_registry import CacheRegistry
-
 # Total score mass in integer units: parts-per-10^12 keeps 6+ significant
 # digits after 10^6-node graphs divide it up.
 MASS = 10**12
-
-# The graph operators themselves register nothing here: every
-# cross-iteration frame is an eager localCheckpoint whose blocks the
-# ContextCleaner reclaims when the returned DataFrame is dropped. The
-# ledger holds the suite's own graph-family persists — the
-# co-purchase query's ``baskets`` frame (suite_eval) — and callers
-# invoke the release point before each graph query.
-_GRAPH_CACHES = CacheRegistry("graph_caches")
-
-
-def release_graph_caches() -> None:
-    """Unpersist the graph-family frames this thread registered (the
-    operators themselves localCheckpoint instead of persisting)."""
-    _GRAPH_CACHES.release()
 
 
 def co_group_pairs(

@@ -9,7 +9,12 @@ STUBBED because this container ships no image/audio libraries.
 
 ``extract_features`` uses a deterministic fake "decoder" (byte length +
 md5) so the pipeline is testable end-to-end and oracle-checkable; swap
-``_decode_stub`` for a real PIL/librosa call in production.
+its ``decode`` for a real PIL/librosa call in production.
+
+Every ``mapInPandas`` function here is self-contained: its helpers are
+defined inside it, so cloudpickle ships them by value. A module-level
+helper would ship by reference, and the Python workers, which do not
+have this package on their path, would fail to import it.
 """
 
 from __future__ import annotations
@@ -22,15 +27,6 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 FEATURE_SCHEMA = "doc_id bigint, media_type string, n_bytes bigint, content_hash string"
-
-
-def _decode_stub(payload: bytes) -> dict:
-    """Deterministic stand-in for a media decoder.
-
-    Real implementation would be e.g. PIL.Image.open(io.BytesIO(payload)).
-    Raising NotImplementedError for codecs keeps the contract honest.
-    """
-    return {"n_bytes": len(payload), "content_hash": hashlib.md5(payload).hexdigest()}
 
 
 def as_media_table(df: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
@@ -51,8 +47,16 @@ def extract_features(media: DataFrame) -> DataFrame:
     """
 
     def extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        def decode(payload: bytes) -> dict:
+            # deterministic stand-in for a media decoder, e.g.
+            # PIL.Image.open(io.BytesIO(payload))
+            return {
+                "n_bytes": len(payload),
+                "content_hash": hashlib.md5(payload).hexdigest(),
+            }
+
         for pdf in batches:
-            feats = pdf["payload"].map(_decode_stub)
+            feats = pdf["payload"].map(decode)
             yield pd.DataFrame(
                 {
                     "doc_id": pdf["doc_id"],

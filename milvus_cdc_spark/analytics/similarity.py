@@ -25,35 +25,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from milvus_cdc_spark.cache_registry import CacheRegistry
-
+from milvus_cdc_spark.cache_registry import cache
 from milvus_cdc_spark.functions import vector as vecf
-
-# Frames persisted by index-build pipelines (ivf_pq_build) for reuse
-# across their consumers — the query path reads every build output at
-# least once, and an unpersisted build lineage re-runs the WHOLE
-# training (Lloyd x iterations, per-subspace PQ k-means) per consumer:
-# the scan-node audit counted 82 parquet scans in one unpersisted
-# ivf_pq query plan. Same contract as dedup/graph: the next build call
-# releases the prior query's frames; an early release only costs
-# recompute, never correctness.
-_SIM_CACHES = CacheRegistry("sim_caches")
-
-# mmr_rerank's pool persists live in their OWN registry: mmr is a
-# rerank stage that typically runs downstream of an index build whose
-# _SIM_CACHES outputs its caller may still be consuming lazily — a
-# shared release point at mmr entry would unpersist them mid-query
-# (ADVICE r7; only costs recompute, but defeats the persist the build
-# paid for). mmr releases its own prior pool at entry; the shared
-# release below still drains both, so the existing cleanup call sites
-# keep releasing everything.
-_MMR_CACHES = CacheRegistry("mmr_caches")
-
-
-def release_similarity_caches() -> None:
-    """Unpersist frames cached by prior index-build AND mmr calls."""
-    _SIM_CACHES.release()
-    _MMR_CACHES.release()
 
 
 def parallelize_expansion(df: DataFrame) -> DataFrame:
@@ -1164,7 +1137,7 @@ def ivf_pq_build(
     (id, sub_id, code). All deterministic (lowest-id seeding, 6-decimal
     mean rounding) — a serial engine reproduces every table exactly.
 
-    All four outputs are PERSISTED (registered in _SIM_CACHES): the
+    All four outputs are PERSISTED (``cache_registry.cache``): the
     query path consumes each at least once and recall-style evaluations
     consume them repeatedly; without the persist every consumer re-runs
     the full training lineage. At 100 TB these are the index tables a
@@ -1179,8 +1152,6 @@ def ivf_pq_build(
     across the probe/recall joins, which costs roughly 2x what lineage
     re-planning saves.
     """
-    release_similarity_caches()  # prior query's build frames consumed
-
     # NOTE (measured r15, do not re-try): eagerly localCheckpoint-ing
     # ONLY the catalog-sized outputs (coarse, codebooks) — the surgical
     # variant of the r11-rejected all-four checkpoint, with explicit
@@ -1191,11 +1162,11 @@ def ivf_pq_build(
     # eager jobs serialize the training chain into separate actions and
     # forfeit the one-action composite's scan/exchange/cache sharing,
     # costing ~2.5 s against the ~1 s of saved Catalyst re-planning.
-    coarse = ivf_train(
+    coarse = cache(ivf_train(
         vectors, k=k_coarse, iters=coarse_iters, dim=dim,
         id_col=id_col, vec_col=vec_col,
-    ).persist()
-    assigned = _l2_assign_one(vectors, coarse, id_col, vec_col).persist()
+    ))
+    assigned = cache(_l2_assign_one(vectors, coarse, id_col, vec_col))
     resid = (
         vectors.select(
             F.col(id_col),
@@ -1222,14 +1193,13 @@ def ivf_pq_build(
     # pq_train's iterations and pq_encode) was a wash — interleaved A/B
     # 1.02 at sf0.1; behind the persisted `assigned` its recompute is one
     # cheap join and Catalyst already reuses the exchange.
-    codebooks = pq_train(
+    codebooks = cache(pq_train(
         resid, m=m, k=k_pq, iters=pq_iters, dim=dim,
         id_col=id_col, vec_col=vec_col,
-    ).persist()
-    codes = pq_encode(
+    ))
+    codes = cache(pq_encode(
         resid, codebooks, m=m, dim=dim, id_col=id_col, vec_col=vec_col
-    ).persist()
-    _SIM_CACHES.extend([coarse, assigned, codebooks, codes])
+    ))
     return coarse, assigned, codebooks, codes
 
 
@@ -1398,17 +1368,12 @@ def mmr_rerank(
     unrecoverable (re-call to recompute) rather than
     lineage-recomputable; deliberate for pool-sized reranks.
     """
-    # release only MMR's OWN prior pool — never the shared build registry:
-    # a caller may hand us candidates derived lazily from ivf_pq_build
-    # outputs that are still persisted in _SIM_CACHES (ADVICE r7)
-    _MMR_CACHES.release()
-    remaining = candidates.select(
+    remaining = cache(candidates.select(
         F.col(id_col).alias("_id"), F.col(sim_col).alias("_sim")
-    ).persist()
-    pw = pairwise.select(
+    ))
+    pw = cache(pairwise.select(
         F.col("a").alias("_pa"), F.col("b").alias("_pb"), F.col("psim").alias("_ps")
-    ).persist()
-    _MMR_CACHES.extend([remaining, pw])
+    ))
     picks: list[DataFrame] = []
     selected: DataFrame | None = None
     for rank in range(1, k + 1):

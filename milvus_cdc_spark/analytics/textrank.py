@@ -18,25 +18,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from milvus_cdc_spark.cache_registry import CacheRegistry
-
+from milvus_cdc_spark.cache_registry import cache
 from milvus_cdc_spark.functions import text as textf
 
 K1_DEFAULT = 1.2
 B_DEFAULT = 0.75
-
-# Posting-list frames persisted by bm25_index for reuse across query
-# stages (pruned + exact search, dense/sparse hybrid arms, drop-ratio
-# sweeps all consume the same index) — without the persist each
-# consumer re-runs the tokenize + three corpus aggregations. Same
-# release contract as dedup/graph/similarity: the next build call
-# frees the prior query's frames.
-_TEXT_CACHES = CacheRegistry("text_caches")
-
-
-def release_text_caches() -> None:
-    """Unpersist posting-list frames cached by prior bm25_index calls."""
-    _TEXT_CACHES.release()
 
 
 def bm25_scores(
@@ -116,12 +102,11 @@ def bm25_index(
     The postings frame IS the sparse inverted index at scale: one
     corpus shuffle builds it; persist/bucket it by ``tok`` and each
     query touches only its terms' posting lists. The returned frame is
-    PERSISTED (registered in _TEXT_CACHES — the local stand-in for the
+    PERSISTED (``cache_registry.cache`` — the local stand-in for the
     materialized index table): every search query consumes it at least
     twice (score + rank, or pruned + exact), and unpersisted consumers
     re-run the whole tokenize + aggregate build.
     """
-    release_text_caches()  # prior query's index is consumed by now
     if widen:
         # keyed widen before tokenization (same contract as
         # dedup.shingle_rows): the tokenize + explode otherwise runs
@@ -153,7 +138,7 @@ def bm25_index(
     idf = F.log(
         (F.col("n_docs") - F.col("df") + 0.5) / (F.col("df") + 0.5) + 1.0
     )
-    index = (
+    index = cache(
         tf.join(dl, id_col)
         .join(F.broadcast(stats))
         .join(dfreq, "tok")
@@ -163,9 +148,7 @@ def bm25_index(
             weight.alias("weight"),
             idf.alias("idf"),
         )
-        .persist()
     )
-    _TEXT_CACHES.append(index)
     return index
 
 

@@ -20,20 +20,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from milvus_cdc_spark.cache_registry import CacheRegistry
-
-# Aggregate frames persisted by replay_alive_with_drops for reuse across
-# its three consumers (two cutoff dims + the final filter). Contract
-# (the windows.py _RANK_CACHES pattern): callers own the release point;
-# an unpersisted recompute walks the identical deterministic plan, so
-# releasing early only costs recompute, never correctness.
-_APPLY_CACHES = CacheRegistry("apply_caches")
-
-
-def release_apply_caches() -> None:
-    """Unpersist aggregate frames cached by prior replay_alive_with_drops
-    calls."""
-    _APPLY_CACHES.release()
+from milvus_cdc_spark.cache_registry import cache
 
 
 def replay_alive(ops: DataFrame) -> DataFrame:
@@ -86,7 +73,7 @@ def replay_alive_with_drops(ops: DataFrame) -> DataFrame:
     from milvus_cdc_spark.operators.filters import insert_like
 
     is_ins = insert_like()
-    agg0 = (
+    agg0 = cache(
         ops.groupBy("collection", "partition", "pk")
         .agg(
             F.max(F.when(is_ins, F.col("ts"))).alias("last_insert_ts"),
@@ -100,9 +87,7 @@ def replay_alive_with_drops(ops: DataFrame) -> DataFrame:
                 F.when(F.col("op_type") == "drop_collection", F.col("ts"))
             ).alias("_cdt0"),
         )
-        .persist()
     )
-    _APPLY_CACHES.append(agg0)
     part_drops = (
         agg0.filter(F.col("_pdt0").isNotNull())
         .groupBy("collection", "partition")

@@ -28,18 +28,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from milvus_cdc_spark.cache_registry import CacheRegistry
-
-# Persisted cutoff rows from prior read_your_writes calls (deferred
-# release: the next call drains the prior call's frame once its returned
-# plan has been consumed — the dedup/graph registry contract).
-_CONSISTENCY_CACHES = CacheRegistry("consistency")
-
-
-def release_consistency_caches() -> None:
-    """Unpersist cutoff frames cached by prior read_your_writes calls."""
-    _CONSISTENCY_CACHES.release()
-
+from milvus_cdc_spark.cache_registry import cache
 
 #: Hybrid-TSO physical-ms shift (Milvus TSO layout: physical ms << 18).
 TSO_SHIFT = 18
@@ -198,26 +187,19 @@ def read_your_writes(
     """
     from milvus_cdc_spark.operators.filters import insert_like
 
-    # Unconditional: a session_ids=None call must still drain the prior
-    # known-ids call's persisted cutoff row (no-op on an empty ledger),
-    # else alternating call shapes strand the last cuts_row until
-    # clearCache (round-9 ADVICE).
-    release_consistency_caches()
-
     if session_ids is not None:
         n = len(session_ids)
         # Persisted: this 1-row frame feeds BOTH the broadcast crossJoin
         # and the guarantee-ts stack below — unpersisted, each consumer
         # re-derives it with its own full op-log scan + aggregate.
-        cuts_row = ops.agg(
+        cuts_row = cache(ops.agg(
             *[
                 F.max(
                     F.when(F.col(session_col) == s, F.col("ts"))
                 ).alias(f"_g{i}")
                 for i, s in enumerate(session_ids)
             ]
-        ).persist()
-        _CONSISTENCY_CACHES.append(cuts_row)
+        ))
         seen = ops.crossJoin(F.broadcast(cuts_row))
         cols = []
         for i in range(n):

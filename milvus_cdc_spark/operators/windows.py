@@ -15,7 +15,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from milvus_cdc_spark.cache_registry import CacheRegistry
+from milvus_cdc_spark.cache_registry import cache
 
 
 def pack_sort_keys(ts_col: str = "ts", op_col: str = "op_type") -> list:
@@ -54,23 +54,14 @@ def monotonic_rebase(
     )
 
 
-# Cached range-ranked frames from distributed_ntile / distributed_row_number.
-# The cache is load-bearing for correctness, not just speed: the driver-side
-# offsets are computed from the SAME materialized range partitioning the
-# result reads, and an unpersisted recompute could re-sample different range
-# bounds and silently mis-rank. Callers therefore own the release point —
-# call release_rank_caches() once returned frames have been materialized
-# (collected / written), which long-lived sessions should do between queries.
-_RANK_CACHES = CacheRegistry("rank_caches")
-
-
-def release_rank_caches() -> None:
-    """Unpersist intermediates cached by prior distributed_ntile /
-    distributed_row_number calls. Safe once their returned DataFrames have
-    been materialized; re-executing an old returned frame AFTER release
-    recomputes the range shuffle and may mis-rank — treat released results
-    as consumed."""
-    _RANK_CACHES.release()
+# The range-ranked frames behind distributed_ntile / distributed_row_number /
+# distributed_prefix_sum are cached (``cache_registry.cache``), and the cache
+# is load-bearing for correctness, not just speed: the driver-side offsets
+# are computed from the SAME materialized range partitioning the result
+# reads, and an unpersisted recompute could re-sample different range
+# bounds and silently mis-rank. A returned frame therefore stays valid until
+# this thread's next registry dispatch (or ``clearCache``), which releases
+# it; materialize it (collect / write) before then.
 
 
 def _range_ranked(df: DataFrame, order_cols: list, n_partitions: int):
@@ -92,10 +83,9 @@ def _range_ranked(df: DataFrame, order_cols: list, n_partitions: int):
     ranged = df.repartitionByRange(n_partitions, *order_cols).withColumn(
         "_pid", F.spark_partition_id()
     )
-    local = ranged.withColumn(
+    local = cache(ranged.withColumn(
         "_lrank", F.row_number().over(Window.partitionBy("_pid").orderBy(*order_cols))
-    ).persist()
-    _RANK_CACHES.append(local)
+    ))
     # per-partition counts → driver-side offsets, the zipWithIndex pattern:
     # ONE row per range partition (control-sized like the pipeline's
     # touched-bucket list), folded back as a literal map so the plan has
@@ -125,8 +115,9 @@ def distributed_row_number(df: DataFrame, order_cols: list,
     sort — the `Exchange SinglePartition` an unpartitioned window would
     force. Used for vocabulary token-id assignment, where a 100 TB corpus
     has 10^7-10^8 distinct terms. Same offsets pattern as
-    ``distributed_ntile``; see ``_range_ranked`` for the plan shape and
-    ``release_rank_caches`` for cache lifetime."""
+    ``distributed_ntile``; see ``_range_ranked`` for the plan shape. The
+    returned frame stays valid until this thread's next registry
+    dispatch."""
     local, rk, _ = _range_ranked(df, order_cols, n_partitions)
     return local.withColumn(rank_col, rk.cast("bigint")).drop("_pid", "_lrank")
 
@@ -144,7 +135,8 @@ def distributed_ntile(df: DataFrame, n: int, order_cols: list[str],
     exact fill rule.
 
     ``order_cols`` must be a total order (include a unique tie-break key).
-    Cache lifetime: see ``release_rank_caches``.
+    The returned frame stays valid until this thread's next registry
+    dispatch.
     """
     local, rk, total = _range_ranked(df, order_cols, n_partitions)
     base, rem = total // n, total % n  # first N%n tiles take one extra row
@@ -186,7 +178,8 @@ def distributed_prefix_sum(
     ``order_cols`` must be a total order (include a unique tie-break key)
     and ``value_col`` must already be exact (integer/decimal) — a float
     running sum is order-sensitive and breaks the repo's portable-math
-    contract. Cache lifetime: see ``release_rank_caches``.
+    contract. The returned frame stays valid until this thread's next
+    registry dispatch.
     """
     ranged = df.repartitionByRange(n_partitions, *order_cols).withColumn(
         "_pid", F.spark_partition_id()
@@ -197,10 +190,9 @@ def distributed_prefix_sum(
         .orderBy(*order_cols)
         .rowsBetween(Window.unboundedPreceding, frame_end)
     )
-    local = ranged.withColumn(
+    local = cache(ranged.withColumn(
         "_lsum", F.coalesce(F.sum(F.col(value_col)).over(w), F.lit(0))
-    ).persist()
-    _RANK_CACHES.append(local)
+    ))
     totals = {
         r._pid: r._tot
         for r in local.groupBy("_pid")

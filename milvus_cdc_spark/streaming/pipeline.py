@@ -333,8 +333,9 @@ class CdcApplyPipeline:
     Positions and the batch's record are folded into the manifest at the
     commit point from the control aggregate the batch already collects;
     no Spark job writes or reads them. The record's ``positions_write``
-    phase is that in-memory fold; with the mirror on it also spans the
-    mirror's repaired write and the read-back of its channel max.
+    phase is that in-memory fold. With the mirror on, the record also
+    carries a ``mirror_write`` phase: the mirror's repaired write and the
+    read-back of its channel max.
     """
 
     def __init__(self, spark: SparkSession, source_dir: str, work_dir: str,
@@ -771,6 +772,7 @@ class CdcApplyPipeline:
                     .agg(F.max("repaired_ts"))
                     .collect()
                 )
+            t_mirror = time.time()
         finally:
             ops.unpersist()
         # commit point: everything above is keyed by batch_id and
@@ -818,9 +820,11 @@ class CdcApplyPipeline:
             "phases": {
                 "control_collect": round(t_control - t0, 3),
                 "state_merge_write": round(t_state - t_control, 3),
-                "positions_write": round(t_positions - t_state, 3),
+                "positions_write": round(t_positions - t_mirror, 3),
             },
         }
+        if self.mirror_dir is not None:
+            record["phases"]["mirror_write"] = round(t_mirror - t_state, 3)
         self._manifest["history"].append(record)
         del self._manifest["history"][: -self.history_keep]
         self._commit_manifest()

@@ -15,6 +15,7 @@ BOTH sides so double summation-order noise can't flip the hash.
 
 from __future__ import annotations
 
+import functools
 import os
 
 from collections.abc import Callable
@@ -23,10 +24,9 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from milvus_cdc_spark.cache_registry import CacheRegistry
 from milvus_cdc_spark.catalog import local_frame as _local_frame
 
-from milvus_cdc_spark import catalog, oplog
+from milvus_cdc_spark import cache_registry, catalog, oplog
 from milvus_cdc_spark.functions import serde, text, ts as tsf, vector
 from milvus_cdc_spark.operators import apply as apply_op
 from milvus_cdc_spark.operators import barriers, filters, joins, windows
@@ -43,12 +43,23 @@ QUERIES: dict[str, QuerySpec] = {}
 
 
 def q(name: str, oracle: str | None, *tags: str):
+    """Register ``fn`` as query ``name``. ``QuerySpec.fn`` is the dispatch
+    point: it releases the frames this thread's previous query cached
+    (``cache_registry``), then builds. The module-level name stays the
+    bare function, so a query that calls another query's function never
+    releases mid-build."""
     def deco(fn):
         # a duplicate name would silently shadow the earlier query in the
         # registry (and its correctness history) — fail loudly instead
         if name in QUERIES:
             raise ValueError(f"duplicate query name: {name!r}")
-        QUERIES[name] = QuerySpec(fn=fn, oracle=oracle, tags=tags)
+
+        @functools.wraps(fn)
+        def dispatch(spark: SparkSession, sf_dir: str) -> DataFrame:
+            cache_registry.release()
+            return fn(spark, sf_dir)
+
+        QUERIES[name] = QuerySpec(fn=dispatch, oracle=oracle, tags=tags)
         return fn
 
     return deco
@@ -56,27 +67,6 @@ def q(name: str, oracle: str | None, *tags: str):
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return catalog.load_table(spark, sf_dir, name)
-
-
-# Frames persisted by individual suite queries whose expensive lineage
-# feeds multiple consumers (same release contract as the
-# dedup/graph/similarity/textrank module registries: the next caching
-# query releases the prior one's frames; an early release only costs
-# recompute, never correctness).
-SUITE_CACHES = CacheRegistry("suite_caches")
-
-
-def cache_frame(df: DataFrame) -> DataFrame:
-    """Persist ``df`` and register it for release by the next caching
-    query. Callers invoke :func:`release_suite_caches` at query entry."""
-    cached = df.persist()
-    SUITE_CACHES.append(cached)
-    return cached
-
-
-def release_suite_caches() -> None:
-    """Unpersist frames cached by prior suite queries."""
-    SUITE_CACHES.release()
 
 
 # ---------------------------------------------------------------------------
@@ -225,7 +215,6 @@ def partition_drop_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     conditional-aggregate pass keyed (collection, partition, pk) + two
     broadcast joins against catalog-sized drop cutoffs read back out of
     the persisted aggregate."""
-    apply_op.release_apply_caches()  # prior replay query's frames consumed
     ops = oplog.derive_oplog(_t(spark, sf_dir, "lineitem"), widen=True).withColumn(
         "partition",
         F.concat(F.lit("p_"), (F.col("pk") % 2).cast("string")),

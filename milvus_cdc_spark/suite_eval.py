@@ -30,6 +30,7 @@ import math
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from milvus_cdc_spark.cache_registry import cache
 from milvus_cdc_spark.suite import _SQL_COSINE, _SQL_TOKS, _t, q
 from milvus_cdc_spark.catalog import local_frame as _local_frame
 
@@ -84,7 +85,6 @@ def roc_auc_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     as a classifier score for ``lang == 'en'``, in integer ppm."""
     from milvus_cdc_spark.operators import windows
 
-    windows.release_rank_caches()  # prior query's rank cache is consumed
     docs = _t(spark, sf_dir, "documents")
     per = docs.groupBy(F.col("n_chars").alias("s")).agg(
         F.sum((F.col("lang") == "en").cast("int")).cast("bigint").alias("pos"),
@@ -174,7 +174,6 @@ def ks_drift_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     English and non-English doc-length distributions."""
     from milvus_cdc_spark.operators import windows
 
-    windows.release_rank_caches()  # prior query's rank cache is consumed
     docs = _t(spark, sf_dir, "documents")
     tot = docs.agg(
         F.sum((F.col("lang") == "en").cast("int")).cast("bigint").alias("n_a"),
@@ -262,7 +261,6 @@ def score_decile_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact global deciles (distributed_ntile), integer-ppm rates."""
     from milvus_cdc_spark.operators import windows
 
-    windows.release_rank_caches()  # prior query's rank cache is consumed
     docs = _t(spark, sf_dir, "documents").select(
         "doc_id",
         (-F.col("n_chars")).alias("neg_s"),
@@ -346,8 +344,6 @@ def triangle_parts_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top-10 parts by triangle count in the co-order graph
     (graph.triangle_counts, degree-oriented wedge join)."""
     from milvus_cdc_spark.analytics import graph
-
-    graph.release_graph_caches()  # prior graph query's frames are consumed
 
     li = (
         _t(spark, sf_dir, "lineitem")
@@ -1437,8 +1433,6 @@ def label_propagation_communities(spark: SparkSession, sf_dir: str) -> DataFrame
     the co-order part graph."""
     from milvus_cdc_spark.analytics import graph
 
-    graph.release_graph_caches()  # prior graph query's frames are consumed
-
     li = (
         _t(spark, sf_dir, "lineitem")
         .filter(F.col("l_quantity") >= _TRI_MIN_QTY)
@@ -1802,7 +1796,6 @@ def copurchase_lift_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     applied before the metric join)."""
     from milvus_cdc_spark.analytics import graph
 
-    graph.release_graph_caches()  # prior query's basket frame is consumed
     li = _t(spark, sf_dir, "lineitem")
     # ONE wide shuffle: group the fact by order and collect the distinct
     # sorted item set per basket (collect_set dedups, so no separate
@@ -1818,13 +1811,11 @@ def copurchase_lift_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     # TPC-H l_partkey is NOT NULL — reusing this shape for a nullable
     # item column silently changes supports (same implicit behavior in
     # graph.co_group_pairs).
-    baskets = (
+    baskets = cache(
         li.select("l_orderkey", "l_partkey")
         .groupBy("l_orderkey")
         .agg(F.sort_array(F.collect_set("l_partkey")).alias("_items"))
-        .persist()
     )
-    graph._GRAPH_CACHES.append(baskets)
     n_orders_df = baskets.agg(F.count("*").cast("bigint").alias("n_orders"))
     items = (
         baskets.select(F.explode("_items").alias("l_partkey"))
@@ -2848,7 +2839,6 @@ def vocab_coverage_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     from milvus_cdc_spark.functions import text as textf
     from milvus_cdc_spark.operators import windows
 
-    windows.release_rank_caches()  # prior query's rank cache is consumed
     docs = _t(spark, sf_dir, "documents")
     toks = docs.select(
         F.explode(textf.tokens(F.lower(F.col("text")))).alias("term")
@@ -3024,7 +3014,6 @@ def length_lorenz_points(spark: SparkSession, sf_dir: str) -> DataFrame:
     from milvus_cdc_spark.functions import text as textf
     from milvus_cdc_spark.operators import windows
 
-    windows.release_rank_caches()  # prior query's rank cache is consumed
     docs = _t(spark, sf_dir, "documents").select(
         "doc_id",
         "n_chars",
@@ -3133,14 +3122,11 @@ def cluster_density_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _t(spark, sf_dir, "documents")
     # strong feeds TWO consumers (the components iteration AND the
     # per-component edge count) — persist so the band-join + Jaccard
-    # verify runs once, not once per consumer. Registered in the dedup
-    # cache registry: the next pipeline call releases it (same contract
-    # as the shingle frame inside near_dup_pipeline). Measured ~2x on
-    # this query at sf0.1.
-    strong = dedup.near_dup_pipeline(docs, k=8, bands=4).filter(
+    # verify runs once, not once per consumer. Measured ~2x on this
+    # query at sf0.1.
+    strong = cache(dedup.near_dup_pipeline(docs, k=8, bands=4).filter(
         F.col("jaccard") >= 0.2
-    ).persist()
-    dedup._DEDUP_CACHES.append(strong)
+    ))
     comp = dedup.connected_components(strong, shuffle_partitions=8)
     csize = comp.groupBy("component").agg(
         F.count("*").cast("bigint").alias("n_members")

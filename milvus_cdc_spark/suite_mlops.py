@@ -14,6 +14,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from milvus_cdc_spark.cache_registry import cache
 from milvus_cdc_spark.suite import _SQL_COSINE, _t, q
 from milvus_cdc_spark.catalog import local_frame as _local_frame
 
@@ -89,8 +90,6 @@ def pagerank_trade_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top-10 nodes of a {_PR_ITERS}-iteration integer PageRank over the
     symmetrized customer-supplier co-order graph."""
     from milvus_cdc_spark.analytics import graph
-
-    graph.release_graph_caches()  # prior graph query's frames are consumed
 
     # Range predicate, not year() == 1995: a raw-column comparison reaches
     # the parquet scan as a min/max row-group filter (PushedFilters), which
@@ -878,13 +877,11 @@ def kcore_prune_rounds(spark: SparkSession, sf_dir: str) -> DataFrame:
     the 1995 trade graph.
 
     Iteration state is EAGER ``localCheckpoint`` per round, not
-    SUITE_CACHES persists (round-9 verdict "what's wrong" #2: the old
-    persists drained only at the NEXT suite caching query's entry, so a
-    caller whose last query was kcore stranded six edge frames until
-    clearCache). localCheckpoint both truncates the per-round lineage
-    (no exponential recompute across rounds) and scopes the blocks to
-    the returned DataFrame — the ContextCleaner reclaims them when the
-    caller drops the result, with no registry to drain. The FINAL
+    ledger persists (``cache_registry.cache``): localCheckpoint both
+    truncates the per-round lineage (no exponential recompute across
+    rounds) and scopes the blocks to the returned DataFrame — the
+    ContextCleaner reclaims them when the caller drops the result, with
+    no ledger to drain. The FINAL
     round's frames stay lazy so the returned plan keeps the real
     join/aggregate shape (the Lloyd-iteration pattern, SCALE.md §5l);
     its ``alive`` re-derives from the checkpointed previous edge list
@@ -1007,17 +1004,13 @@ def source_overlap_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _t(spark, sf_dir, "documents")
     # the per-source shingle set feeds THREE consumers (both pair sides
     # + the per-source counts) — persist so the shingle explode and its
-    # distinct shuffle run once (dedup cache contract: released by the
-    # next dedup query)
-    dedup.release_dedup_caches()
-    sh = (
+    # distinct shuffle run once
+    sh = cache(
         dedup.shingle_rows(docs, n=3)
         .join(F.broadcast(docs.select("doc_id", "source")), "doc_id")
         .select("source", F.md5(F.col("s")).alias("k"))
         .distinct()
-        .persist()
     )
-    dedup._DEDUP_CACHES.append(sh)
     per_src = sh.groupBy("source").agg(F.count("*").alias("c"))
     x = sh.select(F.col("source").alias("source_a"), "k")
     y = sh.select(F.col("source").alias("source_b"), "k")

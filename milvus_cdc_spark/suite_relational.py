@@ -16,6 +16,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from milvus_cdc_spark.cache_registry import cache
 from milvus_cdc_spark.suite import _SQL_COSINE, _SQL_TOKS, _t, q
 from milvus_cdc_spark.catalog import local_frame as _local_frame
 
@@ -523,12 +524,8 @@ def ntile_quartiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact ntile(4) via windows.distributed_ntile — range-partitioned
     rank + arithmetic tiling, NO Exchange SinglePartition (the r2/r3
     global-window shape funneled every order through one task's sort)."""
-    from milvus_cdc_spark.operators.windows import (
-        distributed_ntile,
-        release_rank_caches,
-    )
+    from milvus_cdc_spark.operators.windows import distributed_ntile
 
-    release_rank_caches()  # prior query's rank cache is consumed by now
     o = (
         _t(spark, sf_dir, "orders")
         .filter(F.col("o_orderstatus") == "F")
@@ -1800,12 +1797,8 @@ def error_spike_detection(spark: SparkSession, sf_dir: str) -> DataFrame:
     no static bound exists to plant. Rank semantics == lag semantics
     (previous existing bucket, gaps included) regardless of missing
     hours (r12 full gate sweep)."""
-    from milvus_cdc_spark.operators.windows import (
-        distributed_row_number,
-        release_rank_caches,
-    )
+    from milvus_cdc_spark.operators.windows import distributed_row_number
 
-    release_rank_caches()  # prior query's rank cache is consumed by now
     ev = _t(spark, sf_dir, "events")
     hourly = (
         ev.groupBy(F.window("ts", "1 hour").alias("w"))
@@ -2146,9 +2139,7 @@ def vocab_build(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Tokenizer vocabulary: document frequencies with stable
     (df desc, term) rank ids, min_df=2."""
     from milvus_cdc_spark.analytics import corpus
-    from milvus_cdc_spark.operators.windows import release_rank_caches
 
-    release_rank_caches()  # prior query's rank cache is consumed by now
     docs = _t(spark, sf_dir, "documents")
     v = corpus.build_vocab(docs, min_df=2)
     return v.select(
@@ -2899,15 +2890,13 @@ def pipeline_stage_accounting(spark: SparkSession, sf_dir: str) -> DataFrame:
     build publishes."""
     from milvus_cdc_spark.analytics import corpus as corpus_ops
     from milvus_cdc_spark.functions import text as textf
-    from milvus_cdc_spark.suite import cache_frame, release_suite_caches
 
-    release_suite_caches()
     docs = _t(spark, sf_dir, "documents")
     # base heads every stage arm (5 unioned counts re-derive the
     # token_count + rolling-hash fingerprint projection), and dc — whose
     # lineage embeds the n-gram decontaminate join — heads two; persist
     # each once (the scan audit counted 9 documents scans unpersisted)
-    base = cache_frame(docs.select(
+    base = cache(docs.select(
         "doc_id",
         "lang",
         textf.token_count(F.col("text")).alias("n_tokens"),
@@ -2918,7 +2907,7 @@ def pipeline_stage_accounting(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = docs.filter(F.col("doc_id") % 97 == 0)
     tr = docs.filter(F.col("doc_id") % 97 != 0)
     contaminated = corpus_ops.decontaminate(tr, ev, n=3).select("doc_id")
-    dc = cache_frame(
+    dc = cache(
         q_.filter(F.col("doc_id") % 97 != 0)
         .join(contaminated, "doc_id", "left_anti")
     )
@@ -4000,12 +3989,8 @@ def ccnet_perplexity_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Head/middle/tail LM-difficulty terciles per language — CCNet's
     perplexity bucketing with the exact distributed ntile."""
     from milvus_cdc_spark.functions import text as textf
-    from milvus_cdc_spark.operators.windows import (
-        distributed_ntile,
-        release_rank_caches,
-    )
+    from milvus_cdc_spark.operators.windows import distributed_ntile
 
-    release_rank_caches()
     docs = _t(spark, sf_dir, "documents")
     toks = docs.select(
         "doc_id", F.explode(textf.tokens(F.lower(F.col("text")))).alias("tok")
@@ -4528,12 +4513,10 @@ def preference_pair_builder(spark: SparkSession, sf_dir: str) -> DataFrame:
     wb = Window.partitionBy("source").orderBy(F.col("nll").asc(), "doc_id")
     ww = Window.partitionBy("source").orderBy(F.col("nll").desc(), "doc_id")
     wn = Window.partitionBy("source")
-    from milvus_cdc_spark.suite import cache_frame, release_suite_caches
 
-    release_suite_caches()
     # ranked feeds both pair sides; unpersisted, each re-runs the token
     # explode + unigram-LM scoring + three windows
-    ranked = cache_frame(per_doc.select(
+    ranked = cache(per_doc.select(
         "source",
         "doc_id",
         "nll",

@@ -19,6 +19,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from milvus_cdc_spark import catalog
+from milvus_cdc_spark.cache_registry import cache
 from milvus_cdc_spark.suite import _SQL_COSINE, _t, q
 
 # ---------------------------------------------------------------------------
@@ -1558,11 +1559,9 @@ def pq_adc_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = _t(spark, sf_dir, "embeddings")
     # cb feeds the encoder AND the query LUT; codes feed the ADC scan —
     # persist both so the per-subspace Lloyd training and the encode run
-    # once (the index tables a real build writes; _SIM_CACHES contract)
-    similarity.release_similarity_caches()
-    cb = similarity.pq_train(emb, m=_PQ_M, k=_PQ_K, iters=2, dim=64).persist()
-    codes = similarity.pq_encode(emb, cb, m=_PQ_M, dim=64).persist()
-    similarity._SIM_CACHES.extend([cb, codes])
+    # once (the index tables a real build writes)
+    cb = cache(similarity.pq_train(emb, m=_PQ_M, k=_PQ_K, iters=2, dim=64))
+    codes = cache(similarity.pq_encode(emb, cb, m=_PQ_M, dim=64))
     queries = emb.filter(F.col("vec_id") < 5)
     approx = similarity.pq_adc_topk(codes, cb, queries, k=10, m=_PQ_M, dim=64)
     exact = similarity.metric_topk(emb, queries, metric="l2", k=10)
@@ -2892,12 +2891,10 @@ def ivf_nprobe_recall_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     # exact and the corpus list assignment are re-referenced across the
     # sweep — compute each once (the scan audit counted 24 parquet scans
     # in the unpersisted plan)
-    similarity.release_similarity_caches()
-    exact = similarity.brute_force_topk(emb, queries, k=3).select(
+    exact = cache(similarity.brute_force_topk(emb, queries, k=3).select(
         "query_id", "neighbor_id"
-    ).persist()
-    corpus_lists = similarity.ivf_assign(emb, centroids, n_probe=1).persist()
-    similarity._SIM_CACHES.extend([exact, corpus_lists])
+    ))
+    corpus_lists = cache(similarity.ivf_assign(emb, centroids, n_probe=1))
 
     probes = similarity.ivf_assign(
         queries, centroids, n_probe=4, with_rank=True

@@ -203,21 +203,22 @@ def test_kcore_rounds_shrink_monotonically(spark, sf_dir):
 
 def test_kcore_strands_nothing_in_suite_caches(spark, sf_dir):
     """Round-9 verdict "what's wrong" #2: kcore's per-round persists used
-    to drain only at the NEXT suite caching query's entry, so a caller
-    whose LAST query was kcore left six edge frames cached. The rewrite
-    uses per-round eager localCheckpoint (blocks scoped to the result's
-    lifetime via the ContextCleaner), so SUITE_CACHES must be untouched
-    by a kcore run — reclaimable without running another suite query."""
+    to outlive the query until some later query released them. The
+    rewrite uses per-round eager localCheckpoint (blocks scoped to the
+    result's lifetime via the ContextCleaner), so a kcore dispatch must
+    leave the persist ledger empty — nothing waits on another dispatch."""
+    from milvus_cdc_spark import cache_registry
     from milvus_cdc_spark import suite as s
 
-    before = len(s.SUITE_CACHES)
     res = s.QUERIES["kcore_prune_rounds"].fn(spark, sf_dir)
     rows = res.collect()
     assert len(rows) == 3
-    assert len(s.SUITE_CACHES) == before, (
-        "kcore registered frames in SUITE_CACHES; the localCheckpoint "
+    assert cache_registry._ledger() == [], (
+        "kcore cached frames in the persist ledger; the localCheckpoint "
         "rewrite must leave no deferred-release residue"
     )
+
+
 def test_source_overlap_matrix_is_symmetric_complete(spark, sf_dir):
     from milvus_cdc_spark.suite import QUERIES
 
@@ -334,7 +335,6 @@ def test_pagerank_property_random_graphs(spark):
             r["node"]: r["score"]
             for r in graph.pagerank(df, n_iter=2).collect()
         }
-        graph.release_graph_caches()
         assert got == _py_pagerank(edges, n_iter=2)
 
     check()
@@ -374,7 +374,6 @@ def test_triangle_counts_matches_bruteforce(spark):
     ]
     df = spark.createDataFrame(pairs, "a bigint, b bigint")
     got = {r.node: r.triangles for r in graph.triangle_counts(df).collect()}
-    graph.release_graph_caches()
     assert got == _py_triangles(pairs)
 
 
@@ -397,7 +396,6 @@ def test_triangle_counts_property_random_graphs(spark):
         got = {
             r.node: r.triangles for r in graph.triangle_counts(df).collect()
         }
-        graph.release_graph_caches()
         assert got == _py_triangles(pairs)
 
     check()
@@ -605,7 +603,6 @@ def test_label_propagation_matches_python(spark):
             r.node: r.label
             for r in graph.label_propagation(df, n_rounds=rounds).collect()
         }
-        graph.release_graph_caches()
         # python mirror
         adj = {}
         for a, b in pairs:
@@ -696,28 +693,3 @@ def test_containment_join_property_random_sets(spark):
         assert got == want
 
     check()
-
-
-def test_release_dedup_caches_empties_registry(spark):
-    """set_similarity_join/containment_join/near_dup_pipeline register
-    their persisted intermediates and RELEASE the prior call's at entry
-    (self-maintaining — callers can't forget), so a long-lived session
-    never accumulates more than the in-flight query's frames;
-    release_dedup_caches() drains the remainder."""
-    from milvus_cdc_spark.analytics import dedup
-
-    dedup.release_dedup_caches()  # clean slate (other tests may register)
-    df = spark.createDataFrame(
-        [(0, "a"), (0, "b"), (1, "a"), (1, "b")], "id bigint, item string"
-    )
-    dedup.set_similarity_join(df, threshold_ppm=500000).collect()
-    first = list(dedup._DEDUP_CACHES)
-    assert len(first) == 1 and first[0].is_cached
-    dedup.containment_join(df, threshold_ppm=500000).collect()
-    # entry release consumed the set_similarity_join cache
-    assert len(dedup._DEDUP_CACHES) == 1
-    assert not first[0].is_cached
-    cached = list(dedup._DEDUP_CACHES)
-    dedup.release_dedup_caches()
-    assert len(dedup._DEDUP_CACHES) == 0
-    assert all(not c.is_cached for c in cached)

@@ -5,6 +5,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
+from milvus_cdc_spark import cache_registry
 from milvus_cdc_spark.operators import apply as apply_op
 from milvus_cdc_spark.operators import barriers, filters, joins, windows
 
@@ -1132,10 +1133,7 @@ def test_embedding_near_dup_respects_caller_cache(spark):
     drop the caller's own cache; levels are not refcounted)."""
     from pyspark import StorageLevel
 
-    from milvus_cdc_spark.analytics.dedup import (
-        embedding_near_dup,
-        release_dedup_caches,
-    )
+    from milvus_cdc_spark.analytics.dedup import embedding_near_dup
 
     dim = 16
     base = [float((i % 5) + 1) / 5.0 for i in range(dim)]
@@ -1147,8 +1145,8 @@ def test_embedding_near_dup_respects_caller_cache(spark):
         assert got.count() == 1
         # the caller's cache must still be registered at ITS chosen level
         assert df.storageLevel.useDisk and not df.storageLevel.useMemory
-        # and the next dedup call's entry-release must not touch it
-        release_dedup_caches()
+        # and the next dispatch's release must not touch it
+        cache_registry.release()
         assert df.storageLevel.useDisk
     finally:
         df.unpersist()
@@ -2090,10 +2088,7 @@ def test_distributed_prefix_sum_matches_builtin(spark):
     """distributed_prefix_sum == the global-window running sum for both
     frame variants, on data with heavy duplicate order values (unique
     tie-break key) and negative values."""
-    from milvus_cdc_spark.operators.windows import (
-        distributed_prefix_sum,
-        release_rank_caches,
-    )
+    from milvus_cdc_spark.operators.windows import distributed_prefix_sum
     from pyspark.sql import Window
 
     df = spark.range(507).select(
@@ -2118,19 +2113,16 @@ def test_distributed_prefix_sum_matches_builtin(spark):
                 df, ["v", "id"], "x", n_partitions=8, inclusive=inclusive
             ).collect()
         }
-        release_rank_caches()
+        cache_registry.release()
         assert got == want, f"inclusive={inclusive}"
 
 
 def test_distributed_prefix_sum_empty_input(spark):
-    from milvus_cdc_spark.operators.windows import (
-        distributed_prefix_sum,
-        release_rank_caches,
-    )
+    from milvus_cdc_spark.operators.windows import distributed_prefix_sum
 
     df = spark.range(0).select(F.col("id"), F.lit(1).alias("x"))
     assert distributed_prefix_sum(df, ["id"], "x").count() == 0
-    release_rank_caches()
+    cache_registry.release()
 
 
 def test_asof_union_join_semantics(spark):
@@ -2334,40 +2326,32 @@ def test_silhouette_matches_python_reference_property(spark):
     run()
 
 
-def test_cache_registries_release_on_next_build(spark, sf_dir):
-    """The release-at-next-build contract actually releases: running a
-    cache-registering query twice leaves exactly one generation of
-    frames in each registry (no unbounded growth across a long driver
-    session), and the release call empties it."""
+def test_dispatch_keeps_one_query_of_cached_frames(spark, sf_dir):
+    """Each registry dispatch releases the frames this thread's previous
+    query cached, so a long driver session holds one query's frames, not
+    one generation per operator family. The queries cache through
+    different modules: the similarity build, the BM25 index and the
+    suite's own persists."""
     from milvus_cdc_spark import suite as s
-    from milvus_cdc_spark.analytics import similarity, textrank
 
-    q = s.QUERIES["pq_adc_recall"].fn
-    q(spark, sf_dir).count()
-    first = list(similarity._SIM_CACHES)
-    q(spark, sf_dir).count()
-    second = list(similarity._SIM_CACHES)
-    assert len(second) == len(first)  # one generation, not two
-    assert not any(df is old for df in second for old in first)
-    similarity.release_similarity_caches()
-    assert not similarity._SIM_CACHES
+    def cached(df):
+        return df.storageLevel.useMemory or df.storageLevel.useDisk
 
-    q2 = s.QUERIES["bm25_topk"].fn
-    q2(spark, sf_dir).count()
-    n1 = len(textrank._TEXT_CACHES)
-    q2(spark, sf_dir).count()
-    assert len(textrank._TEXT_CACHES) == n1
-    textrank.release_text_caches()
-    assert not textrank._TEXT_CACHES
-
-    q3 = s.QUERIES["pipeline_stage_accounting"].fn
-    q3(spark, sf_dir).count()
-    n1 = len(s.SUITE_CACHES)
-    q3(spark, sf_dir).count()
-    assert len(s.SUITE_CACHES) == n1
-    s.release_suite_caches()
-    assert not s.SUITE_CACHES
-    spark.catalog.clearCache()
+    # no two neighbours share a plan: the cache is keyed by plan, so a
+    # repeat would show the prior frames cached again under the new ones
+    prev = []
+    for name in ("pq_adc_recall", "fulltext_sparse_search",
+                 "pipeline_stage_accounting", "pq_adc_recall"):
+        s.QUERIES[name].fn(spark, sf_dir).count()
+        frames = list(cache_registry._ledger())
+        assert frames and all(cached(f) for f in frames), name
+        assert not any(f.is_cached or cached(f) for f in prev), (
+            f"{name} kept the prior frames"
+        )
+        prev = frames
+    cache_registry.release()
+    assert cache_registry._ledger() == []
+    assert not any(cached(f) for f in prev)
 
 
 def test_char_concentration_fold_matches_python_reference(spark):
@@ -2464,7 +2448,7 @@ def test_rank_join_lag_equals_window_lag_with_gaps(spark):
             .collect()
         }
         assert got == expected, (trial, sorted(got), sorted(expected))
-        windows.release_rank_caches()
+        cache_registry.release()
 
 
 def test_confusion_matrix_unpivot_equals_class_cross(spark):

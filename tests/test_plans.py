@@ -12,7 +12,7 @@ import pytest
 
 from pyspark.sql import functions as F
 
-from milvus_cdc_spark import suite
+from milvus_cdc_spark import cache_registry, suite
 from milvus_cdc_spark.plans import audit
 
 
@@ -342,18 +342,20 @@ def test_vocab_build_has_no_single_partition_window(spark, sf_dir):
 
 
 def test_rank_cache_release(spark):
-    """distributed_ntile/row_number register their persisted intermediate
-    so long-lived sessions can free it; release empties the registry."""
+    """distributed_row_number caches its range-ranked intermediate in the
+    persist ledger, so the next dispatch frees it; release empties the
+    ledger and unpersists the frame."""
     from milvus_cdc_spark.operators import windows
 
-    windows.release_rank_caches()
+    cache_registry.release()
     df = spark.range(100).withColumnRenamed("id", "v")
     out = windows.distributed_row_number(df, ["v"], n_partitions=4, rank_col="rk")
-    assert len(windows._RANK_CACHES) == 1
+    (local,) = cache_registry._ledger()
     rows = {r.v: r.rk for r in out.collect()}
     assert rows == {v: v + 1 for v in range(100)}
-    windows.release_rank_caches()
-    assert not windows._RANK_CACHES
+    cache_registry.release()
+    assert cache_registry._ledger() == []
+    assert not local.storageLevel.useMemory
 
 
 def test_channel_msg_counts_two_level_aggregate(spark, sf_dir):
@@ -536,11 +538,9 @@ def test_roc_auc_prefix_sum_is_distributed(spark, sf_dir):
     range-partitioned prefix-sum, never a global-order window: no
     Exchange SinglePartition except the final 1-row scalar-aggregate
     merge, and a rangepartitioning exchange present."""
-    from milvus_cdc_spark.operators import windows
-
     df = suite.QUERIES["roc_auc_quality"].fn(spark, sf_dir)
     plan = audit.formatted_plan(df)
-    windows.release_rank_caches()
+    cache_registry.release()
     assert "rangepartitioning" in plan.lower()
     # the only SinglePartition allowed is the final scalar-agg merge of
     # the 1-row output — there must be at most one, and no global-sort
@@ -743,8 +743,6 @@ def test_bulk_drop_replay_single_oplog_scan(spark, sf_dir):
     out of the persisted aggregate — the raw lineitem scan must appear
     exactly once in the plan (the old shape re-ran the source scan +
     derivation chain once per cutoff dim: 3x read amplification)."""
-    from milvus_cdc_spark.operators.apply import release_apply_caches
-
     df = suite.QUERIES["partition_drop_replay"].fn(spark, sf_dir)
     plan = audit.formatted_plan(df)
     # formatted mode re-renders the cached InMemoryRelation subtree under
@@ -755,7 +753,7 @@ def test_bulk_drop_replay_single_oplog_scan(spark, sf_dir):
     assert len(scan_nodes) == 1, plan[:3000]
     assert "InMemoryTableScan" in plan, plan[:3000]
     assert "CartesianProduct" not in plan
-    release_apply_caches()
+    cache_registry.release()
 
 
 def test_co_group_pairs_no_self_join(spark, sf_dir):

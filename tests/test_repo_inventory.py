@@ -138,3 +138,65 @@ def test_every_engine_function_is_named_elsewhere():
                 if words[node.name] <= own:
                     unnamed.append(f"{os.path.relpath(p, ROOT)}:{node.name}")
     assert not unnamed, f"functions nothing names: {sorted(unnamed)}"
+
+
+def _release_call_sites(path: str) -> list:
+    """``(module, enclosing function)`` of every call of
+    ``cache_registry.release`` in ``path``, under any import alias."""
+    tree = ast.parse(open(path).read())
+    modules, funcs = set(), set()
+    for node in ast.walk(tree):
+        if isinstance(node, ast.ImportFrom) and node.module == "milvus_cdc_spark":
+            modules |= {a.asname or a.name for a in node.names if a.name == "cache_registry"}
+        elif isinstance(node, ast.ImportFrom) and node.module == "milvus_cdc_spark.cache_registry":
+            funcs |= {a.asname or a.name for a in node.names if a.name == "release"}
+        elif isinstance(node, ast.Import):
+            modules |= {
+                a.asname for a in node.names
+                if a.name == "milvus_cdc_spark.cache_registry" and a.asname
+            }
+    sites = []
+
+    def visit(node, owner):
+        for child in ast.iter_child_nodes(node):
+            if isinstance(child, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                visit(child, owner or child.name)
+                continue
+            if isinstance(child, ast.Call):
+                f = child.func
+                if (isinstance(f, ast.Name) and f.id in funcs) or (
+                    isinstance(f, ast.Attribute) and f.attr == "release"
+                    and isinstance(f.value, ast.Name) and f.value.id in modules
+                ):
+                    sites.append((os.path.relpath(path, ROOT), owner))
+            visit(child, owner)
+
+    visit(tree, None)
+    return sites
+
+
+def test_one_persist_ledger_released_only_at_dispatch():
+    """The engine keeps ONE persist ledger (``cache_registry``) and
+    releases it in ONE place: the registry dispatch that ``suite.q``
+    stores in ``QuerySpec.fn``. A second ``threading.local()`` or a
+    ``CacheRegistry`` would bring back per-family ledgers; a release
+    inside an operator or a query would drop frames a caller may still
+    be reading."""
+    engine = os.path.join(ROOT, "milvus_cdc_spark")
+    ledgers, sites = [], []
+    for p in _python_files(engine):
+        sites += _release_call_sites(p)
+        if os.path.basename(p) == "cache_registry.py":
+            continue
+        for node in ast.walk(ast.parse(open(p).read())):
+            name = getattr(node, "id", None) or getattr(node, "attr", None)
+            owner = getattr(getattr(node, "value", None), "id", None)
+            if (
+                name == "CacheRegistry"
+                or (name == "local" and owner == "threading")
+                or (isinstance(node, ast.ImportFrom) and node.module == "threading"
+                    and "local" in {a.name for a in node.names})
+            ):
+                ledgers.append(f"{os.path.relpath(p, ROOT)}:{node.lineno}")
+    assert not ledgers, f"a second ledger: {ledgers}"
+    assert sites == [("milvus_cdc_spark/suite.py", "q")], sites

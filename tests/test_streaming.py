@@ -16,7 +16,7 @@ from milvus_cdc_spark.control.tasks import (
 )
 from milvus_cdc_spark.operators import apply as apply_op
 from milvus_cdc_spark.streaming import repair
-from milvus_cdc_spark.streaming.pipeline import CdcApplyPipeline
+from milvus_cdc_spark.streaming.pipeline import CdcApplyPipeline, batch_records
 
 SCRIPTS = os.path.join(
     os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "scripts"
@@ -754,8 +754,6 @@ def test_observed_metrics_count_ops(spark, oplog_dir, sf_dir):
     a new pipeline over the work dir, TaskRegistry.get and a restarted
     registry read the same ones."""
     from collections import Counter
-
-    from milvus_cdc_spark.streaming.pipeline import batch_records
 
     root = tempfile.mkdtemp(prefix="obs_")
     registry = TaskRegistry(spark, root)
@@ -2105,7 +2103,7 @@ def test_apply_batch_job_budget(spark):
     adds four: the repaired write (map + write) and the read-back of its
     per-vchannel max (map + collect); its channel max is driver-folded
     into the manifest, so it adds no state read or write (thirteen
-    before)."""
+    before). The record times the mirror as ``mirror_write``."""
     import uuid
 
     sc = spark.sparkContext
@@ -2125,6 +2123,10 @@ def test_apply_batch_job_budget(spark):
         jobs = sc.statusTracker().getJobIdsForGroup(group)
         assert len(jobs) <= budget, (mirror, sorted(jobs))
         assert pipe.last_batch_id == 1
+        # the mirror's write and read-back are their own phase, not
+        # positions_write's
+        phases = batch_records(pipe.manifest)[-1]["phases"]
+        assert ("mirror_write" in phases) == mirror, phases
 
 
 def test_driver_written_positions_read_back(spark, sf_dir):

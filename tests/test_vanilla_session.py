@@ -71,6 +71,7 @@ for name in (
     "kmeans_silhouette",        # long-form Lloyd step, no codegen conf
     "streaming_cdc_apply",      # CDC merge at 200 shuffle partitions
     "streaming_positions",      # manifest positions via local_frame, Arrow off
+    "multimodal_features",      # mapInPandas closure on workers without the checkout
 ):
     spec = suite.QUERIES[name]
     spdf = spec.fn(spark, SF_DIR).toPandas()
@@ -93,13 +94,17 @@ shutil.rmtree(tempfile.tempdir, ignore_errors=True)
 """
 
 
-def test_vanilla_session_contract():
+def test_vanilla_session_contract(tmp_path):
+    # run outside the checkout: the driver has it on sys.path, the Python
+    # workers do not, so a UDF closure that names an engine module fails
+    # to unpickle there
     out = subprocess.run(
         [sys.executable, "-c", SCRIPT,
          os.path.dirname(os.path.dirname(os.path.abspath(__file__)))],
         capture_output=True,
         text=True,
         timeout=600,
+        cwd=tmp_path,
     )
     assert out.returncode == 0, out.stderr[-3000:]
     assert "VANILLA_CONTRACT_OK" in out.stdout
