@@ -370,12 +370,12 @@ def _canary_norm(value: float, canary2: float | None) -> float | None:
 #: eventually drawn — later than the 3-round pass, never never.
 BCOV_WINDOW = 39
 #: r12 starts the rotation at the alphabetical front; r13 -> 39,
-#: r14 -> 78, r15 -> 117. The ring has 116 untimed names, so the
-#: first full pass completed with r14 (offsets 0/39/78 cover indices
-#: 0..115 plus the wrap) and 117 ≡ 1 begins the second pass — every
-#: window from here on is a RE-timing, giving the moving-window
-#: coverage its first same-name cross-cycle comparisons.
-BCOV_ROUND_OFFSET = 117
+#: r14 -> 78, r15 -> 117, r16 -> 156. The ring has 116 untimed names,
+#: so the first full pass completed with r14 (offsets 0/39/78 cover
+#: indices 0..115 plus the wrap) and 117 ≡ 1 began the second pass —
+#: every window from there on is a RE-timing, giving the moving-window
+#: coverage its same-name cross-cycle comparisons.
+BCOV_ROUND_OFFSET = 156
 
 
 def _bcov_names() -> list[str]:
@@ -446,10 +446,9 @@ def run_queries(
             spark.catalog.clearCache()
         t0 = time.time()
         df = spec.fn(spark, sf_dir)
-        n = df.count() if hasattr(df, "count") else len(df.collect())
+        df.count()
         t = round(time.time() - t0, 3)
         timings[name] = t
-        _ = n
         spark.catalog.clearCache()
         ref_t = (ref or {}).get(name)
         stalled = bool(ref_t and t > 3 * ref_t and t - ref_t > 1.0)
@@ -459,14 +458,12 @@ def run_queries(
         # catch its own mega-stalls
         stalled = stalled or t > REDRAW_ABS_SEC
         if redraws is not None and stalled:
-            # The redraw is an auxiliary measurement: mirror the
-            # count/collect fallback of the primary path and never let
-            # a transient redraw error kill the whole bench session —
-            # a failed redraw just drops the redraws entry (r13 ADVICE).
+            # The redraw is an auxiliary measurement: never let a
+            # transient redraw error kill the whole bench session — a
+            # failed redraw just drops the redraws entry (r13 ADVICE).
             try:
                 t1 = time.time()
-                df2 = spec.fn(spark, sf_dir)
-                _ = df2.count() if hasattr(df2, "count") else len(df2.collect())
+                spec.fn(spark, sf_dir).count()
                 t2 = round(time.time() - t1, 3)
                 redraws[name] = [t, t2]
             except Exception as e:
@@ -475,90 +472,59 @@ def run_queries(
     return timings
 
 
-def _canary_sec(spark, sf_dir: str | None = None) -> float | None:
-    """VM-speed canary: median of 5 timed runs of q1_pricing_summary at a
-    FIXED scale factor (sf0.01), executed right after JVM warm-up in
-    every bench session (each segment JVM and the full-suite JVM).
+def _canary(spark, sf_dir: str | None, name: str, n: int) -> float | None:
+    """VM-speed canary: median of ``n`` timed runs of the frozen query
+    ``name`` at a FIXED scale factor (sf0.01), executed right after JVM
+    warm-up in every bench session (each segment JVM and the full-suite
+    JVM). Two canaries run: q1_pricing_summary x5 (``canary_sec``) and
+    cosine_topk x3 (``canary2_sec``).
 
     Purpose: cross-round bench comparisons kept tripping over whole-VM
     speed drift (r8: a uniform ~1.16x inflation across 22 untouched
     anchor queries had to be argued away via a median-of-untouched
-    analysis). A fixed trivial query whose code never changes gives a
+    analysis). A fixed query whose code never changes gives a
     mechanical normalizer: divide any segment number by the ratio of its
-    JVM's canary to a prior round's canary. Median of 5 (3 through r9;
-    widened per the r9 verdict — the ±20% noise floor of 3 samples was
-    close to the drift it measures) absorbs one-time codegen/footer
-    costs; a run that fails returns None rather than costing the machine
-    line.
-
-    The canary dir is the ``sf0.01`` SIBLING of the bench's data root
-    (``sf_dir``) so the canary follows the data tree on any machine,
-    falling back to the canonical testdata path; a skip is announced on
-    stderr instead of silently dropping cross-round normalization
-    (round-9 ADVICE)."""
-    candidates = []
-    if sf_dir:
-        candidates.append(os.path.join(os.path.dirname(sf_dir.rstrip("/")), "sf0.01"))
-    candidates.append("/root/testdata/sf0.01")
-    canary_dir = next((d for d in candidates if os.path.isdir(d)), None)
-    spec = suite.QUERIES.get("q1_pricing_summary")
-    if spec is None or canary_dir is None:
-        print(
-            f"canary skipped: no sf0.01 dir among {candidates}"
-            if spec is not None
-            else "canary skipped: q1_pricing_summary not registered",
-            file=sys.stderr,
-        )
-        return None
-    try:
-        samples = []
-        for _ in range(5):
-            t0 = time.time()
-            spec.fn(spark, canary_dir).count()
-            samples.append(time.time() - t0)
-            spark.catalog.clearCache()
-        return round(sorted(samples)[2], 3)
-    except Exception as e:  # auxiliary — never break the bench line
-        print(f"canary failed: {e!r}", file=sys.stderr)
-        return None
-
-
-def _canary2_sec(spark, sf_dir: str | None = None) -> float | None:
-    """Parallel-stage canary: median of 3 timed runs of cosine_topk at
-    sf0.01, right after the q1 canary in every bench JVM.
+    JVM's canary to a prior round's canary. Median of 5 for q1 (3
+    through r9; widened per the r9 verdict — the ±20% noise floor of 3
+    samples was close to the drift it measures) absorbs one-time
+    codegen/footer costs.
 
     Why a second canary (r12): the q1 canary is a 0.4-0.6 s scan-agg
     whose runtime is dominated by fixed per-query overheads, so it
-    UNDER-CORRECTS slowdowns of 32-way-parallel compute stages — the
-    documented calibration limit that left r11's elevated segment draws
-    arguable until a tree-vs-tree A/B settled them. cosine_topk is a
-    round-1 anchor (frozen code), embarrassingly parallel (brute-force
-    scorer over every row), and ~4x the q1 canary's weight — exactly
-    the stage shape the blind spot hides. Reading rule: normalize
-    SEGMENT numbers by THIS canary's ratio once two rounds of data
-    exist (first recorded r12); q1's `canary_sec` remains the
-    cross-round reference chain back to r9. Median of 3 (not 5): the
-    probe is ~4x heavier, and its job is segment-scale drift, not the
-    q1 chain's tighter floor."""
+    UNDER-CORRECTS slowdowns of 32-way-parallel compute stages.
+    cosine_topk is a round-1 anchor (frozen code), embarrassingly
+    parallel (brute-force scorer over every row), and ~4x the q1
+    canary's weight — exactly the stage shape the blind spot hides.
+    Reading rule: normalize SEGMENT numbers by the cosine_topk ratio;
+    q1's ``canary_sec`` remains the cross-round reference chain back to
+    r9. Median of 3 there: the probe is ~4x heavier, and its job is
+    segment-scale drift, not the q1 chain's tighter floor.
+
+    The canary dir is the ``sf0.01`` SIBLING of the bench's data root
+    (``sf_dir``) so the canary follows the data tree on any machine,
+    falling back to the canonical testdata path. A skip is announced on
+    stderr, and a run that fails returns None rather than costing the
+    machine line."""
     candidates = []
     if sf_dir:
         candidates.append(os.path.join(os.path.dirname(sf_dir.rstrip("/")), "sf0.01"))
     candidates.append("/root/testdata/sf0.01")
     canary_dir = next((d for d in candidates if os.path.isdir(d)), None)
-    spec = suite.QUERIES.get("cosine_topk")
+    spec = suite.QUERIES.get(name)
     if spec is None or canary_dir is None:
-        print("canary2 skipped: missing query or sf0.01 dir", file=sys.stderr)
+        print(f"canary {name} skipped: query or sf0.01 dir missing "
+              f"(looked in {candidates})", file=sys.stderr)
         return None
     try:
         samples = []
-        for _ in range(3):
+        for _ in range(n):
             t0 = time.time()
             spec.fn(spark, canary_dir).count()
             samples.append(time.time() - t0)
             spark.catalog.clearCache()
-        return round(sorted(samples)[1], 3)
+        return round(sorted(samples)[n // 2], 3)
     except Exception as e:  # auxiliary — never break the bench line
-        print(f"canary2 failed: {e!r}", file=sys.stderr)
+        print(f"canary {name} failed: {e!r}", file=sys.stderr)
         return None
 
 
@@ -602,8 +568,8 @@ def run_segment_mode(
     spark = get_spark(f"bench-{segment}")
     spark.sparkContext.setLogLevel("ERROR")
     spark.range(1000).selectExpr("sum(id)").collect()
-    canary = _canary_sec(spark, sf_dir)
-    canary2 = _canary2_sec(spark, sf_dir)
+    canary = _canary(spark, sf_dir, "q1_pricing_summary", 5)
+    canary2 = _canary(spark, sf_dir, "cosine_topk", 3)
     redraws: dict[str, list[float]] = {}
     timings = run_queries(
         spark,
@@ -707,8 +673,8 @@ def main() -> None:
     spark = get_spark("bench")
     spark.sparkContext.setLogLevel("ERROR")
     spark.range(1000).selectExpr("sum(id)").collect()
-    canary = _canary_sec(spark, sf_dir)
-    canary2 = _canary2_sec(spark, sf_dir)
+    canary = _canary(spark, sf_dir, "q1_pricing_summary", 5)
+    canary2 = _canary(spark, sf_dir, "cosine_topk", 3)
 
     # Front, MID, and END canaries in the suite JVM (r10 verdict #2):
     # the 251-query single-JVM session accumulates state (codegen cache
@@ -722,11 +688,11 @@ def main() -> None:
     half = [n for _, names in SEGMENTS[:7] for n in names]
     rest = [n for _, names in SEGMENTS[7:] for n in names]
     timings = run_queries(spark, half, sf_dir, ref=ref, redraws=redraws)
-    canary_mid = _canary_sec(spark, sf_dir)
+    canary_mid = _canary(spark, sf_dir, "q1_pricing_summary", 5)
     timings.update(
         run_queries(spark, rest, sf_dir, ref=ref, redraws=redraws)
     )
-    canary_end = _canary_sec(spark, sf_dir)
+    canary_end = _canary(spark, sf_dir, "q1_pricing_summary", 5)
     total = round(sum(timings.values()), 3)
 
     subtotals: dict[str, float] = {}

@@ -34,7 +34,7 @@ Design for 100 TB:
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 # Total score mass in integer units: parts-per-10^12 keeps 6+ significant

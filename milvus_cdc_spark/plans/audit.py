@@ -4,6 +4,11 @@ The scale contract for every operator (SURVEY §4): filters and projections
 must reach the parquet scan (PushedFilters / ReadSchema), dimension joins
 must broadcast, and hot expressions must stay inside whole-stage codegen.
 These helpers make that checkable in tests instead of by eyeball.
+:func:`gate` runs the five structural audits (BNLJ build sides,
+SinglePartition exchanges, broadcast provenance, forced-broadcast hints,
+condition-less crosses) on one plan and holds the one rule for which
+verdict fails; ``scripts/dump_plans.py`` applies it to every registered
+query.
 """
 
 from __future__ import annotations
@@ -383,14 +388,6 @@ def bnlj_build_audit(plan: str) -> list[dict]:
     return out
 
 
-def assert_bnlj_bounded(plan: str, context: str = "") -> list[dict]:
-    """Raise AssertionError if any BNLJ build side is unbounded/opaque."""
-    recs = bnlj_build_audit(plan)
-    bad = [r for r in recs if r["verdict"] != "bounded"]
-    assert not bad, f"{context}: unbounded BNLJ build sides: {bad}"
-    return recs
-
-
 def single_partition_audit(plan: str) -> list[dict]:
     """Classify every ``Exchange SinglePartition`` in a formatted plan.
 
@@ -587,14 +584,6 @@ def single_partition_audit(plan: str) -> list[dict]:
     return out
 
 
-def assert_single_partition_benign(plan: str, context: str = "") -> list[dict]:
-    """Raise AssertionError if any SinglePartition exchange is data-sized."""
-    recs = single_partition_audit(plan)
-    bad = [r for r in recs if r["verdict"] != "benign"]
-    assert not bad, f"{context}: data-sized SinglePartition exchanges: {bad}"
-    return recs
-
-
 # ---------------------------------------------------------------------------
 # Broadcast provenance audit (round-10 verdict, next-round #6).
 #
@@ -656,8 +645,9 @@ def _scan_table(detail: str) -> str:
 
 def reused_broadcast_count(plan: str) -> int:
     """Number of ``ReusedExchange`` nodes whose referenced operator is
-    a ``BroadcastExchange``. GATES.json counts these TOGETHER with
-    fresh BroadcastExchanges (the ``bex`` counter): whether the planner
+    a ``BroadcastExchange``. The plan sweep (``scripts/dump_plans.py``)
+    counts these TOGETHER with fresh BroadcastExchanges in GATES.json's
+    ``bex`` counter: whether the planner
     re-derives an identical broadcast subtree or prints a
     ReusedExchange pointing at the first one is JVM-nondeterministic —
     observed r13 as a 410-vs-411 single-node wobble across re-runs of
@@ -1028,15 +1018,6 @@ def _join_bounded_class(st, k, rel, path, table) -> tuple[str, str]:
     )
 
 
-def assert_broadcast_hints_bounded(df: DataFrame, context: str = "") -> list[dict]:
-    """Raise AssertionError if any explicit broadcast hint pins a
-    data-sized side."""
-    recs = broadcast_hint_audit(optimized_logical_plan(df))
-    bad = [r for r in recs if r["verdict"] == "data_sized"]
-    assert not bad, f"{context}: data-sized broadcast hints: {bad}"
-    return recs
-
-
 # ---------------------------------------------------------------------------
 # Condition-less cross audit (round-11 verdict, next-round #4).
 #
@@ -1284,16 +1265,44 @@ def cartesian_audit(plan: str) -> list[dict]:
     return out
 
 
-def assert_cartesian_bounded(
-    plan: str, context: str = "", allow_keyed: bool = False
-) -> list[dict]:
-    """Raise AssertionError on an ``unbounded`` cross, or on a
-    ``keyed_multiplied`` one unless the caller passed ``allow_keyed``
-    (dumps pass ``context in KEYED_CROSS_ALLOWED``)."""
-    recs = cartesian_audit(plan)
-    failing = {"unbounded"} | (
-        set() if allow_keyed else {"keyed_multiplied"}
-    )
-    bad = [r for r in recs if r["verdict"] in failing]
-    assert not bad, f"{context}: unbounded/keyed cross joins: {bad}"
-    return recs
+# ---------------------------------------------------------------------------
+# The plan gate: the one rule that says which verdict fails which audit.
+# ---------------------------------------------------------------------------
+
+#: Gate -> does ``verdict`` fail it for query ``name``. Provenance is
+#: counted, never failed (broadcast_hint_audit owns the forced case).
+_FAILS = {
+    "bnlj": lambda v, name: v != "bounded",
+    "sp": lambda v, name: v != "benign",
+    "bex": lambda v, name: False,
+    "hints": lambda v, name: v == "data_sized",
+    "crosses": lambda v, name: v == "unbounded" or (
+        v == "keyed_multiplied" and name not in KEYED_CROSS_ALLOWED
+    ),
+}
+
+
+def failing(gate_name: str, recs: list[dict], name: str) -> list[dict]:
+    """The records among ``recs`` (one audit's output) that fail gate
+    ``gate_name`` for query ``name``."""
+    return [r for r in recs if _FAILS[gate_name](r["verdict"], name)]
+
+
+def gate(
+    df: DataFrame, name: str
+) -> tuple[str, dict[str, list[dict]], dict[str, list[dict]]]:
+    """Plan ``df`` once and run the five structural audits on it.
+
+    Returns ``(plan, records, fails)``: the formatted physical plan, and
+    per gate (``bnlj``, ``sp``, ``bex``, ``hints``, ``crosses``) its
+    audit records and the ones that fail it for query ``name``."""
+    plan = formatted_plan(df)
+    records = {
+        "bnlj": bnlj_build_audit(plan),
+        "sp": single_partition_audit(plan),
+        "bex": broadcast_provenance_audit(plan),
+        "hints": broadcast_hint_audit(optimized_logical_plan(df)),
+        "crosses": cartesian_audit(plan),
+    }
+    fails = {g: failing(g, recs, name) for g, recs in records.items()}
+    return plan, records, fails

@@ -3435,75 +3435,74 @@ from milvus_cdc_spark import suite_eval  # noqa: E402,F401  (import-for-effect)
 # can lead registration.
 # ---------------------------------------------------------------------------
 
-# Round 15 executes the rotation pre-staged in round 14 (deterministic
-# freshness sweep by (latest green driver round, name) ascending over
-# the cumulative CORRECTNESS_r01-r14 ledger; scripts/rotation_check.py
-# recomputes and gates it): 2 anchors + the 14 r9-remainder rows + the
-# 34 oldest r10-cohort rows (alphabetical analyzer_token_stats ..
-# promo_revenue_ratio). No never-driver-checked registrations exist
-# this round (r15 is an optimization round; nothing new registered).
+# Round 16 executes the rotation rule over the cumulative
+# CORRECTNESS_r01-r15 ledger (deterministic freshness sweep by (latest
+# green correctness round, name) ascending; scripts/rotation_check.py
+# recomputes and gates it): 2 anchors + the 15 r10-cohort remainder rows
+# (partition_drop_replay, red at r15, falls back to its r10 green) + the
+# 33 oldest r11-cohort rows (alphabetical bigram_lm_quality ..
+# quantile_sketch_merge). No never-checked registrations exist.
 #
-# r16 ROTATION PROPOSAL (pre-staged; same rule — rotation_check.py
-# --next prints it from the ledger once CORRECTNESS_r15 lands): anchors
-# + any never-driver-checked r16 registrations (round 0; none at
-# staging time) + the remaining 14 r10-cohort rows — promo_share_by_
-# quarter onward per the ledger — then the oldest r11-cohort rows to
-# fill 50. Recompute at swap time; new registrations sort as round 0
-# and lead the window.
+# r17 ROTATION PROPOSAL (pre-staged; rotation_check.py --next prints it
+# once CORRECTNESS_r16 lands): anchors + any never-checked
+# registrations (round 0) + the remaining r11-cohort rows —
+# range_search_annulus onward per the ledger — then the oldest
+# r12-cohort rows to fill 50. Recompute at swap time; new registrations
+# sort as round 0 and lead the window.
 PRIORITY: tuple[str, ...] = (
-    # -- 2 regression anchors (driver-green r1-r14) --
-    "q1_pricing_summary",        # flagship; TPC-H Q1 agg
-    "cdc_replay_summary",        # A7/K1 replay
-    # -- 14 r9-cohort remainder rows (latest driver check CORRECTNESS_r09) --
-    "simhash_fingerprints",
-    "sole_late_supplier",
-    "sparse_topk",
-    "sq8_quantized_recall",
-    "stratified_mixing",
-    "streaming_dedupe",
-    "streaming_positions",
-    "streaming_stream_join",
-    "streaming_tumbling_window",
-    "text_quality",
-    "tpch_q16_supplier_parts",
-    "tpch_q3_shipping",
-    "tpch_q9_product_profit",
-    "watermark_ts",
-    # -- 34 oldest r10-cohort rows, (round, name) ascending --
-    "analyzer_token_stats",
-    "anti_exists_idle_customers",
-    "bag_set_ops",
-    "banded_cosine_near_dup",
-    "binary_quantized_recall",
-    "channel_msg_counts",
-    "conditional_priority_counts",
-    "corpus_pipeline",
-    "cust_order_distribution",
-    "disjunctive_filter_revenue",
-    "error_spike_detection",
-    "exists_late_orders",
-    "expr_text_match_filter",
-    "forecast_revenue_change",
-    "frame_sample",
-    "fulltext_sparse_search",
-    "grouping_search_group_size",
-    "having_in_large_orders",
-    "hybrid_dense_fulltext_rrf",
-    "ivf_kmeans_build",
-    "ivf_pq_recall",
-    "map_kv_extract",
-    "min_cost_supplier",
-    "nation_balance_share",
-    "near_dup_clusters",
-    "near_dup_pairs",
-    "nested_semi_promo_suppliers",
-    "ngram_decontamination",
+    # -- 2 regression anchors (green r1-r15) --
+    "q1_pricing_summary",       # flagship; TPC-H Q1 agg
+    "cdc_replay_summary",       # A7/K1 replay
+    # -- 15 r10-cohort remainder rows (latest green CORRECTNESS_r10) --
     "partition_drop_replay",
-    "partition_key_routing",
-    "percentile_acctbal",
-    "phrase_match_slop",
-    "pq_adc_recall",
-    "promo_revenue_ratio",
+    "quality_filter_funnel",
+    "rank_analytics",
+    "returned_items_topk",
+    "rolling_hash_fingerprint",
+    "scalar_subquery_small_qty",
+    "streaming_session_window",
+    "streaming_state_tracker",
+    "text_match_retrieval",
+    "top_supplier_revenue",
+    "topk_orders",
+    "tpch_q5_local_volume",
+    "ttl_expiry",
+    "vocab_build",
+    "window_moving_avg",
+    # -- 33 oldest r11-cohort rows, (round, name) ascending --
+    "bigram_lm_quality",
+    "bpe_encode_vocab",
+    "bpe_merge_training",
+    "cdc_alive_rows",
+    "cms_heavy_hitters",
+    "corpus_line_dedup",
+    "default_value_fill",
+    "delete_by_expr_replay",
+    "dsir_importance_selection",
+    "duplicate_span_coverage",
+    "expr_count_star",
+    "full_datatype_roundtrip",
+    "fulltext_drop_ratio",
+    "gopher_repetition_flags",
+    "hamming_banded_join",
+    "histogram_quantile_sketch",
+    "hll_distinct_users",
+    "hll_union_sources",
+    "ivf_nprobe_recall_curve",
+    "kcore_prune_rounds",
+    "ks_drift_test",
+    "label_propagation_communities",
+    "langid_precision_recall",
+    "maxscore_pruned_search",
+    "maxsim_ann_rerank",
+    "maxsim_multivector_topk",
+    "mmr_diversified_search",
+    "ndcg_search_eval",
+    "pagerank_trade_graph",
+    "pii_redaction_stats",
+    "pk_get_by_ids",
+    "quality_canonical_selection",
+    "quantile_sketch_merge",
 )
 
 

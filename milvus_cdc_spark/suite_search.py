@@ -1941,8 +1941,6 @@ def superstructure_search(spark: SparkSession, sf_dir: str) -> DataFrame:
 def search_iterator_page(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Second page (rows 6-10) of a cosine search via the iterator's
     (distance, id) keyset cursor — never re-ranks the first page."""
-    from pyspark.sql import Window
-
     from milvus_cdc_spark.functions import vector as vecf
 
     emb = _t(spark, sf_dir, "embeddings")
@@ -2346,8 +2344,6 @@ def hashed_embedding_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs 0-2 — text-to-vector-search with zero external models; integer
     dot/norm arithmetic end to end."""
     from milvus_cdc_spark.analytics import similarity
-    from milvus_cdc_spark.functions import vector as vecf
-
     from milvus_cdc_spark.partitioning import widen_small_scan
 
     # the tokenize + per-token md5 hashing of every document otherwise

@@ -1,10 +1,19 @@
-"""Regenerate PLANS.md: formatted physical plans of representative
-queries with the scale-relevant properties (PushedFilters, ReadSchema,
-broadcast vs sort-merge, exchange count) visible for review.
+"""The plan sweep: gate every registered query's plan and dump the
+showcase plans for review.
 
 Usage:
   python scripts/dump_plans.py [sf_dir]
   python scripts/dump_plans.py --tag TAG before|after NAME [NAME ...]
+
+The first form plans every registered query once, in one session, through
+``plans/audit.gate`` (BNLJ build sides, SinglePartition exchanges, broadcast
+provenance, forced-broadcast hints, condition-less crosses). It writes
+GATES.json (per-gate node counts, plan errors, gate fails) and PLANS.md:
+the formatted physical plans of the SHOWCASE queries, with the
+scale-relevant properties (PushedFilters, ReadSchema, broadcast vs
+sort-merge, exchange count) visible for review. A query that fails to
+build is a plan error; the run goes on. Exits 1 on any gate fail or plan
+error.
 
 The ``--tag`` form snapshots the named queries' plans at
 ``$SPARK_GRAFT_SF_DIR`` into ``plans/TAG/<name>_<before|after>.txt``,
@@ -14,8 +23,11 @@ Both forms plan with AQE off, so the static plan is readable.
 
 from __future__ import annotations
 
+import json
 import os
 import sys
+import time
+from collections import Counter
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, ROOT)
@@ -142,6 +154,30 @@ SHOWCASE = [
 ]
 
 
+HEADER = [
+    "# PLANS — physical plans of representative queries",
+    "",
+    "Auto-generated by `scripts/dump_plans.py` (AQE off for readability).",
+    "Review targets: filters in `PushedFilters`, pruned `ReadSchema`,",
+    "broadcast joins on dims, bounded exchange counts, every",
+    "BroadcastNestedLoopJoin build side classified bounded by",
+    "`plans/audit.bnlj_build_audit`, every SinglePartition exchange",
+    "classified benign by `plans/audit.single_partition_audit`, every",
+    "BroadcastExchange classified by provenance",
+    "(`plans/audit.broadcast_provenance_audit`: catalog/k/query/dim/",
+    "planner — planner = size-estimate threshold choice, AQE-demoted at",
+    "scale), every EXPLICIT broadcast hint in the optimized logical",
+    "plan classified bounded by `plans/audit.broadcast_hint_audit`",
+    "(`dim_hinted` = hinted RAW dim scan, non-failing but surfaced for",
+    "review — AQE cannot demote a hint), and every condition-less cross",
+    "classified by `plans/audit.cartesian_audit` (keyed-aggregate builds",
+    "multiplying an unbounded stream fail unless reviewed into",
+    "`audit.KEYED_CROSS_ALLOWED`). `plans/audit.gate` says which verdicts",
+    "fail; the same sweep gates every registered query into GATES.json.",
+    "",
+]
+
+
 def main() -> None:
     if sys.argv[1:2] == ["--tag"]:
         if len(sys.argv) < 5 or sys.argv[3] not in ("before", "after"):
@@ -154,116 +190,85 @@ def main() -> None:
     from milvus_cdc_spark.plans import audit
 
     spark = _session()
-
-    out = [
-        "# PLANS — physical plans of representative queries",
-        "",
-        "Auto-generated by `scripts/dump_plans.py` (AQE off for readability).",
-        "Review targets: filters in `PushedFilters`, pruned `ReadSchema`,",
-        "broadcast joins on dims, bounded exchange counts, every",
-        "BroadcastNestedLoopJoin build side classified bounded by",
-        "`plans/audit.bnlj_build_audit`, every SinglePartition exchange",
-        "classified benign by `plans/audit.single_partition_audit`, every",
-        "BroadcastExchange classified by provenance",
-        "(`plans/audit.broadcast_provenance_audit`: catalog/k/query/dim/",
-        "planner — planner = size-estimate threshold choice, AQE-demoted at",
-        "scale), every EXPLICIT broadcast hint in the optimized logical",
-        "plan classified bounded by `plans/audit.broadcast_hint_audit`",
-        "(`dim_hinted` = hinted RAW dim scan, non-failing but surfaced for",
-        "review — AQE cannot demote a hint), and every condition-less cross",
-        "classified by `plans/audit.cartesian_audit` (keyed-aggregate builds",
-        "multiplying an unbounded stream fail unless reviewed into",
-        "`audit.KEYED_CROSS_ALLOWED`; the dump FAILS on a data-sized",
-        "instance of any failing class).",
-        "",
-    ]
-    violations: list[tuple[str, list]] = []
-    for name in SHOWCASE:
-        spec = suite.QUERIES.get(name)
-        if spec is None:
+    counts = dict.fromkeys(("bnlj", "sp", "bex", "hints", "crosses"), 0)
+    errs: list[tuple[str, str]] = []
+    fails: list[dict] = []
+    sections: dict[str, str] = {}
+    t0 = time.time()
+    names = list(suite.QUERIES)
+    for i, name in enumerate(names):
+        try:
+            plan, recs, bad = audit.gate(suite.QUERIES[name].fn(spark, sf_dir), name)
+        except Exception as e:  # a query that cannot even plan is a fail
+            errs.append((name, repr(e)[:200]))
+            spark.catalog.clearCache()
             continue
-        df = spec.fn(spark, sf_dir)
-        plan = audit.formatted_plan(df)
-        # BNLJ build-side audit (round-9 verdict #5): a reshape that
-        # accidentally broadcasts a data-sized frame fails the dump
-        # (and the PLANS.md-artifact test) instead of a bench.
-        recs = audit.bnlj_build_audit(plan)
-        bad = [r for r in recs if r["verdict"] != "bounded"]
-        if bad:
-            violations.append((name, bad))
-        # SinglePartition gate (round-10 session-2): a reshape that
-        # funnels a data-sized frame through one task (a global window
-        # over an empty partitionBy is the canonical accident) fails the
-        # dump instead of a 100 TB run.
-        sp = audit.single_partition_audit(plan)
-        sp_bad = [r for r in sp if r["verdict"] != "benign"]
-        if sp_bad:
-            violations.append((name, sp_bad))
-        # Broadcast provenance (round-10 verdict #6): every broadcast
-        # build side classified by what bounds it; the forced-hint gate
-        # reads the optimized LOGICAL plan (the only layer where an
-        # F.broadcast() hint is visible) and fails the dump on a hint
-        # pinning a data-sized side — the one broadcast class AQE can't
-        # self-correct at 100 TB.
-        bex = audit.broadcast_provenance_audit(plan)
-        bex_counts: dict[str, int] = {}
-        for r in bex:
-            key = r["verdict"].replace("_sized", "")
-            bex_counts[key] = bex_counts.get(key, 0) + 1
-        hints = audit.broadcast_hint_audit(audit.optimized_logical_plan(df))
-        hint_bad = [r for r in hints if r["verdict"] == "data_sized"]
-        if hint_bad:
-            violations.append((name, hint_bad))
-        hint_counts: dict[str, int] = {}
-        for r in hints:
-            key = r["verdict"].replace("_sized", "")
-            hint_counts[key] = hint_counts.get(key, 0) + 1
-        # Condition-less cross gate (round-11 verdict #4): a keyed-
-        # aggregate build multiplying an unbounded stream (the langid
-        # classes.crossJoin accident) fails the dump unless the query
-        # is reviewed into audit.KEYED_CROSS_ALLOWED; a raw cartesian
-        # with an evidence-free side always fails.
-        crosses = audit.cartesian_audit(plan)
-        cross_counts: dict[str, int] = {}
-        for r in crosses:
-            cross_counts[r["verdict"]] = cross_counts.get(r["verdict"], 0) + 1
-        cross_failing = {"unbounded"} | (
-            set() if name in audit.KEYED_CROSS_ALLOWED else {"keyed_multiplied"}
-        )
-        cross_bad = [r for r in crosses if r["verdict"] in cross_failing]
-        if cross_bad:
-            violations.append((name, cross_bad))
-        out.append(f"## {name}")
-        out.append("")
-        out.append(
-            f"exchanges={audit.count_exchanges(plan)} "
-            f"broadcast_joins={audit.count_broadcast_joins(plan)} "
-            f"bnlj={len(recs)} bnlj_bounded={len(recs) - len(bad)} "
-            f"sp={len(sp)} sp_benign={len(sp) - len(sp_bad)} "
-            f"bex={len(bex)} bex_classes={bex_counts} "
-            f"hints={len(hints)} hints_bounded={len(hints) - len(hint_bad)} "
-            f"hint_classes={hint_counts} "
-            f"crosses={len(crosses)} cross_classes={cross_counts}"
-        )
-        out.append("")
-        out.append("```")
-        # keep the operator tree + scan details; drop the verbose footer
-        lines = plan.splitlines()
-        cut = next(
-            (i for i, line in enumerate(lines) if line.startswith("===== Subqueries")),
-            len(lines),
-        )
-        out.append("\n".join(lines[:cut]).rstrip())
-        out.append("```")
-        out.append("")
-    with open(os.path.join(ROOT, "PLANS.md"), "w") as f:
-        f.write("\n".join(out))
-    print(f"wrote PLANS.md with {len(SHOWCASE)} plans")
+        for g, rs in recs.items():
+            counts[g] += len(rs)
+        # fresh + reused broadcasts counted together: reused-vs-fresh is
+        # JVM-nondeterministic, only the combined count is reproducible
+        counts["bex"] += audit.reused_broadcast_count(plan)
+        flat = [r for rs in bad.values() for r in rs]
+        if flat:
+            fails.append({"query": name, "records": flat})
+        if name in SHOWCASE:
+            sections[name] = _section(name, plan, recs, bad)
+        spark.catalog.clearCache()
+        if (i + 1) % 50 == 0:
+            print(f"{i + 1}/{len(names)} in {time.time() - t0:.0f}s",
+                  file=sys.stderr)
     spark.stop()
-    if violations:
-        for name, bad in violations:
-            print(f"data-sized plan violation in {name}: {bad}", file=sys.stderr)
+    summary = {
+        "n_queries": len(names),
+        "n_planned": len(names) - len(errs),
+        "node_counts": counts,
+        "plan_errors": errs,
+        "gate_fails": fails,
+    }
+    with open(os.path.join(ROOT, "GATES.json"), "w") as f:
+        json.dump(summary, f, indent=1, sort_keys=True, default=str)
+    with open(os.path.join(ROOT, "PLANS.md"), "w") as f:
+        f.write("\n".join(HEADER + [sections[n] for n in SHOWCASE if n in sections]))
+    print(json.dumps({k: v for k, v in summary.items() if k != "gate_fails"},
+                     default=str))
+    print(f"wrote GATES.json and PLANS.md ({len(sections)} plans) in "
+          f"{time.time() - t0:.0f}s")
+    for name, err in errs:
+        print(f"plan error in {name}: {err}", file=sys.stderr)
+    for rec in fails:
+        print(f"gate fail in {rec['query']}: {rec['records']}", file=sys.stderr)
+    if fails or errs:
         sys.exit(1)
+
+
+def _section(name: str, plan: str, recs: dict, bad: dict) -> str:
+    """One PLANS.md section: the stamp line and the plan's operator tree
+    and scan details (the verbose subquery footer dropped)."""
+    from milvus_cdc_spark.plans import audit
+
+    def classes(rs):
+        return dict(Counter(r["verdict"].replace("_sized", "") for r in rs))
+
+    stamp = (
+        f"exchanges={audit.count_exchanges(plan)} "
+        f"broadcast_joins={audit.count_broadcast_joins(plan)} "
+        f"bnlj={len(recs['bnlj'])} "
+        f"bnlj_bounded={len(recs['bnlj']) - len(bad['bnlj'])} "
+        f"sp={len(recs['sp'])} sp_benign={len(recs['sp']) - len(bad['sp'])} "
+        f"bex={len(recs['bex'])} bex_classes={classes(recs['bex'])} "
+        f"hints={len(recs['hints'])} "
+        f"hints_bounded={len(recs['hints']) - len(bad['hints'])} "
+        f"hint_classes={classes(recs['hints'])} "
+        f"crosses={len(recs['crosses'])} "
+        f"cross_classes={classes(recs['crosses'])}"
+    )
+    lines = plan.splitlines()
+    cut = next(
+        (i for i, line in enumerate(lines) if line.startswith("===== Subqueries")),
+        len(lines),
+    )
+    body = "\n".join(lines[:cut]).rstrip()
+    return f"## {name}\n\n{stamp}\n\n```\n{body}\n```\n"
 
 
 def _session():

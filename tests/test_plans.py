@@ -827,56 +827,44 @@ def test_scan_node_budget(spark, sf_dir, name):
 # ---------------------------------------------------------------------------
 
 
-def test_bnlj_build_sides_bounded_in_plans_md():
-    """Audit the checked-in PLANS.md artifact: every BNLJ build side in
-    every dumped plan must classify bounded. PLANS.md is regenerated by
-    scripts/dump_plans.py each round (which now fails on a violation
-    itself); this test re-checks the artifact so a stale or hand-edited
-    dump cannot hide an unbounded broadcast."""
+def _plans_md_sections() -> list[tuple[str, str]]:
+    """(query name, dumped plan text) per section of the checked-in
+    PLANS.md artifact."""
     import os
 
     path = os.path.join(os.path.dirname(__file__), "..", "PLANS.md")
-    md = open(path).read()
-    sections = re.split(r"^## ", md, flags=re.M)[1:]
-    assert len(sections) >= 50, "PLANS.md unexpectedly small"
-    total = 0
-    bad = []
-    for sec in sections:
-        name = sec.splitlines()[0].strip()
+    out = []
+    for sec in re.split(r"^## ", open(path).read(), flags=re.M)[1:]:
         m = re.search(r"```\n(.*?)```", sec, re.S)
-        if not m:
-            continue
-        for rec in audit.bnlj_build_audit(m.group(1)):
-            total += 1
-            if rec["verdict"] != "bounded":
-                bad.append((name, rec))
+        if m:
+            out.append((sec.splitlines()[0].strip(), m.group(1)))
+    return out
+
+
+def test_bnlj_build_sides_bounded_in_plans_md():
+    """Audit the checked-in PLANS.md artifact: no BNLJ build side in any
+    dumped plan fails the gate. scripts/dump_plans.py fails on a
+    violation itself; this test re-checks the artifact so a stale or
+    hand-edited dump cannot hide an unbounded broadcast."""
+    sections = _plans_md_sections()
+    assert len(sections) >= 50, "PLANS.md unexpectedly small"
+    recs = [(n, audit.bnlj_build_audit(text)) for n, text in sections]
+    total = sum(len(r) for _, r in recs)
+    bad = [(n, audit.failing("bnlj", r, n)) for n, r in recs]
     assert total >= 50, f"expected many BNLJs across PLANS.md, saw {total}"
-    assert not bad, bad
+    assert not [b for b in bad if b[1]], bad
 
 
 def test_single_partition_benign_in_plans_md():
-    """Audit the checked-in PLANS.md artifact: every SinglePartition
-    exchange must classify benign (partial-aggregate buffers, LocalLimit,
-    literal-only sources, or key-set-bounded scans). Regenerated dumps
-    fail on a violation themselves; this re-checks the artifact."""
-    import os
-
-    path = os.path.join(os.path.dirname(__file__), "..", "PLANS.md")
-    md = open(path).read()
-    sections = re.split(r"^## ", md, flags=re.M)[1:]
-    total = 0
-    bad = []
-    for sec in sections:
-        name = sec.splitlines()[0].strip()
-        m = re.search(r"```\n(.*?)```", sec, re.S)
-        if not m:
-            continue
-        for rec in audit.single_partition_audit(m.group(1)):
-            total += 1
-            if rec["verdict"] != "benign":
-                bad.append((name, rec))
+    """Audit the checked-in PLANS.md artifact: no SinglePartition
+    exchange fails the gate (partial-aggregate buffers, LocalLimit,
+    literal-only sources, or key-set-bounded scans are benign). The
+    sweep fails on a violation itself; this re-checks the artifact."""
+    recs = [(n, audit.single_partition_audit(t)) for n, t in _plans_md_sections()]
+    total = sum(len(r) for _, r in recs)
+    bad = [(n, audit.failing("sp", r, n)) for n, r in recs]
     assert total >= 30, f"expected many SinglePartition exchanges, saw {total}"
-    assert not bad, bad
+    assert not [b for b in bad if b[1]], bad
 
 
 def test_single_partition_audit_flags_global_window(spark, sf_dir):
@@ -902,11 +890,9 @@ def test_single_partition_audit_accepts_live_benign_queries(spark, sf_dir):
     """Positive control on live plans: a global-scalar family and the
     drop_ratio query-vector shape both classify benign end-to-end."""
     for name in ("ks_drift_test", "fulltext_drop_ratio"):
-        df = suite.QUERIES[name].fn(spark, sf_dir)
-        recs = audit.assert_single_partition_benign(
-            audit.formatted_plan(df), name
-        )
-        assert recs, f"{name}: expected at least one SinglePartition"
+        _, recs, fails = audit.gate(suite.QUERIES[name].fn(spark, sf_dir), name)
+        assert recs["sp"], f"{name}: expected at least one SinglePartition"
+        assert not fails["sp"], fails
     spark.catalog.clearCache()
 
 
@@ -926,9 +912,9 @@ def test_bnlj_audit_accepts_live_bounded_queries(spark, sf_dir):
     """Positive control on live plans (not the artifact): two BNLJ-heavy
     queries from different families classify bounded end-to-end."""
     for name in ("filtered_ann_topk", "temperature_mixing_rates"):
-        df = suite.QUERIES[name].fn(spark, sf_dir)
-        recs = audit.assert_bnlj_bounded(audit.formatted_plan(df), name)
-        assert recs, f"{name}: expected at least one BNLJ"
+        _, recs, fails = audit.gate(suite.QUERIES[name].fn(spark, sf_dir), name)
+        assert recs["bnlj"], f"{name}: expected at least one BNLJ"
+        assert not fails["bnlj"], fails
     spark.catalog.clearCache()
 
 
@@ -1007,17 +993,9 @@ def test_broadcast_provenance_classes_in_plans_md():
     classifies into one of the five provenance classes, and the
     planner_sized share (threshold choices AQE demotes at scale) stays
     a minority — the structural broadcasts are catalog/k/query/dim."""
-    import os
-
-    path = os.path.join(os.path.dirname(__file__), "..", "PLANS.md")
-    md = open(path).read()
-    sections = re.split(r"^## ", md, flags=re.M)[1:]
     counts: dict[str, int] = {}
-    for sec in sections:
-        m = re.search(r"```\n(.*?)```", sec, re.S)
-        if not m:
-            continue
-        for rec in audit.broadcast_provenance_audit(m.group(1)):
+    for _, text in _plans_md_sections():
+        for rec in audit.broadcast_provenance_audit(text):
             counts[rec["verdict"]] = counts.get(rec["verdict"], 0) + 1
     total = sum(counts.values())
     assert total >= 100, f"expected many broadcasts across PLANS.md: {counts}"
@@ -1037,8 +1015,8 @@ def test_broadcast_hint_audit_flags_forced_data_sized(spark, sf_dir):
     bad = spark.range(1).crossJoin(F.broadcast(docs.select("doc_id", "text")))
     recs = audit.broadcast_hint_audit(audit.optimized_logical_plan(bad))
     assert any(r["verdict"] == "data_sized" for r in recs), recs
-    with pytest.raises(AssertionError, match="data-sized broadcast hints"):
-        audit.assert_broadcast_hints_bounded(bad, "neg")
+    _, _, fails = audit.gate(bad, "neg")
+    assert fails["hints"], recs
     li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
     bad2 = li.join(
         F.broadcast(docs.select(F.col("doc_id").alias("l_orderkey"), "text")),
@@ -1056,7 +1034,9 @@ def test_broadcast_hint_audit_accepts_bounded_shapes(spark, sf_dir):
     n = spark.read.parquet(f"{sf_dir}/nation.parquet")
     c = spark.read.parquet(f"{sf_dir}/customer.parquet")
     good = c.join(F.broadcast(n), c.c_nationkey == n.n_nationkey)
-    recs = audit.assert_broadcast_hints_bounded(good, "dim")
+    _, recs, fails = audit.gate(good, "dim")
+    assert not fails["hints"], fails
+    recs = recs["hints"]
     assert recs and all(r["verdict"] == "catalog_sized" for r in recs), recs
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
     seeds = emb.select("vec_id").orderBy("vec_id").limit(16)
@@ -1064,7 +1044,9 @@ def test_broadcast_hint_audit_accepts_bounded_shapes(spark, sf_dir):
     outer = emb.select(F.col("vec_id").alias("qid")).crossJoin(
         F.broadcast(init.select("vec_id", "embedding"))
     )
-    recs2 = audit.assert_broadcast_hints_bounded(outer, "join-bounded")
+    _, recs2, fails2 = audit.gate(outer, "join-bounded")
+    assert not fails2["hints"], fails2
+    recs2 = recs2["hints"]
     assert any(
         "join-bounded" in e or "under limit" in e
         for r in recs2
@@ -1074,11 +1056,11 @@ def test_broadcast_hint_audit_accepts_bounded_shapes(spark, sf_dir):
 
 def test_broadcast_hint_audit_live_query_panel(spark, sf_dir):
     """Live gate over hint-heavy queries from different families: every
-    explicit broadcast hint classifies bounded end-to-end (the full
-    102-plan sweep runs in scripts/dump_plans.py each round)."""
+    explicit broadcast hint classifies bounded end-to-end (the
+    full-registry sweep is scripts/dump_plans.py)."""
     for name in ("pq_codebooks", "tpch_q9_product_profit", "semdedup_prune"):
-        df = suite.QUERIES[name].fn(spark, sf_dir)
-        audit.assert_broadcast_hints_bounded(df, name)
+        _, recs, fails = audit.gate(suite.QUERIES[name].fn(spark, sf_dir), name)
+        assert not fails["hints"], (name, recs["hints"])
     spark.catalog.clearCache()
 
 
@@ -1111,7 +1093,7 @@ def test_hint_stamps_all_bounded_in_plans_md():
 def test_cartesian_audit_flags_keyed_cross_of_corpus(spark, sf_dir):
     """Live negative control: the pre-fix langid shape — a distinct
     (keyed aggregate) class frame crossJoined onto the full corpus —
-    must classify keyed_multiplied and fail the assert."""
+    must classify keyed_multiplied and fail the gate."""
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     classes = docs.select(F.col("lang").alias("cls")).distinct()
     # hint the class frame so the small test SF can't flip the planner
@@ -1122,12 +1104,8 @@ def test_cartesian_audit_flags_keyed_cross_of_corpus(spark, sf_dir):
     recs = audit.cartesian_audit(audit.formatted_plan(out))
     assert recs, "expected a condition-less cross"
     assert any(r["verdict"] == "keyed_multiplied" for r in recs), recs
-    with pytest.raises(AssertionError, match="unbounded/keyed cross"):
-        audit.assert_cartesian_bounded(audit.formatted_plan(out), "neg")
-    # the reviewed-in escape hatch accepts the same plan
-    audit.assert_cartesian_bounded(
-        audit.formatted_plan(out), "neg", allow_keyed=True
-    )
+    _, _, fails = audit.gate(out, "neg")
+    assert fails["crosses"], recs
 
 
 def test_cartesian_audit_accepts_scalar_and_literal_builds(spark, sf_dir):
@@ -1137,36 +1115,70 @@ def test_cartesian_audit_accepts_scalar_and_literal_builds(spark, sf_dir):
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     mean = docs.agg(F.avg(F.length("text")).alias("mu"))
     aug = docs.crossJoin(F.broadcast(mean))
-    recs = audit.assert_cartesian_bounded(audit.formatted_plan(aug), "scalar")
-    assert any(r["verdict"] == "scalar_augment" for r in recs), recs
+    _, recs, fails = audit.gate(aug, "scalar")
+    assert not fails["crosses"], fails
+    assert any(r["verdict"] == "scalar_augment" for r in recs["crosses"]), recs
     panel = spark.range(3).withColumnRenamed("id", "probe")
     lit = docs.crossJoin(F.broadcast(panel))
-    recs2 = audit.assert_cartesian_bounded(audit.formatted_plan(lit), "lit")
-    assert any(r["verdict"] == "literal_multiplied" for r in recs2), recs2
+    _, recs2, fails2 = audit.gate(lit, "lit")
+    assert not fails2["crosses"], fails2
+    assert any(
+        r["verdict"] == "literal_multiplied" for r in recs2["crosses"]
+    ), recs2
 
 
 def test_cartesian_audit_langid_fix_has_no_cross(spark, sf_dir):
     """The reshaped langid_precision_recall (confusion-matrix aggregate)
     carries NO condition-less cross at all — the gate's live positive."""
-    df = suite.QUERIES["langid_precision_recall"].fn(spark, sf_dir)
-    plan = audit.formatted_plan(df)
-    recs = audit.assert_cartesian_bounded(plan, "langid")
-    assert not [r for r in recs if r["verdict"] == "keyed_multiplied"], recs
+    name = "langid_precision_recall"
+    _, recs, fails = audit.gate(suite.QUERIES[name].fn(spark, sf_dir), name)
+    assert not fails["crosses"], fails
+    assert not [
+        r for r in recs["crosses"] if r["verdict"] == "keyed_multiplied"
+    ], recs
     spark.catalog.clearCache()
 
 
 def test_cartesian_audit_allowlisted_queries_still_keyed(spark, sf_dir):
     """The KEYED_CROSS_ALLOWED entries are real: each allowlisted query
     actually plans a keyed_multiplied cross (else the entry is stale),
-    and passes only via the reviewed escape hatch."""
+    and passes the gate only under its own reviewed name."""
     for name in sorted(audit.KEYED_CROSS_ALLOWED):
-        df = suite.QUERIES[name].fn(spark, sf_dir)
-        plan = audit.formatted_plan(df)
-        recs = audit.assert_cartesian_bounded(plan, name, allow_keyed=True)
+        _, recs, fails = audit.gate(suite.QUERIES[name].fn(spark, sf_dir), name)
+        crosses = recs["crosses"]
         assert any(
-            r["verdict"] == "keyed_multiplied" for r in recs
-        ), (name, recs)
+            r["verdict"] == "keyed_multiplied" for r in crosses
+        ), (name, crosses)
+        assert not fails["crosses"], (name, fails)
+        assert audit.failing("crosses", crosses, "unreviewed"), (name, crosses)
         spark.catalog.clearCache()
+
+
+def test_gate_failing_rule():
+    """The one failing rule, verdict by verdict: BNLJ builds fail unless
+    bounded, SinglePartition exchanges unless benign, hints when
+    data_sized; a cross fails when unbounded, and when keyed_multiplied
+    only for a query outside KEYED_CROSS_ALLOWED; provenance never
+    fails."""
+
+    def fails(gate_name, verdicts, name="unreviewed"):
+        recs = [{"verdict": v} for v in verdicts]
+        return [r["verdict"] for r in audit.failing(gate_name, recs, name)]
+
+    assert fails("bnlj", ["bounded", "unbounded", "opaque"]) == [
+        "unbounded", "opaque"
+    ]
+    assert fails("sp", ["benign", "data_sized"]) == ["data_sized"]
+    assert fails("hints", ["catalog_sized", "dim_hinted", "data_sized"]) == [
+        "data_sized"
+    ]
+    crosses = ["bounded", "scalar_augment", "literal_multiplied",
+               "keyed_multiplied", "unbounded"]
+    assert fails("crosses", crosses) == ["keyed_multiplied", "unbounded"]
+    allowed = sorted(audit.KEYED_CROSS_ALLOWED)[0]
+    assert fails("crosses", crosses, allowed) == ["unbounded"]
+    assert fails("bex", ["catalog_sized", "k_sized", "query_sized",
+                         "dim_sized", "planner_sized"]) == []
 
 
 def test_cartesian_classes_in_plans_md():
@@ -1174,29 +1186,11 @@ def test_cartesian_classes_in_plans_md():
     into the taxonomy and no failing instance ships (langid's pre-fix
     plan was the one keyed_multiplied outside the allowlist; the
     regenerated dump must not contain another)."""
-    import os
-
-    path = os.path.join(os.path.dirname(__file__), "..", "PLANS.md")
-    md = open(path).read()
-    sections = re.split(r"^## ", md, flags=re.M)[1:]
-    total = 0
-    bad = []
-    for sec in sections:
-        name = sec.splitlines()[0].strip()
-        m = re.search(r"```\n(.*?)```", sec, re.S)
-        if not m:
-            continue
-        for rec in audit.cartesian_audit(m.group(1)):
-            total += 1
-            failing = {"unbounded"} | (
-                set()
-                if name in audit.KEYED_CROSS_ALLOWED
-                else {"keyed_multiplied"}
-            )
-            if rec["verdict"] in failing:
-                bad.append((name, rec))
+    recs = [(n, audit.cartesian_audit(t)) for n, t in _plans_md_sections()]
+    total = sum(len(r) for _, r in recs)
+    bad = [(n, audit.failing("crosses", r, n)) for n, r in recs]
     assert total >= 50, f"expected many crosses across PLANS.md: {total}"
-    assert not bad, bad
+    assert not [b for b in bad if b[1]], bad
 
 
 def test_join_bounding_requires_equality(spark, sf_dir):
@@ -1300,21 +1294,19 @@ def test_cartesian_audit_keyed_x_keyed_not_bounded(spark, sf_dir):
     langs = docs.select("lang").distinct()
     sources = docs.select("source").distinct()
     both_keyed = langs.crossJoin(F.broadcast(sources))
-    recs = audit.cartesian_audit(audit.formatted_plan(both_keyed))
-    assert recs and any(
-        r["verdict"] == "keyed_multiplied" for r in recs
+    _, recs, fails = audit.gate(both_keyed, "kxk")
+    assert any(
+        r["verdict"] == "keyed_multiplied" for r in recs["crosses"]
     ), recs
-    with pytest.raises(AssertionError, match="unbounded/keyed cross"):
-        audit.assert_cartesian_bounded(
-            audit.formatted_plan(both_keyed), "kxk"
-        )
+    assert fails["crosses"], recs
     # scalar x keyed: multiplier 1 — must stay non-failing
     mu = docs.agg(F.avg(F.length("text")).alias("mu"))
     scalar_keyed = langs.crossJoin(F.broadcast(mu))
-    recs2 = audit.assert_cartesian_bounded(
-        audit.formatted_plan(scalar_keyed), "sxk"
-    )
-    assert all(r["verdict"] != "keyed_multiplied" for r in recs2), recs2
+    _, recs2, fails2 = audit.gate(scalar_keyed, "sxk")
+    assert not fails2["crosses"], fails2
+    assert all(
+        r["verdict"] != "keyed_multiplied" for r in recs2["crosses"]
+    ), recs2
 
 
 def test_cartesian_audit_build_is_broadcast_exchange(spark, sf_dir):
@@ -1327,10 +1319,10 @@ def test_cartesian_audit_build_is_broadcast_exchange(spark, sf_dir):
     # repartition puts a shuffle Exchange directly under the cross on
     # the STREAM side; the build is the broadcast global aggregate
     aug = docs.repartition(8).crossJoin(F.broadcast(mu))
-    plan = audit.formatted_plan(aug)
+    plan, recs, fails = audit.gate(aug, "shuffled-stream")
     assert "Exchange" in plan, plan  # shape check: shuffle present
-    recs = audit.assert_cartesian_bounded(plan, "shuffled-stream")
-    assert any(r["verdict"] == "scalar_augment" for r in recs), recs
+    assert not fails["crosses"], fails
+    assert any(r["verdict"] == "scalar_augment" for r in recs["crosses"]), recs
 
 
 def test_pushed_evidence_rejects_nested_negations():
@@ -1365,8 +1357,9 @@ def test_hinted_raw_dim_surfaces_as_dim_hinted(spark, sf_dir):
     df = li.join(
         F.broadcast(orders), li.l_orderkey == orders.o_orderkey
     )
-    recs = audit.assert_broadcast_hints_bounded(df, "dim-hint")
-    assert any(r["verdict"] == "dim_hinted" for r in recs), recs
+    _, recs, fails = audit.gate(df, "dim-hint")
+    assert not fails["hints"], fails
+    assert any(r["verdict"] == "dim_hinted" for r in recs["hints"]), recs
 
 
 def test_single_partition_accepts_catalog_keyed_aggregate(spark, sf_dir):
@@ -1376,11 +1369,10 @@ def test_single_partition_accepts_catalog_keyed_aggregate(spark, sf_dir):
     window over a doc_id-keyed aggregate still fails (document keys are
     corpus-sized)."""
     df = suite.QUERIES["watermark_ts"].fn(spark, sf_dir)
-    recs = audit.assert_single_partition_benign(
-        audit.formatted_plan(df), "watermark_ts"
-    )
+    _, recs, fails = audit.gate(df, "watermark_ts")
+    assert not fails["sp"], fails
     assert any(
-        "catalog-keyed aggregate" in e for r in recs for e in r["evidence"]
+        "catalog-keyed aggregate" in e for r in recs["sp"] for e in r["evidence"]
     ), recs
     # negative control: corpus-keyed aggregate into a global window
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
@@ -1397,8 +1389,8 @@ def test_single_partition_accepts_catalog_keyed_aggregate(spark, sf_dir):
 
 def test_full_registry_gate_clean_trio(spark, sf_dir):
     """The three queries the r12 FULL-registry sweep flagged (the first
-    gate findings outside the 104-plan showcase) are clean under all
-    five gates after their fixes: watermark_ts via the catalog-keyed
+    gate findings outside the PLANS.md showcase) pass all five gates of
+    audit.gate after their fixes: watermark_ts via the catalog-keyed
     allowance, histogram_quantile_sketch via the plan-visible
     limit(256) bound, error_spike_detection via the rank-self-join lag
     reshape (no unpartitioned window at all)."""
@@ -1407,12 +1399,8 @@ def test_full_registry_gate_clean_trio(spark, sf_dir):
         "error_spike_detection",
         "histogram_quantile_sketch",
     ):
-        df = suite.QUERIES[name].fn(spark, sf_dir)
-        plan = audit.formatted_plan(df)
-        audit.assert_bnlj_bounded(plan, name)
-        audit.assert_single_partition_benign(plan, name)
-        audit.assert_broadcast_hints_bounded(df, name)
-        audit.assert_cartesian_bounded(plan, name)
+        _, _, fails = audit.gate(suite.QUERIES[name].fn(spark, sf_dir), name)
+        assert not any(fails.values()), (name, fails)
         spark.catalog.clearCache()
 
 

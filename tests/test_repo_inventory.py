@@ -200,3 +200,47 @@ def test_one_persist_ledger_released_only_at_dispatch():
                 ledgers.append(f"{os.path.relpath(p, ROOT)}:{node.lineno}")
     assert not ledgers, f"a second ledger: {ledgers}"
     assert sites == [("milvus_cdc_spark/suite.py", "q")], sites
+
+
+_SCOPES = (ast.FunctionDef, ast.AsyncFunctionDef, ast.Lambda)
+
+
+def _unused_imports(path: str) -> list:
+    """``path:line name`` of every import that its own scope never names.
+    A module-scope import counts as named anywhere in the module; a
+    function-scope import only inside that function. ``from __future__``
+    and lines marked ``# noqa`` (imports for effect) are skipped."""
+    src = open(path).read()
+    lines = src.splitlines()
+    tree = ast.parse(src)
+
+    def own_imports(node):
+        for child in ast.iter_child_nodes(node):
+            if isinstance(child, (ast.Import, ast.ImportFrom)):
+                yield child
+            elif not isinstance(child, _SCOPES):
+                yield from own_imports(child)
+
+    unused = []
+    for scope in [tree] + [n for n in ast.walk(tree) if isinstance(n, _SCOPES)]:
+        named = {n.id for n in ast.walk(scope) if isinstance(n, ast.Name)}
+        for imp in own_imports(scope):
+            if isinstance(imp, ast.ImportFrom) and imp.module == "__future__":
+                continue
+            if any("# noqa" in line for line in lines[imp.lineno - 1 : imp.end_lineno]):
+                continue
+            for a in imp.names:
+                bound = a.asname or a.name.split(".")[0]
+                if bound != "*" and bound not in named:
+                    unused.append(f"{os.path.relpath(path, ROOT)}:{imp.lineno} {bound}")
+    return unused
+
+
+def test_no_unused_imports():
+    paths = [
+        p for top in ("milvus_cdc_spark", "scripts")
+        for p in _python_files(os.path.join(ROOT, top))
+    ]
+    paths.append(os.path.join(ROOT, "bench.py"))
+    unused = [u for p in paths for u in _unused_imports(p)]
+    assert not unused, f"imports their scope never names: {unused}"
