@@ -411,7 +411,9 @@ def run_queries(
     once the suite passed ~70 queries. Interleaving keeps each query's
     codegen hot at its own measurement regardless of suite size. Plan
     shapes are identical across scale factors, so the sf0.001 warm-up
-    compiles exactly the stages the sf0.1 run executes.
+    compiles exactly the stages the sf0.1 run executes. The warm-up dir
+    is the ``sf0.001`` sibling of ``sf_dir``; when it is missing the
+    skip is announced on stderr.
 
     Caches are cleared between queries: several pipelines persist an
     intermediate shared across their stages (shingles, posting lists)
@@ -431,8 +433,10 @@ def run_queries(
     is then recognizable on sight instead of polluting round-over-round
     comparison.
     """
-    warm_dir = "/root/testdata/sf0.001"
+    warm_dir = os.path.join(os.path.dirname(sf_dir.rstrip("/")), "sf0.001")
     do_warm = os.path.isdir(warm_dir) and warm_dir != sf_dir.rstrip("/")
+    if not os.path.isdir(warm_dir):
+        print(f"warm-up skipped: {warm_dir} missing", file=sys.stderr)
     timings: dict[str, float] = {}
     for name in names:
         spec = suite.QUERIES.get(name)

@@ -652,35 +652,20 @@ def semdedup(
         F.col(id_col).alias("_id"),
         F.transform(F.col(vec_col), lambda x: x.cast("double")).alias("_v"),
     )
-    j = v.crossJoin(F.broadcast(cent.select("centroid_id", "centroid")))
-    # sequential left-to-right fold == a serial engine's '+' chain, so the
-    # raw double is bit-identical in DuckDB and safe to compare/order on
-    d2 = F.aggregate(
-        F.zip_with(F.col("_v"), F.col("centroid"), lambda a, b: (a - b) * (a - b)),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
     # assigned feeds THREE consumers (both pair sides + the band
     # buckets), each of which would otherwise re-run the whole Lloyd
-    # training + assignment lineage — persist it once. The nearest-
-    # centroid argmin is the _pq_assign min-of-struct idiom: the
-    # partial combine collapses n x k to n map-side, where the
-    # row_number window this replaces shuffled and sorted the full
-    # candidate set. The struct stays SKINNY (_d2 + centroid_id): an
-    # array field in the struct forces the SortAggregate fallback to
-    # sort the n x k candidates WITH their vector payloads — dropped,
-    # the sort moves ~24-byte rows and the vector joins back once by
-    # id (r9 A/B with the ivf_train twin of this reshape).
+    # training + assignment lineage — persist it once. The raw squared-L2
+    # double is a sequential left-to-right fold, bit-identical in DuckDB,
+    # so it is safe to compare and order on.
     assigned = cache(
-        j.withColumn("_d2", d2)
-        .groupBy("_id")
-        .agg(F.min(F.struct("_d2", "centroid_id")).alias("_m"))
-        .select(
-            "_id",
-            F.col("_m.centroid_id").alias("centroid_id"),
-            F.col("_m._d2").alias("_d2"),
+        similarity.nearest(
+            v,
+            cent.select("centroid_id", "centroid"),
+            vecf.l2_squared(F.col("_v"), F.col("centroid")),
+            ["_id"],
         )
-        .join(v.select("_id", "_v"), "_id")
+        .select("_id", "centroid_id", F.col("_dist").alias("_d2"))
+        .join(v, "_id")
     )
     a = assigned.select(
         F.col("centroid_id"),

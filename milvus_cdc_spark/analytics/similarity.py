@@ -22,7 +22,7 @@ analytics engine for the same data.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from milvus_cdc_spark.cache_registry import cache
@@ -47,9 +47,9 @@ def parallelize_expansion(df: DataFrame) -> DataFrame:
 
     Boundary (measured, do not widen): this pays ONLY where the
     expansion factor is large — brute_force_topk's |queries|-way
-    crossJoin (hundreds of pairs per input row). Applying it at the
-    ivf_train / ivf_assign / pq_train / pq_encode / _l2_assign_one
-    entries was a wash-to-regression in an interleaved on/off A/B at
+    crossJoin (hundreds of pairs per input row). Applying it ahead of
+    ``nearest`` (ivf_train, pq_train, pq_encode, ivf_pq_build) or
+    ivf_assign was a wash-to-regression in an interleaved on/off A/B at
     sf0.1 (semdedup_prune +12%): their k<=16-way expansions with
     map-side combine do too little work per input row to repay the
     extra shuffle plus the plan->RDD probe on already-derived inputs.
@@ -188,6 +188,49 @@ def bucketed_topk(
     return _ranked_topk(scored, k)
 
 
+def nearest(
+    points: DataFrame,
+    centroids: DataFrame,
+    dist: Column,
+    keys: list[str],
+    cid: str = "centroid_id",
+    by: list[str] | None = None,
+) -> DataFrame:
+    """Each point's nearest centroid: (*keys, cid, _dist), the lowest
+    ``dist`` winning and ties going to the lower ``cid`` (the Milvus /
+    serial-engine tie rule). ``centroids`` is broadcast; ``dist`` is
+    evaluated on the joined (point, centroid) row. ``keys`` identify a
+    point. ``by`` limits a point's candidates to the centroids that share
+    those columns (PQ: one codebook per ``sub_id``), so ``keys`` then
+    include them too.
+
+    The argmin is a min-of-struct aggregate, not a row_number window:
+    all candidates of a point sit in the same map task straight off the
+    broadcast join, so the partial combine collapses points x centroids
+    to points BEFORE the exchange, where the window shuffled and sorted
+    the full candidate set. The struct is kept SKINNY (dist + id, no
+    vector): min(struct) with an array field falls back to
+    SortAggregate, and the pre-aggregation sort would move the
+    candidate rows WITH their ~0.5 KB vector payloads; without the
+    payload the same sort moves ~24-byte rows, and a caller that needs
+    the vector joins it back once by ``keys`` (r9 A/B: ivf/semdedup
+    family ~25% faster at sf0.1).
+
+    NOTE (measured): an in-row argmin over a collect_list'd centroid
+    array (transform + array_min, zero shuffle) REGRESSED 20-200% across
+    this family — nested higher-order functions evaluate interpreted,
+    losing to this codegen'd broadcast join + aggregate.
+    """
+    cands = F.broadcast(centroids)
+    j = points.join(cands, by) if by else points.crossJoin(cands)
+    return (
+        j.withColumn("_dist", dist)
+        .groupBy(*keys)
+        .agg(F.min(F.struct("_dist", cid)).alias("_m"))
+        .select(*keys, F.col(f"_m.{cid}").alias(cid), "_m._dist")
+    )
+
+
 def _centroid_means(assigned: DataFrame, dim: int) -> DataFrame:
     """``ivf_train``'s mean step over (centroid_id, _vvec) rows: per
     centroid, the per-dimension mean of the first ``dim`` components
@@ -235,7 +278,7 @@ def ivf_train(
     engines and runs.
 
     Each iteration: broadcast the k centroids, assign every vector to
-    its nearest by squared L2 (ties → lower centroid id), recompute each
+    its nearest by squared L2 (``nearest``), recompute each
     centroid as the per-dimension mean (``_centroid_means``). Plan
     shape: one broadcast join + one (k x dim)-row mean aggregation per
     iteration — the corpus shuffles ONCE per iteration into k x dim
@@ -267,49 +310,14 @@ def ivf_train(
             ),
         )
     )
-    assigned = None
+    v = vectors.select(F.col(id_col).alias("_vid"), F.col(vec_col).alias("_vvec"))
     for it in range(iters):
-        # NOTE (measured): an in-row argmin over a collect_list'd
-        # centroid array (transform + array_min, zero shuffle) REGRESSED
-        # 20-200% across this family — nested higher-order functions
-        # evaluate interpreted, losing to this codegen'd broadcast join
-        # + min-of-struct aggregate.
-        j = vectors.select(
-            F.col(id_col).alias("_vid"), F.col(vec_col).alias("_vvec")
-        ).crossJoin(F.broadcast(cent.select("centroid_id", "centroid")))
-        # sequential left-to-right fold == a serial engine's '+' chain
-        dist = F.aggregate(
-            F.zip_with(
-                F.col("_vvec"), F.col("centroid"), lambda a, b: (a - b) * (a - b)
-            ),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
-        # argmin by (dist asc, centroid_id asc) as a min-of-struct
-        # aggregate (the _pq_assign idiom): all k candidates of a vector
-        # sit in the same map task straight off the broadcast join, so
-        # the partial combine collapses n x k to n BEFORE the exchange —
-        # the row_number window this replaces shuffled and sorted the
-        # full candidate set. The struct is kept SKINNY (dist + id, no
-        # vector): min(struct) with an array field falls back to
-        # SortAggregate, and the pre-aggregation sort would move the
-        # n x k candidate rows WITH their ~0.5 KB vector payloads; with
-        # the payload dropped the same sort moves ~24-byte rows and the
-        # vector travels exactly once, through the vid-keyed join below
-        # (r9 A/B: ivf/semdedup family ~25% faster at sf0.1).
-        assigned = (
-            j.withColumn("_dist", dist)
-            .groupBy("_vid")
-            .agg(F.min(F.struct("_dist", "centroid_id")).alias("_m"))
-            .select("_vid", F.col("_m.centroid_id").alias("centroid_id"))
-            .join(
-                vectors.select(
-                    F.col(id_col).alias("_vid"),
-                    F.col(vec_col).alias("_vvec"),
-                ),
-                "_vid",
-            )
-        )
+        assigned = nearest(
+            v,
+            cent.select("centroid_id", "centroid"),
+            vecf.l2_squared(F.col("_vvec"), F.col("centroid")),
+            ["_vid"],
+        ).select("_vid", "centroid_id").join(v, "_vid")
         # Long-form mean step vs the former 64 per-dimension aggregates,
         # interleaved in-JVM A/B (scripts/ab_inproc.py swap, 6 pairs,
         # sf0.01, local[4] on a 4-core host), long/wide medians:
@@ -353,14 +361,13 @@ def ivf_assign(
     ivf_nprobe_recall_curve).
 
     Plan: broadcast the (tiny) centroid set, one pass over the corpus.
-    The corpus path (``n_probe=1``) is a min-of-struct aggregate (the
-    _pq_assign idiom: the partial combine collapses n x k to n map-side,
-    and the skinny (-csim, cid) struct keeps the SortAggregate fallback
-    sorting ~24-byte rows); the query path (``n_probe>1``) keeps the
-    row_number window — top-N per key has no aggregate form, and the
-    query side is small. An in-row variant (collect_list'd centroids +
-    array_sort, zero shuffle) was measured ~20% SLOWER here — nested
-    higher-order functions evaluate interpreted; see the ivf_train note.
+    The corpus path (``n_probe=1``) is the min-of-struct argmin of
+    ``nearest`` over the skinny (-csim, cid) struct; the query path
+    (``n_probe>1``) keeps the row_number window — top-N per key has no
+    aggregate form, and the query side is small. An in-row variant
+    (collect_list'd centroids + array_sort, zero shuffle) was measured
+    ~20% SLOWER here — nested higher-order functions evaluate
+    interpreted; see the ``nearest`` note.
     """
     cen = centroids.select(
         F.col(id_col).alias("centroid_id"),
@@ -390,7 +397,11 @@ def ivf_assign(
     )
     if n_probe == 1:
         # argmax csim (ties -> lower centroid id) == min of (-csim, cid);
-        # -x on a rounded double is exact, so ordering matches the window
+        # -x on a rounded double is exact, so ordering matches the window.
+        # Not ``nearest(v, cen, -csim, ...)``: that evaluates the negation
+        # in the join-side Project instead of in the aggregate's struct,
+        # so the plan would change beyond labels; the window path shares
+        # ``scored`` as it is.
         rank = [F.lit(1).alias("probe_rank")] if with_rank else []
         return (
             scored.groupBy("_vid")
@@ -895,47 +906,17 @@ def _pq_subvectors(
     )
 
 
-def _pq_assign(
-    subv: DataFrame, codebooks: DataFrame, with_sv: bool = True
-) -> DataFrame:
-    """Nearest codeword per (vector, subspace): broadcast the M*K
-    codebook rows, squared-L2 per candidate, then a min-of-struct
-    aggregate — (dist asc, centroid_id asc) lexicographic min IS the
-    Milvus/serial tie rule, and unlike a row_number window it partial-
-    aggregates map-side, so the corpus x K candidate set collapses
-    before the one shuffle (keyed by vector x subspace).
-
-    ``with_sv``: re-attach the subvector (pq_train's mean step needs
-    it); encoding passes False and skips the join entirely."""
-    j = subv.join(
-        F.broadcast(codebooks.select("sub_id", "centroid_id", "centroid")),
-        "sub_id",
+def _pq_assign(subv: DataFrame, codebooks: DataFrame) -> DataFrame:
+    """Nearest codeword per (vector, subspace): ``nearest`` over the
+    broadcast M*K codebook rows, candidates limited to the vector's own
+    subspace. Returns (_vid, sub_id, centroid_id, _dist)."""
+    return nearest(
+        subv,
+        codebooks.select("sub_id", "centroid_id", "centroid"),
+        vecf.l2_squared(F.col("sv"), F.col("centroid")),
+        ["_vid", "sub_id"],
+        by=["sub_id"],
     )
-    dist = F.aggregate(
-        F.zip_with(F.col("sv"), F.col("centroid"), lambda a, b: (a - b) * (a - b)),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-    # first(sv) in the aggregate buffer would force the SortAggregate
-    # fallback to sort the corpus x K candidates WITH the subvector
-    # payload; keeping the struct skinny sorts ~24-byte rows and the
-    # subvector joins back once by the group key (r9, the ivf_train
-    # skinny-assignment twin).
-    skinny = (
-        j.withColumn("_dist", dist)
-        .groupBy("_vid", "sub_id")
-        .agg(
-            F.min(F.struct(F.col("_dist"), F.col("centroid_id"))).alias("_b"),
-        )
-        .select(
-            "_vid",
-            "sub_id",
-            F.col("_b.centroid_id").alias("centroid_id"),
-        )
-    )
-    if not with_sv:
-        return skinny
-    return skinny.join(subv.select("_vid", "sub_id", "sv"), ["_vid", "sub_id"])
 
 
 def pq_train(
@@ -990,7 +971,7 @@ def pq_train(
     #   0.89 and 1.00. A 16-dim subvector has only 16 aggregates to
     #   save, and the regroup adds an exchange per iteration.
     for _ in range(iters):
-        assigned = _pq_assign(subv, cent)
+        assigned = _pq_assign(subv, cent).join(subv, ["_vid", "sub_id"])
         cent = assigned.groupBy("sub_id", "centroid_id").agg(
             F.array(
                 *[
@@ -1016,7 +997,7 @@ def pq_encode(
     PQ index — 32x smaller than the float32 corpus at m=4/dim=64 — and
     the only corpus-sized input ``pq_adc_topk`` reads."""
     subv = _pq_subvectors(vectors, m, dim, id_col, vec_col)
-    return _pq_assign(subv, codebooks, with_sv=False).select(
+    return _pq_assign(subv, codebooks).select(
         F.col("_vid").alias(id_col),
         "sub_id",
         F.col("centroid_id").alias("code"),
@@ -1047,11 +1028,7 @@ def pq_adc_topk(
     qsub = _pq_subvectors(queries, m, dim, id_col, vec_col).select(
         F.col("_vid").alias("query_id"), "sub_id", F.col("sv").alias("qv")
     )
-    d = F.aggregate(
-        F.zip_with(F.col("qv"), F.col("centroid"), lambda a, b: (a - b) * (a - b)),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
+    d = vecf.l2_squared(F.col("qv"), F.col("centroid"))
     lut = (
         qsub.join(
             codebooks.select("sub_id", F.col("centroid_id").alias("code"), "centroid"),
@@ -1086,35 +1063,6 @@ def pq_adc_topk(
 # Spark the config where query cost is proportional to probed-list size,
 # never corpus size.
 # ---------------------------------------------------------------------------
-
-
-def _l2_assign_one(
-    vectors: DataFrame,
-    centroids: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Nearest coarse centroid per vector by squared L2 (ties → lower
-    centroid id) — min-of-struct aggregate, so the corpus x k candidate
-    frame partial-aggregates map-side before its one shuffle."""
-    cen = centroids.select(
-        F.col("centroid_id").alias("coarse_id"), F.col("centroid").alias("_cc")
-    )
-    j = vectors.select(
-        F.col(id_col),
-        F.transform(F.col(vec_col), lambda x: x.cast("double")).alias("_vv"),
-    ).crossJoin(F.broadcast(cen))
-    dist = F.aggregate(
-        F.zip_with(F.col("_vv"), F.col("_cc"), lambda a, b: (a - b) * (a - b)),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-    return (
-        j.withColumn("_dist", dist)
-        .groupBy(id_col)
-        .agg(F.min(F.struct(F.col("_dist"), F.col("coarse_id"))).alias("_b"))
-        .select(id_col, F.col("_b.coarse_id").alias("coarse_id"))
-    )
 
 
 def ivf_pq_build(
@@ -1166,22 +1114,22 @@ def ivf_pq_build(
         vectors, k=k_coarse, iters=coarse_iters, dim=dim,
         id_col=id_col, vec_col=vec_col,
     ))
-    assigned = cache(_l2_assign_one(vectors, coarse, id_col, vec_col))
+    vv = vectors.select(
+        F.col(id_col),
+        F.transform(F.col(vec_col), lambda x: x.cast("double")).alias("_vv"),
+    )
+    cc = coarse.select(
+        F.col("centroid_id").alias("coarse_id"), F.col("centroid").alias("_cc")
+    )
+    assigned = cache(
+        nearest(
+            vv, cc, vecf.l2_squared(F.col("_vv"), F.col("_cc")), [id_col],
+            cid="coarse_id",
+        ).select(id_col, "coarse_id")
+    )
     resid = (
-        vectors.select(
-            F.col(id_col),
-            F.transform(F.col(vec_col), lambda x: x.cast("double")).alias("_vv"),
-        )
-        .join(assigned, id_col)
-        .join(
-            F.broadcast(
-                coarse.select(
-                    F.col("centroid_id").alias("coarse_id"),
-                    F.col("centroid").alias("_cc"),
-                )
-            ),
-            "coarse_id",
-        )
+        vv.join(assigned, id_col)
+        .join(F.broadcast(cc), "coarse_id")
         .select(
             F.col(id_col),
             F.zip_with(F.col("_vv"), F.col("_cc"), lambda a, b: a - b).alias(
@@ -1236,11 +1184,7 @@ def ivf_pq_adc_topk(
         F.col(id_col).alias("query_id"),
         F.transform(F.col(vec_col), lambda x: x.cast("double")).alias("_qv"),
     ).crossJoin(F.broadcast(cen))
-    qdist = F.aggregate(
-        F.zip_with(F.col("_qv"), F.col("_cc"), lambda a, b: (a - b) * (a - b)),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
+    qdist = vecf.l2_squared(F.col("_qv"), F.col("_cc"))
     w = Window.partitionBy("query_id").orderBy(
         F.col("_qdist").asc(), F.col("coarse_id").asc()
     )
@@ -1254,11 +1198,7 @@ def ivf_pq_adc_topk(
     lut_base = probes.select(
         "query_id", "coarse_id", F.posexplode(slices).alias("sub_id", "qv")
     )
-    d = F.aggregate(
-        F.zip_with(F.col("qv"), F.col("centroid"), lambda a, b: (a - b) * (a - b)),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
+    d = vecf.l2_squared(F.col("qv"), F.col("centroid"))
     # explicit broadcast: codebooks is m*k_pq rows; the hint pins the
     # strategy independent of how the caller pinned the frame (a
     # stats-less leaf would otherwise be free to degrade to sort-merge)

@@ -1362,6 +1362,7 @@ def ivf_kmeans_build(spark: SparkSession, sf_dir: str) -> DataFrame:
     (similarity.ivf_train, k=8, 2 iterations): one broadcast join + one
     k-group aggregation per iteration."""
     from milvus_cdc_spark.analytics import similarity
+    from milvus_cdc_spark.functions import vector as vecf
     from milvus_cdc_spark.partitioning import widen_small_scan
 
     # per-iteration k×dim L2 distance math otherwise runs inside the
@@ -1372,14 +1373,7 @@ def ivf_kmeans_build(spark: SparkSession, sf_dir: str) -> DataFrame:
         cent.select(
             "centroid_id",
             F.col("n_members").cast("bigint").alias("n_members"),
-            F.round(
-                F.sqrt(
-                    F.aggregate(
-                        F.col("centroid"), F.lit(0.0), lambda a, x: a + x * x
-                    )
-                ),
-                4,
-            ).alias("c_norm"),
+            F.round(vecf.norm(F.col("centroid")), 4).alias("c_norm"),
         )
         .orderBy("centroid_id")
     )
@@ -1469,6 +1463,7 @@ def pq_codebooks(spark: SparkSession, sf_dir: str) -> DataFrame:
     iterations): all four subspaces train in ONE broadcast join + one
     (m*k)-group map-side-combined aggregation per iteration."""
     from milvus_cdc_spark.analytics import similarity
+    from milvus_cdc_spark.functions import vector as vecf
     from milvus_cdc_spark.partitioning import widen_small_scan
 
     # per-iteration m×k sub-distance math off a single-split scan —
@@ -1480,14 +1475,7 @@ def pq_codebooks(spark: SparkSession, sf_dir: str) -> DataFrame:
             "sub_id",
             "centroid_id",
             F.col("n_members").cast("bigint").alias("n_members"),
-            F.round(
-                F.sqrt(
-                    F.aggregate(
-                        F.col("centroid"), F.lit(0.0), lambda a, x: a + x * x
-                    )
-                ),
-                4,
-            ).alias("c_norm"),
+            F.round(vecf.norm(F.col("centroid")), 4).alias("c_norm"),
         )
         .orderBy("sub_id", "centroid_id")
     )
@@ -2190,6 +2178,8 @@ def label_centroid_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     centroid: one map-side-combined aggregate per side, 1-row global
     broadcast — embedding-distribution drift monitoring at corpus
     scale."""
+    from milvus_cdc_spark.functions import vector as vecf
+
     emb = _t(spark, sf_dir, "embeddings")
 
     def cent(df, *keys):
@@ -2205,14 +2195,13 @@ def label_centroid_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     per_label = cent(emb, "label")
     global_c = cent(emb).select(F.col("c").alias("gc"))
-    dist = F.aggregate(
-        F.zip_with(F.col("c"), F.col("gc"), lambda a, b: (a - b) * (a - b)),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
     return (
         per_label.crossJoin(F.broadcast(global_c))
-        .select("label", "n_vecs", F.round(F.sqrt(dist), 6).alias("drift"))
+        .select(
+            "label",
+            "n_vecs",
+            F.round(vecf.l2(F.col("c"), F.col("gc")), 6).alias("drift"),
+        )
         .orderBy("label")
     )
 

@@ -18,13 +18,17 @@ error.
 The ``--tag`` form snapshots the named queries' plans at
 ``$SPARK_GRAFT_SF_DIR`` into ``plans/TAG/<name>_<before|after>.txt``,
 the before/after pair a plan-changing optimization keeps beside it.
-Both forms plan with AQE off, so the static plan is readable.
+Both forms plan with AQE off, so the static plan is readable, and both
+write the plan text with its session counters normalized
+(``_normalized``), so a plan reads the same whichever queries the
+session planned before it; the gates see the raw plan.
 """
 
 from __future__ import annotations
 
 import json
 import os
+import re
 import sys
 import time
 from collections import Counter
@@ -241,6 +245,31 @@ def main() -> None:
         sys.exit(1)
 
 
+# Session counters in plan text: expression ids and exchange plan ids
+# are renumbered per plan in first-appearance order (column tracing
+# stays readable); lambda-variable suffixes, RDD ids and the JVM
+# call-site frame of a localCheckpoint (``NativeMethodAccessorImpl.java:0``
+# until reflection inflates, ``<unknown>:0`` after) are dropped.
+_RENUMBERED = re.compile(r"(#|plan_id=)(\d+)")
+_DROPPED = [
+    (re.compile(r"\blambda ([xyz])_\d+\b"), r"lambda \1"),
+    (re.compile(r"RDD\[\d+\]"), "RDD"),
+    (re.compile(r" at (?:NativeMethodAccessorImpl\.java|<unknown>):0\b"), ""),
+]
+
+
+def _normalized(plan: str) -> str:
+    for pat, repl in _DROPPED:
+        plan = pat.sub(repl, plan)
+    ids: dict[str, dict[str, int]] = {"#": {}, "plan_id=": {}}
+
+    def renumber(m: re.Match) -> str:
+        kind, n = m.groups()
+        return f"{kind}{ids[kind].setdefault(n, len(ids[kind]) + 1)}"
+
+    return _RENUMBERED.sub(renumber, plan)
+
+
 def _section(name: str, plan: str, recs: dict, bad: dict) -> str:
     """One PLANS.md section: the stamp line and the plan's operator tree
     and scan details (the verbose subquery footer dropped)."""
@@ -267,7 +296,7 @@ def _section(name: str, plan: str, recs: dict, bad: dict) -> str:
         (i for i, line in enumerate(lines) if line.startswith("===== Subqueries")),
         len(lines),
     )
-    body = "\n".join(lines[:cut]).rstrip()
+    body = _normalized("\n".join(lines[:cut]).rstrip())
     return f"## {name}\n\n{stamp}\n\n```\n{body}\n```\n"
 
 
@@ -294,7 +323,7 @@ def dump_tagged(tag: str, suffix: str, names: list[str]) -> None:
         plan = audit.formatted_plan(suite.QUERIES[name].fn(spark, sf_dir))
         path = os.path.join(out_dir, f"{name}_{suffix}.txt")
         with open(path, "w") as f:
-            f.write(plan)
+            f.write(_normalized(plan))
         print(
             f"{name}: exchanges={audit.count_exchanges(plan)} "
             f"broadcast_joins={audit.count_broadcast_joins(plan)} -> {path}"

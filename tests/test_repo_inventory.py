@@ -244,3 +244,35 @@ def test_no_unused_imports():
     paths.append(os.path.join(ROOT, "bench.py"))
     unused = [u for p in paths for u in _unused_imports(p)]
     assert not unused, f"imports their scope never names: {unused}"
+
+
+def _squared_l2_folds(path: str) -> list:
+    """``path:line`` of every ``zip_with`` whose lambda is a squared
+    difference, ``(a - b) * (a - b)``: an inline squared-L2 fold."""
+    hits = []
+    for node in ast.walk(ast.parse(open(path).read())):
+        f = getattr(node, "func", None)
+        if getattr(f, "attr", getattr(f, "id", None)) != "zip_with":
+            continue
+        for lam in (a for a in node.args if isinstance(a, ast.Lambda)):
+            b = lam.body
+            if (
+                isinstance(b, ast.BinOp) and isinstance(b.op, ast.Mult)
+                and isinstance(b.left, ast.BinOp) and isinstance(b.left.op, ast.Sub)
+                and ast.dump(b.left) == ast.dump(b.right)
+            ):
+                hits.append(f"{os.path.relpath(path, ROOT)}:{node.lineno}")
+    return hits
+
+
+def test_squared_l2_folded_only_in_vector_functions():
+    """Squared L2 is written once, as ``functions/vector.l2_squared``;
+    every other distance calls it, so the fold order (and with it the
+    bit-exact match with a serial engine) has one home."""
+    vector = os.path.join(ROOT, "milvus_cdc_spark", "functions", "vector.py")
+    assert len(_squared_l2_folds(vector)) == 1, "detector lost l2_squared"
+    inline = [
+        h for p in _python_files(os.path.join(ROOT, "milvus_cdc_spark"))
+        if p != vector for h in _squared_l2_folds(p)
+    ]
+    assert not inline, f"inline squared-L2 folds: {inline}"
