@@ -27,6 +27,7 @@ from pyspark.sql import functions as F
 
 from milvus_cdc_spark.cache_registry import cache
 from milvus_cdc_spark.functions import vector as vecf
+from milvus_cdc_spark.operators import windows
 
 
 def parallelize_expansion(df: DataFrame) -> DataFrame:
@@ -53,22 +54,13 @@ def parallelize_expansion(df: DataFrame) -> DataFrame:
     sf0.1 (semdedup_prune +12%): their k<=16-way expansions with
     map-side combine do too little work per input row to repay the
     extra shuffle plus the plan->RDD probe on already-derived inputs.
+
+    Its one caller is ``brute_force_topk``.
     """
     target = df.sparkSession.sparkContext.defaultParallelism
     if df.rdd.getNumPartitions() < target:
         return df.repartition(target)
     return df
-
-
-def _ranked_topk(scored: DataFrame, k: int) -> DataFrame:
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("sim").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "rank", "neighbor_id", "sim")
-    )
 
 
 def brute_force_topk(
@@ -83,33 +75,12 @@ def brute_force_topk(
     sim is rounded to 6 decimals *before* ranking so ordering is stable
     across engines.
     """
-    # norms precomputed per side (rows ∝ corpus + queries), so the
-    # per-pair work is a single dot pass. sim = dot/(nc*nq) is the same
-    # expression tree as cosine() — bit-identical result, 3× less work.
-    q = queries.select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).alias("qvec"),
-        vecf.norm(F.col(vec_col)).alias("qnorm"),
+    scored = brute_force_scored(
+        parallelize_expansion(corpus), queries, id_col=id_col, vec_col=vec_col
     )
-    c = parallelize_expansion(corpus).select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).alias("cvec"),
-        vecf.norm(F.col(vec_col)).alias("cnorm"),
-    )
-    scored = (
-        c.crossJoin(F.broadcast(q))
-        .filter(F.col("neighbor_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round(
-                vecf.dot(F.col("cvec"), F.col("qvec"))
-                / (F.col("cnorm") * F.col("qnorm")),
-                6,
-            ).alias("sim"),
-        )
-    )
-    return _ranked_topk(scored, k)
+    return windows.top_k(
+        scored, "query_id", [F.desc("sim"), F.asc("neighbor_id")], k
+    ).select("query_id", "rank", "neighbor_id", "sim")
 
 
 def sign_bucket(vec_col, n_bits: int = 4):
@@ -185,7 +156,9 @@ def bucketed_topk(
             ).alias("sim"),
         )
     )
-    return _ranked_topk(scored, k)
+    return windows.top_k(
+        scored, "query_id", [F.desc("sim"), F.asc("neighbor_id")], k
+    ).select("query_id", "rank", "neighbor_id", "sim")
 
 
 def nearest(
@@ -416,9 +389,9 @@ def ivf_assign(
                 *rank,
             )
         )
-    w = Window.partitionBy("_vid").orderBy(F.col("_csim").desc(), F.col("centroid_id"))
-    ranked = scored.withColumn("_r", F.row_number().over(w)).filter(
-        F.col("_r") <= n_probe
+    ranked = windows.top_k(
+        scored, "_vid", [F.col("_csim").desc(), F.col("centroid_id")], n_probe,
+        rank="_r",
     )
     if with_rank:
         return ranked.select(
@@ -489,7 +462,9 @@ def ivf_topk(
         # a query probing n lists can see a neighbor at most once (corpus
         # vectors live in exactly one list) — no distinct needed
     )
-    return _ranked_topk(scored, k)
+    return windows.top_k(
+        scored, "query_id", [F.desc("sim"), F.asc("neighbor_id")], k
+    ).select("query_id", "rank", "neighbor_id", "sim")
 
 
 def sparse_rows(
@@ -530,7 +505,9 @@ def sparse_topk(
         .groupBy("query_id", "neighbor_id")
         .agg(F.round(F.sum(F.col("cval") * F.col("qval")), 6).alias("sim"))
     )
-    return _ranked_topk(scored, k)
+    return windows.top_k(
+        scored, "query_id", [F.desc("sim"), F.asc("neighbor_id")], k
+    ).select("query_id", "rank", "neighbor_id", "sim")
 
 
 def probe_buckets(vec_col, n_bits: int = 4):
@@ -594,7 +571,9 @@ def multiprobe_topk(
         # a corpus vector lives in ONE bucket but a query probes several —
         # distinct buckets never repeat, so pairs are already unique
     )
-    return _ranked_topk(scored, k)
+    return windows.top_k(
+        scored, "query_id", [F.desc("sim"), F.asc("neighbor_id")], k
+    ).select("query_id", "rank", "neighbor_id", "sim")
 
 
 # ---------------------------------------------------------------------------
@@ -659,11 +638,8 @@ def metric_topk(
     else:
         raise ValueError(f"unknown metric_type: {metric}")
     scored = pairs.select("query_id", "neighbor_id", score)
-    w = Window.partitionBy("query_id").orderBy(*order)
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "rank", "neighbor_id", out)
+    return windows.top_k(scored, "query_id", order, k).select(
+        "query_id", "rank", "neighbor_id", out
     )
 
 
@@ -674,8 +650,11 @@ def brute_force_scored(
     vec_col: str = "embedding",
 ) -> DataFrame:
     """All-pairs cosine scores (query side broadcast) — the shared input of
-    the search refinements below. sim rounded to 6dp for cross-engine
-    ordering stability."""
+    the search refinements below and of ``brute_force_topk``. sim rounded
+    to 6dp for cross-engine ordering stability."""
+    # norms precomputed per side (rows ∝ corpus + queries), so the
+    # per-pair work is a single dot pass. sim = dot/(nc*nq) is the same
+    # expression tree as cosine() — bit-identical result, 3× less work.
     q = queries.select(
         F.col(id_col).alias("query_id"),
         F.col(vec_col).alias("qvec"),
@@ -772,6 +751,8 @@ def grouping_topk(
     scored = brute_force_scored(corpus, queries, id_col=id_col, vec_col=vec_col).join(
         g, "neighbor_id"
     )
+    # the in-group cut stays hand-written: ``best_sim`` is evaluated
+    # between the ranking and the cut, which ``windows.top_k`` would move
     w_in = Window.partitionBy("query_id", "grp").orderBy(
         F.col("sim").desc(), F.col("neighbor_id").asc()
     )
@@ -805,6 +786,9 @@ def paged_topk(
     w = Window.partitionBy("query_id").orderBy(
         F.col("sim").desc(), F.col("neighbor_id").asc()
     )
+    # the two-sided range stays hand-written: through ``windows.top_k``
+    # the ``rank > offset`` filter would merge after the kernel's cut and
+    # reorder the plan's Filter conjuncts
     return (
         scored.withColumn("rank", F.row_number().over(w))
         .filter((F.col("rank") > offset) & (F.col("rank") <= offset + limit))
@@ -824,13 +808,9 @@ def rrf_fuse(ranked_a: DataFrame, ranked_b: DataFrame, k: int = 60, topk: int = 
     fused = u.groupBy("query_id", "neighbor_id").agg(
         F.round(F.sum(1.0 / (F.lit(k) + F.col("rank"))), 6).alias("rrf_score")
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("rrf_score").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        fused.withColumn("fused_rank", F.row_number().over(w))
-        .filter(F.col("fused_rank") <= topk)
-        .select("query_id", "fused_rank", "neighbor_id", "rrf_score")
+    order = [F.col("rrf_score").desc(), F.col("neighbor_id").asc()]
+    return windows.top_k(fused, "query_id", order, topk, rank="fused_rank").select(
+        "query_id", "fused_rank", "neighbor_id", "rrf_score"
     )
 
 
@@ -864,13 +844,9 @@ def weighted_fuse(
             + F.lit(w_b) * F.coalesce("sim_b", F.lit(0))
         ).alias("weighted_score"),
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("weighted_score").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        joined.withColumn("fused_rank", F.row_number().over(w))
-        .filter(F.col("fused_rank") <= topk)
-        .select("query_id", "fused_rank", "neighbor_id", "weighted_score")
+    order = [F.col("weighted_score").desc(), F.col("neighbor_id").asc()]
+    return windows.top_k(joined, "query_id", order, topk, rank="fused_rank").select(
+        "query_id", "fused_rank", "neighbor_id", "weighted_score"
     )
 
 
@@ -1042,13 +1018,9 @@ def pq_adc_topk(
         .groupBy("query_id", F.col(id_col).alias("neighbor_id"))
         .agg(F.round(F.sum("d"), 6).alias("adist"))
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("adist").asc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "rank", "neighbor_id", "adist")
+    order = [F.col("adist").asc(), F.col("neighbor_id").asc()]
+    return windows.top_k(scored, "query_id", order, k).select(
+        "query_id", "rank", "neighbor_id", "adist"
     )
 
 
@@ -1185,13 +1157,12 @@ def ivf_pq_adc_topk(
         F.transform(F.col(vec_col), lambda x: x.cast("double")).alias("_qv"),
     ).crossJoin(F.broadcast(cen))
     qdist = vecf.l2_squared(F.col("_qv"), F.col("_cc"))
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("_qdist").asc(), F.col("coarse_id").asc()
-    )
-    probes = (
-        qj.withColumn("_qdist", qdist)
-        .withColumn("_r", F.row_number().over(w))
-        .filter(F.col("_r") <= n_probe)
+    probes = windows.top_k(
+        qj.withColumn("_qdist", qdist),
+        "query_id",
+        [F.col("_qdist").asc(), F.col("coarse_id").asc()],
+        n_probe,
+        rank="_r",
     )
     qres = F.zip_with(F.col("_qv"), F.col("_cc"), lambda a, b: a - b)
     slices = F.array(*[F.slice(qres, s * d_sub + 1, d_sub) for s in range(m)])
@@ -1217,13 +1188,9 @@ def ivf_pq_adc_topk(
         .groupBy("query_id", F.col(id_col).alias("neighbor_id"))
         .agg(F.round(F.sum("d"), 6).alias("adist"))
     )
-    wr = Window.partitionBy("query_id").orderBy(
-        F.col("adist").asc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(wr))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "rank", "neighbor_id", "adist")
+    order = [F.col("adist").asc(), F.col("neighbor_id").asc()]
+    return windows.top_k(scored, "query_id", order, k).select(
+        "query_id", "rank", "neighbor_id", "adist"
     )
 
 

@@ -20,6 +20,7 @@ from pyspark.sql import functions as F
 
 from milvus_cdc_spark.cache_registry import cache
 from milvus_cdc_spark.functions import text as textf
+from milvus_cdc_spark.operators import windows
 
 K1_DEFAULT = 1.2
 B_DEFAULT = 0.75
@@ -367,12 +368,9 @@ def tfidf_keywords(
         .withColumn("idf_ppm", F.expr("_n * 1000000 DIV df"))
         .withColumn("score", (F.col("tf") * F.col("idf_ppm")).cast("bigint"))
     )
-    w = Window.partitionBy(id_col).orderBy(
-        F.col("score").desc(), F.col("term").asc()
-    )
+    order = [F.col("score").desc(), F.col("term").asc()]
     return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
+        windows.top_k(scored, id_col, order, k)
         .select(id_col, "rank", "term", F.col("tf").cast("bigint").alias("tf"), "score")
     )
 

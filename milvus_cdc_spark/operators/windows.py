@@ -1,7 +1,7 @@
 """Window/ordering operators (SURVEY §2.6).
 
 - W1 in-pack stable sort (delete-before-insert tie-break)
-- W2 latest-version-of-name dedupe
+- W2 latest-version-of-name dedupe, and every per-key top-k (``top_k``)
 - W3 monotonic timestamp rebase (dense_rank within pack)
 - W5 lag-style last-sent tracking
 
@@ -27,15 +27,26 @@ def pack_sort_keys(ts_col: str = "ts", op_col: str = "op_type") -> list:
     ]
 
 
-def latest_version_dedupe(df: DataFrame, partition_keys: list[str], order_col: str) -> DataFrame:
-    """W2: repeated collection names keep only the max-CreateTime instance
-    (core/reader/collection_reader.go:203-238). row_number desc = 1."""
-    w = Window.partitionBy(*partition_keys).orderBy(F.col(order_col).desc())
-    return (
-        df.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") == 1)
-        .drop("_rn")
-    )
+def top_k(df: DataFrame, by, order: list, k: int, rank: str | None = "rank") -> DataFrame:
+    """The bounded per-key selection: the first ``k`` rows of each ``by``
+    group in ``order``, numbered 1..k in the ``rank`` column
+    (``rank=None`` drops it). Every per-key top-k and top-1 in the engine
+    goes through here: search keeps the best k hits per query, and W2
+    keeps the newest of each repeated collection name with ``k=1``
+    (core/reader/collection_reader.go:203-238).
+
+    ``row_number``, not ``rank``: ties never return more than k rows, so
+    ``order`` should end in a unique tiebreak column for a deterministic
+    pick. The cut is ``rank <= k``, the form Spark pushes below the
+    exchange as a Partial ``WindowGroupLimit``: each map task keeps at
+    most k rows per group before the shuffle, so the exchange carries
+    k x groups x tasks rows, not the input.
+    """
+    by = [by] if isinstance(by, str) else list(by)
+    col = rank or "_rank"
+    w = Window.partitionBy(*by).orderBy(*order)
+    out = df.withColumn(col, F.row_number().over(w)).filter(F.col(col) <= k)
+    return out if rank else out.drop(col)
 
 
 def monotonic_rebase(

@@ -441,14 +441,8 @@ def latest_version_dedupe(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = _t(spark, sf_dir, "orders").select(
         "o_custkey", "o_orderkey", "o_orderdate", "o_totalprice"
     )
-    w = Window.partitionBy("o_custkey").orderBy(
-        F.col("o_orderdate").desc(), F.col("o_orderkey").desc()
-    )
-    return (
-        orders.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") == 1)
-        .drop("_rn")
-    )
+    order = [F.col("o_orderdate").desc(), F.col("o_orderkey").desc()]
+    return windows.top_k(orders, "o_custkey", order, 1, rank=None)
 
 
 # ---------------------------------------------------------------------------
@@ -1205,10 +1199,9 @@ def kafka_envelope(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def pack_sort_order(spark: SparkSession, sf_dir: str) -> DataFrame:
     ops = oplog.derive_oplog(_t(spark, sf_dir, "lineitem"), widen=True)
-    w = Window.partitionBy("vchannel").orderBy(*windows.pack_sort_keys(), F.col("pk"))
+    order = [*windows.pack_sort_keys(), F.col("pk")]
     return (
-        ops.withColumn("apply_rank", F.row_number().over(w))
-        .filter(F.col("apply_rank") <= 200)
+        windows.top_k(ops, "vchannel", order, 200, rank="apply_rank")
         .select("vchannel", "apply_rank", "ts", "op_type", "pk")
         .orderBy("vchannel", "apply_rank")
     )
@@ -3590,10 +3583,7 @@ def schema_evolution_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     ops = spark.read.option("mergeSchema", "true").parquet(
         stage + "/batch=0", stage + "/batch=1"
     )
-    w = Window.partitionBy("pk").orderBy(F.col("ts").desc())
-    latest = (
-        ops.withColumn("rn", F.row_number().over(w)).filter(F.col("rn") == 1)
-    )
+    latest = windows.top_k(ops, "pk", [F.col("ts").desc()], 1, rank="rn")
     return latest.agg(
         F.count("*").cast("bigint").alias("n_pks"),
         F.sum(F.col("tag").isNull().cast("int")).cast("bigint").alias(

@@ -33,6 +33,7 @@ from pyspark.sql import functions as F
 from milvus_cdc_spark.cache_registry import cache
 from milvus_cdc_spark.suite import _SQL_COSINE, _SQL_TOKS, _t, q
 from milvus_cdc_spark.catalog import local_frame as _local_frame
+from milvus_cdc_spark.operators import windows
 
 # ---------------------------------------------------------------------------
 # Exact ROC-AUC via the Mann-Whitney U statistic: does document length
@@ -83,8 +84,6 @@ from milvus_cdc_spark.catalog import local_frame as _local_frame
 def roc_auc_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact ROC-AUC (doubled Mann-Whitney U, tie-aware) of ``n_chars``
     as a classifier score for ``lang == 'en'``, in integer ppm."""
-    from milvus_cdc_spark.operators import windows
-
     docs = _t(spark, sf_dir, "documents")
     per = docs.groupBy(F.col("n_chars").alias("s")).agg(
         F.sum((F.col("lang") == "en").cast("int")).cast("bigint").alias("pos"),
@@ -172,8 +171,6 @@ def roc_auc_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
 def ks_drift_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact two-sample KS statistic (integer-scaled CDF gap) between
     English and non-English doc-length distributions."""
-    from milvus_cdc_spark.operators import windows
-
     docs = _t(spark, sf_dir, "documents")
     tot = docs.agg(
         F.sum((F.col("lang") == "en").cast("int")).cast("bigint").alias("n_a"),
@@ -259,8 +256,6 @@ def ks_drift_test(spark: SparkSession, sf_dir: str) -> DataFrame:
 def score_decile_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Decile gain chart of doc length as a score for English docs:
     exact global deciles (distributed_ntile), integer-ppm rates."""
-    from milvus_cdc_spark.operators import windows
-
     docs = _t(spark, sf_dir, "documents").select(
         "doc_id",
         (-F.col("n_chars")).alias("neg_s"),
@@ -859,17 +854,12 @@ def int8_ip_search_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.lit(0).cast("bigint"),
         lambda acc, x: acc + x,
     )
-    from pyspark.sql import Window as W
-
-    w = W.partitionBy("query_id").orderBy(
-        F.col("ip").desc(), F.col("neighbor_id")
+    scored = scored.select(
+        "query_id", F.col("vec_id").alias("neighbor_id"), ip.alias("ip")
     )
+    order = [F.col("ip").desc(), F.col("neighbor_id")]
     return (
-        scored.select(
-            "query_id", F.col("vec_id").alias("neighbor_id"), ip.alias("ip")
-        )
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= 3)
+        windows.top_k(scored, "query_id", order, 3)
         .select(
             "query_id",
             F.col("rank").cast("int").alias("rank"),
@@ -1508,8 +1498,6 @@ def maxsim_multivector_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top-3 neighbors by exact integer MaxSim over 8x8-dim int8
     sub-vectors — late-interaction retrieval as pure JVM column
     algebra."""
-    from pyspark.sql import Window as W
-
     from milvus_cdc_spark.partitioning import widen_small_scan
 
     emb = _t(spark, sf_dir, "embeddings")
@@ -1559,12 +1547,9 @@ def maxsim_multivector_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             maxsim.alias("maxsim"),
         )
     )
-    w = W.partitionBy("query_id").orderBy(
-        F.col("maxsim").desc(), F.col("neighbor_id")
-    )
+    order = [F.col("maxsim").desc(), F.col("neighbor_id")]
     return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= 3)
+        windows.top_k(scored, "query_id", order, 3)
         .select(
             "query_id",
             F.col("rank").cast("int").alias("rank"),
@@ -2837,7 +2822,6 @@ def vocab_coverage_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Corpus token coverage (ppm) of the top-N frequency-ranked terms
     for candidate vocab sizes, ranks via distributed_row_number."""
     from milvus_cdc_spark.functions import text as textf
-    from milvus_cdc_spark.operators import windows
 
     docs = _t(spark, sf_dir, "documents")
     toks = docs.select(
@@ -3012,7 +2996,6 @@ def length_lorenz_points(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per length-decile token share and cumulative share (ppm) —
     exact global deciles via distributed_ntile."""
     from milvus_cdc_spark.functions import text as textf
-    from milvus_cdc_spark.operators import windows
 
     docs = _t(spark, sf_dir, "documents").select(
         "doc_id",

@@ -17,6 +17,7 @@ from pyspark.sql import functions as F
 from milvus_cdc_spark.cache_registry import cache
 from milvus_cdc_spark.suite import _SQL_COSINE, _t, q
 from milvus_cdc_spark.catalog import local_frame as _local_frame
+from milvus_cdc_spark.operators import windows
 
 # ---------------------------------------------------------------------------
 # PageRank over the customer<->supplier trade graph. Corpus-curation
@@ -186,13 +187,9 @@ def knn_label_accuracy(spark: SparkSession, sf_dir: str) -> DataFrame:
     votes = labeled.groupBy("query_id", "n_label").agg(
         F.count("*").alias("c")
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("c").desc(), F.col("n_label")
-    )
-    pred = (
-        votes.withColumn("vr", F.row_number().over(w))
-        .filter(F.col("vr") == 1)
-        .select("query_id", F.col("n_label").alias("pred_label"))
+    order = [F.col("c").desc(), F.col("n_label")]
+    pred = windows.top_k(votes, "query_id", order, 1, rank="vr").select(
+        "query_id", F.col("n_label").alias("pred_label")
     )
     truth = queries.select(
         F.col("vec_id").alias("query_id"), F.col("label").alias("true_label")

@@ -19,6 +19,7 @@ from pyspark.sql import functions as F
 from milvus_cdc_spark.cache_registry import cache
 from milvus_cdc_spark.suite import _SQL_COSINE, _SQL_TOKS, _t, q
 from milvus_cdc_spark.catalog import local_frame as _local_frame
+from milvus_cdc_spark.operators import windows
 
 # ---------------------------------------------------------------------------
 # Correlated EXISTS (TPC-H Q4 shape): orders that have at least one late
@@ -385,11 +386,9 @@ def anti_exists_idle_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
 def min_cost_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     s = _t(spark, sf_dir, "supplier")
     n = _t(spark, sf_dir, "nation").select("n_nationkey", "n_name")
-    w = Window.partitionBy("n_name").orderBy("s_acctbal", "s_suppkey")
+    joined = s.join(F.broadcast(n), s.s_nationkey == n.n_nationkey)
     return (
-        s.join(F.broadcast(n), s.s_nationkey == n.n_nationkey)
-        .withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
+        windows.top_k(joined, "n_name", ["s_acctbal", "s_suppkey"], 1, rank="rn")
         .select("n_name", "s_name", "s_acctbal")
         .orderBy("n_name")
     )
@@ -964,8 +963,6 @@ def hybrid_dense_fulltext_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
     Measured leave (r14: 1.02/0.93; r15 re-run on two calmer blocks:
     1.05/1.12): bm25_index(widen=True) stays off — the 500-doc filtered
     index build is too light to repay the exchange."""
-    from pyspark.sql import Window
-
     from milvus_cdc_spark.analytics import similarity
     from milvus_cdc_spark.analytics.textrank import bm25_index, fulltext_search
 
@@ -975,17 +972,15 @@ def hybrid_dense_fulltext_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     docs = _t(spark, sf_dir, "documents").filter(F.col("doc_id") < 500)
     bm = fulltext_search(bm25_index(docs), ["batch", "data", "query"])
-    wt = Window.partitionBy("query_id").orderBy(
-        F.col("s").desc(), F.col("neighbor_id").asc()
-    )
-    text = (
+    text = windows.top_k(
         bm.select(
             F.lit(0).alias("query_id"),
             F.col("doc_id").alias("neighbor_id"),
             F.round("bm25", 4).alias("s"),
-        )
-        .withColumn("rank", F.row_number().over(wt))
-        .filter(F.col("rank") <= 10)
+        ),
+        "query_id",
+        [F.col("s").desc(), F.col("neighbor_id").asc()],
+        10,
     )
     return similarity.rrf_fuse(
         dense.select("query_id", "neighbor_id", "rank"),
@@ -1407,10 +1402,8 @@ def hamming_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             vecf.hamming_i64(F.col("bits"), F.col("qbits")).alias("hamming"),
         )
     )
-    w = Window.partitionBy("query_id").orderBy("hamming", "neighbor_id")
     return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= 3)
+        windows.top_k(scored, "query_id", ["hamming", "neighbor_id"], 3)
         .select("query_id", "rank", "neighbor_id", "hamming")
         .orderBy("query_id", "rank")
     )
@@ -3270,8 +3263,6 @@ def event_sessionization(spark: SparkSession, sf_dir: str) -> DataFrame:
     (windows.sessionize, 30-minute gap): session count, event totals,
     largest session, mean session duration (integer-microsecond sums
     divided once at the end)."""
-    from milvus_cdc_spark.operators import windows
-
     ev = _t(spark, sf_dir, "events").select("user_id", "ts")
     labeled = windows.sessionize(ev, gap_seconds=1800)
     sess = labeled.groupBy("user_id", "session_id").agg(
@@ -4719,8 +4710,6 @@ def psi_length_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
 def chi2_token_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top-3 chi-squared-associated tokens per source (document-level
     2x2 contingency, exact integer scaling)."""
-    from pyspark.sql import Window
-
     from milvus_cdc_spark.functions import text as textf
 
     docs = _t(spark, sf_dir, "documents")
@@ -4753,12 +4742,9 @@ def chi2_token_source(spark: SparkSession, sf_dir: str) -> DataFrame:
             "* (n_docs - t_docs)) AS BIGINT)"
         ).alias("chi2_scaled"),
     )
-    w = Window.partitionBy("source").orderBy(
-        F.col("chi2_scaled").desc(), F.col("tok")
-    )
+    order = [F.col("chi2_scaled").desc(), F.col("tok")]
     return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= 3)
+        windows.top_k(scored, "source", order, 3)
         .select("source", F.col("rank").cast("int"), "tok", "chi2_scaled")
         .orderBy("source", "rank")
     )

@@ -20,6 +20,7 @@ from pyspark.sql import functions as F
 
 from milvus_cdc_spark import catalog
 from milvus_cdc_spark.cache_registry import cache
+from milvus_cdc_spark.operators import windows
 from milvus_cdc_spark.suite import _SQL_COSINE, _t, q
 
 # ---------------------------------------------------------------------------
@@ -793,7 +794,6 @@ def hamming_multiword_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     (interleaved A/B 0.99) — per-word popcounts are too cheap to repay
     the exchange; only the maxsim scorers keep the widening."""
     from milvus_cdc_spark.functions import vector as vecf
-    from pyspark.sql import Window
 
     emb = _t(spark, sf_dir, "embeddings")
     sig = emb.select(
@@ -811,10 +811,8 @@ def hamming_multiword_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             vecf.hamming_words(F.col("words"), F.col("qwords")).alias("hamming"),
         )
     )
-    w = Window.partitionBy("query_id").orderBy("hamming", "neighbor_id")
     return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= 3)
+        windows.top_k(scored, "query_id", ["hamming", "neighbor_id"], 3)
         .select("query_id", "rank", "neighbor_id", "hamming")
         .orderBy("query_id", "rank")
     )
@@ -866,7 +864,6 @@ def jaccard_binary_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     (interleaved A/B 1.02 then 0.96) — popcount pairs are too cheap to
     repay the exchange; only the maxsim scorers keep the widening."""
     from milvus_cdc_spark.functions import vector as vecf
-    from pyspark.sql import Window
 
     emb = _t(spark, sf_dir, "embeddings")
     sig = emb.select(
@@ -886,10 +883,8 @@ def jaccard_binary_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("distance"),
         )
     )
-    w = Window.partitionBy("query_id").orderBy("distance", "neighbor_id")
     return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= 3)
+        windows.top_k(scored, "query_id", ["distance", "neighbor_id"], 3)
         .select("query_id", "rank", "neighbor_id", "distance")
         .orderBy("query_id", "rank")
     )
@@ -1855,8 +1850,6 @@ def superstructure_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     r14 note (measured): corpus-side scan-widening was inside noise here
     (interleaved A/B 0.87 then 0.96) — per the keep-only-clear-winners
     rule it stays on the single scan; only the maxsim scorers widen."""
-    from pyspark.sql import Window
-
     from milvus_cdc_spark.functions import vector as vecf
 
     emb = _t(spark, sf_dir, "embeddings")
@@ -1877,12 +1870,9 @@ def superstructure_search(spark: SparkSession, sf_dir: str) -> DataFrame:
             vecf.superstructure_words(F.col("qwords"), F.col("words")), 6
         ).alias("distance"),
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("distance").asc(), F.col("neighbor_id").asc()
-    )
+    order = [F.col("distance").asc(), F.col("neighbor_id").asc()]
     return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= 3)
+        windows.top_k(scored, "query_id", order, 3)
         .select("query_id", "rank", "neighbor_id", "distance")
         .orderBy("query_id", "rank")
     )
@@ -2364,14 +2354,9 @@ def hashed_embedding_search(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("cosine"),
         )
     )
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id")
-    )
+    order = [F.col("cosine").desc(), F.col("neighbor_id")]
     return (
-        scored.withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= 5)
+        windows.top_k(scored, "query_id", order, 5, rank="rnk")
         .select("query_id", "rnk", "neighbor_id", "cosine")
         .orderBy("query_id", "rnk")
     )
@@ -2621,8 +2606,6 @@ def range_search_annulus(spark: SparkSession, sf_dir: str) -> DataFrame:
 def hard_negative_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top-5 hardest negatives (most-similar different-label vectors)
     per anchor — contrastive-training negative mining."""
-    from pyspark.sql import Window
-
     from milvus_cdc_spark.functions import vector as vecf
 
     emb = _t(spark, sf_dir, "embeddings")
@@ -2642,12 +2625,9 @@ def hard_negative_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("label").alias("neighbor_label"),
         F.round(vecf.cosine(F.col("embedding"), F.col("q_emb")), 6).alias("sim"),
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("sim").desc(), F.col("neighbor_id").asc()
-    )
+    order = [F.col("sim").desc(), F.col("neighbor_id").asc()]
     return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= 5)
+        windows.top_k(scored, "query_id", order, 5)
         .select("query_id", "rank", "neighbor_id", "neighbor_label", "sim")
         .orderBy("query_id", "rank")
     )
@@ -2856,7 +2836,7 @@ def ivf_nprobe_recall_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     filtering ``probe_rank <= n_probe`` reproduces each setting's
     candidate set exactly (a corpus vector lives in exactly one list).
     One ranking window partitioned by (n_probe, query_id) — the same
-    (sim desc, neighbor_id asc) order as _ranked_topk — then one grouped
+    (sim desc, neighbor_id asc) order as brute_force_topk — then one grouped
     aggregation replaces the three global aggregates + union. Measured:
     plan 34 → 18 exchanges (plans/r15), interleaved A/B 0.719 at sf0.1
     (4.35 → 3.13 s median); oracle-green at sf0.001/0.01/0.1.
@@ -2865,8 +2845,6 @@ def ivf_nprobe_recall_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     (interleaved A/B 1.18) — the probe sweep re-reads the widened
     exchange from every consumer and the exact side already widens
     inside brute_force_topk. Left on the single scan."""
-    from pyspark.sql import Window
-
     from milvus_cdc_spark.analytics import similarity
     from milvus_cdc_spark.functions import vector as vecf
 
@@ -2922,12 +2900,9 @@ def ivf_nprobe_recall_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     cand = scored.withColumn("n_probe", settings).filter(
         F.col("probe_rank") <= F.col("n_probe")
     )
-    w = Window.partitionBy("n_probe", "query_id").orderBy(
-        F.col("sim").desc(), F.col("neighbor_id").asc()
-    )
+    order = [F.col("sim").desc(), F.col("neighbor_id").asc()]
     approx = (
-        cand.withColumn("_rk", F.row_number().over(w))
-        .filter(F.col("_rk") <= 3)
+        windows.top_k(cand, ["n_probe", "query_id"], order, 3, rank=None)
         .select(
             F.col("n_probe").alias("_np"),
             F.col("query_id").alias("_qid"),
@@ -3128,8 +3103,6 @@ def expr_geo_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def geo_fenced_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Cosine top-3 within a 30-unit geo fence of each query point."""
-    from pyspark.sql import Window
-
     from milvus_cdc_spark.functions import vector as vecf
 
     emb = _t(spark, sf_dir, "embeddings")
@@ -3159,12 +3132,9 @@ def geo_fenced_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
             "sim"
         ),
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("sim").desc(), F.col("neighbor_id")
-    )
+    order = [F.col("sim").desc(), F.col("neighbor_id")]
     return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= 3)
+        windows.top_k(scored, "query_id", order, 3)
         .select("query_id", "rank", "neighbor_id", "sim")
         .orderBy("query_id", "rank")
     )

@@ -18,10 +18,12 @@ error.
 The ``--tag`` form snapshots the named queries' plans at
 ``$SPARK_GRAFT_SF_DIR`` into ``plans/TAG/<name>_<before|after>.txt``,
 the before/after pair a plan-changing optimization keeps beside it.
-Both forms plan with AQE off, so the static plan is readable, and both
-write the plan text with its session counters normalized
-(``_normalized``), so a plan reads the same whichever queries the
-session planned before it; the gates see the raw plan.
+Both forms plan with AQE off, so the static plan is readable, at
+local[32] whatever ``SPARK_GRAFT_CPUS`` says, so partition counts read
+the same on any host. Both write the plan text with its session
+counters normalized (``_normalized``), so a plan reads the same
+whichever queries the session planned before it; the gates see the raw
+plan.
 """
 
 from __future__ import annotations
@@ -300,9 +302,16 @@ def _section(name: str, plan: str, recs: dict, bad: dict) -> str:
     return f"## {name}\n\n{stamp}\n\n```\n{body}\n```\n"
 
 
+#: The parallelism PLANS.md and GATES.json are planned at (local[32], 32
+#: shuffle partitions): exchange and repartition counts follow it, so the
+#: sweep fixes it rather than take the host's ``SPARK_GRAFT_CPUS``.
+PLAN_CPUS = "32"
+
+
 def _session():
     from milvus_cdc_spark.session import get_spark
 
+    os.environ["SPARK_GRAFT_CPUS"] = PLAN_CPUS
     spark = get_spark("dump_plans")
     spark.sparkContext.setLogLevel("ERROR")
     # AQE hides the final plan behind AdaptiveSparkPlan pre-execution;

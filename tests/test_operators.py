@@ -91,8 +91,63 @@ def test_latest_version_dedupe(spark):
         [("db", "coll", 1, 10), ("db", "coll", 2, 20), ("db", "other", 3, 5)],
         "db string, name string, id bigint, create_time bigint",
     )
-    out = windows.latest_version_dedupe(df, ["db", "name"], "create_time")
+    out = windows.top_k(
+        df, ["db", "name"], [F.col("create_time").desc()], 1, rank=None
+    )
     assert {r.id for r in out.collect()} == {2, 3}
+
+
+def _scores(spark):
+    # key 1 ties at 0.9 three ways; key 2 has fewer than k rows
+    return spark.createDataFrame(
+        [(1, 10, 0.9), (1, 11, 0.9), (1, 12, 0.9), (1, 13, 0.5), (2, 20, 0.7)],
+        "qid int, nid int, s double",
+    )
+
+
+def test_top_k_ties_return_exactly_k_in_tiebreak_order(spark):
+    order = [F.col("s").desc(), F.col("nid").asc()]
+    out = windows.top_k(_scores(spark), "qid", order, 2).orderBy("qid", "rank")
+    assert [tuple(r) for r in out.collect()] == [
+        (1, 10, 0.9, 1), (1, 11, 0.9, 2), (2, 20, 0.7, 1),
+    ]
+
+
+def test_top_k_rank_none_drops_the_column(spark):
+    out = windows.top_k(_scores(spark), "qid", [F.col("s").desc(), "nid"], 1, rank=None)
+    assert out.columns == ["qid", "nid", "s"]
+    named = windows.top_k(_scores(spark), "qid", ["nid"], 1, rank="rn")
+    assert named.columns == ["qid", "nid", "s", "rn"]
+
+
+def test_top_k_multi_column_by(spark):
+    df = spark.createDataFrame(
+        [(1, "a", 3), (1, "a", 1), (1, "b", 2), (2, "a", 5), (2, "a", 4)],
+        "g int, h string, v int",
+    )
+    out = windows.top_k(df, ["g", "h"], ["v"], 1, rank=None)
+    assert sorted(tuple(r) for r in out.collect()) == [
+        (1, "a", 1), (1, "b", 2), (2, "a", 4),
+    ]
+
+
+def test_top_k_1_equals_group_max_pick(spark):
+    df = _scores(spark)
+    order = [F.col("s").desc(), F.col("nid").asc()]
+    got = windows.top_k(df, "qid", order, 1, rank=None)
+    best = df.groupBy("qid").agg(F.max("s").alias("s"))
+    ref = df.join(best, ["qid", "s"]).groupBy("qid", "s").agg(F.min("nid").alias("nid"))
+    assert sorted(tuple(r) for r in got.select("qid", "nid", "s").collect()) == sorted(
+        tuple(r) for r in ref.select("qid", "nid", "s").collect()
+    )
+
+
+def test_top_k_plans_a_window_group_limit(spark):
+    """The cut is in the form Catalyst pushes below the exchange: a
+    ``WindowGroupLimit`` keeps k rows per group before the shuffle."""
+    out = windows.top_k(_scores(spark), "qid", [F.col("s").desc(), "nid"], 2)
+    plan = out._jdf.queryExecution().optimizedPlan().toString()
+    assert "WindowGroupLimit" in plan, plan
 
 
 def test_monotonic_rebase_preserves_order(spark):

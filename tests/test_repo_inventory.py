@@ -276,3 +276,89 @@ def test_squared_l2_folded_only_in_vector_functions():
         if p != vector for h in _squared_l2_folds(p)
     ]
     assert not inline, f"inline squared-L2 folds: {inline}"
+
+
+def _name(node) -> str | None:
+    f = getattr(node, "func", None)
+    return getattr(f, "attr", getattr(f, "id", None))
+
+
+def _is_row_number_over(node) -> bool:
+    return (
+        _name(node) == "over"
+        and isinstance(node.func, ast.Attribute)
+        and _name(node.func.value) == "row_number"
+    )
+
+
+#: Hand-written cuts that stay beside ``windows.top_k`` because routing
+#: them would change more of the plan than the rank column's name:
+#: ``grouping_topk`` evaluates its ``best_sim`` window between the
+#: ranking and the cut, and ``paged_topk``'s two-sided range would have
+#: its Filter conjuncts reordered.
+_KEPT_CUTS = {
+    "milvus_cdc_spark/analytics/similarity.py:grouping_topk",
+    "milvus_cdc_spark/analytics/similarity.py:paged_topk",
+}
+
+
+def _row_number_cuts(path: str) -> list:
+    """``path:line function`` of every ``.filter``/``.where`` that cuts a
+    ``row_number()`` column with ``<=``, ``<`` or ``==`` against a bound
+    that names no column: a hand-written bounded per-key selection.
+    A bound that reads a column (the dedup prefix lengths) is not one,
+    nor is a comparison outside a filter (a flag in a ``select``)."""
+    rel = os.path.relpath(path, ROOT)
+    hits = set()
+    for fn in ast.walk(ast.parse(open(path).read())):
+        if not isinstance(fn, ast.FunctionDef) or f"{rel}:{fn.name}" in _KEPT_CUTS:
+            continue
+        ranks, assigned = set(), {}
+        for node in ast.walk(fn):
+            if isinstance(node, ast.Assign):
+                for t in node.targets:
+                    if isinstance(t, ast.Name):
+                        assigned[t.id] = node.value
+            if _name(node) == "withColumn" and len(node.args) == 2:
+                if _is_row_number_over(node.args[1]):
+                    ranks.add(ast.dump(node.args[0]))
+            elif _name(node) == "alias" and node.args:
+                if _is_row_number_over(node.func.value):
+                    ranks.add(ast.dump(node.args[0]))
+        for node in ast.walk(fn):
+            if _name(node) not in ("filter", "where"):
+                continue
+            for cmp in (c for a in node.args for c in ast.walk(a)):
+                if not (
+                    isinstance(cmp, ast.Compare) and len(cmp.ops) == 1
+                    and isinstance(cmp.ops[0], (ast.Lt, ast.LtE, ast.Eq))
+                ):
+                    continue
+                col, bound = cmp.left, cmp.comparators[0]
+                if not (
+                    _name(col) == "col" and col.args
+                    and ast.dump(col.args[0]) in ranks
+                ):
+                    continue
+                parts = [
+                    assigned.get(b.id, b) if isinstance(b, ast.Name) else b
+                    for b in ast.walk(bound)
+                ]
+                if not any(
+                    _name(b) in ("col", "expr") for p in parts for b in ast.walk(p)
+                ):
+                    hits.add(f"{rel}:{cmp.lineno} {fn.name}")
+    return sorted(hits)
+
+
+def test_bounded_selection_only_in_windows_top_k():
+    """A per-key top-k or top-1 is ``operators/windows.top_k``; every
+    other module calls it, so how a bounded selection ranks and cuts
+    (``row_number``, ``rank <= k``) has one home."""
+    win = os.path.join(ROOT, "milvus_cdc_spark", "operators", "windows.py")
+    assert len(_row_number_cuts(win)) == 1, "detector lost top_k's cut"
+    inline = [
+        h for p in _python_files(os.path.join(ROOT, "milvus_cdc_spark"))
+        if p != win for h in _row_number_cuts(p)
+    ]
+    assert not inline, f"hand-written row_number cuts: {inline}"
