@@ -751,17 +751,11 @@ def grouping_topk(
     scored = brute_force_scored(corpus, queries, id_col=id_col, vec_col=vec_col).join(
         g, "neighbor_id"
     )
-    # the in-group cut stays hand-written: ``best_sim`` is evaluated
-    # between the ranking and the cut, which ``windows.top_k`` would move
-    w_in = Window.partitionBy("query_id", "grp").orderBy(
-        F.col("sim").desc(), F.col("neighbor_id").asc()
-    )
-    w_best = Window.partitionBy("query_id", "grp")
-    best = (
-        scored.withColumn("rn", F.row_number().over(w_in))
-        .withColumn("best_sim", F.max("sim").over(w_best))
-        .filter(F.col("rn") <= group_size)
-    )
+    # best_sim over the kept rows: the rank-1 row always survives the cut
+    best = windows.top_k(
+        scored, ["query_id", "grp"],
+        [F.col("sim").desc(), F.col("neighbor_id").asc()], group_size, rank="rn",
+    ).withColumn("best_sim", F.max("sim").over(Window.partitionBy("query_id", "grp")))
     w_g = Window.partitionBy("query_id").orderBy(
         F.col("best_sim").desc(), F.col("grp").asc()
     )

@@ -12,6 +12,13 @@ TPC-H-ish parquet tables for a given scale-factor directory.
 
 from __future__ import annotations
 
+import atexit
+import hashlib
+import itertools
+import os
+import shutil
+import tempfile
+from collections.abc import Callable
 from functools import lru_cache
 
 from pyspark.sql import DataFrame, SparkSession
@@ -38,6 +45,48 @@ TABLES = (
 #: would cost a Spark job per query invocation (a driver round-trip just
 #: to learn a constant).
 EMB_DIM = 64
+
+#: Every staged fixture and per-call work dir of the process lives under
+#: one root, ``<tempdir>/SCRATCH_PREFIX<8 chars>``, made on first use and
+#: removed at exit (a SIGKILLed process leaks it). Process-scoped, not
+#: query-scoped: a frame a query returns reads its files lazily.
+SCRATCH_PREFIX = "milvus_cdc_spark_"
+_root: str | None = None
+_seq = itertools.count()
+_staged: set[tuple[str, str, int]] = set()
+
+
+def _scratch_root() -> str:
+    global _root
+    if _root is None:
+        _root = tempfile.mkdtemp(prefix=SCRATCH_PREFIX)
+        atexit.register(shutil.rmtree, _root, ignore_errors=True)
+    return _root
+
+
+def scratch_dir(prefix: str) -> str:
+    """A fresh, empty directory under the scratch root; names count up, so
+    the same calls in a fresh process differ only in the root."""
+    path = os.path.join(_scratch_root(), f"{prefix}{next(_seq)}")
+    os.makedirs(path)
+    return path
+
+
+def staged(key: tuple[str, str, int], write: Callable[[str], None]) -> str:
+    """The directory of a deterministic fixture ``key = (name, sf_dir,
+    n_files)``, written by ``write(dir)`` once per process (again only if
+    the directory has gone); callers never mutate it. Its name is a
+    function of the key, so only the scratch root differs by process."""
+    name, sf_dir, n_files = key
+    key = (name, os.path.abspath(sf_dir), n_files)
+    digest = hashlib.sha1(key[1].encode()).hexdigest()[:8]
+    path = os.path.join(_scratch_root(), f"{name}_{n_files}_{digest}")
+    if key not in _staged or not os.path.isdir(path):
+        # a write that failed part-way leaves no memo entry; start clean
+        shutil.rmtree(path, ignore_errors=True)
+        write(path)
+        _staged.add(key)
+    return path
 
 
 @lru_cache(maxsize=None)

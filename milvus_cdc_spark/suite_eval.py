@@ -34,6 +34,7 @@ from milvus_cdc_spark.cache_registry import cache
 from milvus_cdc_spark.suite import _SQL_COSINE, _SQL_TOKS, _t, q
 from milvus_cdc_spark.catalog import local_frame as _local_frame
 from milvus_cdc_spark.operators import windows
+from milvus_cdc_spark.suite_mlops import _ssdiv
 
 # ---------------------------------------------------------------------------
 # Exact ROC-AUC via the Mann-Whitney U statistic: does document length
@@ -2870,15 +2871,6 @@ def vocab_coverage_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
 _LC_DIMS = 8
 
 
-def _lc_ssdiv(x: str, d: str) -> str:
-    """Sign-split integer division (truncation toward zero in BOTH
-    engines) — sums of signed micro-values can be negative."""
-    return (
-        f"CASE WHEN {x} < 0 THEN -((-({x})) // ({d})) "
-        f"ELSE ({x}) // ({d}) END"
-    )
-
-
 @q(
     "label_centroid_distances",
     f"""
@@ -2892,7 +2884,7 @@ def _lc_ssdiv(x: str, d: str) -> str:
     cent AS (
       SELECT label,
              {", ".join(
-                 _lc_ssdiv(f"sum(v{k})", "count(*)") + f" AS c{k}"
+                 _ssdiv(f"sum(v{k})", "count(*)", "//") + f" AS c{k}"
                  for k in range(_LC_DIMS))}
       FROM vals GROUP BY label
     )

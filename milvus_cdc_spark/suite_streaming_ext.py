@@ -2,11 +2,14 @@
 and the applyInPandasWithState channel tracker — each executed as a real
 Structured Streaming query (file source, availableNow) whose converged
 result is oracle-checkable because the final state is order-independent.
+Their deterministic file-source fixtures are ``catalog.staged`` once per
+process.
 """
 
 from __future__ import annotations
 
-import tempfile
+import os
+import shutil
 import uuid as _uuid
 
 from pyspark.sql import DataFrame, SparkSession
@@ -17,31 +20,14 @@ from milvus_cdc_spark.catalog import local_frame as _local_frame
 from milvus_cdc_spark.suite import q
 
 
-#: Process-lifetime fixture cache, same contract as
-#: ``suite._OPLOG_STAGE_CACHE``: the normalized-events staging is
-#: deterministic per source table, queries never mutate the staged dir,
-#: and one session (bench suite body / verify sweep) stages once.
-_EVENT_STAGE_CACHE: dict[tuple[str, int], str] = {}
-
-#: Per-process memos for the other deterministic stream stagings (r14
-#: optimization: each re-derived + re-wrote its fixture on every call).
-_GATE_STAGE_CACHE: dict[str, str] = {}
-_TWO_FILE_STAGE_CACHE: dict[str, str] = {}
-
-
 def _stage_events(spark: SparkSession, sf_dir: str, n_files: int = 4) -> tuple[str, DataFrame]:
-    """Write normalized events to a temp dir for the file-stream source
-    (memoized per (sf_dir, n_files) for the life of the process)."""
-    import os
-
+    """Normalized events as ``n_files`` parquet files for the file-stream
+    source, staged once per (sf_dir, n_files) by ``catalog.staged``."""
     ev = catalog.load_table(spark, sf_dir, "events")
-    key = (os.path.abspath(sf_dir), n_files)
-    cached = _EVENT_STAGE_CACHE.get(key)
-    if cached and os.path.isdir(cached):
-        return cached, ev
-    stage = tempfile.mkdtemp(prefix="events_sstream_") + "/files"
-    ev.repartition(n_files).write.mode("overwrite").parquet(stage)
-    _EVENT_STAGE_CACHE[key] = stage
+    stage = catalog.staged(
+        ("events_sstream", sf_dir, n_files),
+        lambda path: ev.repartition(n_files).write.mode("overwrite").parquet(path),
+    )
     return stage, ev
 
 
@@ -98,7 +84,10 @@ def _run_to_memory(
             spark.conf.set(
                 "spark.sql.streaming.noDataMicroBatches.enabled", prev_ndb
             )
-    return spark.table(sink)
+    # the resolved frame keeps the rows; the view would pin them for the session
+    out = spark.table(sink)
+    spark.catalog.dropTempView(sink)
+    return out
 
 
 # ---------------------------------------------------------------------------
@@ -653,16 +642,11 @@ def streaming_fingerprint_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
             (F.col("doc_id") + 100000).alias("doc_id"), "source", "text"
         )
     )
-    # per-process staging memo (same contract as _EVENT_STAGE_CACHE):
     # the incoming-docs derivation is deterministic per sf_dir
-    import os as _os
-
-    key = _os.path.abspath(sf_dir)
-    stage = _GATE_STAGE_CACHE.get(key)
-    if not (stage and _os.path.isdir(stage)):
-        stage = tempfile.mkdtemp(prefix="docs_gate_") + "/files"
-        incoming.repartition(4).write.mode("overwrite").parquet(stage)
-        _GATE_STAGE_CACHE[key] = stage
+    stage = catalog.staged(
+        ("docs_gate", sf_dir, 4),
+        lambda path: incoming.repartition(4).write.mode("overwrite").parquet(path),
+    )
     stream = (
         spark.readStream.schema(incoming.schema)
         .option("maxFilesPerTrigger", 1)
@@ -693,33 +677,26 @@ def streaming_fingerprint_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _stage_two_ordered_files(spark: SparkSession, sf_dir: str) -> tuple[str, DataFrame]:
     """Split events into two single-file batches (user_id % 3 != 0 first,
     the rest second) with explicit mtimes so the file source's batch
-    order is deterministic."""
-    import os
-    import shutil
-
+    order is deterministic; staged once per sf_dir by ``catalog.staged``."""
     ev = catalog.load_table(spark, sf_dir, "events").select(
         "ts", "user_id", "event_type", "value"
     )
-    key = os.path.abspath(sf_dir)
-    cached = _TWO_FILE_STAGE_CACHE.get(key)
-    if cached and os.path.isdir(cached):
-        return cached, ev
-    tmp = tempfile.mkdtemp(prefix="late_events_")
-    stage = tmp + "/files"
-    os.makedirs(stage)
     parts = [
         ev.filter(F.col("user_id") % 3 != 0),
         ev.filter(F.col("user_id") % 3 == 0),
     ]
-    for i, df in enumerate(parts):
-        d = f"{tmp}/b{i}"
-        df.coalesce(1).write.mode("overwrite").parquet(d)
-        part = [p for p in os.listdir(d) if p.startswith("part-")][0]
-        dst = f"{stage}/{i:02d}.parquet"
-        shutil.copy(os.path.join(d, part), dst)
-        os.utime(dst, (1_000_000 + i * 100, 1_000_000 + i * 100))
-    _TWO_FILE_STAGE_CACHE[key] = stage
-    return stage, ev
+
+    def write(tmp: str) -> None:
+        os.makedirs(f"{tmp}/files")
+        for i, df in enumerate(parts):
+            d = f"{tmp}/b{i}"
+            df.coalesce(1).write.mode("overwrite").parquet(d)
+            part = [p for p in os.listdir(d) if p.startswith("part-")][0]
+            dst = f"{tmp}/files/{i:02d}.parquet"
+            shutil.copy(os.path.join(d, part), dst)
+            os.utime(dst, (1_000_000 + i * 100, 1_000_000 + i * 100))
+
+    return catalog.staged(("late_events", sf_dir, 2), write) + "/files", ev
 
 
 @q(

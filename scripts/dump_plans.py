@@ -32,11 +32,13 @@ import json
 import os
 import re
 import sys
+import tempfile
 import time
 from collections import Counter
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, ROOT)
+from milvus_cdc_spark.catalog import SCRATCH_PREFIX  # noqa: E402
 
 SHOWCASE = [
     "q1_pricing_summary",
@@ -251,9 +253,13 @@ def main() -> None:
 # are renumbered per plan in first-appearance order (column tracing
 # stays readable); lambda-variable suffixes, RDD ids and the JVM
 # call-site frame of a localCheckpoint (``NativeMethodAccessorImpl.java:0``
-# until reflection inflates, ``<unknown>:0`` after) are dropped.
+# until reflection inflates, ``<unknown>:0`` after) are dropped, and the
+# process's scratch root (``catalog.scratch_dir``, ``catalog.staged``:
+# names under it are deterministic) reads ``<scratch>``.
 _RENUMBERED = re.compile(r"(#|plan_id=)(\d+)")
 _DROPPED = [
+    (re.compile(re.escape(os.path.join(tempfile.gettempdir(), SCRATCH_PREFIX))
+                + r"\w{8}"), "<scratch>"),
     (re.compile(r"\blambda ([xyz])_\d+\b"), r"lambda \1"),
     (re.compile(r"RDD\[\d+\]"), "RDD"),
     (re.compile(r" at (?:NativeMethodAccessorImpl\.java|<unknown>):0\b"), ""),

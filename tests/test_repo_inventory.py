@@ -293,13 +293,9 @@ def _is_row_number_over(node) -> bool:
 
 #: Hand-written cuts that stay beside ``windows.top_k`` because routing
 #: them would change more of the plan than the rank column's name:
-#: ``grouping_topk`` evaluates its ``best_sim`` window between the
-#: ranking and the cut, and ``paged_topk``'s two-sided range would have
-#: its Filter conjuncts reordered.
-_KEPT_CUTS = {
-    "milvus_cdc_spark/analytics/similarity.py:grouping_topk",
-    "milvus_cdc_spark/analytics/similarity.py:paged_topk",
-}
+#: ``paged_topk``'s two-sided range would have its Filter conjuncts
+#: reordered.
+_KEPT_CUTS = {"milvus_cdc_spark/analytics/similarity.py:paged_topk"}
 
 
 def _row_number_cuts(path: str) -> list:
@@ -362,3 +358,43 @@ def test_bounded_selection_only_in_windows_top_k():
         if p != win for h in _row_number_cuts(p)
     ]
     assert not inline, f"hand-written row_number cuts: {inline}"
+
+
+def _scratch_sites(path: str) -> list:
+    """``path:line owner`` of every ``mkdtemp`` or ``TemporaryDirectory``
+    (``owner`` is the enclosing function) and of every module-level
+    ``*_STAGE_CACHE`` assignment: disk scratch made or memoized outside
+    the one owner."""
+    rel = os.path.relpath(path, ROOT)
+    tree = ast.parse(open(path).read())
+    hits = [
+        f"{rel}:{node.lineno} {t.id}"
+        for node in tree.body if isinstance(node, (ast.Assign, ast.AnnAssign))
+        for t in getattr(node, "targets", [getattr(node, "target", None)])
+        if isinstance(t, ast.Name) and t.id.endswith("_STAGE_CACHE")
+    ]
+
+    def visit(node, owner):
+        for child in ast.iter_child_nodes(node):
+            name = getattr(child, "attr", None) or getattr(child, "id", None)
+            if name in ("mkdtemp", "TemporaryDirectory"):
+                hits.append(f"{rel}:{child.lineno} {owner}")
+            is_def = isinstance(child, (ast.FunctionDef, ast.AsyncFunctionDef))
+            visit(child, child.name if is_def else owner)
+
+    visit(tree, None)
+    return hits
+
+
+def test_disk_scratch_only_in_catalog():
+    """Every staged fixture and per-call work dir of the engine lives
+    under the one process root that ``catalog.scratch_dir`` and
+    ``catalog.staged`` own and remove at exit; a ``mkdtemp`` elsewhere
+    would leak, and a module-level stage memo would be a second owner."""
+    sites = [
+        h for p in _python_files(os.path.join(ROOT, "milvus_cdc_spark"))
+        for h in _scratch_sites(p)
+    ]
+    catalog = [h for h in sites if h.startswith("milvus_cdc_spark/catalog.py:")]
+    assert [h for h in sites if h not in catalog] == [], "scratch outside catalog"
+    assert [h.split(" ")[1] for h in catalog] == ["_scratch_root"], catalog

@@ -2413,3 +2413,76 @@ def test_control_aggregate_drop_cutoffs_match_reference(spark, msg_types):
         )
     assert pipe._manifest.get("coll_drops", {}) == want_coll
     assert pipe._manifest.get("part_drops", {}) == want_part
+
+
+def test_memory_sink_view_dropped_after_drain(spark, sf_dir):
+    """A memory-sink drain leaves no ``mem_*`` view in the catalog (the
+    view would pin the sink's rows in driver memory for the session),
+    and the frame the query returned still reads those rows."""
+    from milvus_cdc_spark import suite
+
+    def mem_views():
+        return {t.name for t in spark.catalog.listTables() if t.name.startswith("mem_")}
+
+    before = mem_views()
+    out = suite.QUERIES["streaming_tumbling_window"].fn(spark, sf_dir)
+    assert mem_views() == before
+    n = catalog.load_table(spark, sf_dir, "events").count()
+    assert out.agg(F.sum("n")).first()[0] == n
+
+
+_SCRATCH_CHILD = """
+import json, os, sys
+sys.path.insert(0, sys.argv[1])
+from milvus_cdc_spark import catalog, suite
+from milvus_cdc_spark.session import get_spark
+
+staged, writes, paths = catalog.staged, [], []
+
+def spy(key, write):
+    def logged(path):
+        writes.append(key[0])
+        write(path)
+    paths.append((key[0], staged(key, logged)))
+    return paths[-1][1]
+
+catalog.staged = spy
+spark = get_spark("scratch_child")
+spark.sparkContext.setLogLevel("ERROR")
+for name in ("streaming_positions", "schema_evolution_apply",
+             "streaming_tumbling_window", "streaming_tumbling_window"):
+    suite.QUERIES[name].fn(spark, sys.argv[2]).collect()
+print(json.dumps({"root": os.path.dirname(catalog.scratch_dir("probe_")),
+                  "writes": writes, "paths": paths}))
+"""
+
+#: The prefixes of the per-call ``mkdtemp`` dirs the stream queries made
+#: before one scratch root owned them.
+_OLD_SCRATCH = ("oplog_stage_", "cdc_stream_", "cdc_pos_", "schema_evo_",
+                "events_sstream_", "docs_gate_", "late_events_")
+
+
+def test_scratch_root_removed_at_exit(tmp_path, sf_dir):
+    """A process's staged fixtures and work dirs live under one scratch
+    root in the temp dir, a repeated query reuses its staged fixture, and
+    the root is gone once the process exits."""
+    import json
+    import subprocess
+
+    repo = os.path.dirname(SCRIPTS)
+    out = subprocess.run(
+        [sys.executable, "-c", _SCRATCH_CHILD, repo, sf_dir],
+        capture_output=True, text=True, timeout=600,
+        env=dict(os.environ, TMPDIR=str(tmp_path)), cwd=str(tmp_path),
+    )
+    assert out.returncode == 0, out.stderr[-2000:]
+    child = json.loads(out.stdout.strip().splitlines()[-1])
+    root = child["root"]
+    assert os.path.dirname(root) == str(tmp_path)
+    assert os.path.basename(root).startswith(catalog.SCRATCH_PREFIX)
+    assert not os.path.exists(root)
+    assert [n for n in os.listdir(tmp_path) if n.startswith(_OLD_SCRATCH)] == []
+    assert sorted(child["writes"]) == ["events_sstream", "oplog_stage"]
+    events = [path for name, path in child["paths"] if name == "events_sstream"]
+    assert len(events) == 2 and events[0] == events[1]
+    assert events[0].startswith(root + "/")

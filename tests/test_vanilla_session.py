@@ -47,7 +47,7 @@ assert spark.conf.get("spark.sql.execution.arrow.pyspark.enabled") == "false"
 assert spark.conf.get("spark.sql.codegen.cache.maxEntries") == "100"
 
 from milvus_cdc_spark import suite
-from milvus_cdc_spark.catalog import TABLES, load_table
+from milvus_cdc_spark.catalog import SCRATCH_PREFIX, TABLES, load_table
 
 # a private temp root, so the layout check below sees only this run's
 # pipeline work dirs
@@ -81,8 +81,8 @@ for name in (
 
 # the CDC merge keeps one file per touched bucket per state version even
 # at the default 200 shuffle partitions
-bucket_dirs = glob.glob(os.path.join(tempfile.gettempdir(), "cdc_*", "work",
-                                     "state", "v*", "bucket=*"))
+bucket_dirs = glob.glob(os.path.join(tempfile.gettempdir(), SCRATCH_PREFIX + "*",
+                                     "cdc_*", "state", "v*", "bucket=*"))
 assert bucket_dirs
 for d in bucket_dirs:
     n = sum(f.endswith(".parquet") for f in os.listdir(d))
