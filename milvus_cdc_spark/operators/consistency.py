@@ -16,11 +16,14 @@ Milvus read semantics the replicated data must honor:
   than now − ttl are invisible to reads; ttl 0 means no expiry.
 
 Spark-first: cutoffs are 1-row aggregates broadcast onto the op-log
-(no collect, no driver state); replay is the same partial+final
-conditional aggregate as operators.apply.replay_alive. At 100 TB the
-levels dimension multiplies per-row work by its tiny cardinality but
-adds no extra shuffle — the aggregate still carries one row per
-(level, collection, pk).
+(no collect, no driver state); replay is a partial+final conditional
+aggregate of operators.apply's replay terms, each gated by ts <= cutoff,
+and liveness is apply.is_alive — the batch replay's own rule, so a
+Strong read equals a full replay. A known set of N cutoffs (the levels,
+known session ids) becomes N column groups of ONE pk-keyed aggregate
+(``_alive_at_cutoffs``): at 100 TB the cutoff dimension multiplies
+per-row work by its tiny cardinality but adds no extra shuffle — the
+aggregate carries one row per (collection, pk).
 """
 
 from __future__ import annotations
@@ -29,6 +32,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from milvus_cdc_spark.cache_registry import cache
+from milvus_cdc_spark.operators.apply import is_alive, replay_terms
 
 #: Hybrid-TSO physical-ms shift (Milvus TSO layout: physical ms << 18).
 TSO_SHIFT = 18
@@ -66,57 +70,63 @@ def guarantee_ts_levels(ops: DataFrame) -> DataFrame:
     )
 
 
+def _alive_at_cutoffs(seen: DataFrame, cutoffs: dict, label: str) -> DataFrame:
+    """Alive (collection, pk, ``label``, last_insert_ts, last_delete_ts,
+    n_inserts) rows of a replay at each of N cutoffs. ``seen`` is the
+    op-log with every cutoff as a column (a broadcast 1-row frame);
+    ``cutoffs`` maps each label value to its cutoff column.
+
+    One pk-keyed aggregate computes every cutoff as conditional-aggregate
+    COLUMNS (apply.replay_terms gated by ts <= cutoff), so the shuffle
+    carries ONE row per pk and the op stream is not multiplied by N; the
+    expansion to one row per (label, pk) (stack) happens after the
+    aggregate, on pk-count rows.
+    """
+    cols = []
+    for i, cutoff in enumerate(cutoffs.values()):
+        ins, dele, rows = replay_terms(within=F.col("ts") <= F.col(cutoff))
+        cols += [
+            F.max(ins).alias(f"_li{i}"),
+            F.max(dele).alias(f"_ld{i}"),
+            F.sum(rows).alias(f"_n{i}"),
+        ]
+    stack_args = ", ".join(
+        f"{value!r}, _li{i}, _ld{i}, _n{i}" for i, value in enumerate(cutoffs)
+    )
+    return (
+        seen.groupBy("collection", "pk")
+        .agg(*cols)
+        .selectExpr(
+            "collection",
+            "pk",
+            f"stack({len(cutoffs)}, {stack_args}) "
+            f"AS ({label}, last_insert_ts, last_delete_ts, n_inserts)",
+        )
+        .filter(is_alive())
+    )
+
+
 def read_at_levels(ops: DataFrame) -> DataFrame:
     """Per (level, collection) alive counts after replaying ops with
     ts <= the level's guarantee_ts — the visible state a client at that
     consistency level observes on the replica.
 
     Single-pass plan: the 1-row cutoff frame broadcasts onto the op-log
-    and the per-pk aggregate computes all three levels as conditional
-    aggregate columns — the pk-keyed shuffle carries ONE row per pk
-    (9 columns) instead of one row per (level, pk), and the op-log is
-    scanned once for cutoffs and once for the replay. The per-level
-    expansion (stack) happens after the aggregate, on pk-count rows.
+    and ``_alive_at_cutoffs`` computes all three levels in one per-pk
+    aggregate — the pk-keyed shuffle carries ONE row per pk (9 columns)
+    instead of one row per (level, pk), and the op-log is scanned once
+    for cutoffs and once for the replay. A Strong read over an op-log
+    with upsert/import rows agrees with a full apply.replay_alive pass.
     """
-    from milvus_cdc_spark.operators.filters import insert_like
-
-    cuts = _level_cutoffs(ops)
-    seen = ops.crossJoin(F.broadcast(cuts))
-
-    def _cols(suffix: str, cutoff: str) -> list:
-        within = F.col("ts") <= F.col(cutoff)
-        # shared INSERT_LIKE contract: a Strong read over an op-log with
-        # upsert/import rows must agree with a full replay_alive pass
-        is_ins = within & insert_like()
-        is_del = within & (F.col("op_type") == "delete")
-        return [
-            F.max(F.when(is_ins, F.col("ts"))).alias(f"li_{suffix}"),
-            F.max(F.when(is_del, F.col("ts"))).alias(f"ld_{suffix}"),
-            F.sum(F.when(is_ins, F.col("num_rows")).otherwise(F.lit(0))).alias(
-                f"n_{suffix}"
-            ),
-        ]
-
-    agg = seen.groupBy("collection", "pk").agg(
-        *_cols("strong", "c_strong"),
-        *_cols("bounded", "c_bounded"),
-        *_cols("eventually", "c_eventually"),
-    )
-    per_level = agg.selectExpr(
-        "collection",
-        "pk",
-        "stack(3, "
-        "'1_strong', li_strong, ld_strong, n_strong, "
-        "'2_bounded', li_bounded, ld_bounded, n_bounded, "
-        "'3_eventually', li_eventually, ld_eventually, n_eventually"
-        ") AS (level, last_insert_ts, last_delete_ts, n_inserts)",
-    )
-    alive = per_level.filter(
-        F.col("last_insert_ts").isNotNull()
-        & (
-            F.col("last_delete_ts").isNull()
-            | (F.col("last_insert_ts") >= F.col("last_delete_ts"))
-        )
+    seen = ops.crossJoin(F.broadcast(_level_cutoffs(ops)))
+    alive = _alive_at_cutoffs(
+        seen,
+        {
+            "1_strong": "c_strong",
+            "2_bounded": "c_bounded",
+            "3_eventually": "c_eventually",
+        },
+        "level",
     )
     return (
         alive.groupBy("level", "collection")
@@ -175,20 +185,17 @@ def read_your_writes(
     Plan: per-session cutoffs are a catalog-sized aggregate broadcast
     back onto the op-log; the replay is one conditional aggregate keyed
     (session, collection, pk). When the session ids are known up front
-    (``session_ids``), the ``read_at_levels`` column-expansion shape is
-    used instead: ONE 1-row cutoff frame broadcast, every session
-    computed as conditional-aggregate COLUMNS of a single pk-keyed
-    row (no op-stream row multiplication — measured ~3x faster at
-    4 sessions), stacked to rows only after the aggregate. With unknown
-    session ids the generic path multiplies rows by the session
-    cardinality, like the levels dimension.
+    (``session_ids``), ``read_at_levels``' shape is used instead
+    (``_alive_at_cutoffs``): ONE 1-row cutoff frame broadcast, every
+    session computed as conditional-aggregate COLUMNS of a single
+    pk-keyed row (no op-stream row multiplication — measured ~3x faster
+    at 4 sessions), stacked to rows only after the aggregate. With
+    unknown session ids the generic path multiplies rows by the session
+    cardinality.
 
     Returns (session, guarantee_ts, alive_pks, total_inserts).
     """
-    from milvus_cdc_spark.operators.filters import insert_like
-
     if session_ids is not None:
-        n = len(session_ids)
         # Persisted: this 1-row frame feeds BOTH the broadcast crossJoin
         # and the guarantee-ts stack below — unpersisted, each consumer
         # re-derives it with its own full op-log scan + aggregate.
@@ -200,41 +207,22 @@ def read_your_writes(
                 for i, s in enumerate(session_ids)
             ]
         ))
-        seen = ops.crossJoin(F.broadcast(cuts_row))
-        cols = []
-        for i in range(n):
-            within = F.col("ts") <= F.col(f"_g{i}")
-            is_ins = within & insert_like()
-            is_del = within & (F.col("op_type") == "delete")
-            cols += [
-                F.max(F.when(is_ins, F.col("ts"))).alias(f"_li{i}"),
-                F.max(F.when(is_del, F.col("ts"))).alias(f"_ld{i}"),
-                F.sum(
-                    F.when(is_ins, F.col("num_rows")).otherwise(F.lit(0))
-                ).alias(f"_n{i}"),
-            ]
-        agg = seen.groupBy("collection", "pk").agg(*cols)
-        stack_args = ", ".join(
-            f"{s!r}, _li{i}, _ld{i}, _n{i}" for i, s in enumerate(session_ids)
-        )
-        per_session = agg.selectExpr(
-            f"stack({n}, {stack_args}) AS (_reader, _li, _ld, _n)"
-        )
-        alive = per_session.filter(
-            F.col("_li").isNotNull()
-            & (F.col("_ld").isNull() | (F.col("_li") >= F.col("_ld")))
+        alive = _alive_at_cutoffs(
+            ops.crossJoin(F.broadcast(cuts_row)),
+            {s: f"_g{i}" for i, s in enumerate(session_ids)},
+            "_reader",
         )
         g_stack = ", ".join(
             f"{s!r}, _g{i}" for i, s in enumerate(session_ids)
         )
         gmap = cuts_row.selectExpr(
-            f"stack({n}, {g_stack}) AS (_reader, _g)"
+            f"stack({len(session_ids)}, {g_stack}) AS (_reader, _g)"
         )
         return (
             alive.groupBy("_reader")
             .agg(
                 F.count("*").alias("alive_pks"),
-                F.sum("_n").alias("total_inserts"),
+                F.sum("n_inserts").alias("total_inserts"),
             )
             .join(F.broadcast(gmap), "_reader")
             .select(
@@ -250,16 +238,13 @@ def read_your_writes(
     seen = ops.drop(session_col).crossJoin(
         F.broadcast(cuts.select(F.col(session_col).alias("_reader"), "_g"))
     ).filter(F.col("ts") <= F.col("_g"))
-    is_ins = insert_like()
+    ins, dele, rows = replay_terms()
     agg = seen.groupBy("_reader", "_g", "collection", "pk").agg(
-        F.max(F.when(is_ins, F.col("ts"))).alias("_li"),
-        F.max(F.when(F.col("op_type") == "delete", F.col("ts"))).alias("_ld"),
-        F.sum(F.when(is_ins, F.col("num_rows")).otherwise(F.lit(0))).alias("_n"),
+        F.max(ins).alias("_li"),
+        F.max(dele).alias("_ld"),
+        F.sum(rows).alias("_n"),
     )
-    alive = agg.filter(
-        F.col("_li").isNotNull()
-        & (F.col("_ld").isNull() | (F.col("_li") >= F.col("_ld")))
-    )
+    alive = agg.filter(is_alive("_li", "_ld"))
     return (
         alive.groupBy("_reader", "_g")
         .agg(

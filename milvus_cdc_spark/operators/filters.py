@@ -24,11 +24,11 @@ from pyspark.sql import functions as F
 #: only) — but this engine also accepts the PRE-split wire form: an op-log
 #: carrying literal 'upsert' rows (latest-write-wins per pk) and 'import'
 #: (bulk load, ImportMsg) rows. This single tuple is THE liveness contract:
-#: the P1 whitelist, the streaming apply path (pipeline.batch_to_state),
-#: the batch replay (apply.replay_alive), and the consistency read
-#: (consistency.read_at_levels) all share it, so a row forwarded by the
-#: whitelist is never silently dropped by the state fold and a Strong read
-#: always equals a full replay.
+#: the P1 whitelist and apply.replay_terms share it, and every replay — the
+#: batch replays, the streaming state fold (pipeline.ops_as_partial_state)
+#: and the consistency reads — takes its terms from replay_terms, so a row
+#: forwarded by the whitelist is never silently dropped by the state fold
+#: and a Strong read always equals a full replay.
 INSERT_LIKE = ("insert", "upsert", "import")
 
 

@@ -81,6 +81,9 @@ import time
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from milvus_cdc_spark.operators.apply import drop_cutoff, is_alive, replay_terms
+from milvus_cdc_spark.operators.filters import insert_like
+
 OPLOG_SCHEMA = (
     "ts bigint, op_type string, db string, collection string, partition string, "
     "vchannel string, pk bigint, num_rows bigint, seq bigint"
@@ -219,12 +222,10 @@ def ops_as_partial_state(batch: DataFrame) -> DataFrame:
     partial aggregation inside a single groupBy, so pre-collapsing the
     batch would only cost an extra exchange (guide §1.2/§2.4).
     """
-    # insert/upsert/import advance last_insert_ts uniformly — the shared
-    # filters.INSERT_LIKE contract, kept identical to the P1 whitelist and
-    # the batch replay so the apply path never drops a whitelisted row
-    from milvus_cdc_spark.operators.filters import insert_like
-
-    is_ins = insert_like()
+    # the replay terms of operators.apply (the batch replay's own), so the
+    # apply path folds every whitelisted row exactly as a replay does; only
+    # the latest insert's partition is pipeline state
+    ins, dele, rows = replay_terms()
     part = (
         F.col("partition")
         if "partition" in batch.columns
@@ -233,10 +234,10 @@ def ops_as_partial_state(batch: DataFrame) -> DataFrame:
     return batch.select(
         "collection",
         "pk",
-        F.when(is_ins, F.col("ts")).alias("last_insert_ts"),
-        F.when(F.col("op_type") == "delete", F.col("ts")).alias("last_delete_ts"),
-        F.when(is_ins, F.col("num_rows")).otherwise(F.lit(0)).alias("n_inserts"),
-        F.when(is_ins, part).alias("partition"),
+        ins.alias("last_insert_ts"),
+        dele.alias("last_delete_ts"),
+        rows.alias("n_inserts"),
+        F.when(insert_like(), part).alias("partition"),
     )
 
 
@@ -300,17 +301,6 @@ def merge_state(existing: DataFrame, update: DataFrame) -> DataFrame:
     if keys:
         both = both.repartition(*keys)
     return _fold_state(both, keys)
-
-
-def alive_view(state: DataFrame) -> DataFrame:
-    """data_diff rule (main.go:160-174): alive iff max(ins) >= max(del)."""
-    return state.filter(
-        F.col("last_insert_ts").isNotNull()
-        & (
-            F.col("last_delete_ts").isNull()
-            | (F.col("last_insert_ts") >= F.col("last_delete_ts"))
-        )
-    )
 
 
 class CdcApplyPipeline:
@@ -865,49 +855,36 @@ class CdcApplyPipeline:
         ]
 
     def alive(self) -> DataFrame:
-        """Alive rows = per-pk LWW view minus bulk-drop scopes.
-
-        A pk survives iff its latest insert is not superseded by a later
-        pk delete (alive_view), NOR a later drop of its partition, NOR a
-        later drop of its collection — insert at exactly the drop ts wins
-        (same tie rule as deletes), so collection re-creates come back.
-        Matches apply.replay_alive_with_drops per-pk. The cutoff dims are
-        manifest dicts (catalog-sized) broadcast onto the state read."""
-        base = alive_view(self.read_state())
+        """Alive rows = per-pk LWW state minus bulk-drop scopes: a pk
+        survives iff its latest insert is not superseded by a later pk
+        delete (apply.is_alive), NOR a later drop of its partition, NOR a
+        later drop of its collection (apply.drop_cutoff) — insert at
+        exactly the drop ts wins (same tie rule as deletes), so collection
+        re-creates come back. The same rule per-pk as a batch
+        apply.replay_alive_with_drops. The cutoff dims are manifest dicts
+        (catalog-sized) broadcast onto the state read."""
+        state = self.read_state()
         coll_drops = self._manifest.get("coll_drops") or {}
         part_drops = self._manifest.get("part_drops") or {}
         if not coll_drops and not part_drops:
-            return base
-        out = base
+            return state.filter(is_alive())
         # local_frame (Arrow-backed), not createDataFrame(list): the
         # cutoff dims are rejoined on every alive() action and a
         # pickled-RDD backing pays a Python-worker roundtrip per action
         from milvus_cdc_spark.catalog import local_frame
 
-        if coll_drops:
-            cdf = local_frame(
-                self.spark,
-                coll_drops.items(),
-                "collection string, _coll_drop_ts bigint",
-            )
-            out = out.join(F.broadcast(cdf), "collection", "left")
-        else:
-            out = out.withColumn("_coll_drop_ts", F.lit(None).cast("bigint"))
-        if part_drops:
-            pdf = local_frame(
+        return drop_cutoff(
+            state,
+            local_frame(
                 self.spark,
                 [(*k.split("|", 1), v) for k, v in part_drops.items()],
                 "collection string, partition string, _part_drop_ts bigint",
-            )
-            out = out.join(F.broadcast(pdf), ["collection", "partition"], "left")
-        else:
-            out = out.withColumn("_part_drop_ts", F.lit(None).cast("bigint"))
-        cut = F.greatest(
-            F.coalesce(F.col("_part_drop_ts"), F.lit(-1)),
-            F.coalesce(F.col("_coll_drop_ts"), F.lit(-1)),
-        )
-        return out.filter(F.col("last_insert_ts") >= cut).drop(
-            "_coll_drop_ts", "_part_drop_ts"
+            ),
+            local_frame(
+                self.spark,
+                coll_drops.items(),
+                "collection string, _coll_drop_ts bigint",
+            ),
         )
 
     def compact_state(self) -> None:

@@ -137,8 +137,8 @@ def ttl_expiry(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Growing + sealed lambda read (Milvus query path: sealed segments on disk
 # UNION the in-memory growing segment). The Spark side SEALS the op-log at
 # a deterministic flush cutoff with the pipeline's real batch_to_state /
-# merge_state / alive_view functions, then merges the growing tail — while
-# the oracle replays the whole log in one pass. A hash match proves the
+# merge_state functions, then merges the growing tail and keeps the
+# apply.is_alive rows — while the oracle replays the whole log in one pass. A hash match proves the
 # incremental merge algebra equals single-pass replay CROSS-ENGINE, which
 # is the exact invariant the streaming foreachBatch apply relies on.
 # ---------------------------------------------------------------------------
@@ -174,18 +174,14 @@ SEAL_CUTOFF_TS = 820_454_400_000 << 18
 def growing_sealed_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Two-phase read (sealed state ⊕ growing tail) vs the oracle's
     single-pass replay — merge-algebra equivalence, oracle-checked."""
-    from milvus_cdc_spark.streaming.pipeline import (
-        alive_view,
-        batch_to_state,
-        merge_state,
-    )
+    from milvus_cdc_spark.streaming.pipeline import batch_to_state, merge_state
 
     ops = oplog.derive_oplog(_t(spark, sf_dir, "lineitem"), widen=True)
     sealed = batch_to_state(ops.filter(F.col("ts") <= F.lit(SEAL_CUTOFF_TS)))
     growing = batch_to_state(ops.filter(F.col("ts") > F.lit(SEAL_CUTOFF_TS)))
     merged = merge_state(sealed, growing)
     return (
-        alive_view(merged)
+        merged.filter(apply_op.is_alive())
         .groupBy("collection")
         .agg(
             F.count("*").alias("alive_pks"),
@@ -246,7 +242,7 @@ def session_consistency_read(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 # ignore_growing read (Milvus search/query param ignore_growing=True:
 # skip in-memory growing segments, serve sealed data only — milvus.io
-# search params). Engine shape: the same batch_to_state/alive_view path
+# search params). Engine shape: the same batch_to_state/is_alive path
 # as growing_sealed_read, with the growing tail simply never merged.
 # ---------------------------------------------------------------------------
 
@@ -281,12 +277,12 @@ def session_consistency_read(spark: SparkSession, sf_dir: str) -> DataFrame:
 def ignore_growing_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Sealed-only read: ignore_growing skips everything past the flush
     cutoff — the growing tail is never merged into the served state."""
-    from milvus_cdc_spark.streaming.pipeline import alive_view, batch_to_state
+    from milvus_cdc_spark.streaming.pipeline import batch_to_state
 
     ops = oplog.derive_oplog(_t(spark, sf_dir, "lineitem"))
     sealed = batch_to_state(ops.filter(F.col("ts") <= F.lit(SEAL_CUTOFF_TS)))
     return (
-        alive_view(sealed)
+        sealed.filter(apply_op.is_alive())
         .groupBy("collection")
         .agg(
             F.count("*").alias("alive_pks"),

@@ -37,7 +37,7 @@ def main() -> None:
 
     from pyspark.sql import functions as F
 
-    from milvus_cdc_spark.operators.joins import diff_reconcile
+    from milvus_cdc_spark.operators.apply import is_alive
     from milvus_cdc_spark.session import get_spark
     from milvus_cdc_spark.streaming.pipeline import OPLOG_SCHEMA, batch_to_state
 
@@ -46,15 +46,9 @@ def main() -> None:
 
     def side(path: str):
         ops = spark.read.schema(OPLOG_SCHEMA).parquet(path)
-        state = batch_to_state(ops)
-        return state.withColumn(
-            "alive",
-            F.col("last_insert_ts").isNotNull()
-            & (
-                F.col("last_delete_ts").isNull()
-                | (F.col("last_insert_ts") >= F.col("last_delete_ts"))
-            ),
-        ).select("collection", "pk", "alive", "last_insert_ts")
+        return batch_to_state(ops).withColumn("alive", is_alive()).select(
+            "collection", "pk", "alive", "last_insert_ts"
+        )
 
     a = side(src_dir)
     b = side(dst_dir)
@@ -91,9 +85,6 @@ def main() -> None:
             .collect()
         ):
             print(f"  {r.collection}/{r.pk}: {r.status}")
-    # the operator module's diff_reconcile offers the same comparison as a
-    # reusable DataFrame (used by the oracle-checked diff_reconcile query)
-    _ = diff_reconcile
     spark.stop()
     sys.exit(1 if total_diff else 0)
 

@@ -136,8 +136,6 @@ def queries():
     """name → fn(spark, dir) for the five heavy hitters. sequence_packing
     runs UNfiltered (the suite query clamps to doc_id<100 for its oracle;
     the scale question needs the whole corpus)."""
-    from pyspark.sql import functions as F
-
     from milvus_cdc_spark import catalog, suite
 
     def packing_full(spark, d):
@@ -146,8 +144,6 @@ def queries():
         docs = catalog.load_table(spark, d, "documents")
         ch = corpus.chunk_documents(docs, chunk_tokens=48, overlap=16)
         return corpus.pack_sequences(ch, seq_len=128, n_shards=32)
-
-    _ = F
 
     def banded_near_dup_scaled(spark, d):
         """The suite query pins 8 bands x 8 dims for its oracle; a fixed

@@ -65,6 +65,70 @@ def test_replay_bulk_drops_scope_and_reinsert(spark):
     assert alive == {1, 4, 6, 7}
 
 
+def test_replay_terms_within_equals_prefiltered_replay(spark):
+    """Gating the replay terms by ``within`` replays exactly the ops a
+    pre-filter keeps: the consistency reads' cutoff columns equal a
+    replay of the op-log cut at the same ts, upsert/import included."""
+    ops = _ops(
+        spark,
+        [
+            (1, "insert", "c", 1, 2),
+            (4, "delete", "c", 1, 1),   # past the cutoff: pk1 stays alive
+            (2, "upsert", "c", 2, 3),
+            (3, "delete", "c", 2, 1),   # inside: pk2 dead
+            (3, "import", "c", 3, 4),
+            (3, "delete", "c", 3, 1),   # tie at the cutoff: insert wins
+            (5, "insert", "c", 4, 1),   # past the cutoff: pk4 unseen
+        ],
+    )
+    within = F.col("ts") <= F.lit(3)
+    ins, dele, rows = apply_op.replay_terms(within)
+    gated = {
+        (r.pk, r.last_insert_ts, r.n_inserts)
+        for r in ops.groupBy("collection", "pk")
+        .agg(
+            F.max(ins).alias("last_insert_ts"),
+            F.max(dele).alias("last_delete_ts"),
+            F.sum(rows).alias("n_inserts"),
+        )
+        .filter(apply_op.is_alive())
+        .collect()
+    }
+    cut = {
+        (r.pk, r.last_insert_ts, r.n_inserts)
+        for r in apply_op.replay_alive(ops.filter(within)).collect()
+    }
+    assert gated == cut == {(1, 1, 2), (3, 3, 4)}
+
+
+def test_drop_cutoff_insert_at_drop_ts_wins(spark):
+    """``drop_cutoff`` on per-pk state: an insert at exactly its
+    partition's or collection's drop ts survives, one tick earlier is
+    erased, and a pk delete still applies beside the drop dims."""
+    state = spark.createDataFrame(
+        [
+            ("c1", "p1", 1, 5, None),   # at the partition drop ts → alive
+            ("c1", "p1", 2, 4, None),   # before it → dropped
+            ("c1", "p0", 3, 1, None),   # other partition → alive
+            ("c2", "p0", 4, 7, None),   # at the collection drop ts → alive
+            ("c2", "p0", 5, 6, None),   # before it → dropped
+            ("c3", "p0", 6, 2, 3),      # pk delete after insert → dead
+            ("c3", "p0", 7, None, 1),   # delete only → not alive
+        ],
+        "collection string, partition string, pk bigint, "
+        "last_insert_ts bigint, last_delete_ts bigint",
+    )
+    part_drops = spark.createDataFrame(
+        [("c1", "p1", 5)], "collection string, partition string, _part_drop_ts bigint"
+    )
+    coll_drops = spark.createDataFrame(
+        [("c2", 7)], "collection string, _coll_drop_ts bigint"
+    )
+    out = apply_op.drop_cutoff(state, part_drops, coll_drops)
+    assert sorted(out.columns) == sorted(state.columns)
+    assert {r.pk for r in out.collect()} == {1, 3, 4}
+
+
 def test_barrier_fires_only_on_all_channels(spark):
     drops = spark.createDataFrame(
         [(1, "ch_0"), (1, "ch_1"), (2, "ch_0"), (1, "ch_0")],
@@ -635,7 +699,7 @@ def test_upsert_and_import_advance_liveness(spark):
     """Milvus Upsert / bulk Import count as inserts for replay liveness:
     an upsert after a delete resurrects the pk in both the batch replay
     (replay_alive) and the pipeline state collapse (batch_to_state)."""
-    from milvus_cdc_spark.streaming.pipeline import alive_view, batch_to_state
+    from milvus_cdc_spark.streaming.pipeline import batch_to_state
 
     ops = _ops(
         spark,
@@ -649,7 +713,10 @@ def test_upsert_and_import_advance_liveness(spark):
     )
     alive = {r.pk for r in apply_op.replay_alive(ops).collect()}
     assert alive == {1, 2}
-    st = {r.pk: r for r in alive_view(batch_to_state(ops)).collect()}
+    st = {
+        r.pk: r
+        for r in batch_to_state(ops).filter(apply_op.is_alive()).collect()
+    }
     assert set(st) == {1, 2}
     assert st[1].last_insert_ts == 30
 

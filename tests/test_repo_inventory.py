@@ -208,11 +208,17 @@ _SCOPES = (ast.FunctionDef, ast.AsyncFunctionDef, ast.Lambda)
 def _unused_imports(path: str) -> list:
     """``path:line name`` of every import that its own scope never names.
     A module-scope import counts as named anywhere in the module; a
-    function-scope import only inside that function. ``from __future__``
-    and lines marked ``# noqa`` (imports for effect) are skipped."""
+    function-scope import only inside that function. A bare ``_ = name``
+    discard is not a use. ``from __future__`` and lines marked ``# noqa``
+    (imports for effect) are skipped."""
     src = open(path).read()
     lines = src.splitlines()
     tree = ast.parse(src)
+    discarded = {
+        id(n.value) for n in ast.walk(tree)
+        if isinstance(n, ast.Assign) and isinstance(n.value, ast.Name)
+        and [getattr(t, "id", None) for t in n.targets] == ["_"]
+    }
 
     def own_imports(node):
         for child in ast.iter_child_nodes(node):
@@ -223,7 +229,10 @@ def _unused_imports(path: str) -> list:
 
     unused = []
     for scope in [tree] + [n for n in ast.walk(tree) if isinstance(n, _SCOPES)]:
-        named = {n.id for n in ast.walk(scope) if isinstance(n, ast.Name)}
+        named = {
+            n.id for n in ast.walk(scope)
+            if isinstance(n, ast.Name) and id(n) not in discarded
+        }
         for imp in own_imports(scope):
             if isinstance(imp, ast.ImportFrom) and imp.module == "__future__":
                 continue
@@ -398,3 +407,99 @@ def test_disk_scratch_only_in_catalog():
     catalog = [h for h in sites if h.startswith("milvus_cdc_spark/catalog.py:")]
     assert [h for h in sites if h not in catalog] == [], "scratch outside catalog"
     assert [h.split(" ")[1] for h in catalog] == ["_scratch_root"], catalog
+
+
+#: Functions that may write a replay-shaped term outside
+#: ``operators/apply.py``, each with its reason.
+_OWN_RULES = {
+    "milvus_cdc_spark/control/msgcount.py:count_messages":
+        "counts delete rows per vchannel; it replays nothing",
+    "milvus_cdc_spark/suite_eval.py:delete_by_expr_replay":
+        "its own rule: strict 'insert' only, and a delete wins ties",
+}
+
+
+def _is_delete_eq(node) -> bool:
+    return (
+        isinstance(node, ast.Compare) and isinstance(node.ops[0], ast.Eq)
+        and any(
+            isinstance(x, ast.Constant) and x.value == "delete"
+            for x in [node.left, *node.comparators]
+        )
+    )
+
+
+def _replay_rule_sites(path: str) -> list:
+    """``path:line function`` of every hand-written piece of the per-pk
+    replay rule: a ``when(<op_type == "delete">, col(..))`` delete term,
+    an alive predicate ``ld.isNull() | (li >= ld)``, or a drop cut
+    ``li >= greatest(coalesce(..), ..)``. Local names are followed to what
+    they were assigned, so ``is_del = .. == "delete"; when(is_del, ..)``
+    counts."""
+    rel = os.path.relpath(path, ROOT)
+    tree = ast.parse(open(path).read())
+    hits = {}
+    for fn in [tree] + [n for n in ast.walk(tree) if isinstance(n, _SCOPES)]:
+        assigned = {}
+        for node in ast.walk(fn):
+            if isinstance(node, ast.Assign):
+                for t in node.targets:
+                    if isinstance(t, ast.Name):
+                        assigned.setdefault(t.id, []).append(node.value)
+
+        def resolved(node):
+            out, todo, names = [], [node], set()
+            while todo:
+                for n in ast.walk(todo.pop()):
+                    out.append(n)
+                    if isinstance(n, ast.Name) and n.id not in names:
+                        names.add(n.id)
+                        todo += assigned.get(n.id, [])
+            return out
+
+        for node in ast.walk(fn):
+            if _name(node) == "when" and len(node.args) == 2:
+                hit = _name(node.args[1]) == "col" and any(
+                    _is_delete_eq(n) for n in resolved(node.args[0])
+                )
+            elif isinstance(node, ast.BinOp) and isinstance(node.op, ast.BitOr):
+                left, right = node.left, node.right
+                hit = (
+                    _name(left) == "isNull" and isinstance(right, ast.Compare)
+                    and isinstance(right.ops[0], ast.GtE)
+                    and ast.dump(right.comparators[0]) == ast.dump(left.func.value)
+                )
+            elif isinstance(node, ast.Compare) and isinstance(node.ops[0], ast.GtE):
+                cut = node.comparators[0]
+                cuts = assigned.get(cut.id, []) if isinstance(cut, ast.Name) else [cut]
+                hit = any(
+                    _name(c) == "greatest"
+                    and all(_name(a) == "coalesce" for a in c.args)
+                    for c in cuts
+                )
+            else:
+                hit = False
+            if hit:
+                hits[node.lineno] = getattr(fn, "name", "<module>")
+    return [f"{rel}:{line} {name}" for line, name in sorted(hits.items())]
+
+
+def test_replay_rule_only_in_apply():
+    """The per-pk replay rule — the terms one op adds to its pk's state,
+    the alive predicate and the drop cutoff — is written once, in
+    ``operators/apply.py``; the batch replays, the streaming state and
+    alive() read, the consistency reads and data_diff call it, so the
+    incremental and the batch answer agree by construction."""
+    apply = os.path.join(ROOT, "milvus_cdc_spark", "operators", "apply.py")
+    kernel = [h.split(" ")[1] for h in _replay_rule_sites(apply)]
+    assert kernel == ["replay_terms", "is_alive", "drop_cutoff"], kernel
+    paths = [
+        p for top in ("milvus_cdc_spark", "scripts")
+        for p in _python_files(os.path.join(ROOT, top)) if p != apply
+    ]
+    sites = [h for p in paths for h in _replay_rule_sites(p)]
+    inline = [
+        h for h in sites
+        if f"{h.split(':')[0]}:{h.split(' ')[1]}" not in _OWN_RULES
+    ]
+    assert not inline, f"replay rule written outside operators/apply.py: {inline}"

@@ -574,3 +574,61 @@ def test_task_registry_persist_is_thread_safe(spark, tmp_path):
     assert not errors
     with open(reg.meta_path) as f:
         assert set(json.load(f)) == ids
+
+
+def test_data_diff_flags_a_missing_delete(tmp_path):
+    """data_diff replays two op-log dirs with the engine's alive rule: an
+    in-sync pair exits 0; a target missing one delete has one pk alive
+    that the source deleted, so it exits 1 with one liveness mismatch."""
+    import subprocess
+    import sys as _sys
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    ops = [
+        # (ts, op_type, pk)
+        (1, "insert", 1),
+        (1, "insert", 2),
+        (2, "upsert", 3),
+        (3, "delete", 2),
+        (4, "delete", 1),
+        (4, "insert", 1),   # tie: insert wins, pk1 alive
+    ]
+
+    def write(name, rows):
+        d = tmp_path / name
+        d.mkdir()
+        pq.write_table(
+            pa.table(
+                {
+                    "ts": pa.array([r[0] for r in rows], pa.int64()),
+                    "op_type": [r[1] for r in rows],
+                    "db": ["default"] * len(rows),
+                    "collection": ["c"] * len(rows),
+                    "partition": ["_default"] * len(rows),
+                    "vchannel": ["ch-0"] * len(rows),
+                    "pk": pa.array([r[2] for r in rows], pa.int64()),
+                    "num_rows": pa.array([1] * len(rows), pa.int64()),
+                    "seq": pa.array(range(len(rows)), pa.int64()),
+                }
+            ),
+            d / "part-0.parquet",
+        )
+        return str(d)
+
+    src = write("src", ops)
+
+    def run(dst):
+        return subprocess.run(
+            [_sys.executable, os.path.join(SCRIPTS, "data_diff.py"), src, dst],
+            capture_output=True, text=True,
+        )
+
+    same = run(write("same", ops))
+    assert same.returncode == 0, same.stdout + same.stderr
+    assert "in_sync:            3" in same.stdout
+    lacks = run(write("lacks_delete", [r for r in ops if r != (3, "delete", 2)]))
+    assert lacks.returncode == 1, lacks.stdout + lacks.stderr
+    assert "liveness_mismatch:  1" in lacks.stdout
+    assert "c/2: liveness_mismatch" in lacks.stdout

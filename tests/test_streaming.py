@@ -1219,10 +1219,10 @@ def test_state_time_travel_via_manifest_history(spark):
     pipe.apply_batch(ops([(20, "delete", 2), (20, "insert", 3)]), 1)
     pipe.apply_batch(ops([(30, "insert", 2)]), 2)
 
-    from milvus_cdc_spark.streaming.pipeline import alive_view
+    from milvus_cdc_spark.operators.apply import is_alive
 
     def alive_pks(df):
-        return sorted(r.pk for r in alive_view(df).collect())
+        return sorted(r.pk for r in df.filter(is_alive()).collect())
 
     # at batch 1: pk2 deleted; at batch 2: pk2 re-inserted
     assert alive_pks(pipe.read_state(as_of_batch_id=1)) == [1, 3]
@@ -1500,15 +1500,18 @@ def test_streaming_dedupe_state_evicts_after_watermark(spark):
         deduped.writeStream.format("memory").queryName(sink)
         .outputMode("append").trigger(availableNow=True).start()
     )
-    q.awaitTermination()
-    got = [(r.k, str(r.ts)) for r in spark.table(sink).collect()]
-    assert sorted(got) == [
-        ("k1", "2024-01-01 10:00:00"),   # first occurrence
-        ("k1", "2024-01-01 11:00:03"),   # re-emitted after state eviction
-        ("k2", "2024-01-01 10:00:00"),
-        ("k3", "2024-01-01 11:00:00"),
-        ("k4", "2024-01-01 11:00:02"),
-    ]
+    try:
+        q.awaitTermination()
+        got = [(r.k, str(r.ts)) for r in spark.table(sink).collect()]
+        assert sorted(got) == [
+            ("k1", "2024-01-01 10:00:00"),   # first occurrence
+            ("k1", "2024-01-01 11:00:03"),   # re-emitted after state eviction
+            ("k2", "2024-01-01 10:00:00"),
+            ("k3", "2024-01-01 11:00:00"),
+            ("k4", "2024-01-01 11:00:02"),
+        ]
+    finally:
+        spark.catalog.dropTempView(sink)
 
 
 def test_pipeline_applies_in_stream_drops(spark):
