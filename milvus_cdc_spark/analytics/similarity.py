@@ -14,6 +14,19 @@ Two strategies:
   recall < 1 by design. The quantizer is portable SQL, so the result is
   still exactly oracle-checkable (the oracle applies the same bucketing).
 
+Two kernels every search in the engine shares:
+
+- **search_pairs** — the one query x corpus pairing: broadcast the query
+  set, cross it with the corpus (or join it on a bucket, list, dim or
+  code key), drop the query's own row and name the pair
+  ``(query_id, neighbor_id, ...)``. Exact, bucketed, IVF, sparse, ADC,
+  MaxSim and binary-metric scorers all start from it; only
+  ``superstructure_search`` pairs by hand, because each of its queries
+  must match its own row.
+- **recall_at_k** — the one recall rule: the exact top-k left-joined
+  with the approximate one on ``(query_id, neighbor_id)``, per query
+  ``n_hits`` and ``recall = n_hits / |exact|``.
+
 Milvus parity note: the reference replicates vector data but delegates ANN
 to Milvus itself (no ANN code in milvus-cdc); these operators are the
 north-star additions (BASELINE.json) that make the Spark rebuild a usable
@@ -25,42 +38,51 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from milvus_cdc_spark import partitioning
 from milvus_cdc_spark.cache_registry import cache
 from milvus_cdc_spark.functions import vector as vecf
 from milvus_cdc_spark.operators import windows
 
 
-def parallelize_expansion(df: DataFrame) -> DataFrame:
-    """Round-robin repartition a small input ahead of a row-EXPANDING
-    operator (a crossJoin scorer, a candidate fan-out) when its scan
-    parallelism is below the session's core count.
+def search_pairs(
+    corpus: DataFrame,
+    queries: DataFrame,
+    *cols,
+    on=None,
+    id_col: str = "vec_id",
+    where: Column | None = None,
+) -> DataFrame:
+    """Every candidate (query, corpus row) pair of a search, as
+    ``(query_id, neighbor_id, *cols)``.
 
-    A quadratic scorer's work is |corpus| x |queries| while its input is
-    |corpus|-sized, so Spark's split sizing (bytes in) wildly
-    under-parallelizes it: a sub-4 MB single-file corpus scans as ONE
-    split and the whole expansion serializes on one core while 31 idle.
-    Shuffling the small side first costs ~nothing relative to the
-    expansion (interleaved A/B at sf0.1, knn shape: 1.83 -> 0.83 s
-    median). At real scale the input already carries >= cores splits and
-    this reduces to the getNumPartitions probe; row order downstream is
-    irrelevant because every consumer re-shuffles (groupBy / window) by
-    its own key.
-
-    Boundary (measured, do not widen): this pays ONLY where the
-    expansion factor is large — brute_force_topk's |queries|-way
-    crossJoin (hundreds of pairs per input row). Applying it ahead of
-    ``nearest`` (ivf_train, pq_train, pq_encode, ivf_pq_build) or
-    ivf_assign was a wash-to-regression in an interleaved on/off A/B at
-    sf0.1 (semdedup_prune +12%): their k<=16-way expansions with
-    map-side combine do too little work per input row to repay the
-    extra shuffle plus the plan->RDD probe on already-derived inputs.
-
-    Its one caller is ``brute_force_topk``.
+    ``queries`` carries ``query_id`` and is broadcast. Without ``on`` it
+    is crossed with the corpus; ``on`` (a column name or list, as for
+    ``DataFrame.join``: a bucket, a centroid list, a sparse dim, a
+    ``[sub_id, code]`` key) limits each query's candidates to the corpus
+    rows that share it. A query never pairs with its own row
+    (``id_col != query_id``), and ``where`` adds a pair predicate over
+    both sides' columns (a label or a geo fence). ``cols`` are evaluated
+    on the joined row, so they may read either side.
     """
-    target = df.sparkSession.sparkContext.defaultParallelism
-    if df.rdd.getNumPartitions() < target:
-        return df.repartition(target)
-    return df
+    q = F.broadcast(queries)
+    pairs = corpus.crossJoin(q) if on is None else corpus.join(q, on)
+    keep = F.col(id_col) != F.col("query_id")
+    if where is not None:
+        keep = keep & where
+    nid = F.col(id_col)
+    if id_col != "neighbor_id":
+        nid = nid.alias("neighbor_id")
+    return pairs.filter(keep).select("query_id", nid, *cols)
+
+
+def _cosine_sim() -> Column:
+    """The pair cosine over precomputed norms, rounded to 6dp: the same
+    expression tree as ``vecf.cosine`` over (cvec, qvec), one dot pass
+    per pair."""
+    return F.round(
+        vecf.dot(F.col("cvec"), F.col("qvec")) / (F.col("cnorm") * F.col("qnorm")),
+        6,
+    ).alias("sim")
 
 
 def brute_force_topk(
@@ -73,10 +95,13 @@ def brute_force_topk(
     """Exact cosine top-k. ``queries`` must be small (it is broadcast).
 
     sim is rounded to 6 decimals *before* ranking so ordering is stable
-    across engines.
+    across engines. The corpus goes through the unkeyed
+    ``partitioning.widen_small_scan`` first: the |queries|-way cross
+    expansion is the operator that guard's boundary note names.
     """
     scored = brute_force_scored(
-        parallelize_expansion(corpus), queries, id_col=id_col, vec_col=vec_col
+        partitioning.widen_small_scan(corpus), queries, id_col=id_col,
+        vec_col=vec_col,
     )
     return windows.top_k(
         scored, "query_id", [F.desc("sim"), F.asc("neighbor_id")], k
@@ -95,25 +120,26 @@ def sign_bucket(vec_col, n_bits: int = 4):
 
 def recall_at_k(exact: DataFrame, approx: DataFrame) -> DataFrame:
     """Per-query recall of an ANN result against the exact top-k:
-    |approx ∩ exact| / |exact|. Both inputs are (query_id, rank,
-    neighbor_id, ...) as produced by the *_topk operators.
+    ``(query_id, n_hits, recall)`` with ``recall = round(n_hits /
+    |exact|, 6)``. Both inputs carry (query_id, neighbor_id) as the
+    *_topk operators produce them.
 
-    A left-semi join keyed on (query_id, neighbor_id) counts the hits —
-    no arrays collected, scales with k × n_queries.
+    The exact side LEFT JOINs the approximate one on (query_id,
+    neighbor_id) and one ``groupBy(query_id)`` counts both the matched
+    rows and the exact ones, so a query with no hit reads ``n_hits`` 0
+    and recall 0.0 — the form every recall oracle writes. No arrays are
+    collected; the work scales with k x n_queries.
     """
-    hits = approx.join(
-        exact.select("query_id", "neighbor_id"), ["query_id", "neighbor_id"], "left_semi"
+    hits = exact.alias("e").join(
+        approx.alias("a"),
+        (F.col("e.query_id") == F.col("a.query_id"))
+        & (F.col("e.neighbor_id") == F.col("a.neighbor_id")),
+        "left",
     )
-    n_exact = exact.groupBy("query_id").agg(F.count("*").alias("n_exact"))
-    n_hit = hits.groupBy("query_id").agg(F.count("*").alias("n_hit"))
-    return (
-        n_exact.join(n_hit, "query_id", "left")
-        .select(
-            "query_id",
-            F.round(
-                F.coalesce(F.col("n_hit"), F.lit(0)) / F.col("n_exact"), 6
-            ).alias("recall"),
-        )
+    n_hits = F.count(F.col("a.neighbor_id"))
+    return hits.groupBy(F.col("e.query_id").alias("query_id")).agg(
+        n_hits.alias("n_hits"),
+        F.round(n_hits / F.count("*"), 6).alias("recall"),
     )
 
 
@@ -143,19 +169,7 @@ def bucketed_topk(
         vecf.norm(F.col(vec_col)).alias("cnorm"),
         sign_bucket(F.col(vec_col), n_bits).alias("bucket"),
     )
-    scored = (
-        c.join(F.broadcast(q), "bucket")
-        .filter(F.col("neighbor_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round(
-                vecf.dot(F.col("cvec"), F.col("qvec"))
-                / (F.col("cnorm") * F.col("qnorm")),
-                6,
-            ).alias("sim"),
-        )
-    )
+    scored = search_pairs(c, q, _cosine_sim(), on="bucket", id_col="neighbor_id")
     return windows.top_k(
         scored, "query_id", [F.desc("sim"), F.asc("neighbor_id")], k
     ).select("query_id", "rank", "neighbor_id", "sim")
@@ -447,20 +461,10 @@ def ivf_topk(
         query_probes.select(F.col(id_col).alias("query_id"), "centroid_id"),
         "query_id",
     )
-    scored = (
-        c.join(F.broadcast(q), "centroid_id")
-        .filter(F.col("neighbor_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round(
-                vecf.dot(F.col("cvec"), F.col("qvec"))
-                / (F.col("cnorm") * F.col("qnorm")),
-                6,
-            ).alias("sim"),
-        )
-        # a query probing n lists can see a neighbor at most once (corpus
-        # vectors live in exactly one list) — no distinct needed
+    # a query probing n lists can see a neighbor at most once (corpus
+    # vectors live in exactly one list) — no distinct needed
+    scored = search_pairs(
+        c, q, _cosine_sim(), on="centroid_id", id_col="neighbor_id"
     )
     return windows.top_k(
         scored, "query_id", [F.desc("sim"), F.asc("neighbor_id")], k
@@ -500,8 +504,7 @@ def sparse_topk(
         F.col(query_rows.columns[0]).alias("query_id"), "dim", F.col("val").alias("qval")
     )
     scored = (
-        c.join(F.broadcast(q), "dim")
-        .filter(F.col("neighbor_id") != F.col("query_id"))
+        search_pairs(c, q, "cval", "qval", on="dim", id_col="neighbor_id")
         .groupBy("query_id", "neighbor_id")
         .agg(F.round(F.sum(F.col("cval") * F.col("qval")), 6).alias("sim"))
     )
@@ -556,21 +559,9 @@ def multiprobe_topk(
         vecf.norm(F.col(vec_col)).alias("cnorm"),
         sign_bucket(F.col(vec_col), n_bits).alias("bucket"),
     )
-    scored = (
-        c.join(F.broadcast(q), "bucket")
-        .filter(F.col("neighbor_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round(
-                vecf.dot(F.col("cvec"), F.col("qvec"))
-                / (F.col("cnorm") * F.col("qnorm")),
-                6,
-            ).alias("sim"),
-        )
-        # a corpus vector lives in ONE bucket but a query probes several —
-        # distinct buckets never repeat, so pairs are already unique
-    )
+    # a corpus vector lives in ONE bucket but a query probes several —
+    # distinct buckets never repeat, so pairs are already unique
+    scored = search_pairs(c, q, _cosine_sim(), on="bucket", id_col="neighbor_id")
     return windows.top_k(
         scored, "query_id", [F.desc("sim"), F.asc("neighbor_id")], k
     ).select("query_id", "rank", "neighbor_id", "sim")
@@ -607,39 +598,32 @@ def metric_topk(
       lower is better (ascending).
 
     Output column is ``distance`` (the Milvus result field name) for
-    ip/l2 and ``sim`` for cosine (keeps `cosine_topk` compatibility).
+    ip/l2 and ``sim`` for cosine, which is ``brute_force_topk`` itself.
     Scores round to 6dp before ranking for cross-engine order stability;
     ties break on neighbor_id. Query side broadcasts; distance math is
     zip_with/aggregate JVM expressions — no shuffle beyond the ranking
     window, same plan shape at any corpus size.
     """
+    if metric == "cosine":
+        return brute_force_topk(corpus, queries, k, id_col, vec_col)
     q = queries.select(
         F.col(id_col).alias("query_id"), F.col(vec_col).alias("qvec")
     )
     c = corpus.select(
         F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("cvec")
     )
-    pairs = c.crossJoin(F.broadcast(q)).filter(
-        F.col("neighbor_id") != F.col("query_id")
-    )
     cvec, qvec = F.col("cvec"), F.col("qvec")
-    if metric == "cosine":
-        score = F.round(vecf.cosine(cvec, qvec), 6).alias("sim")
-        order = [F.col("sim").desc(), F.col("neighbor_id").asc()]
-        out = "sim"
-    elif metric == "ip":
-        score = F.round(vecf.dot(cvec, qvec), 6).alias("distance")
+    if metric == "ip":
+        score = F.round(vecf.dot(cvec, qvec), 6)
         order = [F.col("distance").desc(), F.col("neighbor_id").asc()]
-        out = "distance"
     elif metric == "l2":
-        score = F.round(vecf.l2_squared(cvec, qvec), 6).alias("distance")
+        score = F.round(vecf.l2_squared(cvec, qvec), 6)
         order = [F.col("distance").asc(), F.col("neighbor_id").asc()]
-        out = "distance"
     else:
         raise ValueError(f"unknown metric_type: {metric}")
-    scored = pairs.select("query_id", "neighbor_id", score)
+    scored = search_pairs(c, q, score.alias("distance"), id_col="neighbor_id")
     return windows.top_k(scored, "query_id", order, k).select(
-        "query_id", "rank", "neighbor_id", out
+        "query_id", "rank", "neighbor_id", "distance"
     )
 
 
@@ -665,19 +649,7 @@ def brute_force_scored(
         F.col(vec_col).alias("cvec"),
         vecf.norm(F.col(vec_col)).alias("cnorm"),
     )
-    return (
-        c.crossJoin(F.broadcast(q))
-        .filter(F.col("neighbor_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round(
-                vecf.dot(F.col("cvec"), F.col("qvec"))
-                / (F.col("cnorm") * F.col("qnorm")),
-                6,
-            ).alias("sim"),
-        )
-    )
+    return search_pairs(c, q, _cosine_sim(), id_col="neighbor_id")
 
 
 def filtered_topk(
@@ -1007,9 +979,8 @@ def pq_adc_topk(
         .select("query_id", "sub_id", "code", d.alias("d"))
     )
     scored = (
-        codes.join(F.broadcast(lut), ["sub_id", "code"])
-        .filter(F.col(id_col) != F.col("query_id"))
-        .groupBy("query_id", F.col(id_col).alias("neighbor_id"))
+        search_pairs(codes, lut, "d", on=["sub_id", "code"], id_col=id_col)
+        .groupBy("query_id", "neighbor_id")
         .agg(F.round(F.sum("d"), 6).alias("adist"))
     )
     order = [F.col("adist").asc(), F.col("neighbor_id").asc()]
@@ -1177,9 +1148,10 @@ def ivf_pq_adc_topk(
     ).select("query_id", "coarse_id", "sub_id", "code", d.alias("d"))
     cc = codes.join(assigned, id_col)
     scored = (
-        cc.join(F.broadcast(lut), ["coarse_id", "sub_id", "code"])
-        .filter(F.col(id_col) != F.col("query_id"))
-        .groupBy("query_id", F.col(id_col).alias("neighbor_id"))
+        search_pairs(
+            cc, lut, "d", on=["coarse_id", "sub_id", "code"], id_col=id_col
+        )
+        .groupBy("query_id", "neighbor_id")
         .agg(F.round(F.sum("d"), 6).alias("adist"))
     )
     order = [F.col("adist").asc(), F.col("neighbor_id").asc()]

@@ -26,12 +26,53 @@ def dot(a: Column, b: Column) -> Column:
     (SCALE.md §5p — expression-size/codegen blowout), and the in-row
     collect_list'd variants regressed 20-200% (§5l). The HOF shape is
     the fast one; parallelism concerns belong to the CALLER's
-    partitioning (similarity.parallelize_expansion), not this
+    partitioning (partitioning.widen_small_scan), not this
     expression."""
     return F.aggregate(
         F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double")),
         F.lit(0.0),
         lambda acc, v: acc + v,
+    )
+
+
+def dot_i64(a: Column, b: Column) -> Column:
+    """Exact integer inner product of two ``array<bigint>`` vectors
+    (int8 codes, signed token counts): a left-to-right BIGINT fold, so
+    every engine gets the same value with no float rounding."""
+    return F.aggregate(
+        F.zip_with(a, b, lambda x, y: x * y),
+        F.lit(0).cast("bigint"),
+        lambda acc, v: acc + v,
+    )
+
+
+def int8_codes(vec: Column) -> Column:
+    """Milvus INT8_VECTOR codes of a float vector: each component
+    scaled by 64, rounded half up and clamped to [-128, 127], as
+    ``array<bigint>`` for ``dot_i64``."""
+    return F.transform(
+        vec,
+        lambda x: F.greatest(
+            F.lit(-128),
+            F.least(
+                F.lit(127),
+                F.floor(x.cast("double") * 64 + F.lit(0.5)).cast("bigint"),
+            ),
+        ),
+    )
+
+
+def maxsim_i64(qsubs: Column, subs: Column) -> Column:
+    """Exact integer MaxSim (ColBERT late interaction) of two arrays of
+    int8 sub-vectors: for each query sub-vector the best ``dot_i64``
+    over the stored sub-vectors, summed as BIGINT."""
+    return F.aggregate(
+        F.transform(
+            qsubs,
+            lambda qi: F.array_max(F.transform(subs, lambda cj: dot_i64(qi, cj))),
+        ),
+        F.lit(0).cast("bigint"),
+        lambda acc, x: acc + x,
     )
 
 

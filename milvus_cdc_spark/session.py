@@ -14,6 +14,18 @@ import os
 from pyspark.sql import SparkSession
 
 
+def _default_driver_memory() -> str:
+    """The ``spark.driver.memory`` default when ``SPARK_DRIVER_MEMORY`` is
+    unset: 24g, or half the host's physical memory when that is smaller,
+    so a few sessions side by side (a test run beside a plan sweep) stay
+    inside the host's RAM."""
+    try:
+        half_mb = os.sysconf("SC_PHYS_PAGES") * os.sysconf("SC_PAGE_SIZE") // 2**21
+    except (AttributeError, ValueError, OSError):  # a platform without these sysconf names
+        return "24g"
+    return "24g" if half_mb >= 24 * 1024 else f"{half_mb}m"
+
+
 def get_spark(app_name: str = "milvus_cdc_spark", shuffle_partitions: int | None = None) -> SparkSession:
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     if shuffle_partitions is None:
@@ -27,7 +39,10 @@ def get_spark(app_name: str = "milvus_cdc_spark", shuffle_partitions: int | None
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "24g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_DRIVER_MEMORY", _default_driver_memory()),
+        )
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         # Parquet TIMESTAMP(NANOS) is unreadable by Spark natively; read the

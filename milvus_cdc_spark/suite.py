@@ -1768,7 +1768,11 @@ def ann_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     queries = emb.filter(F.col("vec_id") < 10)
     exact = similarity.brute_force_topk(emb, queries, k=3)
     approx = similarity.bucketed_topk(emb, queries, k=3, n_bits=4)
-    return similarity.recall_at_k(exact, approx).orderBy("query_id")
+    return (
+        similarity.recall_at_k(exact, approx)
+        .select("query_id", "recall")
+        .orderBy("query_id")
+    )
 
 
 @q(

@@ -832,31 +832,16 @@ def setsim_prefix_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 def int8_ip_search_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top-3 neighbors by EXACT integer int8 inner product (Milvus 2.6
     INT8_VECTOR surface) — distance math never touches a float."""
+    from milvus_cdc_spark.analytics import similarity
+    from milvus_cdc_spark.functions import vector as vecf
+
     emb = _t(spark, sf_dir, "embeddings")
-    to_i8 = lambda col: F.transform(  # noqa: E731
-        col,
-        lambda x: F.greatest(
-            F.lit(-128),
-            F.least(
-                F.lit(127),
-                F.floor(x.cast("double") * 64 + F.lit(0.5)).cast("bigint"),
-            ),
-        ),
-    )
-    codes = emb.select("vec_id", to_i8(F.col("embedding")).alias("c"))
+    codes = emb.select("vec_id", vecf.int8_codes(F.col("embedding")).alias("c"))
     queries = codes.filter(F.col("vec_id") < 10).select(
         F.col("vec_id").alias("query_id"), F.col("c").alias("qc")
     )
-    scored = codes.crossJoin(F.broadcast(queries)).filter(
-        F.col("vec_id") != F.col("query_id")
-    )
-    ip = F.aggregate(
-        F.zip_with(F.col("c"), F.col("qc"), lambda a, b: a * b),
-        F.lit(0).cast("bigint"),
-        lambda acc, x: acc + x,
-    )
-    scored = scored.select(
-        "query_id", F.col("vec_id").alias("neighbor_id"), ip.alias("ip")
+    scored = similarity.search_pairs(
+        codes, queries, vecf.dot_i64(F.col("c"), F.col("qc")).alias("ip")
     )
     order = [F.col("ip").desc(), F.col("neighbor_id")]
     return (
@@ -1456,6 +1441,19 @@ _MS_SUB = 8   # sub-vectors per embedding
 _MS_DIM = 8   # dims per sub-vector
 
 
+def _ms_subvectors():
+    """The embedding as ``_MS_SUB`` int8-coded sub-vectors of
+    ``_MS_DIM`` dims each (``vector.int8_codes`` per slice)."""
+    from milvus_cdc_spark.functions import vector as vecf
+
+    return F.transform(
+        F.sequence(F.lit(0), F.lit(_MS_SUB - 1)),
+        lambda i: vecf.int8_codes(
+            F.slice(F.col("embedding"), i * _MS_DIM + 1, _MS_DIM)
+        ),
+    )
+
+
 @q(
     "maxsim_multivector_topk",
     f"""
@@ -1499,54 +1497,22 @@ def maxsim_multivector_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top-3 neighbors by exact integer MaxSim over 8x8-dim int8
     sub-vectors — late-interaction retrieval as pure JVM column
     algebra."""
+    from milvus_cdc_spark.analytics import similarity
+    from milvus_cdc_spark.functions import vector as vecf
     from milvus_cdc_spark.partitioning import widen_small_scan
 
     emb = _t(spark, sf_dir, "embeddings")
-    i8 = lambda x: F.greatest(  # noqa: E731
-        F.lit(-128),
-        F.least(
-            F.lit(127),
-            F.floor(x.cast("double") * 64 + F.lit(0.5)).cast("bigint"),
-        ),
-    )
-    sub = F.transform(
-        F.sequence(F.lit(0), F.lit(_MS_SUB - 1)),
-        lambda i: F.transform(
-            F.slice(F.col("embedding"), i * _MS_DIM + 1, _MS_DIM),
-            i8,
-        ),
-    )
-    codes = emb.select("vec_id", sub.alias("sub"))
+    codes = emb.select("vec_id", _ms_subvectors().alias("sub"))
     queries = codes.filter(F.col("vec_id") < 10).select(
         F.col("vec_id").alias("query_id"), F.col("sub").alias("qsub")
-    )
-    ip8 = lambda qi, cj: F.aggregate(  # noqa: E731
-        F.zip_with(qi, cj, lambda a, b: a * b),
-        F.lit(0).cast("bigint"),
-        lambda acc, x: acc + x,
-    )
-    maxsim = F.aggregate(
-        F.transform(
-            F.col("qsub"),
-            lambda qi: F.array_max(
-                F.transform(F.col("sub"), lambda cj: ip8(qi, cj))
-            ),
-        ),
-        F.lit(0).cast("bigint"),
-        lambda acc, x: acc + x,
     )
     # The |queries|-way MaxSim expansion (sub² int8 dots per pair) is
     # CPU-dense over a single-split fixture scan — widen the corpus side
     # so the crossJoin scorer runs on every core (no-op at real scale).
-    scored = (
-        widen_small_scan(codes, "vec_id")
-        .crossJoin(F.broadcast(queries))
-        .filter(F.col("vec_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            F.col("vec_id").alias("neighbor_id"),
-            maxsim.alias("maxsim"),
-        )
+    scored = similarity.search_pairs(
+        widen_small_scan(codes, "vec_id"),
+        queries,
+        vecf.maxsim_i64(F.col("qsub"), F.col("sub")).alias("maxsim"),
     )
     order = [F.col("maxsim").desc(), F.col("neighbor_id")]
     return (
@@ -2689,22 +2655,11 @@ def maxsim_ann_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     against the all-pairs MaxSim top-3."""
     from pyspark.sql import Window as W
 
+    from milvus_cdc_spark.analytics import similarity
+    from milvus_cdc_spark.functions import vector as vecf
     from milvus_cdc_spark.partitioning import widen_small_scan
 
     emb = _t(spark, sf_dir, "embeddings")
-    i8 = lambda x: F.greatest(  # noqa: E731
-        F.lit(-128),
-        F.least(
-            F.lit(127),
-            F.floor(x.cast("double") * 64 + F.lit(0.5)).cast("bigint"),
-        ),
-    )
-    sub = F.transform(
-        F.sequence(F.lit(0), F.lit(_MS_SUB - 1)),
-        lambda i: F.transform(
-            F.slice(F.col("embedding"), i * _MS_DIM + 1, _MS_DIM), i8
-        ),
-    )
     bucket = F.concat(
         *[
             F.when(F.col("embedding")[i] >= 0, F.lit("1")).otherwise(
@@ -2713,39 +2668,21 @@ def maxsim_ann_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
             for i in range(4)
         ]
     )
-    codes = emb.select("vec_id", sub.alias("sub"), bucket.alias("bucket"))
+    codes = emb.select(
+        "vec_id", _ms_subvectors().alias("sub"), bucket.alias("bucket")
+    )
     queries = codes.filter(F.col("vec_id") < 10).select(
         F.col("vec_id").alias("query_id"),
         F.col("sub").alias("qsub"),
         F.col("bucket").alias("qbucket"),
     )
-    ip8 = lambda qi, cj: F.aggregate(  # noqa: E731
-        F.zip_with(qi, cj, lambda a, b: a * b),
-        F.lit(0).cast("bigint"),
-        lambda acc, x: acc + x,
-    )
-    maxsim = F.aggregate(
-        F.transform(
-            F.col("qsub"),
-            lambda qi: F.array_max(
-                F.transform(F.col("sub"), lambda cj: ip8(qi, cj))
-            ),
-        ),
-        F.lit(0).cast("bigint"),
-        lambda acc, x: acc + x,
-    )
     # Same single-split trap as maxsim_multivector_topk: widen the
     # corpus side ahead of the 10-query MaxSim expansion.
-    scored = (
-        widen_small_scan(codes, "vec_id")
-        .crossJoin(F.broadcast(queries))
-        .filter(F.col("vec_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            F.col("vec_id").alias("neighbor_id"),
-            maxsim.alias("maxsim"),
-            (F.col("bucket") == F.col("qbucket")).alias("is_cand"),
-        )
+    scored = similarity.search_pairs(
+        widen_small_scan(codes, "vec_id"),
+        queries,
+        vecf.maxsim_i64(F.col("qsub"), F.col("sub")).alias("maxsim"),
+        (F.col("bucket") == F.col("qbucket")).alias("is_cand"),
     )
     # ONE window pass over ONE scoring scan: the all-pairs MaxSim is the
     # expensive stage (n × q pairs × sub² int8 dot products), and the

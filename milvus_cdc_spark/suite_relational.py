@@ -1384,6 +1384,7 @@ def hamming_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     # crossJoin was a wash-to-loss in two interleaved A/Bs (0.93 then
     # 1.30) — one xor+popcount per pair is too cheap to repay the extra
     # exchange, unlike the maxsim scorers. Left on the single scan.
+    from milvus_cdc_spark.analytics import similarity
     from milvus_cdc_spark.functions import vector as vecf
 
     emb = _t(spark, sf_dir, "embeddings")
@@ -1393,14 +1394,8 @@ def hamming_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     qsig = sig.filter(F.col("vec_id") < 5).select(
         F.col("vec_id").alias("query_id"), F.col("bits").alias("qbits")
     )
-    scored = (
-        sig.crossJoin(F.broadcast(qsig))
-        .filter(F.col("vec_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            F.col("vec_id").alias("neighbor_id"),
-            vecf.hamming_i64(F.col("bits"), F.col("qbits")).alias("hamming"),
-        )
+    scored = similarity.search_pairs(
+        sig, qsig, vecf.hamming_i64(F.col("bits"), F.col("qbits")).alias("hamming")
     )
     return (
         windows.top_k(scored, "query_id", ["hamming", "neighbor_id"], 3)

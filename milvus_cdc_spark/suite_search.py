@@ -325,20 +325,7 @@ def sq8_quantized_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     approx = similarity.brute_force_topk(deq, queries, k=3)
     exact = similarity.brute_force_topk(emb, queries, k=3)
-    hits = exact.alias("e").join(
-        approx.alias("a"),
-        (F.col("e.query_id") == F.col("a.query_id"))
-        & (F.col("e.neighbor_id") == F.col("a.neighbor_id")),
-        "left",
-    )
-    return (
-        hits.groupBy(F.col("e.query_id").alias("query_id"))
-        .agg(
-            F.count(F.col("a.neighbor_id")).alias("n_hits"),
-            F.round(F.count(F.col("a.neighbor_id")) / 3.0, 6).alias("recall"),
-        )
-        .orderBy("query_id")
-    )
+    return similarity.recall_at_k(exact, approx).orderBy("query_id")
 
 
 # ---------------------------------------------------------------------------
@@ -440,20 +427,7 @@ def binary_quantized_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     queries = emb.filter(F.col("vec_id") < 5)
     approx = similarity.brute_force_topk(recon, queries, k=3)
     exact = similarity.brute_force_topk(emb, queries, k=3)
-    hits = exact.alias("e").join(
-        approx.alias("a"),
-        (F.col("e.query_id") == F.col("a.query_id"))
-        & (F.col("e.neighbor_id") == F.col("a.neighbor_id")),
-        "left",
-    )
-    return (
-        hits.groupBy(F.col("e.query_id").alias("query_id"))
-        .agg(
-            F.count(F.col("a.neighbor_id")).alias("n_hits"),
-            F.round(F.count(F.col("a.neighbor_id")) / 3.0, 6).alias("recall"),
-        )
-        .orderBy("query_id")
-    )
+    return similarity.recall_at_k(exact, approx).orderBy("query_id")
 
 
 # ---------------------------------------------------------------------------
@@ -793,6 +767,7 @@ def hamming_multiword_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     r14 note (measured): corpus-side scan-widening was a wash here
     (interleaved A/B 0.99) — per-word popcounts are too cheap to repay
     the exchange; only the maxsim scorers keep the widening."""
+    from milvus_cdc_spark.analytics import similarity
     from milvus_cdc_spark.functions import vector as vecf
 
     emb = _t(spark, sf_dir, "embeddings")
@@ -802,14 +777,10 @@ def hamming_multiword_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     qsig = sig.filter(F.col("vec_id") < 5).select(
         F.col("vec_id").alias("query_id"), F.col("words").alias("qwords")
     )
-    scored = (
-        sig.crossJoin(F.broadcast(qsig))
-        .filter(F.col("vec_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            F.col("vec_id").alias("neighbor_id"),
-            vecf.hamming_words(F.col("words"), F.col("qwords")).alias("hamming"),
-        )
+    scored = similarity.search_pairs(
+        sig,
+        qsig,
+        vecf.hamming_words(F.col("words"), F.col("qwords")).alias("hamming"),
     )
     return (
         windows.top_k(scored, "query_id", ["hamming", "neighbor_id"], 3)
@@ -863,6 +834,7 @@ def jaccard_binary_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     r14 note (measured): corpus-side scan-widening was a wash here
     (interleaved A/B 1.02 then 0.96) — popcount pairs are too cheap to
     repay the exchange; only the maxsim scorers keep the widening."""
+    from milvus_cdc_spark.analytics import similarity
     from milvus_cdc_spark.functions import vector as vecf
 
     emb = _t(spark, sf_dir, "embeddings")
@@ -872,16 +844,12 @@ def jaccard_binary_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     qsig = sig.filter(F.col("vec_id") < 5).select(
         F.col("vec_id").alias("query_id"), F.col("words").alias("qwords")
     )
-    scored = (
-        sig.crossJoin(F.broadcast(qsig))
-        .filter(F.col("vec_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            F.col("vec_id").alias("neighbor_id"),
-            F.round(
-                vecf.jaccard_words(F.col("words"), F.col("qwords")), 6
-            ).alias("distance"),
-        )
+    scored = similarity.search_pairs(
+        sig,
+        qsig,
+        F.round(
+            vecf.jaccard_words(F.col("words"), F.col("qwords")), 6
+        ).alias("distance"),
     )
     return (
         windows.top_k(scored, "query_id", ["distance", "neighbor_id"], 3)
@@ -1548,20 +1516,7 @@ def pq_adc_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     queries = emb.filter(F.col("vec_id") < 5)
     approx = similarity.pq_adc_topk(codes, cb, queries, k=10, m=_PQ_M, dim=64)
     exact = similarity.metric_topk(emb, queries, metric="l2", k=10)
-    hits = exact.alias("e").join(
-        approx.alias("a"),
-        (F.col("e.query_id") == F.col("a.query_id"))
-        & (F.col("e.neighbor_id") == F.col("a.neighbor_id")),
-        "left",
-    )
-    return (
-        hits.groupBy(F.col("e.query_id").alias("query_id"))
-        .agg(
-            F.count(F.col("a.neighbor_id")).alias("n_hits"),
-            F.round(F.count(F.col("a.neighbor_id")) / 10.0, 6).alias("recall"),
-        )
-        .orderBy("query_id")
-    )
+    return similarity.recall_at_k(exact, approx).orderBy("query_id")
 
 
 @q(
@@ -1778,20 +1733,7 @@ def ivf_pq_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
         k=10, n_probe=_IVFPQ_NPROBE, m=_PQ_M, dim=64,
     )
     exact = similarity.metric_topk(emb, queries, metric="l2", k=10)
-    hits = exact.alias("e").join(
-        approx.alias("a"),
-        (F.col("e.query_id") == F.col("a.query_id"))
-        & (F.col("e.neighbor_id") == F.col("a.neighbor_id")),
-        "left",
-    )
-    return (
-        hits.groupBy(F.col("e.query_id").alias("query_id"))
-        .agg(
-            F.count(F.col("a.neighbor_id")).alias("n_hits"),
-            F.round(F.count(F.col("a.neighbor_id")) / 10.0, 6).alias("recall"),
-        )
-        .orderBy("query_id")
-    )
+    return similarity.recall_at_k(exact, approx).orderBy("query_id")
 
 
 # ---------------------------------------------------------------------------
@@ -1863,6 +1805,9 @@ def superstructure_search(spark: SparkSession, sf_dir: str) -> DataFrame:
             "qwords"
         ),
     )
+    # hand-written, not ``similarity.search_pairs``: each query is a
+    # fragment of a stored row and must match that row at distance 0, so
+    # no self pair is dropped
     scored = packed.crossJoin(F.broadcast(q)).select(
         "query_id",
         F.col("vec_id").alias("neighbor_id"),
@@ -1919,20 +1864,18 @@ def superstructure_search(spark: SparkSession, sf_dir: str) -> DataFrame:
 def search_iterator_page(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Second page (rows 6-10) of a cosine search via the iterator's
     (distance, id) keyset cursor — never re-ranks the first page."""
+    from milvus_cdc_spark.analytics import similarity
     from milvus_cdc_spark.functions import vector as vecf
 
     emb = _t(spark, sf_dir, "embeddings")
     q = emb.filter(F.col("vec_id") == 0).select(
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("qvec")
     )
-    scored = (
-        emb.select(F.col("vec_id").alias("neighbor_id"), F.col("embedding").alias("cvec"))
-        .crossJoin(F.broadcast(q))
-        .filter(F.col("neighbor_id") != F.col("query_id"))
-        .select(
-            "neighbor_id",
-            F.round(vecf.cosine(F.col("cvec"), F.col("qvec")), 6).alias("sim"),
-        )
+    scored = similarity.search_pairs(
+        emb.select(F.col("vec_id").alias("neighbor_id"), F.col("embedding").alias("cvec")),
+        q,
+        F.round(vecf.cosine(F.col("cvec"), F.col("qvec")), 6).alias("sim"),
+        id_col="neighbor_id",
     )
     # cursor = the page-1 tail row. TakeOrderedAndProject (orderBy+limit)
     # + a 5-row min-of-struct — NOT a global row_number window, which
@@ -2323,6 +2266,7 @@ def hashed_embedding_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs 0-2 — text-to-vector-search with zero external models; integer
     dot/norm arithmetic end to end."""
     from milvus_cdc_spark.analytics import similarity
+    from milvus_cdc_spark.functions import vector as vecf
     from milvus_cdc_spark.partitioning import widen_small_scan
 
     # the tokenize + per-token md5 hashing of every document otherwise
@@ -2339,20 +2283,14 @@ def hashed_embedding_search(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("vec").alias("qv"),
         F.col("n2").alias("qn2"),
     )
-    dot = F.aggregate(
-        F.zip_with(F.col("qv"), F.col("vec"), lambda a, b: a * b),
-        F.lit(0).cast("bigint"),
-        lambda a, x: a + x,
-    )
-    scored = (
-        withn.join(F.broadcast(q_side), F.col("doc_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            F.col("doc_id").alias("neighbor_id"),
-            F.round(
-                dot / F.sqrt((F.col("qn2") * F.col("n2")).cast("double")), 6
-            ).alias("cosine"),
-        )
+    dot = vecf.dot_i64(F.col("qv"), F.col("vec"))
+    scored = similarity.search_pairs(
+        withn,
+        q_side,
+        F.round(
+            dot / F.sqrt((F.col("qn2") * F.col("n2")).cast("double")), 6
+        ).alias("cosine"),
+        id_col="doc_id",
     )
     order = [F.col("cosine").desc(), F.col("neighbor_id")]
     return (
@@ -2435,20 +2373,7 @@ def mrl_truncated_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     q_trunc = trunc.filter(F.col("vec_id") < 5)
     approx = similarity.brute_force_topk(trunc, q_trunc, k=3)
     exact = similarity.brute_force_topk(emb, queries, k=3)
-    hits = exact.alias("e").join(
-        approx.alias("a"),
-        (F.col("e.query_id") == F.col("a.query_id"))
-        & (F.col("e.neighbor_id") == F.col("a.neighbor_id")),
-        "left",
-    )
-    return (
-        hits.groupBy(F.col("e.query_id").alias("query_id"))
-        .agg(
-            F.count(F.col("a.neighbor_id")).alias("n_hits"),
-            F.round(F.count(F.col("a.neighbor_id")) / 3.0, 6).alias("recall"),
-        )
-        .orderBy("query_id")
-    )
+    return similarity.recall_at_k(exact, approx).orderBy("query_id")
 
 
 # ---------------------------------------------------------------------------
@@ -2606,6 +2531,7 @@ def range_search_annulus(spark: SparkSession, sf_dir: str) -> DataFrame:
 def hard_negative_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top-5 hardest negatives (most-similar different-label vectors)
     per anchor — contrastive-training negative mining."""
+    from milvus_cdc_spark.analytics import similarity
     from milvus_cdc_spark.functions import vector as vecf
 
     emb = _t(spark, sf_dir, "embeddings")
@@ -2614,16 +2540,12 @@ def hard_negative_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("label").alias("q_label"),
         F.col("embedding").alias("q_emb"),
     )
-    pairs = emb.join(
-        F.broadcast(q_side),
-        (F.col("vec_id") != F.col("query_id"))
-        & (F.col("label") != F.col("q_label")),
-    )
-    scored = pairs.select(
-        "query_id",
-        F.col("vec_id").alias("neighbor_id"),
+    scored = similarity.search_pairs(
+        emb,
+        q_side,
         F.col("label").alias("neighbor_label"),
         F.round(vecf.cosine(F.col("embedding"), F.col("q_emb")), 6).alias("sim"),
+        where=F.col("label") != F.col("q_label"),
     )
     order = [F.col("sim").desc(), F.col("neighbor_id").asc()]
     return (
@@ -2882,19 +2804,17 @@ def ivf_nprobe_recall_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
         "query_id",
     )
-    scored = (
-        c.join(F.broadcast(qside), "centroid_id")
-        .filter(F.col("neighbor_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            "neighbor_id",
-            "probe_rank",
-            F.round(
-                vecf.dot(F.col("cvec"), F.col("qvec"))
-                / (F.col("cnorm") * F.col("qnorm")),
-                6,
-            ).alias("sim"),
-        )
+    scored = similarity.search_pairs(
+        c,
+        qside,
+        "probe_rank",
+        F.round(
+            vecf.dot(F.col("cvec"), F.col("qvec"))
+            / (F.col("cnorm") * F.col("qnorm")),
+            6,
+        ).alias("sim"),
+        on="centroid_id",
+        id_col="neighbor_id",
     )
     settings = F.explode(F.array(F.lit(1), F.lit(2), F.lit(4)))
     cand = scored.withColumn("n_probe", settings).filter(
@@ -3103,6 +3023,7 @@ def expr_geo_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def geo_fenced_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Cosine top-3 within a 30-unit geo fence of each query point."""
+    from milvus_cdc_spark.analytics import similarity
     from milvus_cdc_spark.functions import vector as vecf
 
     emb = _t(spark, sf_dir, "embeddings")
@@ -3120,17 +3041,13 @@ def geo_fenced_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     dx = F.col("x") - F.col("qx")
     dy = F.col("y") - F.col("qy")
-    fenced = pts.join(
-        F.broadcast(q_side),
-        (F.col("vec_id") != F.col("query_id"))
-        & ((dx * dx + dy * dy) <= 900.0),
-    )
-    scored = fenced.select(
-        "query_id",
-        F.col("vec_id").alias("neighbor_id"),
+    scored = similarity.search_pairs(
+        pts,
+        q_side,
         F.round(vecf.cosine(F.col("embedding"), F.col("q_emb")), 6).alias(
             "sim"
         ),
+        where=(dx * dx + dy * dy) <= 900.0,
     )
     order = [F.col("sim").desc(), F.col("neighbor_id")]
     return (

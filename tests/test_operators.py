@@ -327,12 +327,13 @@ def test_bf16_encode_nan_inf_and_rounding(spark):
 
 
 def test_parallelize_expansion_spreads_single_split_only(spark, sf_dir):
-    """The crossJoin-scorer input spreads to defaultParallelism when its
-    scan is under-split (the local single-file case), passes through
-    UNTOUCHED when already at/above it (the at-scale case), and never
-    changes the row multiset."""
-    from milvus_cdc_spark.analytics import similarity
+    """The crossJoin-scorer input (``brute_force_topk``'s unkeyed
+    ``widen_small_scan(corpus)``) spreads round-robin to
+    defaultParallelism when its scan is under-split (the local
+    single-file case), passes through UNTOUCHED when already at/above it
+    (the at-scale case), and never changes the row multiset."""
     from milvus_cdc_spark.catalog import load_table
+    from milvus_cdc_spark.partitioning import widen_small_scan
 
     target = spark.sparkContext.defaultParallelism
     emb = load_table(spark, sf_dir, "embeddings")
@@ -341,13 +342,78 @@ def test_parallelize_expansion_spreads_single_split_only(spark, sf_dir):
         # scan already meets the target and the expansion case can't be
         # exercised — environment, not code under test.
         pytest.skip("scan already at defaultParallelism; nothing to expand")
-    out = similarity.parallelize_expansion(emb)
+    out = widen_small_scan(emb)
     assert out.rdd.getNumPartitions() == target
+    assert "RoundRobinPartitioning" in out._jdf.queryExecution().executedPlan().toString()
     assert sorted(r.vec_id for r in out.select("vec_id").collect()) == sorted(
         r.vec_id for r in emb.select("vec_id").collect()
     )
     wide = emb.repartition(target)
-    assert similarity.parallelize_expansion(wide) is wide
+    assert widen_small_scan(wide) is wide
+
+
+def _pairs_fixture(spark):
+    corpus = spark.createDataFrame(
+        [(0, "a", 1.0), (1, "a", 2.0), (2, "b", 3.0), (3, "b", 4.0)],
+        "vec_id bigint, bucket string, x double",
+    )
+    queries = corpus.filter(F.col("vec_id").isin(0, 2)).select(
+        F.col("vec_id").alias("query_id"), "bucket", F.col("x").alias("qx")
+    )
+    return corpus, queries
+
+
+def test_search_pairs_drops_self_and_broadcasts_queries(spark):
+    from milvus_cdc_spark.analytics import similarity
+
+    corpus, queries = _pairs_fixture(spark)
+    pairs = similarity.search_pairs(
+        corpus, queries.drop("bucket"), (F.col("x") * F.col("qx")).alias("p")
+    )
+    assert pairs.columns == ["query_id", "neighbor_id", "p"]
+    got = sorted(tuple(r) for r in pairs.collect())
+    want = sorted(
+        (q, n, float((n + 1) * (q + 1)))
+        for q in (0, 2) for n in range(4) if n != q
+    )
+    assert got == want
+    plan = pairs._jdf.queryExecution().executedPlan().toString()
+    assert "BroadcastExchange" in plan
+    assert "BroadcastNestedLoopJoin BuildRight, Cross" in plan
+
+
+def test_search_pairs_on_keeps_candidates_in_their_key(spark):
+    from milvus_cdc_spark.analytics import similarity
+
+    corpus, queries = _pairs_fixture(spark)
+    pairs = similarity.search_pairs(corpus, queries, "bucket", on="bucket")
+    assert sorted(tuple(r) for r in pairs.collect()) == [
+        (0, 1, "a"), (2, 3, "b"),
+    ]
+    plan = pairs._jdf.queryExecution().executedPlan().toString()
+    assert "BroadcastHashJoin" in plan and "BroadcastExchange" in plan
+    # ``where`` and an id column already named neighbor_id
+    fenced = similarity.search_pairs(
+        corpus.withColumnRenamed("vec_id", "neighbor_id"),
+        queries.drop("bucket"),
+        id_col="neighbor_id",
+        where=F.col("x") > F.col("qx") + 1.0,
+    )
+    assert fenced.columns == ["query_id", "neighbor_id"]
+    assert sorted(tuple(r) for r in fenced.collect()) == [(0, 2), (0, 3)]
+
+
+def test_recall_at_k_zero_for_a_query_without_hits(spark):
+    from milvus_cdc_spark.analytics import similarity
+
+    schema = "query_id bigint, neighbor_id bigint"
+    exact = spark.createDataFrame([(0, 1), (0, 2), (0, 3), (5, 6), (5, 7)], schema)
+    approx = spark.createDataFrame([(0, 1), (0, 3), (0, 9), (5, 8)], schema)
+    out = similarity.recall_at_k(exact, approx)
+    assert out.columns == ["query_id", "n_hits", "recall"]
+    assert sorted(tuple(r) for r in out.collect()) == [
+        (0, 2, 0.666667), (5, 0, 0.0),
+    ]
 
 
 def test_multiprobe_recall_dominates_single_bucket(spark, sf_dir):

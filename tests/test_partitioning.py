@@ -44,8 +44,8 @@ def test_keyed_widening_is_hash_not_roundrobin(spark):
 
 def test_probe_memoized_per_file_set(spark, tmp_path, monkeypatch):
     """r15: the plan→RDD partition probe is paid once per (session,
-    input-file-set) — a second widen over the same scanned files must
-    reuse the memo (no second physical-planning pass), and the memoized
+    input-file-set, plan shape) — a second widen over the same scanned
+    files must reuse the memo (no second physical-planning pass), and the memoized
     decision must match the direct probe's."""
     from milvus_cdc_spark import partitioning
 
@@ -71,6 +71,10 @@ def test_probe_memoized_per_file_set(spark, tmp_path, monkeypatch):
     # frames with no input files still probe directly (no stale reuse)
     widen_small_scan(spark.range(0, 10).coalesce(1), "id")
     assert calls["n"] == 2
+    # same files, another plan shape: its own probe, not the scan's count
+    wide = spark.read.parquet(path).repartition(target)
+    assert widen_small_scan(wide, "id") is wide
+    assert calls["n"] == 3
 
 
 def test_rows_unchanged_by_widening(spark):
@@ -97,15 +101,17 @@ WIDEN_CALL_SITES = {
     "suite_search.pq_codebooks": "pq_codebooks",
     "suite_search.hashed_embedding_search": "hashed_embedding_search",
     "suite_search.kmeans_silhouette": "kmeans_silhouette",
+    "similarity.brute_force_topk": "cosine_topk",
+    # the approximate side's corpus is a broadcast-cross of the scan
+    "similarity.brute_force_topk(reconstructed corpus)": "binary_quantized_recall",
 }
 
 
 @pytest.mark.parametrize("site", sorted(WIDEN_CALL_SITES))
 def test_memoized_probe_matches_direct_probe(spark, sf_dir, monkeypatch, site):
-    """The probe memo assumes every frame passed in is a scan plus narrow
-    transforms, whose partition count is a function of its input files.
-    Each call site's frame is checked against that: the memoized count
-    must equal a direct ``getNumPartitions()`` of the same frame. The
+    """The probe memo holds one partition count per (input files, plan
+    shape). Each call site's frame is checked against that: the memoized
+    count must equal a direct ``getNumPartitions()`` of the same frame. The
     query must reach the wrapper, so a call site that moves or goes away
     fails here instead of leaving the list stale."""
     from milvus_cdc_spark import oplog, partitioning, suite
@@ -116,7 +122,11 @@ def test_memoized_probe_matches_direct_probe(spark, sf_dir, monkeypatch, site):
 
     def checked(df, *key_cols):
         out = real(df, *key_cols)
-        key = (id(df.sparkSession.sparkContext), tuple(sorted(df.inputFiles())))
+        key = (
+            id(df.sparkSession.sparkContext),
+            tuple(sorted(df.inputFiles())),
+            df.semanticHash(),
+        )
         probes.append((partitioning._PROBE_CACHE.get(key), df.rdd.getNumPartitions()))
         return out
 

@@ -255,36 +255,47 @@ def test_no_unused_imports():
     assert not unused, f"imports their scope never names: {unused}"
 
 
-def _squared_l2_folds(path: str) -> list:
-    """``path:line`` of every ``zip_with`` whose lambda is a squared
-    difference, ``(a - b) * (a - b)``: an inline squared-L2 fold."""
-    hits = []
+def _zip_with_folds(path: str) -> dict:
+    """``{"l2": [...], "product": [...]}``: ``path:line`` of every
+    ``zip_with`` whose lambda is a squared difference,
+    ``(a - b) * (a - b)`` (an inline squared-L2 fold), or the bare
+    product of its two parameters, ``a * b`` (an inline integer inner
+    product; the float dot casts its operands first)."""
+    hits = {"l2": [], "product": []}
     for node in ast.walk(ast.parse(open(path).read())):
         f = getattr(node, "func", None)
         if getattr(f, "attr", getattr(f, "id", None)) != "zip_with":
             continue
         for lam in (a for a in node.args if isinstance(a, ast.Lambda)):
             b = lam.body
+            if not (isinstance(b, ast.BinOp) and isinstance(b.op, ast.Mult)):
+                continue
+            where = f"{os.path.relpath(path, ROOT)}:{node.lineno}"
+            params = [a.arg for a in lam.args.args]
             if (
-                isinstance(b, ast.BinOp) and isinstance(b.op, ast.Mult)
-                and isinstance(b.left, ast.BinOp) and isinstance(b.left.op, ast.Sub)
+                isinstance(b.left, ast.BinOp) and isinstance(b.left.op, ast.Sub)
                 and ast.dump(b.left) == ast.dump(b.right)
             ):
-                hits.append(f"{os.path.relpath(path, ROOT)}:{node.lineno}")
+                hits["l2"].append(where)
+            elif [getattr(b.left, "id", None), getattr(b.right, "id", None)] == params:
+                hits["product"].append(where)
     return hits
 
 
 def test_squared_l2_folded_only_in_vector_functions():
-    """Squared L2 is written once, as ``functions/vector.l2_squared``;
-    every other distance calls it, so the fold order (and with it the
+    """Squared L2 and the exact integer inner product are each written
+    once in ``functions/vector.py`` (``l2_squared``, ``dot_i64``); every
+    other distance calls them, so the fold order (and with it the
     bit-exact match with a serial engine) has one home."""
     vector = os.path.join(ROOT, "milvus_cdc_spark", "functions", "vector.py")
-    assert len(_squared_l2_folds(vector)) == 1, "detector lost l2_squared"
+    own = _zip_with_folds(vector)
+    assert len(own["l2"]) == 1, "detector lost l2_squared"
+    assert len(own["product"]) == 1, "detector lost dot_i64"
     inline = [
         h for p in _python_files(os.path.join(ROOT, "milvus_cdc_spark"))
-        if p != vector for h in _squared_l2_folds(p)
+        if p != vector for hits in _zip_with_folds(p).values() for h in hits
     ]
-    assert not inline, f"inline squared-L2 folds: {inline}"
+    assert not inline, f"inline squared-L2 or integer-product folds: {inline}"
 
 
 def _name(node) -> str | None:
@@ -503,3 +514,56 @@ def test_replay_rule_only_in_apply():
         if f"{h.split(':')[0]}:{h.split(' ')[1]}" not in _OWN_RULES
     ]
     assert not inline, f"replay rule written outside operators/apply.py: {inline}"
+
+
+_SIM = "milvus_cdc_spark/analytics/similarity.py"
+
+
+def _is_col(node, name_re: str) -> bool:
+    return (
+        _name(node) == "col" and len(node.args) == 1
+        and isinstance(node.args[0], ast.Constant)
+        and isinstance(node.args[0].value, str)
+        and re.fullmatch(name_re, node.args[0].value) is not None
+    )
+
+
+def _search_rule_sites(path: str) -> list:
+    """``path:line function`` of every ``<col> != col("query_id")``
+    self-exclusion and of every ``count(col("<alias>.neighbor_id"))``
+    recall block."""
+    rel = os.path.relpath(path, ROOT)
+    hits = {}
+    for fn in ast.walk(ast.parse(open(path).read())):
+        if not isinstance(fn, ast.FunctionDef):
+            continue
+        for node in ast.walk(fn):
+            if (
+                isinstance(node, ast.Compare) and len(node.ops) == 1
+                and isinstance(node.ops[0], ast.NotEq)
+                and any(_is_col(x, "query_id") for x in (node.left, *node.comparators))
+            ) or (
+                _name(node) == "count" and node.args
+                and _is_col(node.args[0], r"\w+\.neighbor_id")
+            ):
+                hits.setdefault(node.lineno, fn.name)
+    return [f"{rel}:{line} {name}" for line, name in sorted(hits.items())]
+
+
+def test_search_pairing_and_recall_only_in_similarity():
+    """Every query x corpus pairing drops the query's own row in ONE
+    place, ``similarity.search_pairs``, and every recall@k is ONE rule,
+    ``similarity.recall_at_k``: a new scorer or recall query calls them
+    instead of pasting the ``!= query_id`` filter or the left-join count.
+    (``superstructure_search`` pairs by hand but writes no self-exclusion:
+    each query must match its own stored row at distance 0.) The two
+    kernels must still be found, so the guard cannot go stale."""
+    allowed = {f"{_SIM}:search_pairs", f"{_SIM}:recall_at_k"}
+    owners = {
+        h: f"{h.split(':')[0]}:{h.split(' ')[1]}"
+        for p in _python_files(os.path.join(ROOT, "milvus_cdc_spark"))
+        for h in _search_rule_sites(p)
+    }
+    assert allowed <= set(owners.values()), allowed - set(owners.values())
+    inline = [h for h, owner in owners.items() if owner not in allowed]
+    assert not inline, f"pairings or recall blocks outside similarity.py: {inline}"
